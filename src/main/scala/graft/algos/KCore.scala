@@ -45,7 +45,8 @@ object KCore {
     * materialized (lineage-truncated). ONE job per round: the lazy
     * localCheckpoint is materialized by the surviving-edge count (the same
     * pattern as LabelPropagation.run — never an eager checkpoint plus a
-    * separate count). Returns ((id, deg), roundsRun).
+    * separate count). Returns ((id, deg), roundsRun); throws
+    * IllegalStateException if `maxRounds` rounds do not reach the fixpoint.
     */
   def converged(edges: DataFrame, k: Int,
                 maxRounds: Int = 100): (DataFrame, Int) = {
@@ -72,6 +73,9 @@ object KCore {
       e = next
       r += 1
     }
+    if (!done)
+      throw new IllegalStateException(
+        s"k-core did not converge in $maxRounds rounds")
     (e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")), r)
     }
   }

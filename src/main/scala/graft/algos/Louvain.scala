@@ -24,10 +24,13 @@ import graft.engine.Lineage
   *
   * Scale shape per round: one edge⋈label join co-partitioned on the vertex
   * key + a (vertex, community) hash-agg for k_in; one tiny per-community
-  * sum for Σtot; one broadcast-size 1-row 2m factor; argmax as TWO
-  * hash-aggs (max g, then min community at the max — the two-phase MSF
-  * discipline, never a struct min_by SortAggregate). State is one LONG
-  * label per vertex.
+  * sum for Σtot; one broadcast-size 1-row 2m factor; argmax as ONE
+  * `max_by(comm, struct(g, -comm))` aggregate (ties on g → smallest
+  * community). Its struct buffer plans as a SortAggregate, unlike the
+  * two-phase MSF argmax, but it sorts only the (vertex, candidate
+  * community) rows and saves a join and a second aggregate per round:
+  * louvain4 went ~6.0 → 4.3 s at sf0.1 (r6, local[32]). State is one
+  * LONG label per vertex.
   */
 object Louvain {
 

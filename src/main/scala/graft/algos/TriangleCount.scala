@@ -12,6 +12,15 @@ import graft.graph.GraphOps
   * kernel: LA3's TC is likewise a two-phase neighborhood-exchange +
   * intersection app.
   *
+  * Three shared functions carry every wedge enumeration in the repo:
+  *  - [[orientedByDegree]] — the (degree, id) orientation;
+  *  - [[closedWedges]] — one (a, b, c) row per triangle (the triangle
+  *    family here and [[Truss]]);
+  *  - [[graft.graph.GraphOps.codegreePairs]] — center-keyed co-neighbor
+  *    pairs (butterflies, rectangles, neighbor Jaccard/overlap).
+  * Kernels whose closing join carries a payload (sampled count, signs,
+  * weights) keep their own closing join.
+  *
   * Scale notes: wedge generation is the quadratic-in-degree step. Orienting
   * by (degree, id) instead of raw id is the standard wedge reducer — every
   * vertex's forward-degree is then ≤ √(2m)-ish, so hub vertices (whose
@@ -23,59 +32,71 @@ import graft.graph.GraphOps
   */
 object TriangleCount {
 
-  /** Canonical simple edges oriented low→high in the (degree, id) total
-    * order, materialized. Degree = undirected simple-graph degree.
-    * `canonicalInput = true` asserts the caller's edges are ALREADY a
-    * canonical simple oriented set (unique src < dst, no self-loops — e.g.
-    * the co-purchase derivation's groupBy output), skipping the no-op
-    * orient+dedup shuffle over the full edge set (r6, guide §2.1).
+  /** Orients a canonical simple edge set (each undirected edge once, no
+    * self-loops) low→high in the (degree, id) total order; degree =
+    * undirected simple-graph degree. Columns other than (src, dst) pass
+    * through. No cut inside: callers materialize eagerly or lazily.
     */
-  private def orientedByDegree(edges: DataFrame,
-                               canonicalInput: Boolean = false): DataFrame = {
-    val und = (
-      if (canonicalInput) edges.select("src", "dst")
-      else GraphOps.orient(edges)
-    ).transform(Lineage.cut(_, eager = true))
-    val deg = und.select(col("src").as("id"))
-      .union(und.select(col("dst").as("id")))
+  def orientedByDegree(e: DataFrame): DataFrame = {
+    val deg = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id")))
       .groupBy("id")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-    val fwd = und
+    val fwd = e
       .join(deg.toDF("src", "dsrc").hint("shuffle_hash"), "src")
       .join(deg.toDF("dst", "ddst").hint("shuffle_hash"), "dst")
     val srcFirst = col("dsrc") < col("ddst") ||
       (col("dsrc") === col("ddst") && col("src") < col("dst"))
-    fwd.select(
+    val extra = e.columns.filterNot(Set("src", "dst")).map(col).toSeq
+    fwd.select(Seq(
         when(srcFirst, col("src")).otherwise(col("dst")).as("src"),
-        when(srcFirst, col("dst")).otherwise(col("src")).as("dst"))
-      .transform(Lineage.cut(_, eager = true))
+        when(srcFirst, col("dst")).otherwise(col("src")).as("dst")) ++
+      extra: _*)
   }
 
-  /** Global triangle count; single row (triangles: long). */
-  def count(edges: DataFrame, canonicalInput: Boolean = false): DataFrame = {
-    val e = orientedByDegree(edges, canonicalInput)
-    val e1 = e.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = e.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(e2.hint("shuffle_hash"), "b").select("a", "c")
-    val closing = e.select(col("src").as("a"), col("dst").as("c"))
-    wedges.join(closing.hint("shuffle_hash"), Seq("a", "c"), "left_semi")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("triangles"))
-  }
-
-  /** Per-vertex triangle participation counts (id, tri_cnt) — each closed
-    * wedge credits all three corners.
+  /** One row (a, b, c) per triangle of an acyclically oriented edge set
+    * (a→b, b→c, a→c): the wedge self-join on b, closed by a left-semi
+    * join on (a, c). Both joins are shuffled-hash — sort-merge re-sorts the
+    * wedge fan-out.
     */
-  def perVertex(edges: DataFrame, canonicalInput: Boolean = false): DataFrame = {
-    val e = orientedByDegree(edges, canonicalInput)
-    val e1 = e.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = e.select(col("src").as("b"), col("dst").as("c"))
+  def closedWedges(o: DataFrame): DataFrame = {
+    val e1 = o.select(col("src").as("a"), col("dst").as("b"))
+    val e2 = o.select(col("src").as("b"), col("dst").as("c"))
     val wedges = e1.join(e2.hint("shuffle_hash"), "b").select("a", "b", "c")
-    val closing = e.select(col("src").as("a"), col("dst").as("c"))
-    val tris = wedges.join(closing.hint("shuffle_hash"), Seq("a", "c"), "left_semi")
+    val closing = o.select(col("src").as("a"), col("dst").as("c"))
+    wedges.join(closing.hint("shuffle_hash"), Seq("a", "c"), "left_semi")
+  }
+
+  /** Canonical simple edges, [[orientedByDegree]], with both the canonical
+    * and the oriented set materialized. `canonicalInput = true` asserts the
+    * caller's edges are ALREADY a canonical simple oriented set (unique
+    * src < dst, no self-loops — e.g. the co-purchase derivation's groupBy
+    * output), skipping the no-op orient+dedup shuffle over the full edge
+    * set (r6, guide §2.1).
+    */
+  private def oriented(edges: DataFrame, canonicalInput: Boolean): DataFrame =
+    orientedByDegree((
+        if (canonicalInput) edges.select("src", "dst")
+        else GraphOps.orient(edges)
+      ).transform(Lineage.cut(_, eager = true)))
+      .transform(Lineage.cut(_, eager = true))
+
+  /** Triangles per corner vertex (id, tri_cnt): each triangle credits all
+    * three corners.
+    */
+  private def cornerCounts(tris: DataFrame): DataFrame =
     tris.select(explode(array(col("a"), col("b"), col("c"))).as("id"))
       .groupBy("id")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("tri_cnt"))
-  }
+
+  /** Global triangle count; single row (triangles: long). */
+  def count(edges: DataFrame, canonicalInput: Boolean = false): DataFrame =
+    closedWedges(oriented(edges, canonicalInput))
+      .agg(org.apache.spark.sql.functions.count(lit(1)).as("triangles"))
+
+  /** Per-vertex triangle participation counts (id, tri_cnt). */
+  def perVertex(edges: DataFrame, canonicalInput: Boolean = false): DataFrame =
+    cornerCounts(closedWedges(oriented(edges, canonicalInput)))
 
   /** Per-vertex local clustering coefficient, scored in exact integer
     * micro-units so the oracle twin is byte-identical across engines:
@@ -90,20 +111,12 @@ object TriangleCount {
     * vertex id, and the final assembly is a same-key left join.
     */
   def localClustering(edges: DataFrame, canonicalInput: Boolean = false): DataFrame = {
-    val e = orientedByDegree(edges, canonicalInput)
+    val e = oriented(edges, canonicalInput)
     val deg = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .groupBy("id")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-    val e1 = e.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = e.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(e2.hint("shuffle_hash"), "b").select("a", "b", "c")
-    val closing = e.select(col("src").as("a"), col("dst").as("c"))
-    val tris = wedges.join(closing.hint("shuffle_hash"), Seq("a", "c"), "left_semi")
-    val tri = tris.select(explode(array(col("a"), col("b"), col("c"))).as("id"))
-      .groupBy("id")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("tri_cnt"))
-    deg.join(tri, Seq("id"), "left")
+    deg.join(cornerCounts(closedWedges(e)), Seq("id"), "left")
       .select(col("id"),
         coalesce(col("tri_cnt"), lit(0L)).as("tri_cnt"),
         col("deg"),
@@ -124,23 +137,12 @@ object TriangleCount {
     * deterministic, so capped runs stay oracle-able. Returns one row
     * (wedge_pairs, butterflies).
     */
-  def butterflies(edges: DataFrame, maxDeg: Long = 10000L): DataFrame = {
-    val e = edges.select("src", "dst").distinct()
-      .transform(graft.engine.Lineage.cut(_, eager = true))
-    val deg = e.groupBy(col("src").as("id"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-    val capped = e.join(deg.where(col("deg") <= maxDeg)
-      .select(col("id").as("src")), Seq("src"), "left_semi")
-    val w1 = capped.select(col("src").as("ctr"), col("dst").as("v"))
-    val w2 = capped.select(col("src").as("ctr"), col("dst").as("w"))
-    val pairs = w1.join(w2.hint("shuffle_hash"), "ctr").where(col("v") < col("w"))
-      .groupBy("v", "w")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cn"))
-    pairs.agg(
+  def butterflies(edges: DataFrame, maxDeg: Long = 10000L): DataFrame =
+    GraphOps.codegreePairs(edges.select("src", "dst").distinct()
+        .transform(Lineage.cut(_, eager = true)), maxDeg).agg(
       org.apache.spark.sql.functions.count(lit(1)).as("wedge_pairs"),
       coalesce(sum(expr("(cn * (cn - 1)) div 2")), lit(0L))
         .as("butterflies"))
-  }
 
   /** Per-vertex butterfly participation on the non-center side: each
     * co-neighbor pair (v, w) with codegree cn contributes C(cn, 2)
@@ -150,24 +152,13 @@ object TriangleCount {
     * cap as [[butterflies]].
     */
   def butterfliesPerVertex(edges: DataFrame,
-                           maxDeg: Long = 10000L): DataFrame = {
-    val e = edges.select("src", "dst").distinct()
-      .transform(graft.engine.Lineage.cut(_, eager = true))
-    val deg = e.groupBy(col("src").as("id"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-    val capped = e.join(deg.where(col("deg") <= maxDeg)
-      .select(col("id").as("src")), Seq("src"), "left_semi")
-    val w1 = capped.select(col("src").as("ctr"), col("dst").as("v"))
-    val w2 = capped.select(col("src").as("ctr"), col("dst").as("w"))
-    val pairs = w1.join(w2.hint("shuffle_hash"), "ctr").where(col("v") < col("w"))
-      .groupBy("v", "w")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cn"))
+                           maxDeg: Long = 10000L): DataFrame =
+    GraphOps.codegreePairs(edges.select("src", "dst").distinct()
+        .transform(Lineage.cut(_, eager = true)), maxDeg)
       .where(col("cn") >= 2)
-    pairs
-      .select(explode(array(col("v"), col("w"))).as("id"),
+      .select(explode(array(col("u"), col("w"))).as("id"),
         expr("(cn * (cn - 1)) div 2").as("b"))
       .groupBy("id").agg(sum(col("b")).as("bflys"))
-  }
 
   /** Global 4-clique (K4) count. Under the acyclic (degree, id)
     * orientation every K4 induces a transitive tournament with a unique
@@ -183,14 +174,9 @@ object TriangleCount {
     * (cliques4: long).
     */
   def fourCliques(edges: DataFrame, canonicalInput: Boolean = false): DataFrame = {
-    val e = orientedByDegree(edges, canonicalInput)
-    val e1 = e.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = e.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(e2.hint("shuffle_hash"), "b").select("a", "b", "c")
-    val closing = e.select(col("src").as("a"), col("dst").as("c"))
-    val tris = wedges.join(closing.hint("shuffle_hash"), Seq("a", "c"), "left_semi")
+    val e = oriented(edges, canonicalInput)
     val ext = e.select(col("src").as("c"), col("dst").as("d"))
-    val cand = tris.join(ext.hint("shuffle_hash"), "c")
+    val cand = closedWedges(e).join(ext.hint("shuffle_hash"), "c")
     cand
       .join(e.select(col("src").as("a"), col("dst").as("d"))
           .hint("shuffle_hash"),
@@ -214,16 +200,7 @@ object TriangleCount {
     val und = GraphOps.symmetrize(edges.select("src", "dst"))
       .where(col("src") =!= col("dst"))
       .transform(Lineage.cut(_, eager = true))
-    val deg = und.groupBy("src")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-    val capped = und.join(deg.where(col("deg") <= maxDeg).select("src"),
-      Seq("src"), "left_semi")
-    val n1 = capped.select(col("src").as("ctr"), col("dst").as("u"))
-    val n2 = capped.select(col("src").as("ctr"), col("dst").as("w"))
-    val pairs = n1.join(n2.hint("shuffle_hash"), "ctr").where(col("u") < col("w"))
-      .groupBy("u", "w")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cn"))
-    pairs.agg(
+    GraphOps.codegreePairs(und, maxDeg).agg(
         org.apache.spark.sql.functions.count(lit(1)).as("wedge_pairs"),
         coalesce(sum(expr("(cn * (cn - 1)) div 2")), lit(0L)).as("dd"))
       .select(col("wedge_pairs"), expr("dd div 2").as("rectangles"))
@@ -278,7 +255,7 @@ object TriangleCount {
   def sampledCount(edges: DataFrame, rate: Int,
                    canonicalInput: Boolean = false): DataFrame = {
     require(rate >= 1, s"rate must be >= 1, got $rate")
-    val e = orientedByDegree(edges, canonicalInput)
+    val e = oriented(edges, canonicalInput)
     val e1 = e.select(col("src").as("a"), col("dst").as("b"))
     val e2 = e.select(col("src").as("b"), col("dst").as("c"))
     val wedges = e1.join(e2.hint("shuffle_hash"), "b").select("a", "b", "c")
@@ -302,18 +279,8 @@ object TriangleCount {
     * the weight carried through the joins (the signedBalance discipline).
     */
   def triangleStrength(edgesW: DataFrame): DataFrame = {
-    val deg = GraphOps.symmetrize(edgesW.select("src", "dst"))
-      .groupBy(col("src").as("id"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-    val fwd = edgesW.select("src", "dst", "weight")
-      .join(deg.toDF("src", "dsrc").hint("shuffle_hash"), "src")
-      .join(deg.toDF("dst", "ddst").hint("shuffle_hash"), "dst")
-    val srcFirst = col("dsrc") < col("ddst") ||
-      (col("dsrc") === col("ddst") && col("src") < col("dst"))
-    val e = fwd.select(
-        when(srcFirst, col("src")).otherwise(col("dst")).as("src"),
-        when(srcFirst, col("dst")).otherwise(col("src")).as("dst"),
-        col("weight").cast("long").as("w"))
+    val e = orientedByDegree(edgesW.select(col("src"), col("dst"),
+        col("weight").cast("long").as("w")))
       .transform(Lineage.cut(_, eager = true))
     val e1 = e.select(col("src").as("a"), col("dst").as("b"),
       col("w").as("w1"))
@@ -346,7 +313,7 @@ object TriangleCount {
     // sf0.1 the wedge join dominates either way (A/B medians 24.5 vs 26,
     // inside noise — BASELINE.md wave 24); the per-edge spelling is kept
     // because triangles ≫ edges is exactly the skew that grows at 100×.
-    val e = orientedByDegree(edges, canonicalInput)
+    val e = oriented(edges, canonicalInput)
       .withColumn("s", GraphOps.md5Prio(concat_ws(":",
         least(col("src"), col("dst")),
         greatest(col("src"), col("dst")))) % 2)

@@ -41,25 +41,10 @@ object Truss {
     * set. Edges in no triangle simply have no row (support 0).
     */
   private def supports(e: DataFrame): DataFrame = {
-    val deg = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val fwd = e.join(deg.toDF("src", "dsrc").hint("shuffle_hash"), "src")
-      .join(deg.toDF("dst", "ddst").hint("shuffle_hash"), "dst")
-    val srcFirst = col("dsrc") < col("ddst") ||
-      (col("dsrc") === col("ddst") && col("src") < col("dst"))
     // materialized lazily: three plan legs below reference the oriented
     // set; the caller's count materializes everything in one job
-    val o = fwd.select(
-        when(srcFirst, col("src")).otherwise(col("dst")).as("src"),
-        when(srcFirst, col("dst")).otherwise(col("src")).as("dst"))
-      .transform(Lineage.cut(_))
-    val e1 = o.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = o.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(e2.hint("shuffle_hash"), "b").select("a", "b", "c")
-    val closing = o.select(col("src").as("a"), col("dst").as("c"))
-    val tris = wedges.join(closing.hint("shuffle_hash"), Seq("a", "c"),
-      "left_semi")
+    val tris = TriangleCount.closedWedges(
+      TriangleCount.orientedByDegree(e).transform(Lineage.cut(_)))
     tris.select(explode(array(
         struct(least(col("a"), col("b")).as("src"),
           greatest(col("a"), col("b")).as("dst")),

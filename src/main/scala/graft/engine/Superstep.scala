@@ -26,12 +26,16 @@ import org.apache.spark.sql.functions._
   * @param batchSize    supersteps composed lazily per materializing action —
   *                     amortizes the per-superstep serial term (planning +
   *                     dispatch, measured ~1 s/superstep at local[32]).
-  *                     Applies on the shuffle layouts (grid/salt) only; the
-  *                     broadcast layout always materializes per superstep.
+  *                     Applies on every layout; on grid/salt a batch > 1
+  *                     gives up the small-frontier broadcast sub-paths.
   *                     Convergence is checked at batch boundaries, so a run
-  *                     may execute up to batchSize-1 extra (no-op) supersteps
-  *                     past convergence; results are unaffected (converged
-  *                     state is a fixpoint).
+  *                     may execute up to batchSize-1 extra supersteps past
+  *                     convergence. Results are unchanged only when those
+  *                     are no-ops: non-stationary programs (empty frontier)
+  *                     or tol = 0. A stationary program with tol > 0 keeps
+  *                     moving its float state in the extra supersteps, so
+  *                     its result depends on batchSize — pr_converged runs
+  *                     that way on purpose (batchSize = 5, tol = 1e-6).
   */
 final case class SuperstepConfig(
     maxIter: Int = 100,
@@ -91,37 +95,20 @@ object Superstep {
           vp: VertexProgram, cfg: SuperstepConfig,
           resume: Boolean = false): SuperstepResult = {
 
-    // Loop-scoped session tuning, restored on exit:
-    // - AQE re-plans every shuffle — worth it for one big query, pure
-    //   scheduling overhead for hundreds of small identical superstep jobs
-    //   (measured ~30% of superstep wall at sf0.1). Skew inside the loop is
-    //   handled explicitly (hubTau / grid).
-    // - preferSortMergeJoin=false: the gather join must be shuffled-hash —
-    //   SMJ would re-sort the (big, already co-partitioned) edge side by
-    //   the join key every superstep.
-    // - shuffle.partitions = cfg.numPartitions: every shuffle in the loop
-    //   aligns with the edge co-partitioning, independent of core count —
-    //   same physical work at any parallelism (the scaling-run invariant).
-    val restore = Seq(
-      "spark.sql.adaptive.enabled" -> spark.conf.get(
-        "spark.sql.adaptive.enabled", "true"),
-      "spark.sql.join.preferSortMergeJoin" -> spark.conf.get(
-        "spark.sql.join.preferSortMergeJoin", "true"),
-      "spark.sql.shuffle.partitions" -> spark.conf.get(
-        "spark.sql.shuffle.partitions", "200"),
-      // the grid gather join clusters on (srcBlk, dstBlk, src) while the
-      // tiles are partitioned by the (srcBlk, dstBlk) PREFIX — without
-      // subset-key co-partitioning EnsureRequirements re-shuffles the whole
-      // edge side every superstep
-      "spark.sql.requireAllClusterKeysForCoPartition" -> spark.conf.get(
-        "spark.sql.requireAllClusterKeysForCoPartition", "true"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", cfg.numPartitions.toString)
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try {
-      runLoop(spark, edges, graphVertices, vp, cfg, resume)
-    } finally restore.foreach { case (k, v) => spark.conf.set(k, v) }
+    // The shared loop conf (shuffle partitions = cfg.numPartitions, so
+    // every loop shuffle aligns with the edge co-partitioning at any core
+    // count) plus one key of its own, restored on exit: the grid gather
+    // join clusters on (srcBlk, dstBlk, src) while the tiles are
+    // partitioned by the (srcBlk, dstBlk) PREFIX — without subset-key
+    // co-partitioning EnsureRequirements re-shuffles the whole edge side
+    // every superstep.
+    Lineage.withLoopConf(spark, cfg.numPartitions) {
+      val key = "spark.sql.requireAllClusterKeysForCoPartition"
+      val prev = spark.conf.get(key, "true")
+      spark.conf.set(key, "false")
+      try runLoop(spark, edges, graphVertices, vp, cfg, resume)
+      finally spark.conf.set(key, prev)
+    }
   }
 
   private def blkOf(c: Column, g: Int): Column =
@@ -235,9 +222,11 @@ object Superstep {
     // build reads the PREVIOUS superstep's cached RDD instead of
     // re-executing its subtree, so batching now saves the per-superstep
     // metrics action + convergence round-trip there too. Convergence is
-    // checked at batch boundaries; supersteps past a fixpoint are no-ops
-    // (empty frontier for non-stationary programs, residual-stable state
-    // for stationary ones), so results are unchanged at any batch size.
+    // checked at batch boundaries, so up to batchSize-1 supersteps run past
+    // it. They are no-ops for non-stationary programs (empty frontier) and
+    // at tol = 0, where results are unchanged at any batch size; a
+    // stationary program with tol > 0 keeps refining its state in them, so
+    // its result depends on the batch size (see SuperstepConfig.batchSize).
     val effectiveBatch = math.max(1, cfg.batchSize)
 
     // One lazily-composed superstep: current state → next state.
@@ -252,10 +241,13 @@ object Superstep {
         .filter(c => c == "id" || gatherRefs.contains(c))
       val frontier0 = frontierRaw.select(keepCols.map(col).toSeq: _*)
         .withColumnRenamed("id", "src")
-      // A broadcast mid-batch would re-execute its whole build subtree
-      // (BroadcastExchange materializes its child per occurrence), so the
-      // broadcast sub-paths are only taken when supersteps materialize one
-      // at a time.
+      // frontierSize is measured at batch boundaries, so it bounds only a
+      // batch's first superstep. The dst layout broadcasts every frontier
+      // regardless (frontier ⊆ V, |V| < broadcastFrontierBelow), mid-batch
+      // too: each build reads the previous superstep's lazily-cut cached
+      // RDD. On grid/salt |V| may exceed the bound and a mid-batch
+      // frontier can outgrow it, so their broadcast sub-paths are taken
+      // only when supersteps materialize one at a time.
       val smallFrontier = frontierSize < cfg.broadcastFrontierBelow &&
         (effectiveBatch == 1 || !(gridMode || saltMode))
       val msgs =

@@ -326,28 +326,11 @@ object GraphOps {
     * sizes keep the TRUE degrees. Default = no cap (exact).
     */
   def neighborJaccard(edges: DataFrame, threshold: Double,
-                      maxDeg: Long = Long.MaxValue): DataFrame = {
-    val und = symmetrize(edges).where(col("src") =!= col("dst"))
-      .localCheckpoint(true)
-    val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    val wedgeE =
-      if (maxDeg == Long.MaxValue) und
-      else und.join(deg.where(col("deg") <= maxDeg)
-          .select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst") // name-based: using-joins reorder columns
-    val wedge = wedgeE.select(col("src").as("v"), col("dst").as("nbr"))
-    val inter = wedge.toDF("v1", "nbr")
-      .join(wedge.toDF("v2", "nbr"), Seq("nbr"))
-      .where(col("v1") < col("v2"))
-      .groupBy("v1", "v2").agg(count(lit(1)).as("inter"))
-    inter
-      .join(deg.toDF("v1", "d1"), "v1")
-      .join(deg.toDF("v2", "d2"), "v2")
-      .select(col("v1"), col("v2"),
-        round(col("inter") /
-          (col("d1") + col("d2") - col("inter")), 6).as("sim"))
+                      maxDeg: Long = Long.MaxValue): DataFrame =
+    codegreeWithDegrees(edges, maxDeg)
+      .select(col("u").as("v1"), col("w").as("v2"),
+        round(col("cn") / (col("d1") + col("d2") - col("cn")), 6).as("sim"))
       .where(col("sim") >= threshold)
-  }
 
   /** Neighbor-set OVERLAP coefficient — |N(a)∩N(b)| / min(|N(a)|,|N(b)|)
     * in exact integer micro-units: the hub-subset detector Jaccard
@@ -360,26 +343,41 @@ object GraphOps {
     * Output (v1, v2, overlap_micro) at ≥ `thresholdMicro`.
     */
   def neighborOverlap(edges: DataFrame, thresholdMicro: Long,
-                      maxDeg: Long = Long.MaxValue): DataFrame = {
+                      maxDeg: Long = Long.MaxValue): DataFrame =
+    codegreeWithDegrees(edges, maxDeg)
+      .select(col("u").as("v1"), col("w").as("v2"),
+        expr("(cn * 1000000) div least(d1, d2)").as("overlap_micro"))
+      .where(col("overlap_micro") >= thresholdMicro)
+
+  /** Co-neighbor pairs (u, w, cn) of `dst`s sharing a `src` center, u < w,
+    * over unique (src, dst) rows: one center-keyed shuffled-hash self-join
+    * plus a pair count — candidate pairs only, never all-pairs. Centers of
+    * degree > `maxDeg` are skipped: a center of degree d fans out d² pairs,
+    * and the cap is a pure degree threshold, so the oracle can mirror it.
+    * `Long.MaxValue` = no cap (and no cap join).
+    */
+  def codegreePairs(e: DataFrame, maxDeg: Long): DataFrame = {
+    val centered =
+      if (maxDeg == Long.MaxValue) e
+      else e.join(outDegrees(e).where(col("outdeg") <= maxDeg)
+          .select(col("id").as("src")), Seq("src"), "left_semi")
+    val nbr = centered.select(col("src").as("ctr"), col("dst").as("u"))
+    nbr.join(nbr.toDF("ctr", "w").hint("shuffle_hash"), "ctr")
+      .where(col("u") < col("w"))
+      .groupBy("u", "w").agg(count(lit(1)).as("cn"))
+  }
+
+  /** [[codegreePairs]] of the symmetrized simple graph with both endpoint
+    * degrees attached: (u, w, cn, d1, d2). Degrees are the TRUE ones even
+    * when `maxDeg` drops centers.
+    */
+  private def codegreeWithDegrees(edges: DataFrame, maxDeg: Long): DataFrame = {
     val und = symmetrize(edges).where(col("src") =!= col("dst"))
       .localCheckpoint(true)
-    val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    val wedgeE =
-      if (maxDeg == Long.MaxValue) und
-      else und.join(deg.where(col("deg") <= maxDeg)
-          .select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst")
-    val wedge = wedgeE.select(col("src").as("v"), col("dst").as("nbr"))
-    val inter = wedge.toDF("v1", "nbr")
-      .join(wedge.toDF("v2", "nbr"), Seq("nbr"))
-      .where(col("v1") < col("v2"))
-      .groupBy("v1", "v2").agg(count(lit(1)).as("inter"))
-    inter
-      .join(deg.toDF("v1", "d1"), "v1")
-      .join(deg.toDF("v2", "d2"), "v2")
-      .select(col("v1"), col("v2"),
-        expr("(inter * 1000000) div least(d1, d2)").as("overlap_micro"))
-      .where(col("overlap_micro") >= thresholdMicro)
+    val deg = outDegrees(und)
+    codegreePairs(und, maxDeg)
+      .join(deg.toDF("u", "d1"), "u")
+      .join(deg.toDF("w", "d2"), "w")
   }
 
   /** WEIGHTED neighbor Jaccard — Σmin(w)/Σmax(w) over the union of the two

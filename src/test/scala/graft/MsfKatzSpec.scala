@@ -143,6 +143,18 @@ class MsfKatzSpec extends SparkSpec {
     }
   }
 
+  test("KCore.converged throws when maxRounds ends before the fixpoint") {
+    // triangle {0,1,2} with tail 2–3–4: the 2-core peel drops 4, then 3,
+    // then sees no change — three rounds to the fixpoint
+    val g = edgesDf(Seq[(Long, Long)]((0L, 1L), (1L, 2L), (0L, 2L),
+      (2L, 3L), (3L, 4L)))
+    val (core, rounds) = graft.algos.KCore.converged(g, 2)
+    assert(collectL(core, "id", "deg") === Map(0L -> 2L, 1L -> 2L, 2L -> 2L))
+    assert(rounds === 3)
+    intercept[IllegalStateException](
+      graft.algos.KCore.converged(g, 2, maxRounds = 1))
+  }
+
   test("contamination counts distinct shared n-grams across the md5 split") {
     val s = spark
     import s.implicits._

@@ -152,22 +152,9 @@ class PlanShapeSpec extends SparkSpec {
     // audited on the OUTPUT plan of a converged run: the wedge-closing
     // step must appear as a semi join in the cached round lineage — the
     // converged frame itself reads the cached support table, so assert on
-    // a freshly-composed round instead
-    val deg = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val fwd = e.join(deg.toDF("src", "dsrc"), "src")
-      .join(deg.toDF("dst", "ddst"), "dst")
-    val srcFirst = col("dsrc") < col("ddst") ||
-      (col("dsrc") === col("ddst") && col("src") < col("dst"))
-    val o = fwd.select(
-      when(srcFirst, col("src")).otherwise(col("dst")).as("src"),
-      when(srcFirst, col("dst")).otherwise(col("src")).as("dst"))
-    val e1 = o.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = o.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(e2, "b").select("a", "b", "c")
-    val closing = o.select(col("src").as("a"), col("dst").as("c"))
-    val plan = fmt(wedges.join(closing, Seq("a", "c"), "left_semi"))
+    // a freshly-composed round of the same two functions Truss calls
+    val plan = fmt(graft.algos.TriangleCount.closedWedges(
+      graft.algos.TriangleCount.orientedByDegree(e)))
     assert(plan.contains("LeftSemi"), s"closing join not semi:\n$plan")
     assert(truss.columns.toSeq === Seq("src", "dst", "support"))
   }

@@ -596,7 +596,10 @@ object OracleSql {
     * contraction deduped to the min-priority edge per component pair).
     * Rounds and jumps past the fixpoint are empty CTEs (over-unroll-safe).
     * Measured by MsfRoundsProbe: 4 rounds / maxJump 4 at sf0.01, 3/3 at
-    * sf0.1 — rounds=8, jumps=8 is ≥2× margin on both axes.
+    * sf0.1 — rounds=8, jumps=8 is ≥2× margin on both axes. The jump CTEs
+    * are MATERIALIZED: each references its predecessor twice, and DuckDB
+    * 1.0 inlines an unmaterialized CTE, so the 8-jump chain would expand
+    * to 2^8 copies of the round's argmin (out of memory at sf0.01).
     */
   private def msfRounds(rounds: Int, jumps: Int): String = {
     val ce0 = "ce0 AS MATERIALIZED (SELECT src AS cu, dst AS cv, " +
@@ -605,7 +608,7 @@ object OracleSql {
       "src, dst, weight FROM cpfw)"
     val rs = (1 to rounds).map { r =>
       val jumpCtes = (1 to jumps).map { j =>
-        s"""p${r}j$j AS (SELECT a.c, b.p FROM p${r}j${j - 1} a
+        s"""p${r}j$j AS MATERIALIZED (SELECT a.c, b.p FROM p${r}j${j - 1} a
            |  JOIN p${r}j${j - 1} b ON a.p = b.c)""".stripMargin
       }.mkString(",\n ")
       s"""ch$r AS MATERIALIZED (
@@ -616,7 +619,7 @@ object OracleSql {
          |          UNION ALL
          |          SELECT cv, cu, pri, src, dst, weight FROM ce${r - 1}))
          |  WHERE rn = 1),
-         | p${r}j0 AS (
+         | p${r}j0 AS MATERIALIZED (
          |  SELECT a.c, CASE WHEN b.t = a.c AND a.c < a.t THEN a.c ELSE a.t END AS p
          |  FROM ch$r a JOIN ch$r b ON a.t = b.c),
          | $jumpCtes,
@@ -797,8 +800,8 @@ object OracleSql {
     * levels, each peeling the PREVIOUS level's fixpoint edge set with
     * `rounds` unrolled rounds. Per-level survivors record coreness = k;
     * final coreness = max level survived. Safe to over-unroll BOTH axes
-    * provided `rounds` ≥ every level's true peel length (measured max 9 at
-    * sf0.01, 7 at sf0.1 — CorenessProbe; 18 = 2× margin): then each level
+    * provided `rounds` ≥ every level's true peel length (measured max 13 at
+    * sf0.001, 9 at sf0.01, 7 at sf0.1 — CorenessProbe): then each level
     * starts from a true fixpoint and levels past the max core are empty.
     */
   private def corenessRounds(levels: Int, rounds: Int): String = {
@@ -1105,13 +1108,16 @@ object OracleSql {
         |WHERE sa.src IS NULL OR sb.src IS NULL
         |ORDER BY src, dst""".stripMargin,
 
-    // full core decomposition: 5 unrolled levels (max core 3 measured at
-    // sf0.01, 2 at sf0.1) × 18 unrolled peel rounds each (max 9 measured —
-    // CorenessProbe); coreness = max level survived, exact integers
+    // full core decomposition: 18 unrolled levels (max core measured at 16
+    // at sf0.001, 3 at sf0.01, 2 at sf0.1) × 26 unrolled peel rounds each
+    // (max 13 measured at sf0.001, 9 at sf0.01 — CorenessProbe: 2×
+    // margin); coreness = max level survived, exact integers. Levels ×
+    // rounds is bounded by DuckDB's binder: 20 × 26 exceeds its default
+    // max_expression_depth of 1000 (DuckDB 1.0), 18 × 26 plans
     "coreness" ->
       s"""WITH cp AS ($CP),
          | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | ${corenessRounds(5, 18)}
+         | ${corenessRounds(18, 26)}
          |SELECT id, CAST(max(coreness) AS BIGINT) AS coreness
          |FROM allcore GROUP BY id ORDER BY id""".stripMargin,
 
@@ -1793,15 +1799,16 @@ object OracleSql {
     // Luby MIS with md5 priorities, over-unrolled (ConvergenceProbe:
     // 4 rounds at sf0.01, 3 at sf0.1 — 8 = 2x margin)
     // Jones–Plassmann coloring with md5 priorities, over-unrolled
-    // (ColoringRoundsProbe: 14 rounds at sf0.01, 6 at sf0.1 — 28 = 2x
-    // margin; extra rounds are no-ops once everyone is colored)
+    // (ColoringRoundsProbe: 44 rounds at sf0.001, 14 at sf0.01, 6 at
+    // sf0.1 — 88 = 2x margin; extra rounds are no-ops once everyone is
+    // colored)
     "coloring_md5" ->
       s"""WITH cp AS MATERIALIZED ($CP),
          | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
          | e AS MATERIALIZED (SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf),
          | v AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         | ${jpRounds(28)}
-         |SELECT id, CAST(color AS BIGINT) AS color FROM c28 ORDER BY id""".stripMargin,
+         | ${jpRounds(88)}
+         |SELECT id, CAST(color AS BIGINT) AS color FROM c88 ORDER BY id""".stripMargin,
 
     "mis" ->
       s"""WITH cp AS MATERIALIZED ($CP),

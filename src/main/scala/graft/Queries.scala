@@ -41,7 +41,7 @@ object Queries {
     * as [[PageRank.fixedIterations]] — outdeg is the packed adjacency
     * length — so it shares pr5's oracle. The relational explode spelling is
     * the measured winner over the typed cogroup flatMap
-    * (BlockedKernelProbe, BASELINE.md round 3).
+    * (BASELINE.md round 3, "Blocked kernel A/B").
     */
   private def prBlocked(e: DataFrame, k: Int, numBlocks: Int): DataFrame =
     graft.engine.BlockedKernel.prFixedExplode(e, k, numBlocks)

@@ -56,8 +56,11 @@ object Coloring {
       .transform(Lineage.cut(_, eager = true))
     var colored = spark.range(0).select(col("id"), lit(0).cast("int")
       .as("color")) // empty (id, color)
-    var r = 0
-    while (r < maxRounds && !uncolored.isEmpty) {
+    // A silent partial coloring is worse than a loud failure: JP colors at
+    // least one vertex per round (the global max priority is always a
+    // local max), so exhausting maxRounds with vertices left means the
+    // caller under-budgeted rounds.
+    val r = Lineage.rounds("coloring", maxRounds)(!uncolored.isEmpty) { _ =>
       // priority local-max among uncolored neighbors
       val nbrPri = e
         .join(uncolored.select(col("id").as("src"), col("pri")), "src")
@@ -85,18 +88,6 @@ object Coloring {
         .transform(Lineage.cut(_, eager = true))
       uncolored = uncolored.join(newly, Seq("id"), "left_anti")
         .transform(Lineage.cut(_, eager = true))
-      r += 1
-    }
-    // A silent partial coloring is worse than a loud failure: JP colors at
-    // least one vertex per round (the global max priority is always a
-    // local max), so exhausting maxRounds with vertices left means the
-    // caller under-budgeted rounds — tell them instead of returning a
-    // non-total coloring.
-    if (r == maxRounds && !uncolored.isEmpty) {
-      val left = uncolored.count()
-      throw new IllegalStateException(
-        s"Coloring did not complete: $left vertices uncolored after " +
-          s"$maxRounds rounds — raise maxRounds")
     }
     (colored, r)
     }

@@ -129,9 +129,8 @@ object ConnectedComponents {
     var s = sig(e) // ONE prep action: materializes e, counts it, empty-checks
     val nEff = Lineage.adaptiveParallelism(s._1, numPartitions)
     Lineage.withLoopConf(spark, nEff) {
-    var rounds = 0
     var done = s._1 == 0L
-    while (rounds < maxRounds && !done) {
+    val rounds = Lineage.rounds("star contraction", maxRounds)(!done) { _ =>
       val next = smallStar(largeStar(e))
         .repartition(nEff, col("src"))
         .transform(Lineage.cut(_))
@@ -139,11 +138,7 @@ object ConnectedComponents {
       done = s2 == s
       s = s2
       e = next
-      rounds += 1
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"star contraction did not converge in $maxRounds rounds")
     // fixpoint edge set is a star forest (v → root); isolated vertices are
     // their own component
     val comp = verts

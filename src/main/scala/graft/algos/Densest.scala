@@ -1,6 +1,6 @@
 package graft.algos
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
@@ -41,46 +41,10 @@ object Densest {
   def peelProfileWeighted(spark: SparkSession, edgesW: DataFrame,
                           numPartitions: Int = 32,
                           maxRounds: Int = 64): DataFrame =
-    Lineage.withLoopConf(spark, numPartitions) {
-      var e = edgesW.select(col("src"), col("dst"),
-          col("weight").cast("long").as("w"))
-        .repartition(numPartitions, col("src"))
-        .transform(Lineage.cut(_, eager = true))
-      // scale-adaptive round parallelism (restored by withLoopConf's exit)
-      spark.conf.set("spark.sql.shuffle.partitions",
-        Lineage.adaptiveParallelism(e.count(), numPartitions).toString)
-      val prof = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      var n = -1L
-      var round = 0
-      while (n != 0L) {
-        if (round >= maxRounds)
-          throw new IllegalStateException(
-            s"weighted densest peel did not drain in $maxRounds rounds")
-        val deg = e.groupBy(col("src").as("id"))
-          .agg(sum(col("w")).as("wdeg"))
-          .transform(Lineage.cut(_))
-        val row = deg.agg(count(lit(1)), coalesce(sum(col("wdeg")), lit(0L)))
-          .head()
-        n = row.getLong(0)
-        val w2 = row.getLong(1)
-        if (n > 0) {
-          round += 1
-          prof += ((round.toLong, n, w2))
-          val keep = deg.where(col("wdeg") * lit(n) > lit(2L * w2))
-            .select("id")
-          e = e
-            .join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-            .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-            .transform(Lineage.cut(_))
-        }
-      }
-      val rows = prof.toSeq
-      import spark.implicits._
-      rows.map { case (r, nv, w2) =>
-        val best = rows.forall { case (_, nj, w2j) => w2 * nj >= w2j * nv }
-        (r, nv, w2, if (best) 1L else 0L)
-      }.toDF("round", "n_vertices", "w2_weight", "is_best")
-    }
+    peelLoop(spark, edgesW.select(col("src"), col("dst"),
+        col("weight").cast("long").as("w")),
+      sum(col("w")), "w2_weight", "weighted densest peel", numPartitions,
+      maxRounds)
 
   /** Peel profile: one row per executed round, measured BEFORE that
     * round's removal. Columns (all BIGINT): `round` (1-based),
@@ -93,48 +57,56 @@ object Densest {
   def peelProfile(spark: SparkSession, edges: DataFrame,
                   numPartitions: Int = 32,
                   maxRounds: Int = 64): DataFrame =
+    peelLoop(spark, edges.select("src", "dst"), count(lit(1)), "m2_edges",
+      "densest peel", numPartitions, maxRounds)
+
+  /** The peel both profiles run: `deg` is the per-vertex degree aggregate
+    * and `massCol` names its per-round total in the profile. Each loop
+    * head measures the current subgraph (ONE action: vertex count + degree
+    * mass off the materialized degree table); the round records it and
+    * removes every vertex with deg·n ≤ 2·mass.
+    */
+  private def peelLoop(spark: SparkSession, edges: DataFrame, deg: Column,
+                       massCol: String, what: String, numPartitions: Int,
+                       maxRounds: Int): DataFrame =
     Lineage.withLoopConf(spark, numPartitions) {
-      var e = edges.select("src", "dst")
+      var e = edges
         .repartition(numPartitions, col("src"))
         .transform(Lineage.cut(_, eager = true))
       // scale-adaptive round parallelism (restored by withLoopConf's exit)
       spark.conf.set("spark.sql.shuffle.partitions",
         Lineage.adaptiveParallelism(e.count(), numPartitions).toString)
       val prof = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      var n = -1L
-      var round = 0
-      while (n != 0L) {
-        if (round >= maxRounds)
-          throw new IllegalStateException(
-            s"densest peel did not drain in $maxRounds rounds")
-        val deg = e.groupBy(col("src").as("id"))
-          .agg(count(lit(1)).as("deg"))
+      var degs: DataFrame = null
+      var n = 0L
+      var mass = 0L
+      def measure(): Boolean = {
+        degs = e.groupBy(col("src").as("id"))
+          .agg(deg.as("deg"))
           .transform(Lineage.cut(_))
-        // ONE action per round: vertex count + half-edge count off the
-        // materialized degree table
-        val row = deg.agg(count(lit(1)), coalesce(sum(col("deg")), lit(0L)))
+        val row = degs.agg(count(lit(1)), coalesce(sum(col("deg")), lit(0L)))
           .head()
         n = row.getLong(0)
-        val m2 = row.getLong(1)
-        if (n > 0) {
-          round += 1
-          prof += ((round.toLong, n, m2))
-          // keep deg·n > 2·m2 ⇔ deg > 2(1+ε)·m/n at ε=1; exact integers
-          val keep = deg.where(col("deg") * lit(n) > lit(2L * m2))
-            .select("id")
-          e = e
-            .join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-            .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-            .transform(Lineage.cut(_))
-        }
+        mass = row.getLong(1)
+        n > 0
+      }
+      Lineage.rounds(what, maxRounds)(measure()) { round =>
+        prof += ((round.toLong, n, mass))
+        // keep deg·n > 2·mass ⇔ deg > 2(1+ε)·m/n at ε=1; exact integers
+        val keep = degs.where(col("deg") * lit(n) > lit(2L * mass))
+          .select("id")
+        e = e
+          .join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+          .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+          .transform(Lineage.cut(_))
       }
       // best round(s) by cross-multiplied rational density compare — the
       // profile is O(log n) driver-side scalars, not row data
       val rows = prof.toSeq
       import spark.implicits._
-      rows.map { case (r, nv, m2) =>
-        val best = rows.forall { case (_, nj, m2j) => m2 * nj >= m2j * nv }
-        (r, nv, m2, if (best) 1L else 0L)
-      }.toDF("round", "n_vertices", "m2_edges", "is_best")
+      rows.map { case (r, nv, m) =>
+        val best = rows.forall { case (_, nj, mj) => m * nj >= mj * nv }
+        (r, nv, m, if (best) 1L else 0L)
+      }.toDF("round", "n_vertices", massCol, "is_best")
     }
 }

@@ -1,6 +1,6 @@
 package graft.algos
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
@@ -18,65 +18,78 @@ import graft.graph.GraphOps
   */
 object KCore {
 
-  /** `rounds` synchronous peels on the symmetrized simple graph.
-    * Output: surviving vertices with their in-subgraph degree (id, deg).
+  /** One synchronous peel round, shared by every peel in this object:
+    * keep the vertices whose `deg` aggregate over their incident edges is
+    * ≥ `min`, then semi-join both endpoints onto them. The caller decides
+    * how to cut the returned plan.
     */
-  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    var e = GraphOps.symmetrize(edges).transform(Lineage.cut(_, eager = true))
+  private def peelRound(e: DataFrame, deg: Column, min: Long): DataFrame = {
+    val keep = e.groupBy(col("src").as("id"))
+      .agg(deg.as("deg"))
+      .where(col("deg") >= min)
+      .select("id")
+    e.join(keep.toDF("src"), Seq("src"), "left_semi")
+      .join(keep.toDF("dst"), Seq("dst"), "left_semi")
+      .select(e.columns.map(col).toSeq: _*)
+  }
+
+  /** `rounds` eagerly-cut peel rounds over the symmetric edge set `e0`,
+    * then (id, `name`) = each surviving vertex's `deg` aggregate.
+    */
+  private def fixedPeel(e0: DataFrame, deg: Column, min: Long, rounds: Int,
+                        name: String): DataFrame = {
+    val spark = e0.sparkSession
+    var e = e0.transform(Lineage.cut(_, eager = true))
     val req = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     Lineage.withAdaptiveLoopConf(spark, e.count(), req) { _ =>
-    for (_ <- 1 to rounds) {
-      val keep = e.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k)
-        .select("id")
-      e = e
-        .join(keep.toDF("src"), Seq("src"), "left_semi")
-        .join(keep.toDF("dst"), Seq("dst"), "left_semi")
-        .select("src", "dst")
-        .transform(Lineage.cut(_, eager = true))
-    }
-    e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+    for (_ <- 1 to rounds)
+      e = peelRound(e, deg, min).transform(Lineage.cut(_, eager = true))
+    e.groupBy(col("src").as("id")).agg(deg.as(name))
     }
   }
 
-  /** Peel to the true k-core: rounds until no vertex is removed; each round
-    * materialized (lineage-truncated). ONE job per round: the lazy
-    * localCheckpoint is materialized by the surviving-edge count (the same
-    * pattern as LabelPropagation.run — never an eager checkpoint plus a
-    * separate count). Returns ((id, deg), roundsRun); throws
-    * IllegalStateException if `maxRounds` rounds do not reach the fixpoint.
+  /** Peel the symmetric edge set `e0` (of `n0` rows) to the `k`-core
+    * fixpoint: rounds until no edge is removed. ONE job per round: the
+    * lazy localCheckpoint is materialized by the surviving-edge count
+    * (the same pattern as LabelPropagation.run — never an eager
+    * checkpoint plus a separate count). Returns (edges, their count,
+    * rounds run); throws IllegalStateException naming `what` if
+    * `maxRounds` rounds do not reach the fixpoint.
     */
-  def converged(edges: DataFrame, k: Int,
-                maxRounds: Int = 100): (DataFrame, Int) = {
-    val spark = edges.sparkSession
-    var e = GraphOps.symmetrize(edges).transform(Lineage.cut(_, eager = true))
-    var n = e.count()
-    val req = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    Lineage.withAdaptiveLoopConf(spark, n, req) { _ =>
-    var r = 0
+  private def peelToFixpoint(e0: DataFrame, n0: Long, k: Int, what: String,
+                             maxRounds: Int): (DataFrame, Long, Int) = {
+    var e = e0
+    var n = n0
     var done = false
-    while (r < maxRounds && !done) {
-      val keep = e.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k)
-        .select("id")
-      val next = e
-        .join(keep.toDF("src"), Seq("src"), "left_semi")
-        .join(keep.toDF("dst"), Seq("dst"), "left_semi")
-        .select("src", "dst")
-        .transform(Lineage.cut(_))
+    val r = Lineage.rounds(what, maxRounds)(!done) { _ =>
+      val next = peelRound(e, count(lit(1)), k).transform(Lineage.cut(_))
       val m = next.count() // materializes + truncates lineage in one job
       done = m == n
       n = m
       e = next
-      r += 1
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"k-core did not converge in $maxRounds rounds")
-    (e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")), r)
+    (e, n, r)
+  }
+
+  /** `rounds` synchronous peels on the symmetrized simple graph.
+    * Output: surviving vertices with their in-subgraph degree (id, deg).
+    */
+  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    fixedPeel(GraphOps.symmetrize(edges), count(lit(1)), k, rounds, "deg")
+
+  /** Peel to the true k-core ([[peelToFixpoint]]). Returns
+    * ((id, deg), roundsRun); throws IllegalStateException if `maxRounds`
+    * rounds do not reach the fixpoint.
+    */
+  def converged(edges: DataFrame, k: Int,
+                maxRounds: Int = 100): (DataFrame, Int) = {
+    val spark = edges.sparkSession
+    val e = GraphOps.symmetrize(edges).transform(Lineage.cut(_, eager = true))
+    val n = e.count()
+    val req = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    Lineage.withAdaptiveLoopConf(spark, n, req) { _ =>
+    val (core, _, r) = peelToFixpoint(e, n, k, "k-core", maxRounds)
+    (core.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")), r)
     }
   }
 
@@ -87,31 +100,15 @@ object KCore {
     * src < dst oriented; symmetrization preserves the weight on both
     * directions. Weights are exact integers (BIGINT counts), so the
     * DuckDB twin is exact at any equal unroll. Output: surviving vertices
-    * with their in-subgraph weighted degree (id, wdeg). Same one
-    * agg + two semi-joins per materialized round as [[peel]].
+    * with their in-subgraph weighted degree (id, wdeg). Same
+    * [[peelRound]] as [[peel]], on the weight sum.
     */
-  def peelWeighted(wedges: DataFrame, s: Long, rounds: Int): DataFrame = {
-    var e = wedges.select(col("src"), col("dst"), col("weight"))
-      .union(wedges.select(col("dst").as("src"), col("src").as("dst"),
-        col("weight")))
-      .transform(Lineage.cut(_, eager = true))
-    val spark = wedges.sparkSession
-    val req = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    Lineage.withAdaptiveLoopConf(spark, e.count(), req) { _ =>
-    for (_ <- 1 to rounds) {
-      val keep = e.groupBy(col("src").as("id"))
-        .agg(sum(col("weight")).as("wdeg"))
-        .where(col("wdeg") >= s)
-        .select("id")
-      e = e
-        .join(keep.toDF("src"), Seq("src"), "left_semi")
-        .join(keep.toDF("dst"), Seq("dst"), "left_semi")
-        .select("src", "dst", "weight")
-        .transform(Lineage.cut(_, eager = true))
-    }
-    e.groupBy(col("src").as("id")).agg(sum(col("weight")).as("wdeg"))
-    }
-  }
+  def peelWeighted(wedges: DataFrame, s: Long, rounds: Int): DataFrame =
+    fixedPeel(
+      wedges.select(col("src"), col("dst"), col("weight"))
+        .union(wedges.select(col("dst").as("src"), col("src").as("dst"),
+          col("weight"))),
+      sum(col("weight")), s, rounds, "wdeg")
 
   /** Full core DECOMPOSITION — coreness(v) = max k with v ∈ k-core
     * (Seidman, Social Networks 5, 1983; the distributed peel is
@@ -127,7 +124,9 @@ object KCore {
     * Each level reuses the previous level's surviving edge set (never
     * restarts from the full graph), so total work is Σ_k |E_k| — the
     * sequential-peel bound, parallelized per round. One driver action per
-    * peel round ([[converged]]'s count-materializes discipline).
+    * peel round ([[peelToFixpoint]], uncapped: a finite peel always
+    * reaches its fixpoint). Throws IllegalStateException if the
+    * (maxK+1)-core is not empty.
     *
     * Returns ((id, coreness) for every non-isolated vertex, max coreness,
     * per-level peel round counts — the last level is the empty-k-core
@@ -141,32 +140,13 @@ object KCore {
       .select(col("id"), col("id").as("coreness"))
     val req = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     Lineage.withAdaptiveLoopConf(spark, n, req) { _ =>
-    var k = 0
     val perLevel = scala.collection.mutable.ArrayBuffer.empty[Int]
-    while (n > 0) {
-      k += 1
-      if (k > maxK)
-        throw new IllegalStateException(
-          s"coreness exceeded maxK=$maxK — raise the bound")
-      var done = false
-      var lvlRounds = 0
-      while (!done) {
-        lvlRounds += 1
-        val keep = e.groupBy(col("src").as("id"))
-          .agg(count(lit(1)).as("deg"))
-          .where(col("deg") >= k)
-          .select("id")
-        val next = e
-          .join(keep.toDF("src"), Seq("src"), "left_semi")
-          .join(keep.toDF("dst"), Seq("dst"), "left_semi")
-          .select("src", "dst")
-          .transform(Lineage.cut(_))
-        val m = next.count()
-        done = m == n
-        n = m
-        e = next
-      }
-      perLevel += lvlRounds
+    val nLevels = Lineage.rounds("coreness levels", maxK)(n > 0) { k =>
+      val (next, m, r) =
+        peelToFixpoint(e, n, k, s"coreness level $k", Int.MaxValue)
+      e = next
+      n = m
+      perLevel += r
       if (n > 0)
         levels = levels
           .unionByName(e.select(col("src").as("id")).distinct()
@@ -174,7 +154,7 @@ object KCore {
           .transform(Lineage.cut(_, eager = true))
     }
     val out = levels.groupBy("id").agg(max(col("coreness")).as("coreness"))
-    (out, k - 1, perLevel.toSeq)
+    (out, nLevels - 1, perLevel.toSeq)
     }
   }
 }

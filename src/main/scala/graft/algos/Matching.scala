@@ -111,9 +111,7 @@ object Matching {
       .transform(Lineage.cut(_, eager = true))
     var matched = spark.range(0)
       .select(col("id").as("src"), col("id").as("dst"))
-    var r = 0
-    while (nActive > 0 && r < maxRounds) {
-      r += 1
+    val r = Lineage.rounds("b-matching", maxRounds)(nActive > 0) { _ =>
       // rank every edge at EACH endpoint (a vertex's incident edges sit in
       // both the src and dst columns, so rank over the doubled view — one
       // key-partitioned window, no global window)
@@ -149,9 +147,6 @@ object Matching {
         .transform(Lineage.cut(_))
       nActive = active.count()
     }
-    if (nActive > 0)
-      throw new IllegalStateException(
-        s"b-matching did not drain $nActive edges in $maxRounds rounds")
     (matched, r)
     }
   }
@@ -170,8 +165,7 @@ object Matching {
     Lineage.withAdaptiveLoopConf(spark, nActive, numPartitions) { _ =>
     var matched = spark.range(0)
       .select(outCols.map(c => col("id").as(c)): _*)
-    var r = 0
-    while (nActive > 0 && r < maxRounds) {
+    val r = Lineage.rounds("matching", maxRounds)(nActive > 0) { _ =>
       // per-endpoint max priority over incident ACTIVE edges
       val byV = active.select(col("src").as("v"), col("p"))
         .union(active.select(col("dst").as("v"), col("p")))
@@ -191,11 +185,7 @@ object Matching {
         .join(used.toDF("dst"), Seq("dst"), "left_anti")
         .transform(Lineage.cut(_))
       nActive = active.count()
-      r += 1
     }
-    if (nActive > 0)
-      throw new IllegalStateException(
-        s"matching did not drain $nActive edges in $maxRounds rounds")
     (matched, r)
     }
   }

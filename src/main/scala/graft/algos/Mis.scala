@@ -42,8 +42,7 @@ object Mis {
       .transform(Lineage.cut(_))
     var nActive = active.count()
     var inMis = spark.range(0).select(col("id"))
-    var r = 0
-    while (nActive > 0 && r < maxRounds) {
+    val r = Lineage.rounds("MIS", maxRounds)(nActive > 0) { _ =>
       // strict priority local-max among UNDECIDED neighbors (the 60-bit
       // md5 prefix is collision-free on the tested id domains; were two
       // priorities ever equal, neither vertex would win — identically in
@@ -64,11 +63,7 @@ object Mis {
         .join(out, Seq("id"), "left_anti")
         .transform(Lineage.cut(_))
       nActive = active.count()
-      r += 1
     }
-    if (nActive > 0)
-      throw new IllegalStateException(
-        s"MIS did not decide $nActive vertices in $maxRounds rounds")
     val res = verts
       .join(inMis.withColumn("one", lit(1L)), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("one"), lit(0L)).as("in_mis"))

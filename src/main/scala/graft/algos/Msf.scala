@@ -33,7 +33,7 @@ import graft.graph.GraphOps
   *
   * Discipline: one driver action per Borůvka round (the contracted-edge
   * count materializes the round) plus one per jump round (the change
-  * aggregate), both loudly capped — the Scc/KCore pattern.
+  * aggregate), both capped by [[graft.engine.Lineage.rounds]].
   */
 object Msf {
 
@@ -87,15 +87,11 @@ object Msf {
       spark.conf.set("spark.sql.shuffle.partitions", nP.toString)
     var forest = spark.range(0).select(col("id").as("src"),
       col("id").as("dst"), col("id").as("weight"))
-    var rounds = 0
     var jumpTotal = 0
     var maxJump = 0
 
-    while (nActive > 0) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"Borůvka MSF did not converge in $maxRounds rounds")
-      rounds += 1
+    val rounds = Lineage.rounds("Borůvka MSF", maxRounds)(nActive > 0) {
+        round =>
       // 1. per-component min incident edge over the doubled view — TWO
       // phases so the full-edge-set aggregate stays on the HashAggregate
       // path (a single min_by over a struct ordering key has a struct
@@ -131,13 +127,8 @@ object Msf {
         .transform(Lineage.cut(_, eager = true))
       // 3. pointer jumping to the roots — one action per jump round
       var jumping = true
-      var jr = 0
-      while (jumping) {
-        if (jr >= maxJumpRounds)
-          throw new IllegalStateException(
-            s"MSF pointer jumping did not converge in $maxJumpRounds rounds" +
-              s" (round=$rounds)")
-        jr += 1
+      val jr = Lineage.rounds(s"MSF pointer jumping (Borůvka round $round)",
+          maxJumpRounds)(jumping) { _ =>
         val nxt = par
           .join(par.select(col("c").as("p"), col("p").as("pp")), "p")
           .select(col("c"), col("pp").as("p"),

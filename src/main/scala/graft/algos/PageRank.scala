@@ -125,74 +125,6 @@ object PageRank {
     loop.copy(state = all)
   }
 
-  /** Delta (push-based) PageRank with a TOLERANCE SCHEDULE — the
-    * measure-first answer to VERDICT r3/r4's carried "PR tolerance
-    * schedule" item (see ToleranceScheduleProbe + BASELINE.md r5 for the
-    * A/B). Classic delta-PR (GraphLab lineage, public): every vertex
-    * holds (rank, pending); a round scatters only vertices whose pending
-    * exceeds the CURRENT phase threshold θ, shipping 0.85·pending/outdeg
-    * to out-neighbors; receivers add the mass to BOTH rank and pending;
-    * scattered vertices zero their pending. The fixpoint is the same
-    * linear-system solution r* = (I − 0.85·Aᵀ)⁻¹·0.15·1 the stationary
-    * iteration converges to (rank = partial geometric-series sum; pending
-    * = un-propagated remainder), so a loose→tight schedule changes WORK,
-    * not the answer. The frontier SHRINKS as vertices locally converge —
-    * LA3's computation-filtering idea applied within the loop, where the
-    * stationary spelling re-scatters all n vertices every superstep.
-    *
-    * Each phase (θ, maxRounds) runs until no pending > θ; the LAST
-    * phase's θ is the accuracy knob (un-propagated mass per vertex ≤ θ at
-    * exit; measured L∞ vs the stationary 1e-6 fixpoint in the probe).
-    * One action per round (lazy cut + frontier-count agg). Returns the
-    * final (id, rank) plus (rounds, total scattered rows) — the shuffle
-    * volume the schedule is supposed to save.
-    */
-  def deltaScheduled(spark: SparkSession, edges: DataFrame,
-                     numPartitions: Int = 32,
-                     schedule: Seq[(Double, Int)] = Seq((1e-3, 100), (1e-7, 200))
-                    ): (DataFrame, Int, Long) = {
-    import graft.engine.Lineage
-    val e = edges.select("src", "dst")
-    val eDeg = e
-      .join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .repartition(numPartitions, col("src"))
-      .transform(Lineage.cut(_, eager = true))
-    var state = GraphOps.vertices(e)
-      .select(col("id"), lit(Teleport).as("rank"), lit(Teleport).as("pending"))
-      .repartition(numPartitions, col("id"))
-      .transform(Lineage.cut(_, eager = true))
-    var rounds = 0
-    var scattered = 0L
-    for ((theta, maxRounds) <- schedule) {
-      var nFrontier = state.where(col("pending") > theta).count()
-      var r = 0
-      while (nFrontier > 0) {
-        if (r >= maxRounds)
-          throw new IllegalStateException(
-            s"delta PR phase θ=$theta did not drain in $maxRounds rounds")
-        r += 1
-        rounds += 1
-        scattered += nFrontier
-        val frontier = state.where(col("pending") > theta)
-          .select(col("id").as("src"), col("pending"))
-        val msgs = eDeg.join(frontier, "src")
-          .groupBy(col("dst").as("id"))
-          .agg((lit(Damping) * sum(col("pending") / col("outdeg"))).as("m"))
-        val next = state.join(msgs.hint("shuffle_hash"), Seq("id"),
-            "left_outer")
-          .select(col("id"),
-            (col("rank") + coalesce(col("m"), lit(0.0))).as("rank"),
-            (when(col("pending") > theta, lit(0.0)).otherwise(col("pending"))
-              + coalesce(col("m"), lit(0.0))).as("pending"))
-          .transform(Lineage.cut(_))
-        // ONE job: materializes next and counts the next frontier
-        nFrontier = next.where(col("pending") > theta).count()
-        state = next
-      }
-    }
-    (state.select("id", "rank"), rounds, scattered)
-  }
-
   /** Personalized PageRank, fixed-k unrolled (oracle path): teleport mass
     * goes only to the source set S — r₀ = 1_S, r' = 0.15·1_S(v) + 0.85·mass.
     * `sourcePred` maps the id column to the S-membership predicate (a

@@ -220,27 +220,18 @@ object Paths {
         lit(false).as("settled"))
       .transform(Lineage.cut(_))
     var bRow = st.agg(nextBucket).head() // materializes init + finds bucket 0
-    var buckets = 0
     var lightRounds = 0
-    while (!bRow.isNullAt(0)) {
+    val buckets = Lineage.rounds(s"delta-stepping buckets (delta=$delta)",
+        maxBuckets)(!bRow.isNullAt(0)) { _ =>
       val b = bRow.getLong(0)
-      buckets += 1
-      if (buckets > maxBuckets)
-        throw new IllegalStateException(
-          s"delta-stepping exceeded $maxBuckets buckets (delta=$delta too small?)")
       val inBucket =
         !col("settled") && col("dist").isNotNull && bkt(col("dist")) === b
       // first pass scatters the whole open bucket; later passes only the
       // vertices whose distance improved into it (chg)
       var front = st.where(inBucket).select(col("id").as("src"), col("dist"))
       var changed = true
-      var inner = 0
-      while (changed) {
-        inner += 1
-        lightRounds += 1
-        if (inner > maxInner)
-          throw new IllegalStateException(
-            s"delta-stepping bucket $b did not close in $maxInner light rounds")
+      lightRounds += Lineage.rounds(s"delta-stepping bucket $b", maxInner)(
+          changed) { _ =>
         val msgs = light.join(front, "src")
           .groupBy(col("dst").as("id"))
           .agg(min(col("dist") + col("w")).as("nd"))

@@ -48,9 +48,9 @@ import graft.graph.GraphOps
   * Discipline: every inner round is exactly ONE driver action (lazy
   * localCheckpoint materialized by the change-count aggregate — the
   * KCore/LabelPropagation pattern; VERDICT r4 "Next 2"), and both sweeps
-  * throw loudly if maxSweepRounds is exhausted (ADVICE r4: the same
-  * IllegalStateException-on-exhaustion bound as Coloring/Mis/Matching;
-  * 48 jump rounds cover diameters beyond 2^40).
+  * throw loudly if maxSweepRounds is exhausted (ADVICE r4; the sweep and
+  * outer loops run on [[Lineage.rounds]]; 48 jump rounds cover diameters
+  * beyond 2^40).
   *
   * Output: (id, scc) with scc = min member id — exact, so the driver gate
   * is a hard integer compare against DuckDB's closure-based definition
@@ -60,46 +60,33 @@ object Scc {
 
   private def prio(idCol: Column): Column = xxhash64(idCol)
 
+  /** Trim rounds per outer round. A/B at sf0.01 (BASELINE.md r5 "SCC
+    * adaptive trim continuation"): trimming past 4 rounds removes <5% of
+    * the remaining vertices per round and leaves the sweep and outer
+    * round counts unchanged, so deeper trim only adds jobs.
+    */
+  private val TrimRounds = 4
+
   def run(spark: SparkSession, edges: DataFrame, numPartitions: Int = 32,
           maxOuter: Int = 100, verbose: Boolean = false,
-          maxTrimRounds: Int = 4, maxSweepRounds: Int = 48,
-          trimContinueFrac: Double = 1.0,
-          trimHardCap: Int = 64): DataFrame =
+          maxSweepRounds: Int = 48): DataFrame =
     runWithStats(spark, edges, numPartitions, maxOuter, verbose,
-      maxTrimRounds, maxSweepRounds, trimContinueFrac, trimHardCap)._1
+      maxSweepRounds)._1
 
   /** As [[run]], plus round stats: outer / trim / sweep round counts —
     * the spec pins sweepRounds ≪ diameter on a deep chain of SCCs.
-    *
-    * Trim adaptivity (round-6 queue item, MEASURED NEGATIVE — default
-    * off): the first `maxTrimRounds` trim rounds per outer always run;
-    * beyond that the loop continues only while each round keeps removing
-    * ≥ `trimContinueFrac` of the remaining vertices (1.0 = never, the
-    * default), bounded by `trimHardCap`. A/B at sf0.01 (SccRoundsProbe,
-    * frac 0.05/0.01 vs off): sweep rounds 29 and outers 3 are IDENTICAL
-    * in every leg — the post-budget trim tail removes <5% per round, so
-    * the heuristic only adds 2–3 rounds and ~2 jobs for nothing; the
-    * sparse-graph constant lives in the sweeps, not the trim depth
-    * (BASELINE.md r5). The knob stays for graphs whose peel tail is
-    * genuinely fat. Trim is an optimization either way: whatever it
-    * leaves, the sweeps resolve.
     */
   def runWithStats(spark: SparkSession, edges: DataFrame,
                    numPartitions: Int = 32, maxOuter: Int = 100,
-                   verbose: Boolean = false, maxTrimRounds: Int = 4,
-                   maxSweepRounds: Int = 48,
-                   trimContinueFrac: Double = 0.05,
-                   trimHardCap: Int = 64): (DataFrame, Map[String, Int]) =
+                   verbose: Boolean = false,
+                   maxSweepRounds: Int = 48): (DataFrame, Map[String, Int]) =
     Lineage.withLoopConf(spark, numPartitions) {
-      runLoop(spark, edges, numPartitions, maxOuter, verbose,
-        maxTrimRounds, maxSweepRounds, trimContinueFrac, trimHardCap)
+      runLoop(spark, edges, numPartitions, maxOuter, verbose, maxSweepRounds)
     }
 
   private def runLoop(spark: SparkSession, edges: DataFrame,
                       numPartitions: Int, maxOuter: Int, verbose: Boolean,
-                      maxTrimRounds: Int, maxSweepRounds: Int,
-                      trimContinueFrac: Double,
-                      trimHardCap: Int): (DataFrame, Map[String, Int]) = {
+                      maxSweepRounds: Int): (DataFrame, Map[String, Int]) = {
     var e = edges.select("src", "dst").where(col("src") =!= col("dst"))
       .distinct()
       .repartition(numPartitions, col("src"))
@@ -113,7 +100,6 @@ object Scc {
     var active = GraphOps.vertices(e).transform(Lineage.cut(_, eager = true))
     var nActive = active.count()
     var done = spark.range(0).select(col("id"), col("id").as("scc"))
-    var outer = 0
     var trimTotal = 0
     var sweepTotal = 0
     var maxSweep = 0
@@ -127,7 +113,7 @@ object Scc {
       * Returns (id, fi, wi) at fixpoint plus the round count. One driver
       * action per round.
       */
-    def dualSweep(): (DataFrame, Int) = {
+    def dualSweep(outer: Int): (DataFrame, Int) = {
       val e2 = e.select(col("src"), col("dst"), lit(0).as("dir"))
         .unionByName(e.select(col("dst").as("src"), col("src").as("dst"),
           lit(1).as("dir")))
@@ -137,14 +123,9 @@ object Scc {
         .select(col("id"), explode(array(lit(0), lit(1))).as("dir"),
           prio(col("id")).as("bp"), col("id").as("bi"))
         .transform(Lineage.cut(_))
-      var r = 0
       var changed = true
-      while (changed) {
-        if (r >= maxSweepRounds)
-          throw new IllegalStateException(
-            s"SCC sweep did not converge in $maxSweepRounds rounds " +
-              s"(outer=$outer)")
-        r += 1
+      val r = Lineage.rounds(s"SCC sweep (outer round $outer)",
+          maxSweepRounds)(changed) { round =>
         val msgs = e2
           .join(cur.select(col("id").as("src"), col("dir"),
             struct(col("bp").as("p"), col("bi").as("i")).as("mb")),
@@ -171,7 +152,7 @@ object Scc {
         changed = Option(next.agg(sum(when(col("ch"), 1L).otherwise(0L)))
           .head().get(0)).exists(_.asInstanceOf[Long] > 0)
         cur = next.select("id", "dir", "bp", "bi")
-        if (verbose) println(s"[scc]   sweep round $r changed=$changed")
+        if (verbose) println(s"[scc]   sweep round $round changed=$changed")
       }
       val out = cur.where(col("dir") === 0).select(col("id"),
           col("bi").as("fi"))
@@ -180,24 +161,19 @@ object Scc {
       (out, r)
     }
 
-    while (outer < maxOuter && nActive > 0) {
-      outer += 1
-      // --- 1. trim singleton SCCs to a CAPPED fixpoint (optimization
-      // only — whatever trimming leaves, the sweeps resolve; ADVICE r4)
+    val nOuter = Lineage.rounds("SCC", maxOuter)(nActive > 0) { outer =>
+      // --- 1. trim singleton SCCs for at most TrimRounds rounds, stopping
+      // early when a round removes nothing (optimization only — whatever
+      // trimming leaves, the sweeps resolve; ADVICE r4)
       var trimming = true
       var tr = 0
-      while (trimming && tr < trimHardCap && nActive > 0) {
+      while (trimming && tr < TrimRounds && nActive > 0) {
         tr += 1
         val srcs = e.select(col("src").as("id")).distinct()
         val dsts = e.select(col("dst").as("id")).distinct()
         val keep = srcs.join(dsts, Seq("id"), "left_semi")
           .transform(Lineage.cut(_))
         val nKeep = keep.count()
-        // adaptive continuation: beyond the guaranteed budget, keep
-        // peeling only while the round removed a useful fraction
-        if (tr >= maxTrimRounds &&
-            (nActive - nKeep).toDouble < trimContinueFrac * nActive)
-          trimming = false
         if (nKeep == nActive) trimming = false
         else {
           done = done
@@ -218,7 +194,7 @@ object Scc {
       trimTotal += tr
       if (nActive > 0) {
         // --- 2. fused forward + backward signature sweeps
-        val (fwbw, r) = dualSweep()
+        val (fwbw, r) = dualSweep(outer)
         sweepTotal += r
         maxSweep = math.max(maxSweep, r)
         val joined = fwbw
@@ -253,10 +229,7 @@ object Scc {
         println(s"[scc] outer=$outer trimRounds=$tr " +
           s"sweepRounds=$sweepTotal remaining=$nActive")
     }
-    if (nActive > 0)
-      throw new IllegalStateException(
-        s"SCC did not resolve $nActive vertices in $maxOuter outer rounds")
-    (done, Map("outer" -> outer, "trimRounds" -> trimTotal,
+    (done, Map("outer" -> nOuter, "trimRounds" -> trimTotal,
       "sweepRounds" -> sweepTotal, "maxSweep" -> maxSweep))
   }
 

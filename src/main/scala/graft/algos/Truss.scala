@@ -71,9 +71,8 @@ object Truss {
     var lastSupp = spark.range(0)
       .select(col("id").as("src"), col("id").as("dst"),
         col("id").as("support"))
-    var r = 0
     var done = n == 0
-    while (r < maxRounds && !done) {
+    val r = Lineage.rounds("k-truss", maxRounds)(!done) { _ =>
       // supp is lazily checkpointed too: the count below caches it, so the
       // post-loop output read is served from cache instead of re-running
       // the final wedge join
@@ -85,11 +84,7 @@ object Truss {
       done = m == n
       n = m
       e = next
-      r += 1
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"k-truss did not converge in $maxRounds rounds")
     // at the fixpoint the last support table was computed ON the surviving
     // set, so its ≥ k−2 rows are the final edges with final support
     (lastSupp.where(col("support") >= k - 2), r)

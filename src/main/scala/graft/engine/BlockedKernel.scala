@@ -5,20 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.graph.GraphOps
 
-/** The two CSR-blocked SpMV spellings (SURVEY.md §2.2 G6, §4.4 deferred
-  * candidate 2), kept side by side so the choice stays a measurement:
-  *
-  *  - [[prFixedExplode]]: relational — join blocks with the rank frame on
-  *    src, `explode(dsts)`, hash-agg by dst. Everything stays in Tungsten
-  *    rows + whole-stage codegen.
-  *  - [[prFixedCogroup]]: typed — `KeyValueGroupedDataset.cogroup` of
-  *    blocks with ranks; the per-src flatMap walks the packed adjacency
-  *    arrays in JVM code (LA3's CSC column loop, literally). Costs
-  *    deserialization of every EdgeBlock per superstep and an extra
-  *    grouping exchange of the rank side.
-  *
-  * Both compute the exact pr5 trajectory (outdeg = packed adjacency
-  * length). Measured verdict in BASELINE.md round 3 (BlockedKernelProbe).
+/** CSR-blocked SpMV (SURVEY.md §2.2 G6, §4.4 deferred candidate 2),
+  * relational spelling: join blocks with the rank frame on src,
+  * `explode(dsts)`, hash-agg by dst — everything stays in Tungsten rows +
+  * whole-stage codegen. Computes the exact pr5 trajectory (outdeg =
+  * packed adjacency length). Relational, not a typed `cogroup` walk of
+  * the packed arrays (LA3's CSC column loop): the typed spelling measured
+  * ~20% slower (BASELINE.md round 3, "Blocked kernel A/B").
   */
 object BlockedKernel {
 
@@ -35,37 +28,6 @@ object BlockedKernel {
       val msgs = blocks.join(rank.withColumnRenamed("id", "src"), "src")
         .select(explode(col("dsts")).as("id"),
           (col("rank") / size(col("dsts"))).as("m"))
-        .groupBy("id").agg(sum(col("m")).as("mass"))
-      rank = verts.join(msgs, Seq("id"), "left_outer")
-        .select(col("id"), (lit(0.15) +
-          lit(0.85) * coalesce(col("mass"), lit(0.0))).as("rank"))
-    }
-    rank
-  }
-
-  /** Typed cogroup blocked kernel: same trajectory, imperative inner loop.
-    * Blocks and vertices are materialized once (loop-invariant).
-    */
-  def prFixedCogroup(e: DataFrame, k: Int, numBlocks: Int): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val verts = GraphOps.vertices(e).transform(Lineage.cut(_, eager = true))
-    val blocks = GraphOps.edgeBlocks(e, numBlocks)
-      .repartition(numBlocks, col("src"))
-      .cache()
-    var rank = verts.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to k) {
-      val msgs = blocks.groupByKey(_.src)
-        .cogroup(rank.as[(Long, Double)].groupByKey(_._1)) { (_, bs, rs) =>
-          if (rs.hasNext) {
-            val rv = rs.next()._2
-            bs.flatMap { b =>
-              val c = rv / b.dsts.length
-              b.dsts.iterator.map(d => (d, c))
-            }
-          } else Iterator.empty
-        }
-        .toDF("id", "m")
         .groupBy("id").agg(sum(col("m")).as("mass"))
       rank = verts.join(msgs, Seq("id"), "left_outer")
         .select(col("id"), (lit(0.15) +

@@ -7,8 +7,9 @@ import org.apache.spark.sql.graftbridge.StatsBridge
 object Lineage {
 
   /** Loop-scoped session tuning shared by every iterative kernel (the
-    * Superstep discipline, extracted in r5 when SccRoundsProbe measured
-    * AQE splitting each one-action round into ~8 stage-jobs): AQE off
+    * Superstep discipline, extracted in r5 when AQE was measured splitting
+    * each one-action SCC round into ~8 stage-jobs — BASELINE.md r5 "SCC
+    * rewritten", "AQE job explosion"): AQE off
     * (pure scheduling overhead for hundreds of small identical round
     * jobs), sort-merge join off (round joins must be shuffled-hash — SMJ
     * re-sorts the big side every round), shuffle partitions pinned to the
@@ -64,6 +65,26 @@ object Lineage {
       try body(nEff)
       finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
+  }
+
+  /** The capped round loop of every hand-written iterative kernel: runs
+    * `round` (given its 1-based number) while `pending` holds and returns
+    * the number of rounds run. `pending` is evaluated once per loop head.
+    * If it still holds after `maxRounds` rounds, throws
+    * IllegalStateException naming `what` — a loop that runs out of rounds
+    * fails loudly instead of returning a partial result.
+    */
+  def rounds(what: String, maxRounds: Int)(pending: => Boolean)(
+      round: Int => Unit): Int = {
+    var r = 0
+    while (pending) {
+      if (r >= maxRounds)
+        throw new IllegalStateException(
+          s"$what did not converge in $maxRounds rounds")
+      r += 1
+      round(r)
+    }
+    r
   }
 
   /** `localCheckpoint` + plan-size clamp. The checkpoint truncates the

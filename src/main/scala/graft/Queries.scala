@@ -11,6 +11,7 @@ import graft.engine.{CheckpointStore, SuperstepConfig}
 import graft.graph.{EdgeDerivation, GraphOps, TestGraphs}
 import graft.multimodal.Multimodal
 import graft.text.TextOps
+import graft.util.TempDir
 
 /** The engine's operator surface wired over the driver's testdata parquets
   * (one entry per operator family, SURVEY.md §2). Each oracle-checked query
@@ -45,6 +46,18 @@ object Queries {
     */
   private def prBlocked(e: DataFrame, k: Int, numBlocks: Int): DataFrame =
     graft.engine.BlockedKernel.prFixedExplode(e, k, numBlocks)
+
+  /** The weighted co-purchase edges written by `write` under a temp dir
+    * and read back by `read`, materialized so the dir can be removed. */
+  private def roundTrip(s: SparkSession, dir: String)
+                       (write: (DataFrame, String) => Unit)
+                       (read: String => DataFrame): DataFrame =
+    TempDir.withTempDir("graft-roundtrip") { base =>
+      val path = s"$base/edges"
+      write(TestGraphs.copurchase(s, dir)
+        .select(col("src"), col("dst"), col("weight")), path)
+      read(path).orderBy("src", "dst").localCheckpoint(true)
+    }
 
   val oracleChecked: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- graph derivation (G8 analogs) -----------------------------------
@@ -160,98 +173,26 @@ object Queries {
         .state.select(col("id"), round(col("rank"), 6).as("pr"))
         .orderBy("id")),
 
-    // --- S1 text edge-list reader under the hard oracle gate: the weighted
-    // co-purchase edges round-trip through the converter input format
-    // ("src dst weight" lines) and come back via the distributed csv-schema
-    // reader; materialized eagerly so the temp dir can be removed.
-    // co-purchase edges round-trip through JSON lines (S-family source
-    // format beside text + parquet): explicit-schema read, no inferSchema
-    // pre-scan; materialized eagerly so the temp dir can be removed.
-    "jsonl_roundtrip" -> ((s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-jsonl").toString
-      try {
-        val jsonDir = s"$base/edges"
-        TestGraphs.copurchase(s, dir)
-          .select(col("src"), col("dst"), col("weight"))
-          .write.mode("overwrite").json(jsonDir)
-        GraphOps.readJsonEdges(s, jsonDir)
-          .orderBy("src", "dst").localCheckpoint(true)
-      } finally {
-        import java.nio.file.{Files => F, Path}
-        import java.util.Comparator
-        val walk = F.walk(Path.of(base))
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => F.deleteIfExists(p))
-        finally walk.close()
-      }
-    }),
+    // --- S-family source formats under the hard oracle gate: the weighted
+    // co-purchase edges round-trip through JSON lines, CSV (header), ORC
+    // and the converter's "src dst weight" text lines, each read back with
+    // an explicit schema (no inferSchema pre-scan; integral weight
+    // preserved exactly) — all four share one oracle ----------------------
+    "jsonl_roundtrip" -> ((s, dir) =>
+      roundTrip(s, dir)(_.write.json(_))(GraphOps.readJsonEdges(s, _))),
 
-    // --- CSV edge sink + source (S-family): explicit schema, header,
-    // no inferSchema pre-scan; shares jsonl_roundtrip's oracle semantics -
-    "csv_roundtrip" -> ((s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-csv").toString
-      try {
-        val csvDir = s"$base/edges"
-        TestGraphs.copurchase(s, dir)
-          .select(col("src"), col("dst"), col("weight"))
-          .write.mode("overwrite").option("header", "true").csv(csvDir)
-        GraphOps.readCsvEdges(s, csvDir)
-          .orderBy("src", "dst").localCheckpoint(true)
-      } finally {
-        import java.nio.file.{Files => F, Path}
-        import java.util.Comparator
-        val walk = F.walk(Path.of(base))
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => F.deleteIfExists(p))
-        finally walk.close()
-      }
-    }),
+    "csv_roundtrip" -> ((s, dir) =>
+      roundTrip(s, dir)(_.write.option("header", "true").csv(_))(
+        GraphOps.readCsvEdges(s, _))),
 
-    // --- ORC edge sink + source (S-family): the columnar format beside
-    // text / parquet / JSON-lines / CSV; explicit schema, integral weight
-    // preserved exactly -----------------------------------------------------
-    "orc_roundtrip" -> ((s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-orc").toString
-      try {
-        val orcDir = s"$base/edges"
-        TestGraphs.copurchase(s, dir)
-          .select(col("src"), col("dst"), col("weight"))
-          .write.mode("overwrite").orc(orcDir)
-        GraphOps.readOrcEdges(s, orcDir)
-          .orderBy("src", "dst").localCheckpoint(true)
-      } finally {
-        import java.nio.file.{Files => F, Path}
-        import java.util.Comparator
-        val walk = F.walk(Path.of(base))
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => F.deleteIfExists(p))
-        finally walk.close()
-      }
-    }),
+    "orc_roundtrip" -> ((s, dir) =>
+      roundTrip(s, dir)(_.write.orc(_))(GraphOps.readOrcEdges(s, _))),
 
-    "edgelist_roundtrip" -> ((s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-edgelist").toString
-      try {
-        val txtDir = s"$base/edges"
-        TestGraphs.copurchase(s, dir)
-          .select(concat_ws(" ", col("src"), col("dst"), col("weight"))
-            .as("value"))
-          .write.mode("overwrite").text(txtDir)
-        GraphOps.readEdgeList(s, txtDir)
-          .orderBy("src", "dst").localCheckpoint(true)
-      } finally {
-        import java.nio.file.{Files => F, Path}
-        import java.util.Comparator
-        val walk = F.walk(Path.of(base))
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => F.deleteIfExists(p))
-        finally walk.close()
-      }
-    }),
+    "edgelist_roundtrip" -> ((s, dir) =>
+      roundTrip(s, dir)((e, path) => e
+        .select(concat_ws(" ", col("src"), col("dst"), col("weight"))
+          .as("value"))
+        .write.text(path))(GraphOps.readEdgeList(s, _))),
 
     // --- S4 checkpoint/resume under the hard oracle gate: run 1 stops at
     // superstep 3 leaving durable snapshots; run 2 resumes from the latest
@@ -262,27 +203,17 @@ object Queries {
     // (CheckpointSpec separately proves resume ≡ straight on
     // convergence-driven runs.)
     "pr_resume" -> ((s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-resume").toString
       val e = und(s, dir).localCheckpoint(true)
-      try {
-        val ck = new CheckpointStore(base, "pr", "driver")
+      // the final state is eagerly cached (localCheckpoint blocks), so the
+      // snapshot dir can go; Bench runs each query twice
+      TempDir.withTempDir("graft-resume") { base =>
+        val ck = new CheckpointStore(base.toString, "pr", "driver")
         PageRank.run(s, e, cfg(s).copy(tol = 0.0, maxIter = 3,
           checkpoint = Some(ck), durableEvery = 2))
         PageRank.run(s, e, cfg(s).copy(tol = 0.0, maxIter = 5,
           checkpoint = Some(ck), durableEvery = 2), resume = true)
           .state.select(col("id"), round(col("rank"), 6).as("pr"))
           .orderBy("id")
-      } finally {
-        // Final state is eagerly cached (localCheckpoint blocks), so the
-        // snapshot files are no longer needed; Bench runs each query twice
-        // and the dirs would otherwise accumulate.
-        import java.nio.file.{Files => F, Path}
-        import java.util.Comparator
-        val walk = F.walk(Path.of(base))
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => F.deleteIfExists(p))
-        finally walk.close()
       }
     }),
 

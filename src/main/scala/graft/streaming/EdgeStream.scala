@@ -18,6 +18,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   *    (KeyValueGroupedDataset.mapGroupsWithState) — the streaming analog of
   *    G3, feeding degree-aware planning (hub split thresholds) without a
   *    full rescan.
+  *
+  * The `*ViaStream` shapes run a statistic as a bounded replay on
+  * [[Replay]] (stage, stream one file per micro-batch, drain) so its
+  * drained result can be gated against the batch answer:
+  *
+  *  - [[windowedCountsViaStream]]: complete-mode tumbling-window counts;
+  *  - [[runningDegreesViaStream]]: the mapGroupsWithState degree counter;
+  *  - [[enrichedEdgeCountsViaStream]]: stream-static join + rollup;
+  *  - [[ccViaStream]]: per-batch incremental CC via foreachBatch;
+  *  - [[topKCountsViaStream]]: complete-mode sort + limit;
+  *  - [[lateDropWindowCounts]]: append-mode windows under a late drop;
+  *  - [[pairJoinViaStream]]: stream-stream interval self-join;
+  *  - [[dedupWithinWatermarkViaStream]]: `dropDuplicatesWithinWatermark`.
+  *
+  * [[SessionStream]], [[TransitionStream]] and [[StreamDedup]] hold the
+  * other four replays.
   */
 object EdgeStream {
 
@@ -36,7 +52,10 @@ object EdgeStream {
       .select(col("window.start").as("window_start"), col("src"),
         col("edges"))
 
-  private val runCounter = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Watermark delay beyond any replay's time span (a year; the sf
+    * tables span ~30 days): the watermark then evicts and drops nothing,
+    * so the drained output is exactly the batch answer. */
+  private val beyondSpan = "9000 hours"
 
   /** Run the windowed aggregation as a bounded Structured Streaming job and
     * return the final state: the events are re-written as `splits` parquet
@@ -49,20 +68,10 @@ object EdgeStream {
     * starts are hour-aligned, so epoch/3600 is exact) and value summed in
     * cents (round(value·100) as long — float sums never cross the oracle).
     */
-  def windowedCountsViaStream(events: DataFrame, splits: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = events.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft-estream").toString
-    try {
-      events.select(col("ts"), col("event_type"), col("value"))
-        .repartition(splits).write.mode("overwrite").parquet(tmp)
-      val schema = StructType(Seq(
-        StructField("ts", TimestampType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(tmp)
-      val agg = stream
+  def windowedCountsViaStream(events: DataFrame, splits: Int = 4): DataFrame =
+    Replay.toMemory(Replay.Split(events.select(col("ts").cast("timestamp"),
+        col("event_type"), col("value")), splits), "complete") { open =>
+      open()
         .withWatermark("ts", "2 hours") // production shape; complete mode
         // keeps all windows, so the bounded replay still yields the full agg
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -71,27 +80,7 @@ object EdgeStream {
         .select((unix_timestamp(col("window.start")) / 3600).cast("long")
             .as("hour_bucket"),
           col("event_type"), col("n"), col("cents"))
-      StreamTuning.withReplayParallelism(spark, tmp) {
-val name = s"graft_stream_window_${runCounter.incrementAndGet()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // snapshot, then drop the memory sink's temp view (catalog hygiene —
-      // runCounter names a fresh one per call)
-      val out = spark.table(name).localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      out
-      }
-    } finally {
-      import java.nio.file.{Files => F, Path}
-      val walk = F.walk(Path.of(tmp))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => F.deleteIfExists(p))
-      finally walk.close()
     }
-  }
 
   /** Run [[runningOutDegrees]] as a bounded Structured Streaming job and
     * return its drained final state: edges re-written as `splits` parquet
@@ -111,40 +100,14 @@ val name = s"graft_stream_window_${runCounter.incrementAndGet()}"
     * updates into a keyed store) instead of retaining all update rows.
     */
   def runningDegreesViaStream(edges: DataFrame, splits: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
     val spark = edges.sparkSession
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dstream").toString
-    try {
-      edges.select(col("src"), col("dst")).repartition(splits)
-        .write.mode("overwrite").parquet(tmp)
-      val schema = StructType(Seq(
-        StructField("src", LongType), StructField("dst", LongType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(tmp)
-      // fixed synthetic ts: the counter ignores event time (no watermark)
-      val ev = stream.select(col("src"), col("dst"),
-        lit(new Timestamp(0L)).as("ts")).as[EdgeEvent]
-      StreamTuning.withReplayParallelism(spark, tmp) {
-val name = s"graft_stream_deg_${runCounter.incrementAndGet()}"
-      val q = runningOutDegrees(ev).toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = spark.table(name)
-        .groupBy("id").agg(max(col("outdeg")).as("outdeg"))
-        .localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      out
-      }
-    } finally {
-      import java.nio.file.{Files => F, Path}
-      val walk = F.walk(Path.of(tmp))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => F.deleteIfExists(p))
-      finally walk.close()
+    Replay.toMemory(Replay.Split(edges.select(col("src"), col("dst")), splits),
+        "update", _.groupBy("id").agg(max(col("outdeg")).as("outdeg"))) {
+      open =>
+        // fixed synthetic ts: the counter ignores event time (no watermark)
+        runningOutDegrees(open().select(col("src"), col("dst"),
+          lit(new Timestamp(0L)).as("ts")).as[EdgeEvent]).toDF()
     }
   }
 
@@ -162,38 +125,12 @@ val name = s"graft_stream_deg_${runCounter.incrementAndGet()}"
     */
   def enrichedEdgeCountsViaStream(edges: DataFrame, dim: DataFrame,
                                   splits: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = edges.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft-enrich").toString
-    try {
-      edges.select(col("src"), col("dst"), col("weight").cast("long"))
-        .repartition(splits).write.mode("overwrite").parquet(tmp)
-      val schema = StructType(Seq(
-        StructField("src", LongType), StructField("dst", LongType),
-        StructField("weight", LongType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(tmp)
-      val dimSt = dim.select(col("id").as("src"), col("attr"))
-      val agg = stream.join(dimSt, Seq("src"))
+    val dimSt = dim.select(col("id").as("src"), col("attr"))
+    Replay.toMemory(Replay.Split(edges.select(col("src"), col("dst"),
+        col("weight").cast("long")), splits), "complete") { open =>
+      open().join(dimSt, Seq("src"))
         .groupBy("attr")
         .agg(count(lit(1)).as("n_edges"), sum(col("weight")).as("wsum"))
-      StreamTuning.withReplayParallelism(spark, tmp) {
-val name = s"graft_stream_enrich_${runCounter.incrementAndGet()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = spark.table(name).localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      out
-      }
-    } finally {
-      import java.nio.file.{Files => F, Path}
-      val walk = F.walk(Path.of(tmp))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => F.deleteIfExists(p))
-      finally walk.close()
     }
   }
 
@@ -212,39 +149,14 @@ val name = s"graft_stream_enrich_${runCounter.incrementAndGet()}"
     */
   def ccViaStream(edges: DataFrame, numPartitions: Int = 32,
                   splits: Int = 5): DataFrame = {
-    import org.apache.spark.sql.types._
     val spark = edges.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft-streamcc")
-      .toString
-    try {
-      edges.select(col("src"), col("dst"))
-        .repartition(splits).write.mode("overwrite").parquet(tmp)
-      val schema = StructType(Seq(
-        StructField("src", LongType), StructField("dst", LongType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(tmp)
-      var labels = spark.range(0)
-        .select(col("id"), col("id").as("component"))
-      val cfg = graft.engine.SuperstepConfig(numPartitions = numPartitions)
-      StreamTuning.withReplayParallelism(spark, tmp) {
-val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          labels = graft.algos.ConnectedComponents
-            .incremental(spark, labels, batch, cfg)
-            .localCheckpoint(true)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      labels
-      }
-    } finally {
-      import java.nio.file.{Files => F, Path}
-      val walk = F.walk(Path.of(tmp))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => F.deleteIfExists(p))
-      finally walk.close()
+    val cfg = graft.engine.SuperstepConfig(numPartitions = numPartitions)
+    Replay.fold(Replay.Split(edges.select(col("src"), col("dst")), splits),
+        spark.range(0).select(col("id"), col("id").as("component"))) {
+      (labels, batch) =>
+        graft.algos.ConnectedComponents
+          .incremental(spark, labels, batch, cfg)
+          .localCheckpoint(true)
     }
   }
 
@@ -259,39 +171,13 @@ val q = stream.writeStream
     * seventh streaming shape.
     */
   def topKCountsViaStream(edges: DataFrame, k: Int,
-                          splits: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = edges.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft-topk").toString
-    try {
-      edges.select(col("src"), col("dst"))
-        .repartition(splits).write.mode("overwrite").parquet(tmp)
-      val schema = StructType(Seq(
-        StructField("src", LongType), StructField("dst", LongType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(tmp)
-      val agg = stream.groupBy(col("dst").as("id"))
+                          splits: Int = 4): DataFrame =
+    Replay.toMemory(Replay.Split(edges.select(col("src"), col("dst")), splits),
+        "complete") { open =>
+      open().groupBy(col("dst").as("id"))
         .agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("id").asc).limit(k)
-      StreamTuning.withReplayParallelism(spark, tmp) {
-val name = s"graft_stream_topk_${runCounter.incrementAndGet()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = spark.table(name).localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      out
-      }
-    } finally {
-      import java.nio.file.{Files => F, Path}
-      val walk = F.walk(Path.of(tmp))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => F.deleteIfExists(p))
-      finally walk.close()
     }
-  }
 
   /** APPEND-mode windowed counts under a real watermark late-drop — the
     * one streaming semantics the complete-mode shapes above cannot show:
@@ -299,12 +185,10 @@ val name = s"graft_stream_topk_${runCounter.incrementAndGet()}"
     * emitted. The bounded replay is fully deterministic so the result
     * crosses the DuckDB oracle gate:
     *
-    *  - events are split into `splits` single-file batches by
-    *    `event_id % splits` (an explicit key, not a sampled range), and
-    *    each file's mtime is pinned to `base + k` seconds — the file
-    *    source orders by (mtime, path), so micro-batch k replays exactly
-    *    batch k;
-    *  - with `maxFilesPerTrigger = 1`, the LATE FILTER's watermark lags
+    *  - events are split into `splits` batches by `event_id % splits`
+    *    (an explicit key, not a sampled range) and staged in that order
+    *    ([[Replay.Ordered]]), so micro-batch k replays exactly batch k;
+    *  - with one file per micro-batch, the LATE FILTER's watermark lags
     *    one batch: batch k is filtered with event-time stats through batch
     *    k−2 (AvailableNow pre-plans the batch sequence, so each watermark
     *    update takes effect one batch late — pinned empirically);
@@ -317,118 +201,49 @@ val name = s"graft_stream_topk_${runCounter.incrementAndGet()}"
     * Output: (hour_bucket, event_type, n) for finalized windows only.
     */
   def lateDropWindowCounts(events: DataFrame, splits: Int = 4,
-                           delay: String = "1 hour"): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = events.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft-latewin").toString
-    try {
-      (0 until splits).foreach { k =>
+                           delay: String = "1 hour"): DataFrame =
+    Replay.toMemory(Replay.Ordered((0 until splits).map(k =>
         events.where(pmod(col("event_id"), lit(splits)) === k)
-          .select(col("ts"), col("event_type"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/b$k")
-        // pin mtimes so (mtime, path) ordering replays batches in order
-        // regardless of write-job timing
-        val dir = new java.io.File(s"$tmp/b$k")
-        dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach {
-          f => f.setLastModified(1000000000000L + k * 1000L)
-        }
-      }
-      val schema = StructType(Seq(
-        StructField("ts", TimestampType),
-        StructField("event_type", StringType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$tmp/b*")
-      val agg = stream
+          .select(col("ts").cast("timestamp"), col("event_type")))),
+        "append") { open =>
+      open()
         .withWatermark("ts", delay)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select((unix_timestamp(col("window.start")) / 3600).cast("long")
             .as("hour_bucket"),
           col("event_type"), col("n"))
-      StreamTuning.withReplayParallelism(spark, s"$tmp/b*") {
-val name = s"graft_stream_late_${runCounter.incrementAndGet()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = spark.table(name).localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      out
-      }
-    } finally {
-      import java.nio.file.{Files => F, Path}
-      val walk = F.walk(Path.of(tmp))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => F.deleteIfExists(p))
-      finally walk.close()
     }
-  }
 
   /** STREAM-STREAM windowed self-join — the one streaming join shape the
     * ledger's stream-static enrich cannot show: the event stream joined
     * to itself on user within a (0, 1 hour] event-time range. Both sides
-    * carry a watermark far beyond the replay's time span (the default
-    * covers a year -- the sf tables span ~30 days), so no pair is
+    * carry a watermark far beyond the replay's time span
+    * (`beyondSpan`), so no pair is
     * dropped and the drained append output is EXACTLY the batch
     * interval self-join — which is the oracle. The joined pairs land in
     * the sink and are aggregated batch-side to (t1, t2, n).
     *
-    * Replay determinism: same event_id%splits single-file mtime-pinned
-    * batches as [[lateDropWindowCounts]]. Join state is bounded by the
-    * replay size here; in production the watermark bound is what evicts
+    * Replay determinism: same event_id%splits ordered batches as
+    * [[lateDropWindowCounts]]; the two join sides are two independent
+    * sources over the same files. Join state is bounded by the replay
+    * size here; in production the watermark bound is what evicts
     * buffered rows — the delay IS the state-size knob.
     */
-  def pairJoinViaStream(events: DataFrame, splits: Int = 4,
-                        delay: String = "9000 hours"): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = events.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ssjoin").toString
-    try {
-      (0 until splits).foreach { k =>
+  def pairJoinViaStream(events: DataFrame, splits: Int = 4): DataFrame =
+    Replay.toMemory(Replay.Ordered((0 until splits).map(k =>
         events.where(pmod(col("event_id"), lit(splits)) === k)
-          .select(col("event_id"), col("ts"), col("user_id"),
-            col("event_type"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/b$k")
-        new java.io.File(s"$tmp/b$k").listFiles()
-          .filter(_.getName.endsWith(".parquet")).foreach {
-            f => f.setLastModified(1000000000000L + k * 1000L)
-          }
-      }
-      val schema = StructType(Seq(
-        StructField("event_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("user_id", LongType),
-        StructField("event_type", StringType)))
-      def side(tag: String) = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$tmp/b*")
+          .select(col("event_id"), col("ts").cast("timestamp"),
+            col("user_id"), col("event_type")))),
+        "append", _.groupBy("t1", "t2").agg(count(lit(1)).as("n"))) { open =>
+      def side(tag: String) = open()
         .select(col("event_id").as(s"id$tag"), col("ts").as(s"ts$tag"),
           col("user_id").as(s"u$tag"), col("event_type").as(s"t$tag"))
-        .withWatermark(s"ts$tag", delay)
-      val joined = side("1").join(side("2"),
+        .withWatermark(s"ts$tag", beyondSpan)
+      side("1").join(side("2"),
         expr("u1 = u2 AND ts2 > ts1 AND ts2 <= ts1 + interval 1 hour"))
         .select(col("t1"), col("t2"))
-      StreamTuning.withReplayParallelism(spark, s"$tmp/b*") {
-val name = s"graft_stream_ssj_${runCounter.incrementAndGet()}"
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = spark.table(name)
-        .groupBy("t1", "t2").agg(count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      out
-      }
-    } finally {
-      import java.nio.file.{Files => F, Path}
-      val walk = F.walk(Path.of(tmp))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => F.deleteIfExists(p))
-      finally walk.close()
     }
-  }
 
   /** `dropDuplicatesWithinWatermark` under a deterministic DUPLICATED
     * replay — the bounded-state streaming dedup API (Spark 3.5+) the
@@ -441,51 +256,19 @@ val name = s"graft_stream_ssj_${runCounter.incrementAndGet()}"
     * than the horizon are forgotten); here it is sized to the span so the
     * gate is exact.
     */
-  def dedupWithinWatermarkViaStream(events: DataFrame, splits: Int = 4,
-                                    delay: String = "9000 hours"): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = events.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft-wmdedup").toString
-    try {
-      (0 until splits).foreach { k =>
+  def dedupWithinWatermarkViaStream(events: DataFrame,
+                                    splits: Int = 4): DataFrame =
+    Replay.toMemory(Replay.Ordered((0 until splits).map(k =>
         events.where(pmod(col("event_id"), lit(splits)) === k ||
             pmod(col("event_id") + 1, lit(splits)) === k)
-          .select(col("event_id"), col("ts"), col("event_type"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/b$k")
-        new java.io.File(s"$tmp/b$k").listFiles()
-          .filter(_.getName.endsWith(".parquet")).foreach {
-            f => f.setLastModified(1000000000000L + k * 1000L)
-          }
-      }
-      val schema = StructType(Seq(
-        StructField("event_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("event_type", StringType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$tmp/b*")
-        .withWatermark("ts", delay)
-        .dropDuplicatesWithinWatermark("event_id")
-      StreamTuning.withReplayParallelism(spark, s"$tmp/b*") {
-val name = s"graft_stream_wmdedup_${runCounter.incrementAndGet()}"
-      val q = stream.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = spark.table(name)
-        .groupBy("event_type").agg(count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      out
-      }
-    } finally {
-      import java.nio.file.{Files => F, Path}
-      val walk = F.walk(Path.of(tmp))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => F.deleteIfExists(p))
-      finally walk.close()
+          .select(col("event_id"), col("ts").cast("timestamp"),
+            col("event_type")))),
+        "append", _.groupBy("event_type").agg(count(lit(1)).as("n"))) {
+      open =>
+        open()
+          .withWatermark("ts", beyondSpan)
+          .dropDuplicatesWithinWatermark("event_id")
     }
-  }
 
   /** Exact running out-degree per vertex in keyed state; emits the updated
     * degree for every vertex touched in a micro-batch (Update output mode).

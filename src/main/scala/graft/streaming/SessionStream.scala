@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming sessionization with Spark's native `session_window` — the
   * event-time analog of [[graft.events.Sessionize]]: events of one user
@@ -14,14 +11,13 @@ import org.apache.spark.sql.streaming.Trigger
   * same merge rule, so `stream_sessions` shares `sessionize`'s DuckDB
   * oracle row-for-row.
   *
-  * Bounded-replay harness (the stream_degrees/stream_window_counts
-  * recipe, plus two twists that APPEND-mode session windows need):
+  * Bounded replay on [[Replay]], with two twists that APPEND-mode
+  * session windows need:
   *
-  *  1. the event log is re-written as `splits` files covering DISJOINT
-  *     INCREASING time ranges, each with a strictly increasing
-  *     modification time — FileStreamSource schedules files in mod-time
-  *     order, so the watermark only ever advances and no event is late
-  *     (late-drop would silently lose sessions);
+  *  1. the event log is staged as `splits` batches covering DISJOINT
+  *     INCREASING time ranges, replayed in that order
+  *     ([[Replay.Ordered]]), so the watermark only ever advances and no
+  *     event is late (late-drop would silently lose sessions);
   *  2. TWO SENTINEL events (user_id −1) beyond max_ts + gap land in
   *     their own final files: the first pushes the watermark past every
   *     real session's end, and the second's batch — running under that
@@ -34,7 +30,8 @@ import org.apache.spark.sql.streaming.Trigger
   *     inside the streaming query would be pushed below the
   *     EventTimeWatermark node into the scan, and the sentinels would
   *     never advance the watermark at all (measured: the final sessions
-  *     then stay open forever; SessionFlushProbe is the evidence trail).
+  *     then stay open forever; EventsSpec "sessionsViaStream replays the
+  *     batch gap sessions exactly" pins the full flush).
   *
   * At production scale the same query runs unbounded: state per user is
   * one open session (evicted at watermark), shuffle is hash(user_id),
@@ -44,65 +41,35 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object SessionStream {
 
-  private val runCounter = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Per-batch progress lines from the most recent run (probe/debug aid:
-    * batch id, input rows, watermark, appended rows). */
-  @volatile var lastProgress: Seq[String] = Nil
-
   def sessionsViaStream(events: DataFrame, gapSeconds: Long,
                         splits: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = events.sparkSession
-    val tmp = Files.createTempDirectory("graft-sstream")
-    val streamDir = Files.createDirectory(tmp.resolve("stream"))
-    try {
-      // LTZ cast under the UTC session = identity instant (parquet NTZ)
-      val ev = events.select(col("user_id"),
-          col("ts").cast("timestamp").as("ts"), col("value"))
-        .localCheckpoint(true)
-      val Row(minUs: Long, maxUs: Long) = ev
-        .agg(min(expr("unix_micros(ts)")), max(expr("unix_micros(ts)")))
-        .head()
-      val span = math.max(maxUs - minUs, splits.toLong) + 1
-      def writeChunk(df: DataFrame, idx: Int): Unit = {
-        val work = tmp.resolve(s"work$idx")
-        df.coalesce(1).write.mode("overwrite").parquet(work.toString)
-        val ls = Files.list(work)
-        val part =
-          try ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
-          finally ls.close()
-        val target = streamDir.resolve(f"chunk-$idx%03d.parquet")
-        Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-        // strictly increasing mod times pin the replay order
-        Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + idx * 2000L))
-      }
-      for (i <- 0 until splits) {
-        val lo = minUs + span * i / splits
-        val hi = minUs + span * (i + 1) / splits
-        writeChunk(ev.where(expr("unix_micros(ts)") >= lo &&
-          expr("unix_micros(ts)") < hi), i)
-      }
-      // TWO sentinels: the first advances the watermark past every real
-      // session's end; append-mode emission happens in the batch AFTER a
-      // watermark advance, so the second sentinel's batch is the one that
-      // flushes all real sessions from the state store (without it, the
-      // final sessions would still be open when AvailableNow stops).
-      for (k <- 0 to 1) {
-        val sentinelUs = maxUs + (gapSeconds + 7200L * (k + 1)) * 1000000L
-        writeChunk(ev.limit(1).select(lit(-1L).as("user_id"),
-          expr(s"timestamp_micros(${sentinelUs}L)").as("ts"),
-          lit(0.0).as("value")), splits + k)
-      }
-
-      val schema = StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("value", DoubleType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
-      val agg = stream
+    // LTZ cast under the UTC session = identity instant (parquet NTZ)
+    val ev = events.select(col("user_id"),
+        col("ts").cast("timestamp").as("ts"), col("value"))
+      .localCheckpoint(true)
+    val Row(minUs: Long, maxUs: Long) = ev
+      .agg(min(expr("unix_micros(ts)")), max(expr("unix_micros(ts)")))
+      .head()
+    val span = math.max(maxUs - minUs, splits.toLong) + 1
+    val chunks = (0 until splits).map { i =>
+      val lo = minUs + span * i / splits
+      val hi = minUs + span * (i + 1) / splits
+      ev.where(expr("unix_micros(ts)") >= lo && expr("unix_micros(ts)") < hi)
+    }
+    // TWO sentinels: the first advances the watermark past every real
+    // session's end; append-mode emission happens in the batch AFTER a
+    // watermark advance, so the second sentinel's batch is the one that
+    // flushes all real sessions from the state store (without it, the
+    // final sessions would still be open when AvailableNow stops).
+    val sentinels = (0 to 1).map { k =>
+      val sentinelUs = maxUs + (gapSeconds + 7200L * (k + 1)) * 1000000L
+      ev.limit(1).select(lit(-1L).as("user_id"),
+        expr(s"timestamp_micros(${sentinelUs}L)").as("ts"),
+        lit(0.0).as("value"))
+    }
+    Replay.toMemory(Replay.Ordered(chunks ++ sentinels), "append",
+        _.where(col("user_id") >= 0)) { open =>
+      open()
         .withWatermark("ts", "1 minute")
         .groupBy(session_window(col("ts"), s"$gapSeconds seconds"),
           col("user_id"))
@@ -115,24 +82,6 @@ object SessionStream {
         .select(col("user_id"),
           expr("unix_micros(session_window.start)").as("session_start_us"),
           col("n_events"), col("cents"))
-      StreamTuning.withReplayParallelism(spark, streamDir.toString) {
-val name = s"graft_stream_sessions_${runCounter.incrementAndGet()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      lastProgress = q.recentProgress.toSeq.map(p =>
-        s"batch=${p.batchId} rows=${p.numInputRows} " +
-          s"wm=${p.eventTime.get("watermark")} sink=${p.sink.numOutputRows}")
-      val out = spark.table(name).where(col("user_id") >= 0)
-        .localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      out
-      }
-    } finally {
-      val walk = Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
     }
   }
 }

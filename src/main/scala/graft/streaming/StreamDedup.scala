@@ -74,64 +74,32 @@ object StreamDedup {
     * drained signatures: documents re-written as `splits` parquet files,
     * streamed back one file per micro-batch, signatures computed PER
     * MICRO-BATCH with the codegen'd batch wide-agg
-    * ([[graft.dedup.Dedup.minhashSignatures]]) inside `foreachBatch` and
-    * appended to a parquet sink. Each document arrives whole in one row,
-    * so the per-batch aggregation is exact and NO cross-batch state
-    * exists. After Trigger.AvailableNow drains the source the sink holds
-    * exactly the batch md5 signature table, so the driver gate pins this
-    * path to DuckDB (`stream_minhash`).
+    * ([[graft.dedup.Dedup.minhashSignatures]]) inside `foreachBatch`, each
+    * batch's table pinned and appended to the result. Each document
+    * arrives whole in one row, so the per-batch aggregation is exact and
+    * NO cross-batch state exists. After Trigger.AvailableNow drains the
+    * source the result is exactly the batch md5 signature table, so the
+    * driver gate pins this path to DuckDB (`stream_minhash`).
     *
     * Why not the row-local [[signaturesPerRowMd5]] inside the stream?
-    * Measured (StreamMinhashProbe, sf0.1, 5000 docs, 3 reps): the 16
-    * interpreted-HOF md5 passes cost ~25 s whether run as a batch or in
-    * the stream, while this spelling's per-batch shuffle + codegen'd agg
-    * runs the same replay in ~5–9 s — the streaming machinery itself is
-    * ~2 s. The per-row spelling remains the right tool only when a
-    * pipeline genuinely cannot shuffle (e.g. joining arriving rows against
-    * batch bucket tables in strict append mode).
+    * Measured (BASELINE.md "stream_minhash 29.2 → ~7 s": sf0.1, 5000
+    * docs, 3 reps): the 16 interpreted-HOF md5 passes cost ~25 s whether
+    * run as a batch or in the stream, while this spelling's per-batch
+    * shuffle + codegen'd agg runs the same replay in ~5–9 s — the
+    * streaming machinery itself is ~2 s. The per-row spelling remains the
+    * right tool only when a pipeline genuinely cannot shuffle (e.g.
+    * joining arriving rows against batch bucket tables in strict append
+    * mode).
     */
   def minhashViaStream(docs: DataFrame, n: Int, numHashes: Int,
-                       splits: Int = 4, idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    import java.nio.file.{Files => F, Path}
-    val tmp = F.createTempDirectory("graft-mhstream").toString
-    val outDir = F.createTempDirectory("graft-mhstream-out").toString
-    def rmTree(dir: String): Unit = {
-      val walk = F.walk(Path.of(dir))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => F.deleteIfExists(p))
-      finally walk.close()
-    }
-    try {
-      docs.select(col(idCol), col(textCol)).repartition(splits)
-        .write.mode("overwrite").parquet(tmp)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(idCol,
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField(textCol,
-          org.apache.spark.sql.types.StringType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(tmp)
-      StreamTuning.withReplayParallelism(spark, tmp) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.dedup.Dedup.minhashSignatures(
-              TextOps.shingleRows(batch, idCol, textCol, n), numHashes,
-              idCol)
-            .select(col(idCol), col("i").cast("long").as("i"), col("h"))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.read.parquet(outDir).localCheckpoint(true)
-      }
-    } finally {
-      rmTree(tmp)
-      rmTree(outDir)
-    }
+                       splits: Int = 4): DataFrame = {
+    def signatures(batch: DataFrame) = graft.dedup.Dedup.minhashSignatures(
+        TextOps.shingleRows(batch, "doc_id", "text", n), numHashes)
+      .select(col("doc_id"), col("i").cast("long").as("i"), col("h"))
+    val staged = docs.select(col("doc_id"), col("text"))
+    Replay.fold(Replay.Split(staged, splits), signatures(staged.limit(0))) {
+      (acc, batch) => acc.union(signatures(batch).localCheckpoint(true))
+    }.localCheckpoint(true)
   }
 
   /** Streaming exact dedup: keeps the first doc_id seen per content digest
@@ -161,59 +129,23 @@ object StreamDedup {
       .toDF("doc_id", "keep_id", "is_duplicate")
   }
 
-  private val runCounter = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Run exact dedup as a bounded Structured Streaming job and return the
     * final result: the documents are re-written as `splits` parquet files,
-    * streamed back one file per micro-batch (maxFilesPerTrigger=1), and a
-    * complete-mode stateful aggregation maintains (min doc_id, count) per
-    * content digest across batches. After Trigger.AvailableNow drains the
+    * streamed back one file per micro-batch, and a complete-mode stateful
+    * aggregation maintains (min doc_id, count) per content digest across
+    * batches. After Trigger.AvailableNow drains the
     * source, the memory sink holds exactly `Dedup.exact`'s answer — min/count
     * are order-independent merges, so the result is identical no matter how
     * the rows were batched. State is keyed by digest, never document bytes.
     */
-  def exactViaStream(docs: DataFrame, splits: Int = 4,
-                     idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    try {
-      docs.select(col(idCol), col(textCol)).repartition(splits)
-        .write.mode("overwrite").parquet(tmp)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(idCol,
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField(textCol,
-          org.apache.spark.sql.types.StringType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(tmp)
-      val agg = stream
-        .select(col(idCol),
-          xxhash64(col(textCol)).as("__hx"), md5(col(textCol)).as("__hm"))
+  def exactViaStream(docs: DataFrame, splits: Int = 4): DataFrame =
+    Replay.toMemory(Replay.Split(docs.select(col("doc_id"), col("text")),
+        splits), "complete") { open =>
+      open()
+        .select(col("doc_id"),
+          xxhash64(col("text")).as("__hx"), md5(col("text")).as("__hm"))
         .groupBy("__hx", "__hm")
-        .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_cnt"))
+        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_cnt"))
         .select("keep_id", "dup_cnt")
-      StreamTuning.withReplayParallelism(spark, tmp) {
-      val name = s"graft_stream_exact_${runCounter.incrementAndGet()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // the memory sink holds the rows; localCheckpoint so the returned
-      // frame survives the temp-dir delete below — then drop the sink's
-      // temp view so repeated bench runs don't accumulate catalog entries
-      // (runCounter names a fresh one per call)
-      val out = spark.table(name).localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      out
-      }
-    } finally {
-      import java.nio.file.{Files => F, Path}
-      val walk = F.walk(Path.of(tmp))
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => F.deleteIfExists(p))
-      finally walk.close()
     }
-  }
 }

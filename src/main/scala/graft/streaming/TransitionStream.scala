@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Streaming first-order transition mining — the keyed-state shape that
   * CANNOT be a windowed aggregate: each user's transition (prev_type →
@@ -14,8 +12,8 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
   * with a non-trivial emission per input row).
   *
   * Exactness contract: batches are replayed as DISJOINT INCREASING time
-  * ranges (the [[SessionStream]] chunk recipe — mod-time-pinned files, so
-  * FileStreamSource schedules them in order) and each batch's rows are
+  * ranges in order (the [[SessionStream]] chunk recipe on
+  * [[Replay.Ordered]]) and each batch's rows are
   * sorted by (us, event_id) inside the group function, so the concatenated
   * per-user sequence equals the batch ordering and the emitted pair
   * multiset ≡ [[graft.events.Analytics.transitions]] — `stream_transitions`
@@ -34,8 +32,6 @@ object TransitionStream {
                       event_type: String)
   final case class TPair(from_type: String, to_type: String)
   final case class LastEv(us: Long, event_id: Long, event_type: String)
-
-  private val runCounter = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Per-user transition pairs with the last event carried in keyed state;
     * within a batch rows are sorted by (us, event_id) — exact iff batches
@@ -64,63 +60,23 @@ object TransitionStream {
     * chunks; returns (from_type, to_type, n) ≡ the batch transition table.
     */
   def transitionsViaStream(events: DataFrame, splits: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
     val spark = events.sparkSession
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-tstream")
-    val streamDir = Files.createDirectory(tmp.resolve("stream"))
-    try {
-      val ev = events.select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("us"),
-          col("event_id"), col("event_type"))
-        .localCheckpoint(true)
-      val org.apache.spark.sql.Row(minUs: Long, maxUs: Long) =
-        ev.agg(min("us"), max("us")).head()
-      val span = math.max(maxUs - minUs, splits.toLong) + 1
-      def writeChunk(df: DataFrame, idx: Int): Unit = {
-        val work = tmp.resolve(s"work$idx")
-        df.coalesce(1).write.mode("overwrite").parquet(work.toString)
-        val ls = Files.list(work)
-        val part =
-          try ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
-          finally ls.close()
-        val target = streamDir.resolve(f"chunk-$idx%03d.parquet")
-        Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime
-            .fromMillis(1000000000000L + idx * 2000L))
-      }
-      for (i <- 0 until splits) {
-        val lo = minUs + span * i / splits
-        val hi = minUs + span * (i + 1) / splits
-        writeChunk(ev.where(col("us") >= lo && col("us") < hi), i)
-      }
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("us", LongType),
-        StructField("event_id", LongType),
-        StructField("event_type", StringType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
-      StreamTuning.withReplayParallelism(spark, streamDir.toString) {
-val name = s"graft_stream_trans_${runCounter.incrementAndGet()}"
-      val q = transitionPairs(stream.as[Ev]).toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = spark.table(name)
-        .groupBy("from_type", "to_type")
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      out
-      }
-    } finally {
-      val walk = Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
+    val ev = events.select(col("user_id"),
+        expr("unix_micros(cast(ts as timestamp))").as("us"),
+        col("event_id"), col("event_type"))
+      .localCheckpoint(true)
+    val org.apache.spark.sql.Row(minUs: Long, maxUs: Long) =
+      ev.agg(min("us"), max("us")).head()
+    val span = math.max(maxUs - minUs, splits.toLong) + 1
+    val chunks = (0 until splits).map { i =>
+      val lo = minUs + span * i / splits
+      val hi = minUs + span * (i + 1) / splits
+      ev.where(col("us") >= lo && col("us") < hi)
+    }
+    Replay.toMemory(Replay.Ordered(chunks), "update",
+        _.groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))) {
+      open => transitionPairs(open().as[Ev]).toDF()
     }
   }
 }

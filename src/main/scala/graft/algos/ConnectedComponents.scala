@@ -1,6 +1,7 @@
 package graft.algos
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
@@ -68,78 +69,82 @@ object ConnectedComponents {
     *    m = min({v ∈ N(u): v ≤ u} ∪ u) — emit (v, m) for those v plus
     *    (u, m).
     *
-    * Both preserve connectivity and monotonically pull ids toward the
-    * component minimum; at the fixpoint the edge set is a star forest
-    * (v → component-min root). Convergence is detected on the edge
-    * MULTISET (count + order-independent xxhash64 xor — one agg riding
-    * the materializing action). Output ((id, component), rounds) — exact,
-    * same result as [[run]], shared oracle.
+    * Each star's m is one window `min` over u's neighbour rows, and the
+    * same rows emit the star's edges: no group-by-then-join-back, and no
+    * dedup inside the round (duplicate rows change neither a min nor the
+    * round's final edge set). The round ends in one exchange, hash(src),
+    * which the closing `distinct` reuses.
+    *
+    * Both stars preserve connectivity and pull ids toward the component
+    * minimum, and every emitted edge points down (dst < src). At the
+    * fixpoint the edge set is a star forest (v → component-min root); a
+    * downward edge set that IS a star forest (no dst is also a src, and no
+    * src has two dsts) is a fixpoint, since each root's star maps onto
+    * itself under both contractions. So the loop stops on the round that
+    * reaches the star forest, counted in the round's one materializing
+    * action. Both conditions are needed: a round can leave a leaf with two
+    * roots and no root that is also a leaf (StarContractionSpec pins such a
+    * graph). Output ((id, component), rounds) — exact, same result as
+    * [[run]], shared oracle.
     */
   def stars(spark: SparkSession, edges: DataFrame, numPartitions: Int = 32,
             maxRounds: Int = 200): (DataFrame, Int) = {
     // LAZY cuts + one fused prep action (r6): verts is only read by the
-    // caller's final action; the initial signature aggregate materializes
-    // the edge cache AND yields the row count the adaptive clamp needs, so
-    // the old verts-cut / edge-cut / count / isEmpty prep (4 driver
-    // round-trips, paid per stream_cc micro-batch fold) collapses to one.
-    // The up-front repartition is dropped too: every round's aggregates
-    // re-shuffle to the loop layout anyway, and min/xor-signature results
-    // are partition-count-invariant.
+    // caller's final action; the prep count materializes the edge cache
+    // AND yields the row count the adaptive clamp needs, so the old
+    // verts-cut / edge-cut / count / isEmpty prep (4 driver round-trips,
+    // paid per stream_cc micro-batch fold) collapses to one. There is no
+    // up-front repartition: every round re-shuffles to the loop layout.
     val verts = GraphOps.vertices(edges.select("src", "dst"))
       .transform(Lineage.cut(_))
     var e = edges.select("src", "dst").where(col("src") =!= col("dst"))
       .distinct()
       .transform(Lineage.cut(_))
+    val byU = Window.partitionBy("u")
 
-    def nbrs(ed: DataFrame): DataFrame =
+    // m ≤ u < v: the emitted edges point down and are never self-loops
+    def largeStar(ed: DataFrame): DataFrame =
       ed.select(col("src").as("u"), col("dst").as("v"))
         .union(ed.select(col("dst").as("u"), col("src").as("v")))
-
-    def largeStar(ed: DataFrame): DataFrame = {
-      val t = nbrs(ed)
-      val m = t.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
-      t.join(m, "u").where(col("v") > col("u"))
+        .withColumn("m", least(min(col("v")).over(byU), col("u")))
+        .where(col("v") > col("u"))
         .select(col("v").as("src"), col("m").as("dst"))
-        .where(col("src") =!= col("dst")).distinct()
-    }
 
-    def smallStar(ed: DataFrame): DataFrame = {
-      val t = nbrs(ed)
-      // least() skips nulls, so vertices with no ≤-neighbor fall back to u
-      val m = t.groupBy("u")
-        .agg(least(min(when(col("v") <= col("u"), col("v"))),
-          col("u")).as("m"))
-      val linked = t.where(col("v") <= col("u"))
-        .join(m, "u")
-        .select(col("v").as("src"), col("m").as("dst"))
-      val self = m.select(col("u").as("src"), col("m").as("dst"))
-      linked.union(self)
-        .where(col("src") =!= col("dst")).distinct()
-    }
+    // the large-star output points down, so u's ≤-neighbors are exactly
+    // its out-edges (u = src): m = min(v) over them, and u without one
+    // would only link itself to itself
+    def smallStar(ed: DataFrame): DataFrame =
+      ed.select(col("src").as("u"), col("dst").as("v"))
+        .withColumn("m", min(col("v")).over(byU))
+        .select(explode(array(col("v"), col("u"))).as("src"),
+          col("m").as("dst"))
+        .where(col("src") =!= col("dst"))
 
-    // order-independent multiset signature: count + xor of row hashes
-    // (xor, not sum — ANSI mode makes a long-sum overflow throw, and the
-    // distinct edge set cannot cancel xor terms)
-    def sig(ed: DataFrame): (Long, Long) = {
-      val r = ed.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(src, dst))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
+    // vertices off the star forest: a vertex is a root (only a dst) or a
+    // leaf (the src of one edge and no dst), so out-degree + is-dst ≤ 1
+    def offForest(ed: DataFrame): Long =
+      ed.select(col("src").as("x"), lit(1).as("out"), lit(0).as("in"))
+        .union(ed.select(col("dst").as("x"), lit(0).as("out"),
+          lit(1).as("in")))
+        .groupBy("x").agg((sum(col("out")) + max(col("in"))).as("k"))
+        .where(col("k") > 1)
+        .count()
 
-    var s = sig(e) // ONE prep action: materializes e, counts it, empty-checks
-    val nEff = Lineage.adaptiveParallelism(s._1, numPartitions)
-    Lineage.withLoopConf(spark, nEff) {
-    var done = s._1 == 0L
+    val n = e.count() // ONE prep action: materializes e, counts it
+    val nEff = Lineage.adaptiveParallelism(n, numPartitions)
+    // the loop conf goes on the session that plans the rounds: inside a
+    // streaming foreachBatch that is the query's cloned session, not the
+    // caller's `spark`
+    Lineage.withLoopConf(edges.sparkSession, nEff) {
+    var done = n == 0L
     val rounds = Lineage.rounds("star contraction", maxRounds)(!done) { _ =>
       val next = smallStar(largeStar(e))
-        .repartition(nEff, col("src"))
+        .repartition(nEff, col("src")).distinct()
         .transform(Lineage.cut(_))
-      val s2 = sig(next) // materializes the round in one job
-      done = s2 == s
-      s = s2
+      done = offForest(next) == 0L // materializes the round in one job
       e = next
     }
-    // fixpoint edge set is a star forest (v → root); isolated vertices are
+    // the star forest maps each leaf to its root; isolated vertices are
     // their own component
     val comp = verts
       .join(e.select(col("src").as("id"), col("dst").as("root")),
@@ -167,9 +172,9 @@ object ConnectedComponents {
     */
   def incremental(spark: SparkSession, labels: DataFrame,
                   deltaEdges: DataFrame, cfg: SuperstepConfig): DataFrame = {
-    // LAZY cuts (r6): stars()'s first signature action materializes lab,
-    // delta and compEdges in ONE job instead of three eager round-trips —
-    // stream_cc pays this prep per micro-batch fold
+    // LAZY cuts (r6): stars()'s prep count materializes lab, delta and
+    // compEdges in ONE job instead of three eager round-trips — stream_cc
+    // pays this prep per micro-batch fold
     val lab = labels.select(col("id"), col("component"))
       .transform(Lineage.cut(_))
     val delta = GraphOps.simplify(deltaEdges.select("src", "dst"))

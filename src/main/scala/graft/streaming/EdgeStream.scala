@@ -145,7 +145,10 @@ object EdgeStream {
     * stream partitioned the edges — which is what lets cc's closure
     * oracle gate this eighth streaming shape. Labels are
     * localCheckpoint-pinned between batches (bounded lineage, and the
-    * state survives the replay dir's cleanup).
+    * state survives the replay dir's cleanup). Each fold runs on the
+    * batch's own session — the streaming query's clone — so the star
+    * rounds' loop conf (AQE off, pinned shuffle partitions) reaches the
+    * plans that execute; set on the caller's session it would not.
     */
   def ccViaStream(edges: DataFrame, numPartitions: Int = 32,
                   splits: Int = 5): DataFrame = {
@@ -155,7 +158,7 @@ object EdgeStream {
         spark.range(0).select(col("id"), col("id").as("component"))) {
       (labels, batch) =>
         graft.algos.ConnectedComponents
-          .incremental(spark, labels, batch, cfg)
+          .incremental(batch.sparkSession, labels, batch, cfg)
           .localCheckpoint(true)
     }
   }

@@ -9,6 +9,7 @@ import graft.corpus.CorpusGen
 import graft.dedup.Dedup
 import graft.engine.{CheckpointStore, SuperstepConfig}
 import graft.graph.{EdgeDerivation, GraphOps, TestGraphs}
+import graft.graph.TestGraphs.copurchaseEdges
 import graft.multimodal.Multimodal
 import graft.text.TextOps
 import graft.util.TempDir
@@ -24,16 +25,6 @@ object Queries {
     TestGraphs.table(s, dir, "documents")
   private def emb(s: SparkSession, dir: String): DataFrame =
     TestGraphs.table(s, dir, "embeddings")
-
-  private def und(s: SparkSession, dir: String): DataFrame =
-    TestGraphs.copurchaseUndirected(s, dir)
-
-  /** und(), materialized once (Lineage.cut eager): the k-round unrolled
-    * kernels otherwise replay the co-purchase self-join per plan reference
-    * — pr5's initial plan carried 128 parquet scans (measured r6).
-    */
-  private def undM(s: SparkSession, dir: String): DataFrame =
-    und(s, dir).transform(graft.engine.Lineage.cut(_, eager = true))
 
   private def cfg(s: SparkSession): SuperstepConfig = SuperstepConfig(
     numPartitions = s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
@@ -84,8 +75,8 @@ object Queries {
     // data): bucket = length of the binary representation — integer-exact
     // in both engines (bin() string length), no float log ----------------
     "deg_hist" -> ((s, dir) =>
-      und(s, dir).groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("deg"))
+      copurchaseEdges(s, dir).symmetric.frame
+        .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
         .groupBy(length(bin(col("deg"))).cast("long").as("bucket"))
         .agg(count(lit(1)).as("n_vertices"))
         .orderBy("bucket")),
@@ -93,8 +84,8 @@ object Queries {
     // --- exact discrete degree quantiles via the histogram-prefix-sum
     // spelling (the window runs over distinct degree VALUES, never rows) --
     "deg_percentiles" -> ((s, dir) => {
-      val deg = und(s, dir).groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("deg"))
+      val deg = copurchaseEdges(s, dir).symmetric.frame
+        .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
       graft.functions.Quantiles.discrete(deg, "deg",
         Seq(25, 50, 75, 90, 99)).orderBy("pct")
     }),
@@ -116,13 +107,13 @@ object Queries {
     // "measured" time never runs the k iterations (TopKProbe, BASELINE.md
     // round 3 — the pr_top20 8× mystery).
     "pr5" -> ((s, dir) =>
-      PageRank.fixedIterations(undM(s, dir), 5)
+      PageRank.fixedIterations(copurchaseEdges(s, dir).symmetric.cut.frame, 5)
         .select(col("id"), round(col("rank"), 6).as("pr"))
         .where(col("pr").isNotNull)
         .orderBy("id")),
 
     "pr5_blocked" -> ((s, dir) =>
-      prBlocked(undM(s, dir), 5,
+      prBlocked(copurchaseEdges(s, dir).symmetric.cut.frame, 5,
         s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
         .select(col("id"), round(col("rank"), 6).as("pr"))
         .where(col("pr").isNotNull)
@@ -132,10 +123,7 @@ object Queries {
     // weighted graph (completes the weighted companion set: wlp5,
     // harmonic_w8, matching_w, diameter_w2sweep) ---------------------------
     "wpr5" -> ((s, dir) => {
-      val cp = TestGraphs.copurchase(s, dir)
-      val we = cp.select(col("src"), col("dst"), col("weight"))
-        .unionByName(cp.select(col("dst").as("src"), col("src").as("dst"),
-          col("weight")))
+      val we = copurchaseEdges(s, dir).weightedSymmetric.frame
         .transform(graft.engine.Lineage.cut(_)) // lazy (bfs5 r6 note)
       PageRank.weightedFixedIterations(we, 5)
         .select(col("id"), round(col("rank"), 6).as("pr"))
@@ -144,7 +132,7 @@ object Queries {
     }),
 
     "pr_top20" -> ((s, dir) =>
-      PageRank.fixedIterations(undM(s, dir), 5)
+      PageRank.fixedIterations(copurchaseEdges(s, dir).symmetric.cut.frame, 5)
         .select(col("id"), round(col("rank"), 6).as("pr"))
         .orderBy(col("pr").desc, col("id"))
         .limit(20)),
@@ -154,7 +142,7 @@ object Queries {
     // gridSide=4 with batched supersteps so the driver pins the SCALE path
     // to DuckDB, not just the dst-broadcast layout.
     "pr5_grid" -> ((s, dir) =>
-      PageRank.run(s, undM(s, dir),
+      PageRank.run(s, copurchaseEdges(s, dir).symmetric.cut.frame,
         cfg(s).copy(maxIter = 5, tol = 0.0, gridSide = Some(4),
           batchSize = 5))
         .state.select(col("id"), round(col("rank"), 6).as("pr"))
@@ -167,7 +155,7 @@ object Queries {
     // broadcast shortcut; 5 = one action for the whole fixed-5 unroll —
     // with tol=0 the trajectory is identical at any batch size, r6).
     "pr5_hubsplit" -> ((s, dir) =>
-      PageRank.run(s, undM(s, dir),
+      PageRank.run(s, copurchaseEdges(s, dir).symmetric.cut.frame,
         cfg(s).copy(maxIter = 5, tol = 0.0, hubTau = Some(16L),
           batchSize = 5))
         .state.select(col("id"), round(col("rank"), 6).as("pr"))
@@ -203,7 +191,7 @@ object Queries {
     // (CheckpointSpec separately proves resume ≡ straight on
     // convergence-driven runs.)
     "pr_resume" -> ((s, dir) => {
-      val e = und(s, dir).localCheckpoint(true)
+      val e = copurchaseEdges(s, dir).symmetric.frame.localCheckpoint(true)
       // the final state is eagerly cached (localCheckpoint blocks), so the
       // snapshot dir can go; Bench runs each query twice
       TempDir.withTempDir("graft-resume") { base =>
@@ -219,7 +207,8 @@ object Queries {
 
     // --- personalized PR: teleport mass only to S = {id ≡ 0 mod 100} ------
     "ppr5" -> ((s, dir) =>
-      PageRank.personalizedFixedIterations(undM(s, dir),
+      PageRank.personalizedFixedIterations(
+          copurchaseEdges(s, dir).symmetric.cut.frame,
         id => pmod(id, lit(100L)) === 0, 5)
         .select(col("id"), round(col("rank"), 6).as("pr"))
         .where(col("pr").isNotNull)
@@ -273,12 +262,10 @@ object Queries {
     // weight≥2 graph (~2% md5-sampled seeds; (dist, seed) min packed into
     // one BIGINT so every round is a plain hash-agg). Fixed-8 unroll:
     // exact at any EQUAL unroll in both engines --------------------------
-    "nearest_seed8" -> ((s, dir) => {
-      val cpf = TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst")
-      Paths.nearestSeeds(GraphOps.symmetrizeOriented(cpf), 8, 50L)
-        .orderBy("id")
-    }),
+    "nearest_seed8" -> ((s, dir) =>
+      Paths.nearestSeeds(copurchaseEdges(s, dir)
+          .where(col("weight") >= 2).symmetric.frame, 8, 50L)
+        .orderBy("id")),
 
     // --- truncated odd-cycle / bipartiteness profile: per component,
     // reached vertices + same-parity (odd-cycle-witness) edge count — one
@@ -292,9 +279,7 @@ object Queries {
     // same-brand parts co-purchase?) — the exact-rational modularity
     // machinery over a metadata labeling instead of a computed one ---------
     "modularity_brand" -> ((s, dir) => {
-      val e = GraphOps.symmetrizeOriented(
-          TestGraphs.copurchase(s, dir).select("src", "dst"))
-        .where(col("src") =!= col("dst")).localCheckpoint(true)
+      val e = copurchaseEdges(s, dir).symmetric.frame.localCheckpoint(true)
       Community.modularity(e,
         TestGraphs.table(s, dir, "part")
           .select(col("p_partkey").as("id"), col("p_brand").as("label")))
@@ -313,8 +298,7 @@ object Queries {
 
     // --- connected components (A2): converged, exact ---------------------
     "cc" -> ((s, dir) => {
-      val cpf = TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst")
+      val cpf = copurchaseEdges(s, dir).where(col("weight") >= 2)
       // batchSize=4 (r6): convergence checked every 4 supersteps — extra
       // post-fixpoint supersteps are no-ops (empty frontier), state identical
       ConnectedComponents.run(s, cpf, cfg(s).copy(batchSize = 4))
@@ -327,7 +311,7 @@ object Queries {
     "cc_stars" -> ((s, dir) => {
       val cpf = TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst")
-      graft.algos.ConnectedComponents.stars(s, cpf,
+      graft.algos.ConnectedComponents.stars(cpf,
         s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
         ._1.orderBy("id")
     }),
@@ -340,22 +324,20 @@ object Queries {
     // work O(|delta|), never a re-traversal. Base ∪ delta = ALL edges, so
     // the oracle is the plain closure over the unfiltered graph ----------
     "cc_incr" -> ((s, dir) => {
-      val cp = TestGraphs.copurchase(s, dir).select("src", "dst")
+      val cp = copurchaseEdges(s, dir)
       val inDelta =
         GraphOps.md5Prio(concat_ws(":", col("src"), col("dst"))) % 50 === 0
-      // base edges are a subset of the oriented-unique derivation output —
-      // the symmetrizing dedup would be a no-op over 2.3M rows (r6)
+      // a filter of a canonical set: CC mirrors it with no dedup (r6)
       val base = ConnectedComponents.run(s, cp.where(!inDelta),
-        cfg(s).copy(batchSize = 4), orientedInput = true).state
-      ConnectedComponents.incremental(s, base, cp.where(inDelta), cfg(s))
+        cfg(s).copy(batchSize = 4)).state
+      ConnectedComponents.incremental(base, cp.where(inDelta).frame, cfg(s))
         .orderBy("id")
     }),
 
     // --- component size distribution (the web-graph bowtie headline
     // number): converged CC, then sizes, then size multiplicities --------
     "comp_sizes" -> ((s, dir) => {
-      val cpf = TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst")
+      val cpf = copurchaseEdges(s, dir).where(col("weight") >= 2)
       ConnectedComponents.run(s, cpf, cfg(s).copy(batchSize = 4)).state
         .groupBy("component").agg(count(lit(1)).as("csize"))
         .groupBy("csize").agg(count(lit(1)).as("n_comps"))
@@ -386,63 +368,56 @@ object Queries {
     // both sweeps unrolled k rounds ≥ the measured eccentricities, the
     // DuckDB twin unrolls the same chains
     "diameter2sweep" -> ((s, dir) =>
-      Paths.doubleSweepDiameter(und(s, dir), 8).orderBy("root")),
+      Paths.doubleSweepDiameter(copurchaseEdges(s, dir).symmetric.frame, 8)
+        .orderBy("root")),
 
     // --- weighted double-sweep diameter lower bound (min-plus sweeps over
     // the integral co-purchase weights; same equal-k parity argument)
-    "diameter_w2sweep" -> ((s, dir) => {
-      val cp = TestGraphs.copurchase(s, dir)
-      // no query-level checkpoint: doubleSweepDiameter cuts its input once
-      // and derives root/far from that cache (the eager copy was redundant)
-      val ew = cp.select(col("src"), col("dst"), col("weight"))
-        .union(cp.select(col("dst"), col("src"), col("weight")))
-      Paths.doubleSweepDiameter(ew, 8, weighted = true).orderBy("root")
-    }),
+    // (no query-level checkpoint: doubleSweepDiameter cuts its input once
+    // and derives root/far from that cache; the eager copy was redundant)
+    "diameter_w2sweep" -> ((s, dir) =>
+      Paths.doubleSweepDiameter(
+          copurchaseEdges(s, dir).weightedSymmetric.frame, 8, weighted = true)
+        .orderBy("root")),
 
     // --- label propagation (A3): 5 synchronous rounds --------------------
     "lp5" -> ((s, dir) =>
-      LabelPropagation.fixedRounds(undM(s, dir), 5, allIn = true)
+      LabelPropagation.fixedRounds(copurchaseEdges(s, dir).symmetric.cut, 5)
         .where(col("label").isNotNull).orderBy("id")),
 
     // --- semi-supervised seeded LP: ids ≡ 0 (mod 10) hold their own label
     // fixed; everyone else adopts the mode among LABELED neighbors — the
     // curated-taxonomy-spread production shape; unreached vertices -1 ----
     "lp_seeded" -> ((s, dir) =>
-      LabelPropagation.seededFixedRounds(undM(s, dir), 5, 10L)
+      LabelPropagation.seededFixedRounds(
+          copurchaseEdges(s, dir).symmetric.cut.frame, 5, 10L)
         .orderBy("id")),
 
     // --- weighted LP: votes weighted by co-purchase multiplicity ----------
-    "wlp5" -> ((s, dir) => {
-      val cp = TestGraphs.copurchase(s, dir)
-      val ew = cp.select(col("src"), col("dst"), col("weight"))
-        .union(cp.select(col("dst"), col("src"), col("weight")))
-        .transform(graft.engine.Lineage.cut(_, eager = true))
-      LabelPropagation.weightedFixedRounds(ew, 5, allIn = true)
-        .where(col("label").isNotNull).orderBy("id")
-    }),
+    "wlp5" -> ((s, dir) =>
+      LabelPropagation.weightedFixedRounds(copurchaseEdges(s, dir)
+          .weightedSymmetric.cut, 5)
+        .where(col("label").isNotNull).orderBy("id")),
 
     // --- triangle count (A4) ----------------------------------------------
     "tc" -> ((s, dir) =>
-      TriangleCount.count(TestGraphs.copurchase(s, dir),
-        canonicalInput = true)),
+      TriangleCount.count(copurchaseEdges(s, dir))),
 
     "tc_pervertex" -> ((s, dir) =>
-      TriangleCount.perVertex(TestGraphs.copurchase(s, dir),
-        canonicalInput = true).orderBy("id")),
+      TriangleCount.perVertex(copurchaseEdges(s, dir))
+        .orderBy("id")),
 
     // --- global 4-clique count (K4 — the next motif up from triangles;
     // orientation-invariant, so Spark's degree orientation and the
     // oracle's id orientation agree on the count) --------------------------
     "kclique4" -> ((s, dir) =>
-      TriangleCount.fourCliques(TestGraphs.copurchase(s, dir),
-        canonicalInput = true)),
+      TriangleCount.fourCliques(copurchaseEdges(s, dir))),
 
     // Local clustering coefficient in exact integer micro-units
     // (floor(2e6·tri/deg·(deg−1)), 0 when deg<2) — Spark `div` ≡ DuckDB
     // `//` on non-negative BIGINTs, so the twin is float-free.
     "lcc" -> ((s, dir) =>
-      TriangleCount.localClustering(TestGraphs.copurchase(s, dir),
-          canonicalInput = true)
+      TriangleCount.localClustering(copurchaseEdges(s, dir))
         .orderBy("id")),
 
     // --- BFS / SSSP (A5): 5 unrolled min-plus rounds ----------------------
@@ -450,17 +425,15 @@ object Queries {
       // LAZY shared cut: fixedRounds' own eager cut materializes the und
       // cache in the same job, and the source agg reuses it — the query-
       // level eager checkpoint was a second cache copy + extra action (r6)
-      val e = und(s, dir).transform(graft.engine.Lineage.cut(_))
+      val e = copurchaseEdges(s, dir).symmetric.frame
+        .transform(graft.engine.Lineage.cut(_))
       Paths.fixedRounds(e, e.agg(min(col("src"))), 5, weighted = false)
         .where(col("dist").isNotNull).orderBy("id")
     }),
 
     "sssp5" -> ((s, dir) => {
-      val cp = TestGraphs.copurchase(s, dir)
-      val ew = cp.select(col("src"), col("dst"),
-          col("weight").cast("double").as("weight"))
-        .union(cp.select(col("dst"), col("src"),
-          col("weight").cast("double")))
+      val ew = copurchaseEdges(s, dir).weightedSymmetric.frame
+        .withColumn("weight", col("weight").cast("double"))
         .localCheckpoint(true)
       Paths.fixedRounds(ew, ew.select(col("src")).agg(min(col("src"))), 5,
           weighted = true)
@@ -774,7 +747,8 @@ object Queries {
     // --- one-row exact moment profile of the undirected graph: counts,
     // max degree, wedges, and degree assortativity as an exact rational --
     "graph_profile" -> ((s, dir) =>
-      GraphOps.profile(undM(s, dir)).orderBy("n_vertices")),
+      GraphOps.profile(copurchaseEdges(s, dir).symmetric.cut.frame)
+        .orderBy("n_vertices")),
 
     // --- bipartite butterfly (4-cycle) count on the customer→part graph
     // (the bipartite triangle analog); exact integers, hot-center cap ----
@@ -805,10 +779,8 @@ object Queries {
     // generator shape): 4 hops from every id≡0 (mod 20) vertex of the
     // weight≥2 undirected graph — the trajectory replays exactly in SQL --
     "walks4" -> ((s, dir) => {
-      val e = GraphOps.symmetrizeOriented(
-          TestGraphs.copurchase(s, dir).where(col("weight") >= 2)
-            .select("src", "dst"))
-        .where(col("src") =!= col("dst")).localCheckpoint(true)
+      val e = copurchaseEdges(s, dir).where(col("weight") >= 2)
+        .symmetric.frame.localCheckpoint(true)
       Walks.walks(e, GraphOps.vertices(e).where(col("id") % 20 === 0), 4)
         .orderBy("start_id")
     }),
@@ -818,12 +790,9 @@ object Queries {
     // communities — a trivial gate), reported as the exact rational
     // (q_num, q_den) so no float crosses the oracle ------------------------
     "modularity_lp5" -> ((s, dir) => {
-      val e = GraphOps.symmetrizeOriented(
-          TestGraphs.copurchase(s, dir).where(col("weight") >= 2)
-            .select("src", "dst"))
-        .where(col("src") =!= col("dst")).localCheckpoint(true)
-      Community.modularity(e,
-        LabelPropagation.fixedRounds(e, 5, allIn = true))
+      val e = copurchaseEdges(s, dir).where(col("weight") >= 2)
+        .symmetric.cut
+      Community.modularity(e.frame, LabelPropagation.fixedRounds(e, 5))
         .orderBy("n_comms")
     }),
 
@@ -849,10 +818,7 @@ object Queries {
     // (weight DESC, id) order — one key-partitioned window ------------------
     "covisit_top3" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val cp = TestGraphs.copurchase(s, dir)
-      val sym = cp.select("src", "dst", "weight")
-        .unionByName(cp.select(col("dst").as("src"), col("src").as("dst"),
-          col("weight")))
+      val sym = copurchaseEdges(s, dir).weightedSymmetric.frame
       sym.withColumn("rk", row_number().over(Window.partitionBy("src")
           .orderBy(col("weight").desc, col("dst"))).cast("long"))
         .where(col("rk") <= 3)
@@ -875,7 +841,8 @@ object Queries {
     // dense vertex-rank space, known edges anti-joined out): the other
     // half of a link-prediction / embedding training set ---------------------
     "neg_sample2" -> ((s, dir) =>
-      LinkPrediction.negativeSample(undM(s, dir), trials = 8, k = 2)
+      LinkPrediction.negativeSample(
+          copurchaseEdges(s, dir).symmetric.cut.frame, trials = 8, k = 2)
         .orderBy("id", "trial")),
 
     // --- directed dyad census: reciprocity + transitivity as exact
@@ -980,18 +947,22 @@ object Queries {
     // micro-unit scores — sums of round(1e6/d) over the 8 smallest-id
     // roots within 4 hops, so the whole score is a long in both engines)
     "harmonic8" -> ((s, dir) =>
-      Paths.harmonicFixedRounds(und(s, dir), 8, 4).orderBy("id")),
+      Paths.harmonicFixedRounds(copurchaseEdges(s, dir).symmetric.frame, 8, 4)
+        .orderBy("id")),
 
     // --- landmark distance oracle over the same 8-root/4-hop tables:
     // triangle-inequality upper bounds for the md5-sampled pair set --------
     "landmark_dist" -> ((s, dir) =>
-      Paths.landmarkDistances(und(s, dir), 8, 4, 25L).orderBy("a", "b")),
+      Paths.landmarkDistances(
+          copurchaseEdges(s, dir).symmetric.frame, 8, 4, 25L)
+        .orderBy("a", "b")),
 
     // --- truncated closeness over the same 8-root sample: exact integer
     // (reached, sum_dist) pairs — closeness = reached/sum_dist left to the
     // caller so no float crosses the gate -------------------------------
     "closeness8" -> ((s, dir) =>
-      Paths.closenessFixedRounds(und(s, dir), 8, 4).orderBy("id")),
+      Paths.closenessFixedRounds(copurchaseEdges(s, dir).symmetric.frame, 8, 4)
+        .orderBy("id")),
 
     // --- Jones–Plassmann coloring under the FULL oracle: md5Prio
     // priorities (the mis/matching discipline) have a byte-exact DuckDB
@@ -1046,12 +1017,10 @@ object Queries {
     // --- weighted truncated harmonic centrality: min-plus multi-root
     // sweep over the weighted undirected graph; integral weights keep
     // round(1e6/d) engine-exact
-    "harmonic_w8" -> ((s, dir) => {
-      val cp = TestGraphs.copurchase(s, dir)
-      val ew = cp.select(col("src"), col("dst"), col("weight"))
-        .union(cp.select(col("dst"), col("src"), col("weight")))
-      Paths.harmonicFixedRounds(ew, 8, 4, weighted = true).orderBy("id")
-    }),
+    "harmonic_w8" -> ((s, dir) =>
+      Paths.harmonicFixedRounds(copurchaseEdges(s, dir).weightedSymmetric.frame,
+          8, 4, weighted = true)
+        .orderBy("id")),
 
     // --- distinct cardinality (§2.6): exact two-phase distinct agg --------
     "distinct_users" -> ((s, dir) =>
@@ -1118,16 +1087,14 @@ object Queries {
     // Deterministic md5-seeded bits make the approximate algorithm's exact
     // register trajectory the oracle surface -----------------------------
     "anf4" -> ((s, dir) =>
-      graft.algos.Sketches.anf(und(s, dir), 4, 8).orderBy("id")),
+      graft.algos.Sketches.anf(copurchaseEdges(s, dir).symmetric.frame, 4, 8)
+        .orderBy("id")),
 
     // --- synchronous level-1 Louvain, 4 integer-gain move rounds over the
     // weighted copurchase graph ------------------------------------------
-    "louvain4" -> ((s, dir) => {
-      val cp = TestGraphs.copurchase(s, dir)
-      val ew = cp.unionByName(cp.select(col("dst").as("src"),
-        col("src").as("dst"), col("weight")))
-      graft.algos.Louvain.rounds(ew, 4).orderBy("id")
-    }),
+    "louvain4" -> ((s, dir) =>
+      graft.algos.Louvain.rounds(
+          copurchaseEdges(s, dir).weightedSymmetric.frame, 4).orderBy("id")),
 
     // --- Heaps-law vocabulary growth: new/cumulative distinct 3-shingle
     // types per 5-doc bucket; first-seen = ONE min hash-agg on the shingle
@@ -1155,13 +1122,16 @@ object Queries {
     // --- eigenvector centrality, 4 power-iteration rounds with integer
     // max-normalization (y·1e6 div max(y)); the max is a 1-row broadcast --
     "eigen4" -> ((s, dir) =>
-      graft.algos.Spectral.eigenvector(und(s, dir), 4).orderBy("id")),
+      graft.algos.Spectral.eigenvector(
+          copurchaseEdges(s, dir).symmetric.frame, 4)
+        .orderBy("id")),
 
     // --- rich-club density profile φ(k) in ppm over thresholds 2/4/8/16:
     // one deg-tag of the edges + ONE conditional-sum pass per the broadcast
     // threshold table --------------------------------------------------
     "richclub" -> ((s, dir) =>
-      GraphOps.richClub(undM(s, dir), Seq(2, 4, 8, 16)).orderBy("k")),
+      GraphOps.richClub(copurchaseEdges(s, dir).symmetric.cut.frame,
+        Seq(2, 4, 8, 16)).orderBy("k")),
 
     // --- Lee et al. duplicated-window profile: 20-token windows occurring
     // ≥2× anywhere in the corpus, per-doc exact ppm; one shuffle on the
@@ -1201,8 +1171,7 @@ object Queries {
     // fixpoint as cc — shared closure oracle — proving the grid kernel is
     // algorithm-generic, not a PR special case --------------------------
     "cc_grid" -> ((s, dir) => {
-      val cpf = TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst")
+      val cpf = copurchaseEdges(s, dir).where(col("weight") >= 2)
       ConnectedComponents.run(s, cpf,
           cfg(s).copy(gridSide = Some(4), batchSize = 4))
         .state.orderBy("id")
@@ -1212,22 +1181,23 @@ object Queries {
     // first-zero-bit sums — the integer core of an effective-diameter
     // estimate; same per-round cost as anf4 plus one tiny agg -------------
     "anf_profile" -> ((s, dir) =>
-      graft.algos.Sketches.anfProfile(und(s, dir), 4, 8).orderBy("round")),
+      graft.algos.Sketches.anfProfile(
+          copurchaseEdges(s, dir).symmetric.frame, 4, 8)
+        .orderBy("round")),
 
     // --- robustness-after-hub-removal: drop the top-50 degree hubs
     // (deterministic (deg desc, id) tie-break), re-run CC over the
     // remainder, report component census ---------------------------------
     "hub_attack" -> ((s, dir) =>
-      ConnectedComponents.hubAttackCensus(s, undM(s, dir), 50,
+      ConnectedComponents.hubAttackCensus(s,
+        copurchaseEdges(s, dir).symmetric.cut, 50,
         cfg(s).copy(batchSize = 4))),
 
     // --- wedge-sampling triangle estimate, md5-deterministic 1/16 sample:
     // the sampled/closed counts are exact (the oracle gate), the estimator
     // is the 100 TB-scale triangle path -----------------------------------
     "tc_sampled" -> ((s, dir) =>
-      TriangleCount.sampledCount(
-        TestGraphs.copurchase(s, dir).select("src", "dst"), 16,
-        canonicalInput = true)),
+      TriangleCount.sampledCount(copurchaseEdges(s, dir), 16)),
 
     // --- second-order event-type transitions (the trigram Markov table):
     // two leads over ONE user-partitioned window --------------------------
@@ -1238,11 +1208,9 @@ object Queries {
     // --- Louvain phase 2: contract communities after the 4 move rounds and
     // aggregate super-edge weights (diagonal = 2× intra mass) -------------
     "louvain_coarsen" -> ((s, dir) => {
-      val cp = TestGraphs.copurchase(s, dir)
       // lazy cut shared by the move rounds AND the coarsen joins — coarsen
       // otherwise replayed the whole co-purchase derivation plan (r6)
-      val ew = cp.unionByName(cp.select(col("dst").as("src"),
-        col("src").as("dst"), col("weight")))
+      val ew = copurchaseEdges(s, dir).weightedSymmetric.frame
         .transform(graft.engine.Lineage.cut(_))
       val labels = graft.algos.Louvain.rounds(ew, 4)
       graft.algos.Louvain.coarsen(ew, labels)
@@ -1280,7 +1248,7 @@ object Queries {
     // --- log2-bucketed joint degree matrix (the degree-correlation
     // profile): two co-partitioned deg joins + one pair-bucket count ------
     "joint_degree" -> ((s, dir) => {
-      val e = undM(s, dir)
+      val e = copurchaseEdges(s, dir).symmetric.cut.frame
       val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
       e.join(deg.toDF("src", "ds"), "src")
         .join(deg.toDF("dst", "dd"), "dst")
@@ -1296,16 +1264,14 @@ object Queries {
     // per-round (n, m2) curve + cross-mult density argmax flag;
     // rounds ≤ ⌈log₂ n⌉ ----------------------------------------------------
     "densest" -> ((s, dir) =>
-      graft.algos.Densest.peelProfile(s,
-        GraphOps.symmetrizeOriented(TestGraphs.copurchase(s, dir)
-          .where(col("weight") >= 2).select("src", "dst")),
+      graft.algos.Densest.peelProfile(s, copurchaseEdges(s, dir)
+          .where(col("weight") >= 2).symmetric.frame,
         cfg(s).numPartitions).orderBy("round")),
 
     // --- signed-triangle structural balance census: md5-parity edge
     // signs, balanced ⇔ even number of negative edges; one exact row ------
     "balance_tri" -> ((s, dir) =>
-      TriangleCount.signedBalance(TestGraphs.copurchase(s, dir),
-        canonicalInput = true)),
+      TriangleCount.signedBalance(copurchaseEdges(s, dir))),
 
     // --- Markov stationary distribution of the event-type transition
     // chain: 4 power-iteration steps in exact integer micro-units ---------
@@ -1326,14 +1292,16 @@ object Queries {
     // --- shortest-path σ counts within 4 hops of the min-id source (the
     // Brandes forward phase as its own operator); exact BIGINT counts ----
     "sigma4" -> ((s, dir) => {
-      val e = und(s, dir).transform(graft.engine.Lineage.cut(_)) // lazy shared cut (the bfs5 r6 note)
+      val e = copurchaseEdges(s, dir).symmetric.frame
+        .transform(graft.engine.Lineage.cut(_)) // lazy shared cut (bfs5 r6)
       Paths.sigmaCounts(e, e.agg(min(col("src"))), 4).orderBy("id")
     }),
 
     // --- multi-seed personalized PageRank: one SPARSE vector per seed
     // (ids ≡ 0 mod 500), 4 fixed iterations keyed (seed, id) -------------
     "ppr_multi4" -> ((s, dir) =>
-      PageRank.multiSeedFixedIterations(undM(s, dir),
+      PageRank.multiSeedFixedIterations(
+          copurchaseEdges(s, dir).symmetric.cut.frame,
         id => pmod(id, lit(500L)) === 0, 4)
         .select(col("seed"), col("id"), round(col("rank"), 6).as("pr"))
         .orderBy("seed", "id")),
@@ -1363,13 +1331,11 @@ object Queries {
     // complement of hub_attack's targeted removal), then component
     // structure per threshold via the CC kernel ---------------------------
     "percolation3" -> ((s, dir) => {
-      val cpf = TestGraphs.copurchase(s, dir).where(col("weight") >= 2)
-        .select("src", "dst").localCheckpoint(true)
-      val keyed = cpf.withColumn("h",
-        GraphOps.md5Prio(concat_ws(":", col("src"), col("dst"))) % 100)
+      val cpf = copurchaseEdges(s, dir).where(col("weight") >= 2)
+        .pairs.cut
+      val h = GraphOps.md5Prio(concat_ws(":", col("src"), col("dst"))) % 100
       Seq(25, 50, 75).map { p =>
-        val kept = keyed.where(col("h") < p).select("src", "dst")
-        ConnectedComponents.run(s, kept, cfg(s)).state
+        ConnectedComponents.run(s, cpf.where(h < p), cfg(s)).state
           .groupBy("component").agg(count(lit(1)).as("sz"))
           .agg(lit(p.toLong).as("p_pct"),
             count(lit(1)).as("n_components"),
@@ -1393,11 +1359,10 @@ object Queries {
       import org.apache.spark.sql.expressions.Window
       // weight≥2 graph: LP on the dense full graph collapses to ONE
       // community (measured at sf0.01) — the sparse graph keeps real ones
-      val e = GraphOps.symmetrizeOriented(TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"))
-        .localCheckpoint(true)
-      val labels = LabelPropagation.fixedRounds(e, 5, allIn = true)
-      val ranks = PageRank.fixedIterations(e, 5)
+      val e = copurchaseEdges(s, dir).where(col("weight") >= 2)
+        .symmetric.cut
+      val labels = LabelPropagation.fixedRounds(e, 5)
+      val ranks = PageRank.fixedIterations(e.frame, 5)
         .select(col("id"), round(col("rank"), 6).as("pr"))
       val w = Window.partitionBy("label")
         .orderBy(col("pr").desc, col("id"))
@@ -1502,9 +1467,10 @@ object Queries {
     // --- ego-net density of the top-8 degree hubs (weight≥2 graph): the
     // "is the celebrity's neighborhood a clique or a star?" diagnostic ----
     "ego_density" -> ((s, dir) => {
-      val cpf = TestGraphs.copurchase(s, dir).where(col("weight") >= 2)
-        .select("src", "dst").localCheckpoint(true)
-      val und2 = GraphOps.symmetrizeOriented(cpf)
+      val cp = copurchaseEdges(s, dir).where(col("weight") >= 2)
+        .pairs.cut
+      val cpf = cp.frame
+      val und2 = cp.symmetric.frame
       val deg = und2.groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("deg"))
       val hubs = deg.orderBy(col("deg").desc, col("id")).limit(8)
@@ -1530,9 +1496,8 @@ object Queries {
     // fingerprinting / structural-role primitive; sort_array makes the
     // aggregate order-insensitive so the hash is shuffle-stable -----------
     "wl3" -> ((s, dir) => {
-      val e = GraphOps.symmetrizeOriented(TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"))
-        .localCheckpoint(true)
+      val e = copurchaseEdges(s, dir).where(col("weight") >= 2)
+        .symmetric.frame.localCheckpoint(true)
       val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
       var lab = deg.select(col("id"),
         md5(col("deg").cast("string")).as("wl"))
@@ -1744,22 +1709,18 @@ object Queries {
     // --- WEIGHTED densest-subgraph peel: density = Σweight/|V| on the
     // weight≥2 co-purchase graph (both full-graph peels — weighted and
     // not — drain in one round on the near-regular full graph; measured) --
-    "densest_w" -> ((s, dir) => {
-      val cp = TestGraphs.copurchase(s, dir).where(col("weight") >= 2)
+    "densest_w" -> ((s, dir) =>
       graft.algos.Densest.peelProfileWeighted(s,
-        cp.select("src", "dst", "weight")
-          .unionByName(cp.select(col("dst").as("src"),
-            col("src").as("dst"), col("weight"))),
-        cfg(s).numPartitions).orderBy("round")
-    }),
+        copurchaseEdges(s, dir).where(col("weight") >= 2)
+          .weightedSymmetric.frame,
+        cfg(s).numPartitions).orderBy("round")),
 
     // --- clustering-by-degree curve c(k): mean lcc_micro per log2 degree
     // bucket — the hierarchical-structure fingerprint (falling c(k) =
     // hub-and-spoke neighborhoods); per-vertex micros are already exact,
     // the bucket mean is their floored integer average --------------------
     "lcc_by_degree" -> ((s, dir) =>
-      TriangleCount.localClustering(TestGraphs.copurchase(s, dir),
-          canonicalInput = true)
+      TriangleCount.localClustering(copurchaseEdges(s, dir))
         .groupBy(length(bin(col("deg"))).cast("long").as("bucket"))
         .agg(count(lit(1)).as("n_vertices"),
           expr("sum(lcc_micro) div count(1)").as("avg_lcc_micro"))
@@ -1839,7 +1800,7 @@ object Queries {
     // adjacency list" primitive behind bounded-degree approximations ------
     "edge_sample2" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val e = und(s, dir)
+      val e = copurchaseEdges(s, dir).symmetric.frame
       val w = Window.partitionBy("src").orderBy(col("h"), col("dst"))
       e.withColumn("h",
           GraphOps.md5Prio(concat_ws(":", col("src"), col("dst"))))
@@ -1926,10 +1887,9 @@ object Queries {
     "linkpred_auc" -> ((s, dir) => {
       // weight≥2 graph: the full graph's 1.15M-pair RA join costs ~40 s at
       // sf0.1 (measured) for the same ranking-quality story
-      val cp = TestGraphs.copurchase(s, dir).where(col("weight") >= 2)
-        .select("src", "dst")
-      val und2 = GraphOps.symmetrizeOriented(cp).where(col("src") =!= col("dst"))
-        .localCheckpoint(true)
+      val cpw = copurchaseEdges(s, dir).where(col("weight") >= 2)
+      val cp = cpw.pairs.frame
+      val und2 = cpw.symmetric.frame.localCheckpoint(true)
       val deg = und2.groupBy(col("src").as("w"))
         .agg(count(lit(1)).as("degw"))
       val pos = cp.toDF("u", "v")
@@ -2144,9 +2104,8 @@ object Queries {
     // pr_converged's stopping step is data-dependent in a way float SQL
     // can't pin — both stay rows-only by design.
     "lp_converged" -> ((s, dir) => {
-      val cpf = TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst")
-      val und = GraphOps.symmetrizeOriented(cpf).localCheckpoint(true)
+      val und = copurchaseEdges(s, dir).where(col("weight") >= 2)
+        .symmetric.cut
       LabelPropagation.run(s, und, maxRounds = 30,
         numPartitions =
           s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
@@ -2158,12 +2117,9 @@ object Queries {
     // frontier): schedule-independent distances, so the oracle is the
     // same over-unrolled relaxation as sssp_converged
     "sssp_delta" -> ((s, dir) => {
-      val cp = TestGraphs.copurchase(s, dir)
-      val ew = cp.select(col("src"), col("dst"),
-          col("weight").cast("double").as("weight"))
-        .union(cp.select(col("dst"), col("src"),
-          col("weight").cast("double")))
-        .transform(graft.engine.Lineage.cut(_)) // lazy shared cut (the bfs5 r6 note)
+      val ew = copurchaseEdges(s, dir).weightedSymmetric.frame
+        .withColumn("weight", col("weight").cast("double"))
+        .transform(graft.engine.Lineage.cut(_)) // lazy shared cut (bfs5 r6)
       Paths.deltaStepping(s, ew, ew.select(col("src")).agg(min(col("src"))),
         delta = 2.0,
         numPartitions =
@@ -2172,12 +2128,9 @@ object Queries {
     }),
 
     "sssp_converged" -> ((s, dir) => {
-      val cp = TestGraphs.copurchase(s, dir)
-      val ew = cp.select(col("src"), col("dst"),
-          col("weight").cast("double").as("weight"))
-        .union(cp.select(col("dst"), col("src"),
-          col("weight").cast("double")))
-        .transform(graft.engine.Lineage.cut(_)) // lazy shared cut (the bfs5 r6 note)
+      val ew = copurchaseEdges(s, dir).weightedSymmetric.frame
+        .withColumn("weight", col("weight").cast("double"))
+        .transform(graft.engine.Lineage.cut(_)) // lazy shared cut (bfs5 r6)
       // min-src source folded into the engine's init state (lazy one-row
       // agg, broadcast cross-join) — no eager .head() in the builder
       Paths.ssspFrom(s, ew, ew.agg(min(col("src"))),
@@ -2210,9 +2163,8 @@ object Queries {
     // order-dependent, so rows-only; exactness vs sequential Brandes is
     // pinned in AlgosSpec's golden-graph spec instead.
     "betweenness8" -> ((s, dir) => {
-      val cpf = TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst")
-      val undE = GraphOps.symmetrizeOriented(cpf).localCheckpoint(true)
+      val undE = copurchaseEdges(s, dir).where(col("weight") >= 2)
+        .symmetric.frame.localCheckpoint(true)
       Betweenness.run(s, undE,
         Betweenness.sampledSources(GraphOps.vertices(undE), 8),
         numPartitions =

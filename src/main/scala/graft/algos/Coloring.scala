@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** Deterministic Jones–Plassmann graph coloring: vertex priorities are the
   * (xxhash64(id), id) total order — no RNG state — and each round every
@@ -40,8 +40,7 @@ object Coloring {
                     maxRounds: Int = 60, numPartitions: Int = 32,
                     md5Pri: Boolean = false): (DataFrame, Int) = {
     // symmetrized simple adjacency: coloring is an undirected notion
-    val e = GraphOps.symmetrize(edges.select("src", "dst"))
-      .where(col("src") =!= col("dst"))
+    val e = EdgeSet.symmetric(edges).frame
       .repartition(numPartitions, col("src"))
       .transform(Lineage.cut(_, eager = true))
     val nEdges = e.count()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
 import graft.engine.{Superstep, SuperstepConfig, SuperstepResult, VertexProgram}
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** HashMin connected components (SURVEY.md §2.4 A2): symmetrize, label =
   * min vertex id in component, non-stationary frontier until fixpoint.
@@ -34,22 +34,18 @@ object ConnectedComponents {
   /** Exact components to fixpoint. Input edges may be directed — they are
     * symmetrized here. Output: (id, component).
     *
-    * `orientedInput = true` asserts the edges are a unique oriented
-    * (src < dst) simple set (e.g. a co-purchase-derivation subset), so the
-    * symmetrizing union needs no dedup shuffle; `symmetricInput = true`
-    * asserts both directions are already present and symmetrize is skipped
-    * outright. Both flags only remove provably no-op work — the HashMin
-    * fixpoint is identical (r6, guide §2.1).
+    * The undirected view comes from the input's shape: a
+    * [[EdgeSet.Canonical]] is mirrored with no dedup shuffle, a
+    * [[EdgeSet.Symmetric]] is used as it is, anything else is
+    * symmetrized with a dedup. The HashMin fixpoint is the same on each.
     */
-  def run(spark: SparkSession, edges: DataFrame, cfg: SuperstepConfig,
-          resume: Boolean = false, orientedInput: Boolean = false,
-          symmetricInput: Boolean = false): SuperstepResult = {
-    require(!(orientedInput && symmetricInput),
-      "edges cannot be both oriented and symmetric")
-    val und =
-      if (symmetricInput) edges.select("src", "dst")
-      else if (orientedInput) GraphOps.symmetrizeOriented(edges)
-      else GraphOps.symmetrize(edges)
+  def run(spark: SparkSession, edges: EdgeSet, cfg: SuperstepConfig,
+          resume: Boolean = false): SuperstepResult = {
+    val und = edges match {
+      case c: EdgeSet.Canonical => c.symmetric.frame
+      case s: EdgeSet.Symmetric => s.frame.select("src", "dst")
+      case other => GraphOps.symmetrize(other.frame)
+    }
     val verts = GraphOps.vertices(und)
     val r = Superstep.run(spark, und, verts, CcProgram,
       cfg.copy(tol = 0.0), resume)
@@ -87,7 +83,7 @@ object ConnectedComponents {
     * graph). Output ((id, component), rounds) — exact, same result as
     * [[run]], shared oracle.
     */
-  def stars(spark: SparkSession, edges: DataFrame, numPartitions: Int = 32,
+  def stars(edges: DataFrame, numPartitions: Int = 32,
             maxRounds: Int = 200): (DataFrame, Int) = {
     // LAZY cuts + one fused prep action (r6): verts is only read by the
     // caller's final action; the prep count materializes the edge cache
@@ -133,8 +129,7 @@ object ConnectedComponents {
     val n = e.count() // ONE prep action: materializes e, counts it
     val nEff = Lineage.adaptiveParallelism(n, numPartitions)
     // the loop conf goes on the session that plans the rounds: inside a
-    // streaming foreachBatch that is the query's cloned session, not the
-    // caller's `spark`
+    // streaming foreachBatch that is the query's cloned session
     Lineage.withLoopConf(edges.sparkSession, nEff) {
     var done = n == 0L
     val rounds = Lineage.rounds("star contraction", maxRounds)(!done) { _ =>
@@ -170,8 +165,8 @@ object ConnectedComponents {
     * label-rewrite join; everything proportional to work actually runs on
     * |delta| + |touched components|.
     */
-  def incremental(spark: SparkSession, labels: DataFrame,
-                  deltaEdges: DataFrame, cfg: SuperstepConfig): DataFrame = {
+  def incremental(labels: DataFrame, deltaEdges: DataFrame,
+                  cfg: SuperstepConfig): DataFrame = {
     // LAZY cuts (r6): stars()'s prep count materializes lab, delta and
     // compEdges in ONE job instead of three eager round-trips — stream_cc
     // pays this prep per micro-batch fold
@@ -189,7 +184,7 @@ object ConnectedComponents {
       .where(col("src") =!= col("dst"))
       .distinct()
       .transform(Lineage.cut(_))
-    val merged = stars(spark, compEdges, cfg.numPartitions)._1
+    val merged = stars(compEdges, cfg.numPartitions)._1
       .select(col("id").as("component"), col("component").as("newcomp"))
     val newVerts = GraphOps.vertices(delta)
       .join(lab.select("id"), Seq("id"), "left_anti")
@@ -206,22 +201,23 @@ object ConnectedComponents {
     * over the surviving edges, and report a 1-row component census
     * (n_components, max_comp, n_left). Vertices whose every edge touched a
     * hub vanish with their edges — the census counts vertices that still
-    * have ≥1 edge, the same reading the oracle closure takes.
+    * have ≥1 edge, the same reading the oracle closure takes. Degrees are
+    * undirected: an input not known to be [[EdgeSet.Symmetric]] is
+    * symmetrized (deduped, self-loops dropped) first.
     *
     * The hub list is a top-k (driver-size) sort+limit; the removal is two
     * broadcast anti-joins; the rest is [[run]]'s cost.
     */
-  def hubAttackCensus(spark: SparkSession, undirected: DataFrame, k: Int,
+  def hubAttackCensus(spark: SparkSession, edges: EdgeSet, k: Int,
                       cfg: SuperstepConfig): DataFrame = {
-    val e0 = undirected.select("src", "dst")
-    val deg = e0.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+    val und = edges match {
+      case s: EdgeSet.Symmetric => s
+      case other => EdgeSet.symmetric(other.frame)
+    }
+    val deg = und.frame.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("deg"))
     val hubs = deg.orderBy(col("deg").desc, col("id")).limit(k).select("id")
-    val e = e0
-      .join(hubs.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-      .join(hubs.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-    // removal is endpoint-symmetric, so the surviving edge set is still
-    // symmetric — re-symmetrizing would double then dedup 4.8M rows (r6)
-    val comp = run(spark, e, cfg, symmetricInput = true).state
+    val comp = run(spark, und.withoutVertices(hubs), cfg).state
     comp.groupBy("component").agg(count(lit(1)).as("sz"))
       .agg(count(lit(1)).cast("long").as("n_components"),
         max("sz").cast("long").as("max_comp"),

@@ -1,10 +1,10 @@
 package graft.algos
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** Synchronous label propagation (SURVEY.md §2.4 A3, §5.3): label₀ = id;
   * each round every vertex adopts the MODE of its in-neighbors' labels,
@@ -19,31 +19,25 @@ object LabelPropagation {
 
   /** One synchronous round; withFlag adds a `chg` column so the convergence
     * check can ride the materializing aggregate instead of a second action.
+    * `vote` is a neighbor's weight in the mode (count, or Σ weight).
     *
-    * `allIn = true` asserts every vertex has at least one in-neighbor (true
-    * for any symmetrized graph) — then the mode exists for every vertex,
-    * the keep-label carry join disappears, and the round references the
-    * previous labels ONCE. That turns a lazily-composed k-round batch from
-    * ~2^k plan leaves into a linear chain, which is what lets [[run]] batch
-    * more rounds per action on undirected graphs.
+    * `carry = false` (the edges are an [[EdgeSet.Symmetric]], so every
+    * vertex has at least one in-neighbor): the mode exists for every
+    * vertex, the keep-label carry join disappears, and the round references
+    * the previous labels ONCE. That turns a lazily-composed k-round batch
+    * from ~2^k plan leaves into a linear chain, which is what lets [[run]]
+    * batch more rounds per action on undirected graphs.
     */
-  private def round(edges: DataFrame, labels: DataFrame,
-                    withFlag: Boolean = false,
-                    allIn: Boolean = false): DataFrame = {
+  private def round(edges: DataFrame, labels: DataFrame, withFlag: Boolean,
+                    carry: Boolean, vote: Column = count(lit(1))): DataFrame = {
     val msgs = edges.join(labels.withColumnRenamed("id", "src")
         .hint("shuffle_hash"), "src")
       .groupBy(col("dst"), col("label"))
-      .agg(count(lit(1)).as("cnt"))
+      .agg(vote.as("cnt"))
     val best = msgs.groupBy(col("dst").as("id"))
       .agg(max_by(col("label"),
         struct(col("cnt"), (-col("label")).as("nl"))).as("newlabel"))
-    if (allIn && !withFlag)
-      best.select(col("id"), col("newlabel").as("label"))
-    else if (allIn) // flag round: the one double-reference, last in a batch
-      best.join(labels, Seq("id"))
-        .select(col("id"), col("newlabel").as("label"),
-          (col("newlabel") =!= col("label")).as("chg"))
-    else {
+    if (carry) {
       val joined = labels.join(best, Seq("id"), "left_outer")
       if (withFlag)
         joined.select(col("id"),
@@ -53,24 +47,33 @@ object LabelPropagation {
       else
         joined.select(col("id"),
           coalesce(col("newlabel"), col("label")).as("label"))
-    }
+    } else if (withFlag) // the one double-reference, last in a batch
+      best.join(labels, Seq("id"))
+        .select(col("id"), col("newlabel").as("label"),
+          (col("newlabel") =!= col("label")).as("chg"))
+    else
+      best.select(col("id"), col("newlabel").as("label"))
   }
 
   /** Lazily-composed fixed-k rounds (no actions) — oracle-checked path.
     *
-    * `allIn = true` (caller-asserted: every vertex has ≥1 in-neighbor —
-    * true for any symmetrized graph) drops the carry join: the mode then
-    * exists for every vertex, `coalesce(newlabel, label)` ≡ `newlabel`,
-    * and each round references the previous labels ONCE. The k-round lazy
-    * plan collapses from ~2^k leaves (688 KB of formatted plan at k=5 —
-    * measured r6) to a linear chain, and k carry joins disappear outright.
-    * Results are identical by construction; the oracle is unchanged.
+    * On an [[EdgeSet.Symmetric]] every vertex has ≥1 in-neighbor, so the
+    * carry join goes: the mode then exists for every vertex,
+    * `coalesce(newlabel, label)` ≡ `newlabel`, and each round references
+    * the previous labels ONCE. The k-round lazy plan collapses from ~2^k
+    * leaves (688 KB of formatted plan at k=5 — measured r6) to a linear
+    * chain, and k carry joins disappear outright. Results are identical by
+    * construction; the oracle is unchanged.
     */
-  def fixedRounds(edges: DataFrame, k: Int,
-                  allIn: Boolean = false): DataFrame = {
-    val e = edges.select("src", "dst")
+  def fixedRounds(edges: EdgeSet, k: Int): DataFrame =
+    lazyRounds(edges, edges.frame.select("src", "dst"), k, count(lit(1)))
+
+  private def lazyRounds(shape: EdgeSet, e: DataFrame, k: Int,
+                         vote: Column): DataFrame = {
+    val carry = !shape.isInstanceOf[EdgeSet.Symmetric]
     var labels = GraphOps.vertices(e).select(col("id"), col("id").as("label"))
-    for (_ <- 1 to k) labels = round(e, labels, allIn = allIn)
+    for (_ <- 1 to k)
+      labels = round(e, labels, withFlag = false, carry = carry, vote = vote)
     labels
   }
 
@@ -114,33 +117,13 @@ object LabelPropagation {
   /** Weighted synchronous LP: neighbor votes weighted by edge weight
     * (Σ weight instead of count), ties broken toward the smallest label —
     * same determinism discipline as the unweighted mode, so exact-match
-    * oracles stay achievable. Lazily-composed fixed-k rounds.
+    * oracles stay achievable. Lazily-composed fixed-k rounds; an
+    * [[EdgeSet.Symmetric]] input drops the carry join, as in
+    * [[fixedRounds]].
     */
-  def weightedFixedRounds(edges: DataFrame, k: Int,
-                          allIn: Boolean = false): DataFrame = {
-    val e = edges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("weight"))
-    var labels = GraphOps.vertices(e.select("src", "dst"))
-      .select(col("id"), col("id").as("label"))
-    for (_ <- 1 to k) {
-      val msgs = e.join(labels.withColumnRenamed("id", "src")
-          .hint("shuffle_hash"), "src")
-        .groupBy(col("dst"), col("label"))
-        .agg(sum(col("weight")).as("w"))
-      val best = msgs.groupBy(col("dst").as("id"))
-        .agg(max_by(col("label"),
-          struct(col("w"), (-col("label")).as("nl"))).as("newlabel"))
-      // allIn (symmetrized input): every vertex gets a mode vote, so the
-      // carry join is a proven no-op — single-reference linear chain (the
-      // fixedRounds discipline; plan shrinks from ~2^k leaves to k).
-      labels =
-        if (allIn) best.select(col("id"), col("newlabel").as("label"))
-        else labels.join(best, Seq("id"), "left_outer")
-          .select(col("id"),
-            coalesce(col("newlabel"), col("label")).as("label"))
-    }
-    labels
-  }
+  def weightedFixedRounds(edges: EdgeSet, k: Int): DataFrame =
+    lazyRounds(edges, edges.frame.select(col("src"), col("dst"),
+      col("weight").cast("double").as("weight")), k, sum(col("weight")))
 
   /** Materializing variant: runs up to maxRounds, stops early when no label
     * changes; lineage truncated per batch. Output: (id, label), rounds run.
@@ -150,27 +133,23 @@ object LabelPropagation {
     * Each round references the previous labels twice (vote join + carry),
     * so a lazy batch grows ~2^k plan leaves — all pointing at the same
     * cached frame, fine for small k (default 4 → ≤16 leaves), ruinous
-    * for large k (SURVEY.md §9 anti-lesson). The changed-flag is computed
-    * on the LAST round of the batch only: if that round changed nothing
-    * the labels are a fixpoint, so stopping is exact; a run may execute up
-    * to batch-1 extra no-op rounds past the fixpoint.
+    * for large k (SURVEY.md §9 anti-lesson); on an [[EdgeSet.Symmetric]]
+    * the carry join goes and the batch is a linear chain (doubling the
+    * batch on top measured slightly slower, r6). The changed-flag
+    * is computed on the LAST round of the batch only: if that round
+    * changed nothing the labels are a fixpoint, so stopping is exact; a
+    * run may execute up to batch-1 extra no-op rounds past the fixpoint.
     */
-  def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 50,
+  def run(spark: SparkSession, edges: EdgeSet, maxRounds: Int = 50,
           numPartitions: Int = 32, batch: Int = 4): (DataFrame, Int) = {
-    val e = edges.select("src", "dst")
+    val carry = !edges.isInstanceOf[EdgeSet.Symmetric]
+    val e = edges.frame.select("src", "dst")
       .repartition(numPartitions, col("src")).transform(Lineage.cut(_, eager = true))
     val nEff = Lineage.adaptiveParallelism(e.count(), numPartitions)
     Lineage.withLoopConf(spark, nEff) {
     var labels = GraphOps.vertices(e)
       .select(col("id"), col("id").as("label"))
       .repartition(nEff, col("id")).transform(Lineage.cut(_, eager = true))
-    // One cheap prep count on the checkpointed edges: if every vertex has
-    // an in-neighbor (any symmetrized graph), rounds single-reference the
-    // labels — the k-round lazy batch is then a linear chain instead of
-    // ~2^k plan leaves, so per-batch planning shrinks. (Doubling the batch
-    // on top was measured slightly SLOWER here: the extra stages per
-    // action cost more planning than the saved actions on this box.)
-    val allIn = e.select(col("dst")).distinct().count() == labels.count()
     val effBatch = math.max(1, batch)
     var r = 0
     var done = false
@@ -178,7 +157,7 @@ object LabelPropagation {
       val inner = math.min(effBatch, maxRounds - r)
       var next = labels
       for (i <- 1 to inner)
-        next = round(e, next, withFlag = i == inner, allIn = allIn)
+        next = round(e, next, withFlag = i == inner, carry = carry)
       // ONE action per batch: the lazy localCheckpoint is materialized by
       // the changed-count aggregate (same shape as the Superstep kernel).
       val nextM = next.transform(Lineage.cut(_))

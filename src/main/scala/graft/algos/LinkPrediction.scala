@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** Neighborhood-based link prediction (Liben-Nowell & Kleinberg, CIKM
   * 2003): score non-adjacent vertex pairs (u, v) that share at least one
@@ -39,7 +39,7 @@ object LinkPrediction {
     * an (ra_micro, cn, u, v) sort).
     */
   def scores(edges: DataFrame, maxDeg: Long = 10000L): DataFrame = {
-    val und = GraphOps.symmetrize(edges).where(col("src") =!= col("dst"))
+    val und = EdgeSet.symmetric(edges).frame
       .transform(Lineage.cut(_, eager = true))
     val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     // wedge legs from capped centers only; deg rides leg 1 so the RA term

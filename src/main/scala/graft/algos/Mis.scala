@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** Maximal independent set — Luby's algorithm with DETERMINISTIC
   * priorities (SURVEY.md §11 queue: the JP-priority machinery, made
@@ -31,8 +31,7 @@ object Mis {
 
   def run(spark: SparkSession, edges: DataFrame, numPartitions: Int = 32,
           maxRounds: Int = 100): (DataFrame, Int) = {
-    val e = GraphOps.symmetrize(edges.select("src", "dst"))
-      .where(col("src") =!= col("dst"))
+    val e = EdgeSet.symmetric(edges).frame
       .repartition(numPartitions, col("src"))
       .transform(Lineage.cut(_, eager = true))
     val verts = GraphOps.vertices(e).transform(Lineage.cut(_, eager = true))

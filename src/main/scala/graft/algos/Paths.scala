@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
 import graft.engine.{Superstep, SuperstepConfig, SuperstepResult, VertexProgram}
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** BFS and SSSP (SURVEY.md §2.4 A5) — the min-plus semiring on the same
   * superstep kernel as CC; non-stationary frontier = vertices whose
@@ -494,7 +494,7 @@ object Paths {
     val Shift = 1048576L // 2^20
     val ce = canonEdges.select("src", "dst")
       .transform(Lineage.cut(_, eager = true))
-    val e = GraphOps.symmetrize(ce).where(col("src") =!= col("dst"))
+    val e = EdgeSet.symmetric(ce).frame
       .transform(Lineage.cut(_, eager = true))
     // frontier-restricted (fixedRounds r6): identical packed minima
     var st = GraphOps.vertices(e)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** Triangle counting (SURVEY.md §2.4 A4, §3.3): orient each undirected edge
   * low→high by (degree, id), build wedges with one self-join, close with a
@@ -68,17 +68,15 @@ object TriangleCount {
   }
 
   /** Canonical simple edges, [[orientedByDegree]], with both the canonical
-    * and the oriented set materialized. `canonicalInput = true` asserts the
-    * caller's edges are ALREADY a canonical simple oriented set (unique
-    * src < dst, no self-loops — e.g. the co-purchase derivation's groupBy
-    * output), skipping the no-op orient+dedup shuffle over the full edge
-    * set (r6, guide §2.1).
+    * and the oriented set materialized. A [[EdgeSet.Canonical]] input is
+    * already oriented and unique, so it skips the orient + dedup shuffle
+    * over the full edge set; any other input is oriented here.
     */
-  private def oriented(edges: DataFrame, canonicalInput: Boolean): DataFrame =
-    orientedByDegree((
-        if (canonicalInput) edges.select("src", "dst")
-        else GraphOps.orient(edges)
-      ).transform(Lineage.cut(_, eager = true)))
+  private def oriented(edges: EdgeSet): DataFrame =
+    orientedByDegree((edges match {
+        case c: EdgeSet.Canonical => c.frame.select("src", "dst")
+        case other => GraphOps.orient(other.frame)
+      }).transform(Lineage.cut(_, eager = true)))
       .transform(Lineage.cut(_, eager = true))
 
   /** Triangles per corner vertex (id, tri_cnt): each triangle credits all
@@ -90,13 +88,13 @@ object TriangleCount {
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("tri_cnt"))
 
   /** Global triangle count; single row (triangles: long). */
-  def count(edges: DataFrame, canonicalInput: Boolean = false): DataFrame =
-    closedWedges(oriented(edges, canonicalInput))
+  def count(edges: EdgeSet): DataFrame =
+    closedWedges(oriented(edges))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("triangles"))
 
   /** Per-vertex triangle participation counts (id, tri_cnt). */
-  def perVertex(edges: DataFrame, canonicalInput: Boolean = false): DataFrame =
-    cornerCounts(closedWedges(oriented(edges, canonicalInput)))
+  def perVertex(edges: EdgeSet): DataFrame =
+    cornerCounts(closedWedges(oriented(edges)))
 
   /** Per-vertex local clustering coefficient, scored in exact integer
     * micro-units so the oracle twin is byte-identical across engines:
@@ -110,8 +108,8 @@ object TriangleCount {
     * [[perVertex]] plan — degree and triangle aggregates both shuffle on
     * vertex id, and the final assembly is a same-key left join.
     */
-  def localClustering(edges: DataFrame, canonicalInput: Boolean = false): DataFrame = {
-    val e = oriented(edges, canonicalInput)
+  def localClustering(edges: EdgeSet): DataFrame = {
+    val e = oriented(edges)
     val deg = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .groupBy("id")
@@ -173,8 +171,8 @@ object TriangleCount {
     * joins, so no payload beyond the 4 ids ever shuffles. One row
     * (cliques4: long).
     */
-  def fourCliques(edges: DataFrame, canonicalInput: Boolean = false): DataFrame = {
-    val e = oriented(edges, canonicalInput)
+  def fourCliques(edges: EdgeSet): DataFrame = {
+    val e = oriented(edges)
     val ext = e.select(col("src").as("c"), col("dst").as("d"))
     val cand = closedWedges(e).join(ext.hint("shuffle_hash"), "c")
     cand
@@ -197,8 +195,7 @@ object TriangleCount {
     * (wedge_pairs, rectangles), exact BIGINTs.
     */
   def rectangles(edges: DataFrame, maxDeg: Long = 10000L): DataFrame = {
-    val und = GraphOps.symmetrize(edges.select("src", "dst"))
-      .where(col("src") =!= col("dst"))
+    val und = EdgeSet.symmetric(edges).frame
       .transform(Lineage.cut(_, eager = true))
     GraphOps.codegreePairs(und, maxDeg).agg(
         org.apache.spark.sql.functions.count(lit(1)).as("wedge_pairs"),
@@ -252,10 +249,9 @@ object TriangleCount {
     * Estimator error is the standard ~1/√sampled; the EXACT sampled/closed
     * counts are what the oracle gates.
     */
-  def sampledCount(edges: DataFrame, rate: Int,
-                   canonicalInput: Boolean = false): DataFrame = {
+  def sampledCount(edges: EdgeSet, rate: Int): DataFrame = {
     require(rate >= 1, s"rate must be >= 1, got $rate")
-    val e = oriented(edges, canonicalInput)
+    val e = oriented(edges)
     val e1 = e.select(col("src").as("a"), col("dst").as("b"))
     val e2 = e.select(col("src").as("b"), col("dst").as("c"))
     val wedges = e1.join(e2.hint("shuffle_hash"), "b").select("a", "b", "c")
@@ -307,13 +303,13 @@ object TriangleCount {
     * closing join) with three codegen'd sign expressions over the corner
     * ids — no extra shuffle beyond the triangle enumeration itself.
     */
-  def signedBalance(edges: DataFrame, canonicalInput: Boolean = false): DataFrame = {
+  def signedBalance(edges: EdgeSet): DataFrame = {
     // sign each edge ONCE (|E| hashes) and carry the bit through the
     // enumeration joins, instead of recomputing 3 md5s per TRIANGLE. At
     // sf0.1 the wedge join dominates either way (A/B medians 24.5 vs 26,
     // inside noise — BASELINE.md wave 24); the per-edge spelling is kept
     // because triangles ≫ edges is exactly the skew that grows at 100×.
-    val e = oriented(edges, canonicalInput)
+    val e = oriented(edges)
       .withColumn("s", GraphOps.md5Prio(concat_ws(":",
         least(col("src"), col("dst")),
         greatest(col("src"), col("dst")))) % 2)

@@ -51,28 +51,14 @@ object GraphOps {
   def md5Prio(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** G1 — dedup + self-loop policy. */
-  def simplify(edges: DataFrame, dropSelfLoops: Boolean = true): DataFrame = {
-    val e = edges.select("src", "dst").distinct()
-    if (dropSelfLoops) e.where(col("src") =!= col("dst")) else e
-  }
+  /** G1 — dedup, self-loops dropped. */
+  def simplify(edges: DataFrame): DataFrame =
+    edges.select("src", "dst").distinct().where(col("src") =!= col("dst"))
 
   /** §2.8 — undirected view: both directions present, deduped. */
   def symmetrize(edges: DataFrame): DataFrame = {
     val e = edges.select("src", "dst")
     e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-  }
-
-  /** [[symmetrize]] for inputs that are PROVABLY a simple oriented edge set
-    * (unique (src, dst) pairs with src < dst — e.g. any `groupBy(src, dst)`
-    * output of an oriented derivation): the two union legs are then disjoint
-    * (src < dst vs src > dst, no self-loops) and each internally unique, so
-    * the dedup exchange `symmetrize` pays is a provable no-op and is
-    * skipped. Same rows, one full |2E|-row shuffle less.
-    */
-  def symmetrizeOriented(edges: DataFrame): DataFrame = {
-    val e = edges.select("src", "dst")
-    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
   }
 
   /** Orient each undirected edge as (min, max); drops self loops. Input may
@@ -254,7 +240,7 @@ object GraphOps {
     * key; exact at any scale.
     */
   def knnDegree(edges: DataFrame): DataFrame = {
-    val e = symmetrize(edges).where(col("src") =!= col("dst"))
+    val e = EdgeSet.symmetric(edges).frame
     val d = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     e.join(d.toDF("src", "dsrc"), Seq("src"))
       .join(d.toDF("dst", "ddst"), Seq("dst"))
@@ -372,8 +358,7 @@ object GraphOps {
     * when `maxDeg` drops centers.
     */
   private def codegreeWithDegrees(edges: DataFrame, maxDeg: Long): DataFrame = {
-    val und = symmetrize(edges).where(col("src") =!= col("dst"))
-      .localCheckpoint(true)
+    val und = EdgeSet.symmetric(edges).frame.localCheckpoint(true)
     val deg = outDegrees(und)
     codegreePairs(und, maxDeg)
       .join(deg.toDF("u", "d1"), "u")
@@ -488,7 +473,7 @@ object GraphOps {
     */
   def twoHopReach(edges: DataFrame,
                   maxMidDeg: Long = Long.MaxValue): DataFrame = {
-    val e = symmetrize(edges).where(col("src") =!= col("dst"))
+    val e = EdgeSet.symmetric(edges).frame
     // deterministic hot-mid cap: wedges through a mid vertex of degree >
     // maxMidDeg are skipped (its Σ deg² term dominates the fan-out on
     // power-law graphs); direct 1-hop edges always count, so the result

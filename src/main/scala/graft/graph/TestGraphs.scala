@@ -31,15 +31,12 @@ object TestGraphs {
       .agg(count(lit(1)).as("weight"))
   }
 
-  /** Same edge set with both directions present (undirected view for
-    * PR/CC/LP; SURVEY.md §2.8 union/symmetrize). Weight dropped — the
-    * symmetric graph is simple/unweighted.
-    */
-  def copurchaseUndirected(spark: SparkSession, sfDir: String): DataFrame =
-    // copurchase's groupBy output is unique oriented (src < dst) pairs, so
-    // the symmetrized union is already distinct — the dedup shuffle the
-    // generic symmetrize pays would be a no-op (r6, guide §2.1).
-    GraphOps.symmetrizeOriented(copurchase(spark, sfDir))
+  /** [[copurchase]] as a trusted [[EdgeSet.Canonical]] (its groupBy output
+    * is unique src < dst pairs). k-round kernels read its `.symmetric` view
+    * materialized (`.cut(eager = true)`): unmaterialized, pr5's plan
+    * replayed the derivation in 128 parquet scans (r6). */
+  def copurchaseEdges(spark: SparkSession, sfDir: String): EdgeSet.Canonical =
+    new EdgeSet.Canonical(copurchase(spark, sfDir))
 
   /** Bipartite customer → part edges via orders ⋈ lineitem (repo→path
     * analog, SURVEY.md §2.2 G8a). Part ids offset by 10^9 to keep the two

@@ -158,7 +158,7 @@ object EdgeStream {
         spark.range(0).select(col("id"), col("id").as("component"))) {
       (labels, batch) =>
         graft.algos.ConnectedComponents
-          .incremental(batch.sparkSession, labels, batch, cfg)
+          .incremental(labels, batch, cfg)
           .localCheckpoint(true)
     }
   }

@@ -5,6 +5,7 @@ import java.nio.file.attribute.FileTime
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.util.TempDir
@@ -17,11 +18,13 @@ import graft.util.TempDir
   * files' own, so a shape types its columns in its staging `select`.
   *
   * Two staging policies:
-  *  - [[Split]]: one `repartition(splits)` write — batch order is
-  *    unspecified, for shapes whose merges are order-independent;
-  *  - [[Ordered]]: one single-file batch per frame with strictly
-  *    increasing mtimes — the file source schedules by mtime, so
-  *    micro-batch k replays frame k (empty frames included).
+  *  - [[Split]]: one write partitioned by a hash of the whole row, so a
+  *    row lands in the same file on every pass (an empty partition writes
+  *    no file), for shapes whose merges are order-independent;
+  *  - [[Ordered]]: one single-file batch per frame (empty ones included).
+  *
+  * Either way the files get increasing mtimes and the file source
+  * schedules by mtime, so micro-batch k replays file k.
   *
   * Two drains: [[toMemory]] (a memory sink under an output mode, then a
   * per-shape batch `finish`) and [[fold]] (`foreachBatch` into a state).
@@ -49,8 +52,17 @@ private[streaming] object Replay {
 
   final case class Split(df: DataFrame, splits: Int) extends Staging {
     def spark: SparkSession = df.sparkSession
-    def write(tmp: Path, dir: Path): Unit =
-      df.repartition(splits).write.parquet(dir.toString)
+    def write(tmp: Path, dir: Path): Unit = {
+      // a hash of the row, not its columns: a repartition on an aggregate's
+      // own keys merges into its exchange, which AQE may coalesce
+      df.repartition(splits, xxhash64(df.columns.map(col).toSeq: _*))
+        .write.parquet(dir.toString)
+      // part-NNNNN names sort by partition index
+      dir.toFile.listFiles().filter(_.getName.startsWith("part-"))
+        .sortBy(_.getName).zipWithIndex.foreach { case (f, k) =>
+          replayAt(f.toPath, k)
+        }
+    }
   }
 
   final case class Ordered(frames: Seq[DataFrame]) extends Staging {
@@ -65,12 +77,15 @@ private[streaming] object Replay {
         val part =
           try ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
           finally ls.close()
-        val target = Files.move(part, dir.resolve(f"chunk-$k%03d.parquet"))
-        Files.setLastModifiedTime(target,
-          FileTime.fromMillis(1000000000000L + k * 2000L))
+        replayAt(Files.move(part, dir.resolve(f"chunk-$k%03d.parquet")), k)
       }
     }
   }
+
+  /** Sets replay file k's mtime: strictly increasing in k. */
+  private def replayAt(file: Path, k: Int): Unit =
+    Files.setLastModifiedTime(file,
+      FileTime.fromMillis(1000000000000L + k * 2000L))
 
   private val runCounter = new AtomicLong(0)
 

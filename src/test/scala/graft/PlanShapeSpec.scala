@@ -174,6 +174,30 @@ class PlanShapeSpec extends SparkSpec {
       s"packed landmark min fell back to SortAggregate:\n$plan")
   }
 
+  test("trusted symmetric view plans no dedup; the public constructor does") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Union}
+    // aggregates with a Union below them: a dedup of the two directions,
+    // not the derivation's own groupBy (which sits under each leg)
+    def dedups(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect {
+        case a: Aggregate if a.find(_.isInstanceOf[Union]).isDefined => a
+      }.size
+    def aggregates(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.size
+    withLineitem { dir =>
+      val cp = graft.graph.TestGraphs.copurchaseEdges(spark, dir)
+      for (c <- Seq(cp, cp.where(col("weight") >= 2))) {
+        val trusted = c.symmetric.frame
+        assert(aggregates(trusted) > 0, "the derivation's groupBy is gone")
+        assert(dedups(trusted) === 0, s"trusted symmetric view plans a " +
+          s"dedup:\n${trusted.queryExecution.optimizedPlan}")
+        val public = graft.graph.EdgeSet.symmetric(c.frame).frame
+        assert(dedups(public) === 1, s"public constructor lost its " +
+          s"dedup:\n${public.queryExecution.optimizedPlan}")
+      }
+    }
+  }
+
   test("fourCliques plan: both clique checks are semi joins, no product") {
     val s = spark
     import s.implicits._

@@ -37,6 +37,22 @@ class ReplaySpec extends SparkSpec {
       "the staged dir must be deleted after a normal return")
   }
 
+  test("split replay: every pass sees the same batches in the same order") {
+    // a shuffled input: its row order is not fixed from one run to the next
+    val df = spark.range(0, 3000)
+      .select((col("id") * 7919 % 2003).as("v"), (col("id") % 11).as("w"))
+      .distinct()
+    def pass(): Vector[Set[(Long, Long)]] =
+      Replay.fold(Replay.Split(df, 4), Vector.empty[Set[(Long, Long)]]) {
+        (acc, batch) =>
+          acc :+ batch.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
+    val first = pass()
+    assert(first.size > 1)
+    assert(first.map(_.size).sum == df.count())
+    for (_ <- 1 to 2) assert(pass() == first)
+  }
+
   test("the staged dir is deleted when the drain throws") {
     val s = spark
     import s.implicits._

@@ -111,8 +111,8 @@ class RoundCapSpec extends SparkSpec {
       () => Scc.runWithStats(spark, sccChain, 4)._2("maxSweep"),
       () => Scc.runWithStats(spark, sccChain, 4, maxSweepRounds = 1)),
     ("ConnectedComponents.stars",
-      () => ConnectedComponents.stars(spark, path, 4)._2,
-      () => ConnectedComponents.stars(spark, path, 4, maxRounds = 1)),
+      () => ConnectedComponents.stars(path, 4)._2,
+      () => ConnectedComponents.stars(path, 4, maxRounds = 1)),
     // unit weights: delta 1 opens one bucket per hop; delta 100 puts the
     // whole path in bucket 0, closed by one light round per hop
     ("Paths.deltaStepping buckets", () => sssp(1.0)._1,

@@ -106,7 +106,7 @@ class SccTrussSpec extends SparkSpec {
 
   private def starsMap(pairs: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
     val (df, r) = graft.algos.ConnectedComponents
-      .stars(spark, edgesDf(pairs), numPartitions = 4)
+      .stars(edgesDf(pairs), numPartitions = 4)
     (df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap, r)
   }
 

@@ -33,6 +33,20 @@ trait SparkSpec extends AnyFunSuite {
   def collectL(df: DataFrame, id: String, v: String): Map[Long, Long] =
     df.select(id, v).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** `body` on a dir holding a small `lineitem.parquet` (l_orderkey,
+    * l_partkey) for the co-purchase derivation: every order lists one part
+    * twice and one part of its own, and many orders share part pairs.
+    */
+  def withLineitem[T](body: String => T): T =
+    graft.util.TempDir.withTempDir("graft-lineitem") { dir =>
+      val s = spark
+      import s.implicits._
+      (0L until 120L).flatMap { o =>
+        Seq(o % 7, (o + 1) % 7, (o + 1) % 7, 3L, 100L + o).map(p => (o, p))
+      }.toDF("l_orderkey", "l_partkey").write.parquet(s"$dir/lineitem.parquet")
+      body(dir.toString)
+    }
 }
 
 /** Independent in-test oracles (SURVEY.md §5.2): plain-Scala implementations

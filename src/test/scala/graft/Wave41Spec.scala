@@ -4,13 +4,14 @@ import org.apache.spark.sql.functions._
 
 import graft.algos.{ConnectedComponents, PageRank, TriangleCount}
 import graft.engine.SuperstepConfig
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** Round-6 optimization equivalences: every fast path added in the
   * optimization round must be RESULT-identical to the generic path it
-  * bypasses — the dedup-skip flags (symmetrizeOriented, canonicalInput,
-  * orientedInput/symmetricInput) and the broadcast-layout superstep
-  * batching (per-superstep lazy cuts).
+  * bypasses — the dedup skips a kernel takes on a shaped [[EdgeSet]]
+  * (`Canonical.symmetric`, a canonical TriangleCount input, a canonical
+  * or symmetric CC input) and the broadcast-layout superstep batching
+  * (per-superstep lazy cuts).
   */
 class Wave41Spec extends SparkSpec {
 
@@ -22,33 +23,31 @@ class Wave41Spec extends SparkSpec {
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
       .distinct
 
-  test("symmetrizeOriented ≡ symmetrize on a unique oriented input") {
+  test("Canonical.symmetric ≡ symmetrize on a unique oriented input") {
     val e = edgesDf(orientedSet(101, 40, 160))
     val want = GraphOps.symmetrize(e).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = GraphOps.symmetrizeOriented(e).collect()
+    val got = EdgeSet.canonical(e).symmetric.frame.collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == got.toSet.size) // no dup rows introduced
     assert(got.toSet == want)
   }
 
-  test("TriangleCount canonicalInput=true ≡ generic on canonical edges") {
+  test("TriangleCount on a Canonical set ≡ generic on canonical edges") {
     val pairs = orientedSet(202, 30, 140)
     val e = edgesDf(pairs)
+    val c = EdgeSet.canonical(e)
     assert(TriangleCount.count(e).collect().toSeq.map(_.getLong(0)) ==
-      TriangleCount.count(e, canonicalInput = true).collect().toSeq
-        .map(_.getLong(0)))
+      TriangleCount.count(c).collect().toSeq.map(_.getLong(0)))
     val pv = collectL(TriangleCount.perVertex(e), "id", "tri_cnt")
-    val pvC = collectL(TriangleCount.perVertex(e, canonicalInput = true),
-      "id", "tri_cnt")
+    val pvC = collectL(TriangleCount.perVertex(c), "id", "tri_cnt")
     assert(pv == pvC)
     val sc = TriangleCount.sampledCount(e, 4).collect().head
-    val scC = TriangleCount.sampledCount(e, 4, canonicalInput = true)
-      .collect().head
+    val scC = TriangleCount.sampledCount(c, 4).collect().head
     assert((sc.getLong(0), sc.getLong(1)) == (scC.getLong(0), scC.getLong(1)))
   }
 
-  test("CC.run input-shape flags ≡ generic symmetrize") {
+  test("CC.run on Canonical and Symmetric sets ≡ generic symmetrize") {
     val s = spark
     val pairs = orientedSet(303, 50, 120)
     val e = edgesDf(pairs)
@@ -56,12 +55,11 @@ class Wave41Spec extends SparkSpec {
     val want = collectL(ConnectedComponents.run(s, e, cfg).state,
       "id", "component")
     val gotO = collectL(
-      ConnectedComponents.run(s, e, cfg, orientedInput = true).state,
+      ConnectedComponents.run(s, EdgeSet.canonical(e), cfg).state,
       "id", "component")
     assert(gotO == want)
-    val sym = GraphOps.symmetrize(e)
     val gotS = collectL(
-      ConnectedComponents.run(s, sym, cfg, symmetricInput = true).state,
+      ConnectedComponents.run(s, EdgeSet.symmetric(e), cfg).state,
       "id", "component")
     assert(gotS == want)
   }

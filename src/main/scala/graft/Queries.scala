@@ -114,7 +114,7 @@ object Queries {
 
     "pr5_blocked" -> ((s, dir) =>
       prBlocked(copurchaseEdges(s, dir).symmetric.cut.frame, 5,
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        cfg(s).numPartitions)
         .select(col("id"), round(col("rank"), 6).as("pr"))
         .where(col("pr").isNotNull)
         .orderBy("id")),
@@ -293,7 +293,7 @@ object Queries {
       graft.streaming.EdgeStream.ccViaStream(
         TestGraphs.copurchase(s, dir)
           .where(col("weight") >= 2).select("src", "dst"),
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        cfg(s).numPartitions)
         .orderBy("id")),
 
     // --- connected components (A2): converged, exact ---------------------
@@ -311,8 +311,7 @@ object Queries {
     "cc_stars" -> ((s, dir) => {
       val cpf = TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst")
-      graft.algos.ConnectedComponents.stars(cpf,
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      graft.algos.ConnectedComponents.stars(cpf, cfg(s).numPartitions)
         ._1.orderBy("id")
     }),
 
@@ -522,7 +521,7 @@ object Queries {
     "dedup_clusters" -> ((s, dir) =>
       Dedup.clusters(s, docs(s, dir),
         Dedup.minhashLsh(docs(s, dir), 3, 16, 0.5),
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        cfg(s).numPartitions)
         .orderBy("doc_id")),
 
     // --- batch sessionization of the event log: 4-hour gap rule (the
@@ -700,16 +699,14 @@ object Queries {
     // co-change / import edges, all under the hard oracle gate.
     "g_cochange_corpus" -> ((s, dir) => {
       val corpus = CorpusGen.generate(s, 20, 30, 8)
-      val ids = EdgeDerivation.idMap(corpus,
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      val ids = EdgeDerivation.idMap(corpus, cfg(s).numPartitions)
         .localCheckpoint(true)
       EdgeDerivation.coChangeEdges(corpus, ids).orderBy("src", "dst")
     }),
 
     "g_import_corpus" -> ((s, dir) => {
       val corpus = CorpusGen.generate(s, 20, 30, 8)
-      val ids = EdgeDerivation.idMap(corpus,
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      val ids = EdgeDerivation.idMap(corpus, cfg(s).numPartitions)
         .localCheckpoint(true)
       EdgeDerivation.importEdges(corpus, ids).orderBy("src", "dst")
     }),
@@ -895,7 +892,7 @@ object Queries {
     // over-unrolled DuckDB Borůvka must reproduce the exact edge set ------
     "msf" -> ((s, dir) =>
       Msf.run(s, TestGraphs.copurchase(s, dir).where(col("weight") >= 2),
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        cfg(s).numPartitions)
         .orderBy("src", "dst")),
 
     // --- strongly connected components (A: directed companion to cc) on
@@ -910,8 +907,7 @@ object Queries {
       val dg = cp.where(col("weight") >= 2).select("src", "dst")
         .unionByName(cp.where(col("weight") >= 3)
           .select(col("dst").as("src"), col("src").as("dst")))
-      graft.algos.Scc.run(s, dg,
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      graft.algos.Scc.run(s, dg, cfg(s).numPartitions)
         .orderBy("id")
     }),
 
@@ -938,8 +934,7 @@ object Queries {
       val dg = cp.where(col("weight") >= 2).select("src", "dst")
         .unionByName(cp.where(col("weight") >= 3)
           .select(col("dst").as("src"), col("src").as("dst")))
-      graft.algos.Scc.condensation(s, dg,
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      graft.algos.Scc.condensation(s, dg, cfg(s).numPartitions)
         .orderBy("src_scc", "dst_scc")
     }),
 
@@ -971,8 +966,7 @@ object Queries {
       graft.algos.Coloring.run(s,
         TestGraphs.copurchase(s, dir)
           .where(col("weight") >= 2).select("src", "dst"),
-        numPartitions =
-          s.conf.get("spark.sql.shuffle.partitions", "32").toInt,
+        numPartitions = cfg(s).numPartitions,
         md5Pri = true)
         .select(col("id"), col("color").cast("long").as("color"))
         .orderBy("id")),
@@ -984,7 +978,7 @@ object Queries {
     "mis" -> ((s, dir) =>
       graft.algos.Mis.run(s, TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst"),
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        cfg(s).numPartitions)
         ._1.orderBy("id")),
 
     // --- maximal matching (greedy by md5 edge priority — the MIS recipe
@@ -993,7 +987,7 @@ object Queries {
     "matching" -> ((s, dir) =>
       graft.algos.Matching.run(s, TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst"),
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        cfg(s).numPartitions)
         ._1.orderBy("src", "dst")),
 
     // --- greedy b-matching (each vertex accepts up to b = 2 edges — the
@@ -1002,7 +996,7 @@ object Queries {
     "matching_b2" -> ((s, dir) =>
       graft.algos.Matching.runB(s, TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst"), 2,
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        cfg(s).numPartitions)
         ._1.orderBy("src", "dst")),
 
     // --- greedy max-weight maximal matching (locally-dominant edges —
@@ -1011,7 +1005,7 @@ object Queries {
     "matching_w" -> ((s, dir) =>
       graft.algos.Matching.runWeighted(s, TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst", "weight"),
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        cfg(s).numPartitions)
         ._1.orderBy("src", "dst")),
 
     // --- weighted truncated harmonic centrality: min-plus multi-root
@@ -2107,8 +2101,7 @@ object Queries {
       val und = copurchaseEdges(s, dir).where(col("weight") >= 2)
         .symmetric.cut
       LabelPropagation.run(s, und, maxRounds = 30,
-        numPartitions =
-          s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        numPartitions = cfg(s).numPartitions)
         ._1.orderBy("id")
     }),
 
@@ -2122,8 +2115,7 @@ object Queries {
         .transform(graft.engine.Lineage.cut(_)) // lazy shared cut (bfs5 r6)
       Paths.deltaStepping(s, ew, ew.select(col("src")).agg(min(col("src"))),
         delta = 2.0,
-        numPartitions =
-          s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        numPartitions = cfg(s).numPartitions)
         ._1.where(col("dist").isNotNull).orderBy("id")
     }),
 
@@ -2154,8 +2146,7 @@ object Queries {
       graft.algos.Coloring.run(s,
         TestGraphs.copurchase(s, dir)
           .where(col("weight") >= 2).select("src", "dst"),
-        numPartitions =
-          s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        numPartitions = cfg(s).numPartitions)
         .orderBy("id")),
 
     // sampled-source Brandes betweenness (8 hash-sampled roots) on the
@@ -2167,8 +2158,7 @@ object Queries {
         .symmetric.frame.localCheckpoint(true)
       Betweenness.run(s, undE,
         Betweenness.sampledSources(GraphOps.vertices(undE), 8),
-        numPartitions =
-          s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        numPartitions = cfg(s).numPartitions)
         .orderBy("id")
     }),
 

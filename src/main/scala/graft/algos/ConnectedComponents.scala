@@ -1,6 +1,8 @@
 package graft.algos
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -88,14 +90,32 @@ object ConnectedComponents {
     // LAZY cuts + one fused prep action (r6): verts is only read by the
     // caller's final action; the prep count materializes the edge cache
     // AND yields the row count the adaptive clamp needs, so the old
-    // verts-cut / edge-cut / count / isEmpty prep (4 driver round-trips,
-    // paid per stream_cc micro-batch fold) collapses to one. There is no
-    // up-front repartition: every round re-shuffles to the loop layout.
+    // verts-cut / edge-cut / count / isEmpty prep (4 driver round-trips)
+    // collapses to one. There is no up-front repartition: every round
+    // re-shuffles to the loop layout.
     val verts = GraphOps.vertices(edges.select("src", "dst"))
       .transform(Lineage.cut(_))
-    var e = edges.select("src", "dst").where(col("src") =!= col("dst"))
+    val e = edges.select("src", "dst").where(col("src") =!= col("dst"))
       .distinct()
       .transform(Lineage.cut(_))
+    val n = e.count() // ONE prep action: materializes e, counts it
+    val (forest, rounds) = contract(e, n, numPartitions, maxRounds)
+    // the star forest maps each leaf to its root; isolated vertices are
+    // their own component
+    val comp = verts
+      .join(forest.select(col("src").as("id"), col("dst").as("root")),
+        Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("root"), col("id")).as("component"))
+    (comp, rounds)
+  }
+
+  /** The rounds of [[stars]] on `edges`, a distinct, self-loop-free
+    * (src, dst) set of `n` rows: returns the star forest (leaf → root,
+    * roots absent as srcs) and the number of rounds run.
+    */
+  private def contract(edges: DataFrame, n: Long, numPartitions: Int,
+                       maxRounds: Int): (DataFrame, Int) = {
+    var e = edges
     val byU = Window.partitionBy("u")
 
     // m ≤ u < v: the emitted edges point down and are never self-loops
@@ -126,7 +146,6 @@ object ConnectedComponents {
         .where(col("k") > 1)
         .count()
 
-    val n = e.count() // ONE prep action: materializes e, counts it
     val nEff = Lineage.adaptiveParallelism(n, numPartitions)
     // the loop conf goes on the session that plans the rounds: inside a
     // streaming foreachBatch that is the query's cloned session
@@ -139,60 +158,134 @@ object ConnectedComponents {
       done = offForest(next) == 0L // materializes the round in one job
       e = next
     }
-    // the star forest maps each leaf to its root; isolated vertices are
-    // their own component
-    val comp = verts
-      .join(e.select(col("src").as("id"), col("dst").as("root")),
-        Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("root"), col("id")).as("component"))
-    (comp, rounds)
+    (e, rounds)
     }
   }
 
   /** Incremental connected components — the daily-delta production path:
     * fold a batch of NEW edges into an existing labeling without
     * re-traversing the full graph. The delta edges are projected onto
-    * COMPONENT ids (one join against the prior labels), components are
-    * merged by running [[stars]] on that contracted graph — it has at most
-    * one vertex per touched component + new vertex, orders of magnitude
-    * smaller than the input graph — and the result maps back over the
-    * prior labels with one join. Prior labels are component-minimum ids
-    * (what [[run]] and [[stars]] emit), so the contracted minima are
-    * exactly the union graph's component minima: the output matches a
-    * from-scratch run over old ∪ delta edges (shared closure oracle).
+    * COMPONENT ids (one join against the prior labels); the contracted
+    * graph has at most one vertex per touched component + new vertex,
+    * orders of magnitude smaller than the input graph. Its components are
+    * merged, and the result maps back over the prior labels with one join.
+    *
+    * The merge is finished where it is cheapest ("finishing computations
+    * serially", Salihoglu & Widom, VLDB 2014). One count of the contracted
+    * edges decides: up to [[Lineage.rowsPerPartition]] rows (one adaptive
+    * partition's worth) are collected and merged by a union-find on the
+    * driver, whose root of each set is its minimum id; the merge map goes
+    * back as a local relation that the relabel join broadcasts. A larger
+    * contracted graph runs the [[stars]] rounds, handed the count already
+    * taken.
+    *
+    * Exact either way: prior labels are component-minimum member ids (what
+    * [[run]] and [[stars]] emit), so the minimum of a merged set of
+    * component ids and new vertex ids is exactly the union graph's
+    * component minimum, and the output matches a from-scratch run over
+    * old ∪ delta edges (shared closure oracle). A new vertex is never a
+    * component id, so it never contracts to a self-loop: every new vertex
+    * is an endpoint of a contracted edge, flagged there, and takes its
+    * label from the merge, with no anti-join against the prior labels.
+    *
+    * Every action (the count, the collect or the star rounds, and the
+    * relabel) runs under [[Lineage.withLoopConf]] on the delta's own
+    * session, at the smaller of `cfg.numPartitions` and that session's
+    * shuffle-partition count: inside a stream replay that is the batch
+    * session, already clamped to the replay's size. The labels come back
+    * materialized and cut, so a fold over many batches keeps its lineage
+    * bounded.
     *
     * At 100 TB this touches the full vertex set only in the final
     * label-rewrite join; everything proportional to work actually runs on
     * |delta| + |touched components|.
     */
   def incremental(labels: DataFrame, deltaEdges: DataFrame,
-                  cfg: SuperstepConfig): DataFrame = {
-    // LAZY cuts (r6): stars()'s prep count materializes lab, delta and
-    // compEdges in ONE job instead of three eager round-trips — stream_cc
-    // pays this prep per micro-batch fold
-    val lab = labels.select(col("id"), col("component"))
-      .transform(Lineage.cut(_))
-    val delta = GraphOps.simplify(deltaEdges.select("src", "dst"))
-      .transform(Lineage.cut(_))
-    val compEdges = delta
-      .join(lab.select(col("id").as("src"), col("component").as("csrc")),
-        Seq("src"), "left_outer")
-      .join(lab.select(col("id").as("dst"), col("component").as("cdst")),
-        Seq("dst"), "left_outer")
-      .select(coalesce(col("csrc"), col("src")).as("src"),
-        coalesce(col("cdst"), col("dst")).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .transform(Lineage.cut(_))
-    val merged = stars(compEdges, cfg.numPartitions)._1
-      .select(col("id").as("component"), col("component").as("newcomp"))
-    val newVerts = GraphOps.vertices(delta)
-      .join(lab.select("id"), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("component"))
-    lab.unionByName(newVerts)
-      .join(merged, Seq("component"), "left_outer")
-      .select(col("id"),
-        coalesce(col("newcomp"), col("component")).as("component"))
+                  cfg: SuperstepConfig): DataFrame =
+    incremental(labels, deltaEdges, cfg, Lineage.rowsPerPartition)
+
+  /** [[incremental]] finishing on the driver up to `driverRows` contracted
+    * edges; a spec sets 0 to force the [[stars]] path. */
+  private[graft] def incremental(labels: DataFrame, deltaEdges: DataFrame,
+                                 cfg: SuperstepConfig,
+                                 driverRows: Long): DataFrame = {
+    val spark = deltaEdges.sparkSession
+    val parts = math.min(cfg.numPartitions,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    Lineage.withLoopConf(spark, parts) {
+      val lab = labels.select(col("id"), col("component"))
+        .transform(Lineage.cut(_))
+      // snew/dnew: the endpoint is a new vertex (no prior label)
+      val compEdges = deltaEdges.select("src", "dst")
+        .join(lab.select(col("id").as("src"), col("component").as("csrc")),
+          Seq("src"), "left_outer")
+        .join(lab.select(col("id").as("dst"), col("component").as("cdst")),
+          Seq("dst"), "left_outer")
+        .select(coalesce(col("csrc"), col("src")).as("src"),
+          coalesce(col("cdst"), col("dst")).as("dst"),
+          col("csrc").isNull.as("snew"), col("cdst").isNull.as("dnew"))
+        .where(col("src") =!= col("dst"))
+        .distinct()
+        .transform(Lineage.cut(_))
+      val n = compEdges.count() // materializes lab and compEdges
+      // (id, root, fresh): the new label of every new vertex and of every
+      // prior component that merged into a smaller one
+      val roots =
+        if (n <= driverRows) driverRoots(spark, compEdges.collect())
+        else {
+          val (forest, _) = // 200: stars' default round cap
+            contract(compEdges.select("src", "dst"), n, parts, 200)
+          compEdges.select(col("src").as("id"), col("snew").as("fresh"))
+            .union(compEdges.select(col("dst").as("id"),
+              col("dnew").as("fresh")))
+            .distinct()
+            .join(forest.select(col("src").as("id"), col("dst").as("root")),
+              Seq("id"), "left_outer")
+            .select(col("id"), coalesce(col("root"), col("id")).as("root"),
+              col("fresh"))
+        }
+      // a frame runs on its left-most input's session, and `labels` may
+      // come from another one (a fold's previous batch): the merge map
+      // leads, so the relabel runs on the delta's session and loop conf
+      roots.where(!col("fresh"))
+        .select(col("id").as("component"), col("root").as("newcomp"))
+        .join(lab, Seq("component"), "right_outer")
+        .select(col("id"),
+          coalesce(col("newcomp"), col("component")).as("component"))
+        .unionByName(roots.where(col("fresh"))
+          .select(col("id"), col("root").as("component")))
+        .coalesce(parts) // else every fold adds the new labels' partitions
+        .transform(Lineage.cut(_, eager = true))
+    }
+  }
+
+  /** Union-find over collected contracted edges (src, dst, snew, dnew);
+    * the root of each set is its minimum id. Returns (id, root, fresh) as
+    * a local relation for every new endpoint and every prior component
+    * whose root is another id.
+    */
+  private def driverRoots(spark: SparkSession,
+                          edges: Array[Row]): DataFrame = {
+    val parent = mutable.LongMap.empty[Long]
+    val fresh = mutable.LongMap.empty[Boolean]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var y = x // path compression
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    edges.foreach { e =>
+      val (a, b) = (e.getLong(0), e.getLong(1))
+      fresh(a) = e.getBoolean(2)
+      fresh(b) = e.getBoolean(3)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    import spark.implicits._
+    fresh.toSeq.map { case (v, f) => (v, find(v), f) }
+      .filter { case (v, r, f) => f || r != v }
+      .toDF("id", "root", "fresh")
   }
 
   /** Robustness-after-hub-removal census (targeted-attack percolation,

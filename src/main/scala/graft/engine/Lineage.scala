@@ -30,6 +30,12 @@ object Lineage {
     finally restore.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
+  /** The row unit of [[adaptiveParallelism]]: one adaptive partition's
+    * worth of rows. A relation this small is also small enough to collect
+    * and finish on the driver.
+    */
+  val rowsPerPartition: Long = 65536L
+
   /** Scale-adaptive loop partition count (guide §2.2/§2.5 discipline:
     * derive partitioning from measured input size, never a constant tuned
     * for one box). nEff = min(requested, ceil(rows / rowsPerPartition)),
@@ -40,8 +46,7 @@ object Lineage {
     * (integer/min/max/count aggregates, joins) — float SUM trajectories
     * (PageRank) keep their pinned count so rounding stays bit-stable.
     */
-  def adaptiveParallelism(rows: Long, requested: Int,
-                          rowsPerPartition: Long = 65536L): Int =
+  def adaptiveParallelism(rows: Long, requested: Int): Int =
     math.max(1L, math.min(requested.toLong,
       (rows + rowsPerPartition - 1) / rowsPerPartition)).toInt
 

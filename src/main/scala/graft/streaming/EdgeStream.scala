@@ -143,12 +143,18 @@ object EdgeStream {
     * cc_incr union-find spec pins fold ≡ from-scratch), so the drained
     * labels equal batch CC on the full edge set REGARDLESS of how the
     * stream partitioned the edges — which is what lets cc's closure
-    * oracle gate this eighth streaming shape. Labels are
-    * localCheckpoint-pinned between batches (bounded lineage, and the
-    * state survives the replay dir's cleanup). Each fold runs on the
-    * batch's own session — the streaming query's clone — so the star
-    * rounds' loop conf (AQE off, pinned shuffle partitions) reaches the
-    * plans that execute; set on the caller's session it would not.
+    * oracle gate this eighth streaming shape.
+    *
+    * Each fold is one `incremental` call on the batch's own session — the
+    * streaming query's clone, whose shuffle-partition count is the
+    * replay's clamped one. `incremental` runs all of the fold's actions
+    * under the loop conf (AQE off, that partition count) on that session,
+    * where it reaches the plans that execute (set on the caller's session
+    * it would not), and returns its labels materialized and cut: bounded
+    * lineage between batches, and state that survives the replay dir's
+    * cleanup. At the ledger's scales a batch contracts to far fewer than
+    * `Lineage.rowsPerPartition` rows, so every merge finishes on the
+    * driver.
     */
   def ccViaStream(edges: DataFrame, numPartitions: Int = 32,
                   splits: Int = 5): DataFrame = {
@@ -157,9 +163,7 @@ object EdgeStream {
     Replay.fold(Replay.Split(edges.select(col("src"), col("dst")), splits),
         spark.range(0).select(col("id"), col("id").as("component"))) {
       (labels, batch) =>
-        graft.algos.ConnectedComponents
-          .incremental(labels, batch, cfg)
-          .localCheckpoint(true)
+        graft.algos.ConnectedComponents.incremental(labels, batch, cfg)
     }
   }
 

@@ -104,8 +104,9 @@ object Queries {
     // optimizer cannot drop (no null ranks/labels exist, so the oracle
     // output is unchanged): without it, Bench's count() triggers
     // distinct-key join elimination on the final left-outer join and the
-    // "measured" time never runs the k iterations (TopKProbe, BASELINE.md
-    // round 3 — the pr_top20 8× mystery).
+    // "measured" time never runs the k iterations (BASELINE.md "The
+    // driver's pr_top20/bfs5 regressions explained" — the pr_top20 8×
+    // mystery).
     "pr5" -> ((s, dir) =>
       PageRank.fixedIterations(copurchaseEdges(s, dir).symmetric.cut.frame, 5)
         .select(col("id"), round(col("rank"), 6).as("pr"))

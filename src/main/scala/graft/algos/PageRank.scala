@@ -133,13 +133,23 @@ object PageRank {
     */
   def personalizedFixedIterations(edges: DataFrame,
                                   sourcePred: Column => Column,
-                                  k: Int): DataFrame = {
-    val e = edges.select("src", "dst")
-    val out = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+                                  k: Int): DataFrame =
+    powerRounds(edges.select("src", "dst"), count(lit(1)).as("outdeg"),
+      col("rank") / col("outdeg"), sourcePred, k)
+
+  /** k lazily-composed power rounds over the edge rows `e` (src, dst, …):
+    * r₀ = 1_S, r'(v) = 0.15·1_S(v) + 0.85·Σ_{(u,v)∈e} share(u,v), with S
+    * the vertices where `sourcePred` holds. `outAgg` is a per-src
+    * aggregate, named by the caller and joined onto every edge row;
+    * `share` is the mass one edge row carries, an expression over that
+    * row and its src's `rank`. The tagged edge table is cut once up front:
+    * exchange reuse does not dedupe it across the unrolled rounds.
+    * Vertices = edge endpoints.
+    */
+  private def powerRounds(e: DataFrame, outAgg: Column, share: Column,
+                          sourcePred: Column => Column, k: Int): DataFrame = {
     val verts = GraphOps.vertices(e)
-    // materialized once (r6): exchange reuse does not dedupe the tagged
-    // edge table across the unrolled rounds
-    val eDeg = e.join(out.hint("shuffle_hash"), "src")
+    val eDeg = e.join(e.groupBy("src").agg(outAgg).hint("shuffle_hash"), "src")
       .transform(Lineage.cut(_, eager = true))
     def tele(c: Column): Column =
       when(sourcePred(c), lit(Teleport)).otherwise(lit(0.0))
@@ -148,7 +158,7 @@ object PageRank {
     for (_ <- 1 to k) {
       val msgs = eDeg.join(rank.withColumnRenamed("id", "src")
           .hint("shuffle_hash"), "src")
-        .select(col("dst").as("id"), (col("rank") / col("outdeg")).as("m"))
+        .select(col("dst").as("id"), share.as("m"))
         .groupBy("id").agg(sum(col("m")).as("mass"))
       rank = verts.join(msgs.hint("shuffle_hash"), Seq("id"), "left_outer")
         .select(col("id"),
@@ -177,8 +187,6 @@ object PageRank {
     // materialized once (r6): the k-round lazy composition references the
     // degree-tagged edge table per round and exchange reuse does not
     // dedupe across the unrolled plan
-    // materialized once (r6): exchange reuse does not dedupe the tagged
-    // edge table across the unrolled rounds
     val eDeg = e.join(out.hint("shuffle_hash"), "src")
       .transform(Lineage.cut(_, eager = true))
     val seeds = GraphOps.vertices(e).where(seedPred(col("id")))
@@ -203,29 +211,11 @@ object PageRank {
 
   /** Lazily-composed fixed-k iteration plan (no actions) — the
     * oracle-checked query path; trajectory matches the unrolled DuckDB SQL
-    * exactly. Vertices = edge endpoints.
+    * exactly. Vertices = edge endpoints. This is
+    * [[personalizedFixedIterations]] with S = V.
     */
-  def fixedIterations(edges: DataFrame, k: Int): DataFrame = {
-    val e = edges.select("src", "dst")
-    val out = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val verts = GraphOps.vertices(e)
-    // materialized once (r6): exchange reuse does not dedupe the tagged
-    // edge table across the unrolled rounds
-    val eDeg = e.join(out.hint("shuffle_hash"), "src")
-      .transform(Lineage.cut(_, eager = true))
-    var rank = verts.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to k) {
-      val msgs = eDeg.join(rank.withColumnRenamed("id", "src")
-          .hint("shuffle_hash"), "src")
-        .select(col("dst").as("id"), (col("rank") / col("outdeg")).as("m"))
-        .groupBy("id").agg(sum(col("m")).as("mass"))
-      rank = verts.join(msgs.hint("shuffle_hash"), Seq("id"), "left_outer")
-        .select(col("id"),
-          (lit(Teleport) +
-            lit(Damping) * coalesce(col("mass"), lit(0.0))).as("rank"))
-    }
-    rank
-  }
+  def fixedIterations(edges: DataFrame, k: Int): DataFrame =
+    personalizedFixedIterations(edges, _ => lit(true), k)
 
   /** WEIGHTED fixed-k PageRank — scatter shares proportional to edge
     * weight: mass(v) = Σ_{(u,v)} rank(u)·w(u,v)/wout(u), with
@@ -237,27 +227,9 @@ object PageRank {
     * extra shuffle over the unweighted plan (wout rides the same
     * broadcast-or-shuffle join outdeg did).
     */
-  def weightedFixedIterations(edges: DataFrame, k: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("w"))
-    val out = e.groupBy("src").agg(sum(col("w")).as("wout"))
-    val verts = GraphOps.vertices(e)
-    // materialized once (r6): exchange reuse does not dedupe the tagged
-    // edge table across the unrolled rounds
-    val eDeg = e.join(out.hint("shuffle_hash"), "src")
-      .transform(Lineage.cut(_, eager = true))
-    var rank = verts.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to k) {
-      val msgs = eDeg.join(rank.withColumnRenamed("id", "src")
-          .hint("shuffle_hash"), "src")
-        .select(col("dst").as("id"),
-          (col("rank") * col("w") / col("wout")).as("m"))
-        .groupBy("id").agg(sum(col("m")).as("mass"))
-      rank = verts.join(msgs.hint("shuffle_hash"), Seq("id"), "left_outer")
-        .select(col("id"),
-          (lit(Teleport) +
-            lit(Damping) * coalesce(col("mass"), lit(0.0))).as("rank"))
-    }
-    rank
-  }
+  def weightedFixedIterations(edges: DataFrame, k: Int): DataFrame =
+    powerRounds(edges.select(col("src"), col("dst"),
+        col("weight").cast("double").as("w")),
+      sum(col("w")).as("wout"), col("rank") * col("w") / col("wout"),
+      _ => lit(true), k)
 }

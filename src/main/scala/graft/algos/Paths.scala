@@ -106,39 +106,76 @@ object Paths {
     */
   private def multiRootDistances(edges: DataFrame, numRoots: Int, k: Int,
                                  weighted: Boolean): (DataFrame, DataFrame) = {
-    val e = (
-      if (weighted) edges.select(col("src"), col("dst"),
-        col("weight").cast("double").as("w"))
-      else edges.select(col("src"), col("dst"), lit(1.0).as("w"))
-    ).transform(Lineage.cut(_, eager = true))
-    val verts = GraphOps.vertices(e.select("src", "dst"))
+    val e = weightedEdges(edges, weighted)
+    val verts = GraphOps.vertices(e)
     val roots = verts.orderBy("id").limit(numRoots)
       .select(col("id").as("root"))
     // dist travels as double either way; with integral edge weights every
     // value is integer-valued, so round(1e6/d) stays engine-exact
-    // frontier-restricted per (root, id) — the fixedRounds r6 discipline:
-    // identical distances (monotone min), frontier-sized round aggregates
-    var dist = verts.crossJoin(broadcast(roots))
+    val init = verts.crossJoin(broadcast(roots))
       .select(col("root"), col("id"),
         when(col("id") === col("root"), lit(0.0))
-          .otherwise(lit(null).cast("double")).as("dist"),
+          .otherwise(lit(null).cast("double")).as("v"),
         (col("id") === col("root")).as("chg"))
+    val dist = relax(e, init, Seq("root"), k, Least)(col("v") + col("w"))
+    (verts, dist.withColumnRenamed("v", "dist"))
+  }
+
+  /** The loop-invariant edge table of the min-plus kernels: (src, dst, w)
+    * with w = the `weight` column as a double, or 1.0 unless `weighted`.
+    * Cut once up front: every round reads it, and an uncut table re-runs
+    * its (possibly expensive) derivation plan per round — measured k+1
+    * recomputes of the co-purchase self-join (bfs5 63.5 s vs pr5 18.5 s
+    * on the same graph).
+    */
+  private def weightedEdges(edges: DataFrame, weighted: Boolean): DataFrame =
+    edges.select(col("src"), col("dst"),
+        (if (weighted) col("weight").cast("double") else lit(1.0)).as("w"))
+      .transform(Lineage.cut(_, eager = true))
+
+  /** Which way a relaxation moves a value: the aggregate over a vertex's
+    * messages, its merge with the current value, and the strict
+    * improvement test (message first).
+    */
+  private sealed abstract class Order(val agg: Column => Column,
+                                      val merge: (Column, Column) => Column,
+                                      val better: (Column, Column) => Column)
+  private case object Least extends Order(min(_), least(_, _), _ < _)
+  private case object Greatest extends Order(max(_), greatest(_, _), _ > _)
+
+  /** `k` rounds of frontier-restricted relaxation over `state` = (keys…,
+    * id, v, chg). Each round, only the rows with `chg` send `msg` (an
+    * expression over their `v` and the edge row) along their out-edges in
+    * `e` (src, dst, …); the per-(keys, dst) `order` aggregate merges into
+    * `v`, and `chg` marks a strict improvement. Restricting the senders is
+    * exact because min and max are monotone: a row whose value did not
+    * move last round would resend only messages its targets have already
+    * absorbed, so round k ends with the values of the full relaxation,
+    * while each round aggregates only frontier-incident edges (LA3's
+    * activity filtering). Every round but the last is cut lazily: each
+    * round reads the previous one twice (scatter + carry-forward), so
+    * without the cut the plan would double per round (2^k leaf copies,
+    * measured 45 s at sf0.1 for k=5), and a lazy cut runs at the caller's
+    * action instead of as k eager jobs. Returns (keys…, id, v).
+    */
+  private def relax(e: DataFrame, state: DataFrame, keys: Seq[String], k: Int,
+                    order: Order)(msg: Column): DataFrame = {
+    val keyCols = keys.map(col)
+    var st = state
     for (i <- 1 to k) {
-      val msgs = e.join(dist.where(col("chg"))
-          .select(col("root"), col("id").as("src"), col("dist"))
+      val msgs = e.join(st.where(col("chg"))
+          .select(keyCols :+ col("id").as("src") :+ col("v"): _*)
           .hint("shuffle_hash"), "src")
-        .groupBy(col("root"), col("dst").as("id"))
-        .agg(min(col("dist") + col("w")).as("nd"))
-      dist = dist.join(msgs.hint("shuffle_hash"), Seq("root", "id"),
-          "left_outer")
-        .select(col("root"), col("id"),
-          least(col("dist"), col("nd")).as("dist"),
-          (col("nd").isNotNull &&
-            (col("dist").isNull || col("nd") < col("dist"))).as("chg"))
-      // lazy per-round cut: k rounds -> ONE pipelined job (fixedRounds r6)
-      if (i < k) dist = dist.transform(Lineage.cut(_))
+        .groupBy(keyCols :+ col("dst").as("id"): _*)
+        .agg(order.agg(msg).as("m"))
+      val improved = col("m").isNotNull &&
+        (col("v").isNull || order.better(col("m"), col("v")))
+      st = st.join(msgs.hint("shuffle_hash"), keys :+ "id", "left_outer")
+        .select(keyCols :+ col("id") :+
+          order.merge(col("v"), col("m")).as("v") :+ improved.as("chg"): _*)
+      if (i < k) st = st.transform(Lineage.cut(_))
     }
-    (verts, dist.select("root", "id", "dist"))
+    st.drop("chg")
   }
 
   /** Double-sweep BFS diameter lower bound (the standard 2-BFS heuristic;
@@ -155,15 +192,12 @@ object Paths {
     */
   def doubleSweepDiameter(edges: DataFrame, k: Int,
                           weighted: Boolean = false): DataFrame = {
-    val e = (
-      if (weighted) edges.select("src", "dst", "weight")
-      else edges.select("src", "dst")
-    ).transform(Lineage.cut(_, eager = true))
+    val e = weightedEdges(edges, weighted)
     val root = e.agg(min(col("src")))
-    val d1 = fixedRounds(e, root, k, weighted)
+    val d1 = minPlus(e, root, k)
     val far = d1.where(col("dist").isNotNull)
       .orderBy(col("dist").desc, col("id").asc).limit(1).select("id")
-    val d2 = fixedRounds(e, far, k, weighted)
+    val d2 = minPlus(e, far, k)
     d2.where(col("dist").isNotNull)
       .agg(max(col("dist")).cast("long").as("diameter_lb"))
       .crossJoin(broadcast(root.toDF("root")))
@@ -269,14 +303,6 @@ object Paths {
     (st.select("id", "dist"), buckets, lightRounds)
   }
 
-  /** k rounds of min-plus relaxation (Bellman-Ford unrolled — distance
-    * over paths of ≤ k edges). Matches the unrolled DuckDB SQL exactly;
-    * weights must be integral for the exact gate. The source is a one-row
-    * DataFrame (e.g. min vertex id) cross-joined in. Each round references
-    * the previous round's frame twice (relax + carry-forward), which would
-    * double the plan per round (2^k leaf copies — measured 45s at sf0.1
-    * for k=5); rounds are therefore localCheckpoint-materialized.
-    */
   /** Truncated longest-path layering of a DAG (topological levels, the
     * scheduling/stratification view of directed reachability):
     * l_0(v) = 0; l_{t+1}(v) = max(l_t(v), 1 + max_{(u,v)∈E} l_t(u)) —
@@ -284,75 +310,38 @@ object Paths {
     * over ≤ k edges. Monotone, so k ≥ the DAG's longest path makes it the
     * exact layering and extra rounds are absorbed (the harmonic8
     * truncation discipline: any equal k is engine-exact integer output).
-    * Each round is one co-partitioned join + max-aggregate on the vertex
-    * key — frontier-free by design (the max recurrence touches every
-    * vertex, but map-side partial max keeps the shuffle at |V| rows).
+    * Each round is one [[relax]] round in the max order: a frontier join
+    * and a max-aggregate on the vertex key.
     */
   def dagLayers(edges: DataFrame, k: Int): DataFrame = {
     val e = edges.select("src", "dst").transform(Lineage.cut(_, eager = true))
-    val verts = GraphOps.vertices(e)
-    // frontier-restricted (fixedRounds r6, max variant): a vertex whose
-    // layer did not grow last round re-sends nothing new — identical
-    // layers (monotone max), frontier-sized round aggregates
-    var layer = verts.select(col("id"), lit(0L).as("layer"),
-      lit(true).as("chg"))
-    for (i <- 1 to k) {
-      val msgs = e.join(layer.where(col("chg"))
-          .select(col("id").as("src"), col("layer"))
-          .hint("shuffle_hash"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg((max(col("layer")) + 1L).as("nl"))
-      layer = layer.join(msgs.hint("shuffle_hash"), Seq("id"), "left_outer")
-        .select(col("id"),
-          greatest(col("layer"), coalesce(col("nl"), lit(0L))).as("layer"),
-          (col("nl").isNotNull && col("nl") > col("layer")).as("chg"))
-      // lazy per-round cut: k rounds -> ONE pipelined job (fixedRounds r6)
-      if (i < k) layer = layer.transform(Lineage.cut(_))
-    }
-    layer.select("id", "layer")
+    val init = GraphOps.vertices(e)
+      .select(col("id"), lit(0L).as("v"), lit(true).as("chg"))
+    relax(e, init, Nil, k, Greatest)(col("v") + 1L)
+      .select(col("id"), col("v").as("layer"))
   }
 
+  /** k rounds of min-plus relaxation from the one-row `source` frame (e.g.
+    * the min vertex id), cross-joined in: Bellman-Ford unrolled, so `dist`
+    * is the shortest distance over paths of ≤ k edges, null where no such
+    * path exists. Every edge weighs 1 (BFS) unless `weighted`, which reads
+    * the `weight` column; weights must be integral for the exact gate.
+    * Matches the unrolled DuckDB SQL exactly. The rounds are [[relax]]'s,
+    * lazily cut. Returns (id, dist) over all vertices.
+    */
   def fixedRounds(edges: DataFrame, source: DataFrame, k: Int,
-                  weighted: Boolean): DataFrame = {
-    // The edge table is loop-invariant but each eagerly-materialized round
-    // would otherwise re-execute its (possibly expensive) derivation plan —
-    // measured k+1 recomputes of the co-purchase self-join (bfs5 63.5 s vs
-    // pr5 18.5 s on the same graph). Materialize it once up front.
-    val e = (
-      if (weighted) edges.select(col("src"), col("dst"),
-        col("weight").cast("double"))
-      else edges.select(col("src"), col("dst"), lit(1.0).as("weight"))
-    ).transform(Lineage.cut(_, eager = true))
-    val verts = GraphOps.vertices(e)
-    // frontier-restricted min-plus (LA3 activity filtering, guide §2.3):
-    // only vertices whose distance strictly improved last round re-send —
-    // a non-improved vertex's messages were already absorbed, so the
-    // round-k distances are identical (monotone min), while the per-round
-    // aggregate input shrinks from |reached|-incident to
-    // |frontier|-incident edges.
-    var dist = verts.crossJoin(broadcast(source.toDF("s0")))
+                  weighted: Boolean): DataFrame =
+    minPlus(weightedEdges(edges, weighted), source, k)
+
+  /** [[fixedRounds]] over an edge table built by [[weightedEdges]]. */
+  private def minPlus(e: DataFrame, source: DataFrame, k: Int): DataFrame = {
+    val init = GraphOps.vertices(e).crossJoin(broadcast(source.toDF("s0")))
       .select(col("id"),
         when(col("id") === col("s0"), lit(0.0))
-          .otherwise(lit(null).cast("double")).as("dist"),
+          .otherwise(lit(null).cast("double")).as("v"),
         (col("id") === col("s0")).as("chg"))
-    for (i <- 1 to k) {
-      val msgs = e.join(dist.where(col("chg"))
-          .select(col("id").as("src"), col("dist"))
-          .hint("shuffle_hash"), "src")
-        .select(col("dst").as("id"), (col("dist") + col("weight")).as("nd"))
-        .groupBy("id").agg(min(col("nd")).as("nd"))
-      dist = dist.join(msgs.hint("shuffle_hash"), Seq("id"), "left_outer")
-        .select(col("id"), least(col("dist"), col("nd")).as("dist"),
-          (col("nd").isNotNull &&
-            (col("dist").isNull || col("nd") < col("dist"))).as("chg"))
-      // LAZY per-round cut: the plan still truncates at each round (both
-      // in-round references share one checkpointed RDD), but the k rounds
-      // materialize as ONE pipelined job at the caller's action instead of
-      // k separate jobs — the Superstep batch discipline (r6: the k eager
-      // cuts were the dominant cost on the 16-round double sweeps).
-      if (i < k) dist = dist.transform(Lineage.cut(_))
-    }
-    dist.select("id", "dist")
+    relax(e, init, Nil, k, Least)(col("v") + col("w"))
+      .select(col("id"), col("v").as("dist"))
   }
 
   /** Shortest-path σ counts within `k` hops of `source` — the forward
@@ -389,7 +378,7 @@ object Paths {
             .when(col("nsig").isNotNull, lit(i.toLong)).as("dist"),
           when(col("dist").isNotNull, col("sigma"))
             .otherwise(col("nsig")).as("sigma"))
-      // lazy per-round cut: k rounds -> ONE pipelined job (fixedRounds r6)
+      // lazy per-round cut, as in relax: k rounds run as ONE job
       if (i < k) state = state.transform(Lineage.cut(_))
     }
     state.where(col("dist").isNotNull).select("id", "dist", "sigma")
@@ -416,30 +405,15 @@ object Paths {
     val Shift = 17592186044416L // 2^44
     val e = edges.select("src", "dst")
       .transform(Lineage.cut(_, eager = true))
-    val verts = GraphOps.vertices(e)
-    // frontier-restricted (fixedRounds r6): identical packed minima
-    var st = verts.select(col("id"),
+    val init = GraphOps.vertices(e).select(col("id"),
       when(GraphOps.md5Prio(col("id").cast("string")) % seedMod === 0,
-        col("id").cast("long")).otherwise(lit(null).cast("long"))
-        .as("packed"))
-      .withColumn("chg", col("packed").isNotNull)
-    for (i <- 1 to k) {
-      val msgs = e.join(st.where(col("chg"))
-          .select(col("id").as("src"), col("packed"))
-          .hint("shuffle_hash"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("packed") + Shift).as("np"))
-      st = st.join(msgs.hint("shuffle_hash"), Seq("id"), "left_outer")
-        .select(col("id"), least(col("packed"), col("np")).as("packed"),
-          (col("np").isNotNull &&
-            (col("packed").isNull || col("np") < col("packed"))).as("chg"))
-      // lazy per-round cut: k rounds -> ONE pipelined job (fixedRounds r6)
-      if (i < k) st = st.transform(Lineage.cut(_))
-    }
-    st.where(col("packed").isNotNull)
+        col("id").cast("long")).otherwise(lit(null).cast("long")).as("v"))
+      .withColumn("chg", col("v").isNotNull)
+    relax(e, init, Nil, k, Least)(col("v") + Shift)
+      .where(col("v").isNotNull)
       .select(col("id"),
-        expr(s"packed div ${Shift}L").as("dist"),
-        expr(s"packed % ${Shift}L").as("seed"))
+        expr(s"v div ${Shift}L").as("dist"),
+        expr(s"v % ${Shift}L").as("seed"))
   }
 
   /** Landmark distance oracle (the standard web-graph shortest-path
@@ -496,21 +470,11 @@ object Paths {
       .transform(Lineage.cut(_, eager = true))
     val e = EdgeSet.symmetric(ce).frame
       .transform(Lineage.cut(_, eager = true))
-    // frontier-restricted (fixedRounds r6): identical packed minima
-    var st = GraphOps.vertices(e)
-      .select(col("id"), (col("id") * Shift).as("p"), lit(true).as("chg"))
-    for (i <- 1 to k) {
-      val msgs = e.join(st.where(col("chg")).select(col("id").as("src"),
-          col("p")).hint("shuffle_hash"), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("p") + 1L).as("np"))
-      st = st.join(msgs.hint("shuffle_hash"), Seq("id"), "left_outer")
-        .select(col("id"), least(col("p"), col("np")).as("p"),
-          (col("np").isNotNull && col("np") < col("p")).as("chg"))
-      // lazy per-round cut: k rounds -> ONE pipelined job (fixedRounds r6)
-      if (i < k) st = st.transform(Lineage.cut(_))
-    }
-    val fin = st.select(col("id"), expr(s"p div ${Shift}L").as("root"),
-        (expr(s"p % ${Shift}L") % 2L).as("par"))
+    val init = GraphOps.vertices(e)
+      .select(col("id"), (col("id") * Shift).as("v"), lit(true).as("chg"))
+    val fin = relax(e, init, Nil, k, Least)(col("v") + 1L)
+      .select(col("id"), expr(s"v div ${Shift}L").as("root"),
+        (expr(s"v % ${Shift}L") % 2L).as("par"))
       .transform(Lineage.cut(_, eager = true))
     val odd = ce
       .join(fin.toDF("src", "rs", "ps"), Seq("src"))

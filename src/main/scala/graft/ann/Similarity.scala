@@ -113,7 +113,7 @@ object Similarity {
     * dim — where the previous literal-array spelling inlined
     * tables·bits·dim literals into one projection and hit plan/codegen
     * size limits at realistic dims (24 tables × 4 bits × 2048 dims ≈ 200k
-    * literals; measured in PlanSizeProbe, BASELINE.md round 4). Bucket
+    * literals; BASELINE.md "lshBucketsMulti plan size"). Bucket
     * values are unchanged (same w(t,b,i) weights, same summation order).
     */
   def lshBucketsMulti(emb: DataFrame, bits: Int, tables: Int, dim: Int,

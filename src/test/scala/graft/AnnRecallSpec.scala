@@ -34,9 +34,9 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("broadcast-plane buckets ≡ independent per-vector computation (dim 8)") {
-    // CI twin of the PlanSizeProbe equivalence check (ADVICE r4): the
-    // broadcast array-of-planes spelling must produce exactly the buckets
-    // the definition gives — w(t,b,i) signs, dot > 0 sets bit b — for
+    // CI twin of the equivalence check in BASELINE.md "lshBucketsMulti
+    // plan size" (ADVICE r4): the broadcast array-of-planes spelling must
+    // produce exactly the buckets the definition gives — w(t,b,i) signs, dot > 0 sets bit b — for
     // every vector and table. A regression in element_at 1-based indexing
     // or dotD over non-literal arrays flips buckets here.
     val s = spark

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** Plan-shape regression guards: the scale properties the engine claims are
   * PLAN properties (what moves per superstep), so they are asserted on the
-  * physical plan text, not just on results. Mirrors the manual audit in
-  * [[graft.bench.GridProbe]].
+  * physical plan text, not just on results. The first test is the grid
+  * superstep's plan audit (BASELINE.md "Grid plan audit").
   */
 class PlanShapeSpec extends SparkSpec {
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graftbridge.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.algos.{Scc, Truss}
@@ -285,6 +287,31 @@ class SccTrussSpec extends SparkSpec {
     val r2 = graft.algos.Paths.doubleSweepDiameter(tri, 6, weighted = true)
       .head()
     assert(r2.getLong(2) === 2L)
+  }
+
+  test("doubleSweepDiameter cuts its edge table once: 8 jobs") {
+    // one eager cut of the edge table serves the root, both sweeps and the
+    // final row (a second eager cut inside each sweep made it 10). Under
+    // the loop conf AQE is off, so a job is an action or a broadcast, not
+    // one map stage of a plan.
+    val path = (0L until 7L).map(i => (i, i + 1))
+    val und = edgesDf(path.flatMap { case (a, b) => Seq((a, b), (b, a)) })
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val r = try {
+      val rows = graft.engine.Lineage.withLoopConf(spark, 4) {
+        graft.algos.Paths.doubleSweepDiameter(und, 10).collect()
+      }
+      Bus.drain(spark.sparkContext)
+      rows
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(r.map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq ===
+      Seq((0L, 7L, 7L)))
+    assert(jobs.get === 8)
   }
 
   private def edgesW(tw: Seq[(Long, Long, Long)]) =

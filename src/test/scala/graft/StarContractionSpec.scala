@@ -6,7 +6,6 @@ import org.apache.spark.graftbridge.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.algos.ConnectedComponents
-import graft.streaming.EdgeStream
 
 /** [[ConnectedComponents.stars]]: window-min stars and the star-forest
   * stop. Labels ≡ union-find on the edge cases of the stop test, exact
@@ -94,18 +93,5 @@ class StarContractionSpec extends SparkSpec {
     assert(roundJobs.size === rounds)
     assert(roundJobs.forall(_._2.contains("false")),
       s"AQE per round job: ${roundJobs.map(_._2)}")
-  }
-
-  test("ccViaStream: the star rounds of its folds run with AQE off") {
-    // a streaming fold's jobs carry the call site of the query's start, so
-    // the rounds show only as the fold's AQE-off jobs; planned on the
-    // caller's session instead, every fold job keeps AQE on
-    val pairs = Oracles.randomGraph(seed = 67, n = 40, m = 55)
-    val (got, jobs) = jobsDuring(EdgeStream.ccViaStream(edgesDf(pairs),
-      numPartitions = 4, splits = 3).collect())
-    assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap ===
-      unionFind(pairs))
-    // every batch of this input merges components: ≥ 1 round per fold
-    assert(jobs.count(_._2.contains("false")) >= 3)
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.functions._
 
 import graft.algos.{Paths, Walks}
@@ -27,6 +29,33 @@ class WalksLayersSpec extends SparkSpec {
     // 0→3 shortcut plus 0→1→2→3: layer(3) must be 3, not 1
     val g = edgesDf(Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 3L)))
     assert(collectL(Paths.dagLayers(g, 8), "id", "layer")(3L) == 3L)
+  }
+
+  test("dagLayers ≡ brute longest path within k on random DAGs") {
+    // a DAG: orient each edge along a random vertex order, so ids are not
+    // already a topological order. In a DAG every walk is a path, so
+    // layer(v) = the largest j ≤ k with a j-edge walk ending at v.
+    def brute(pairs: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
+      val vs = pairs.flatMap(p => Seq(p._1, p._2)).toSet
+      var ends = vs // end points of j-edge walks, j = 0
+      val layer = mutable.Map(vs.toSeq.map(_ -> 0L): _*)
+      for (j <- 1 to k) {
+        ends = pairs.collect { case (u, v) if ends(u) => v }.toSet
+        ends.foreach(layer(_) = j.toLong)
+      }
+      layer.toMap
+    }
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val rank = rnd.shuffle((0L until 24L).toList).zipWithIndex.toMap
+      val dag = Oracles.randomGraph(seed, n = 24, m = 50).map {
+        case (a, b) => if (rank(a) < rank(b)) (a, b) else (b, a)
+      }
+      for (k <- Seq(1, 3, 24)) {
+        assert(collectL(Paths.dagLayers(edgesDf(dag), k), "id", "layer") ===
+          brute(dag, k), s"seed $seed, k $k")
+      }
+    }
   }
 
   private def md5hex(s: String): String =

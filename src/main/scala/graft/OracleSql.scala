@@ -53,59 +53,87 @@ object OracleSql {
       |  GROUP BY 1, 2),
       | sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1)""".stripMargin
 
-  /** Unrolled ε=1 densest-peel rounds over the symmetric edge CTE `e`:
-    * each round measures (n, m2) then drops every vertex with
-    * deg·n ≤ 2·m2 (exact-integer spelling of deg ≤ 4m/n). Emits `prof`
-    * with one row per non-empty round.
+  // --- fixpoint recursions ------------------------------------------------
+
+  /** Rounds any fixpoint recursion may take: a state still changing after
+    * this many rounds raises `error('<name> did not converge in N rounds')`,
+    * the SQL twin of [[graft.engine.Lineage.rounds]].
     */
-  private def densestRounds(k: Int): String = {
-    val rounds = (1 to k).map { i =>
-      s"""pd$i AS MATERIALIZED (
-         |  SELECT src AS id, count(*) AS deg FROM pe${i - 1} GROUP BY 1),
-         | ps$i AS MATERIALIZED (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(coalesce(sum(deg), 0) AS BIGINT) AS m2 FROM pd$i),
-         | pk$i AS MATERIALIZED (
-         |  SELECT id FROM pd$i, ps$i WHERE deg * n > 2 * m2),
-         | pe$i AS MATERIALIZED (
-         |  SELECT e.src, e.dst FROM pe${i - 1} e
-         |  JOIN pk$i a ON a.id = e.src JOIN pk$i b ON b.id = e.dst)""".stripMargin
-    }
-    val prof = (1 to k)
-      .map(i => s"SELECT $i AS round, n, m2 FROM ps$i WHERE n > 0")
-      .mkString(" UNION ALL ")
-    (("pe0 AS MATERIALIZED (SELECT src, dst FROM e)" +: rounds) :+
-      s"prof AS MATERIALIZED ($prof)").mkString(",\n ")
+  private[graft] val MaxRounds = 1000
+
+  /** Runs `step` from `init` until the state stops changing, as one
+    * parenthesised subquery with columns (k, done, <cols>): every round's
+    * state, tagged with its round k. `step` selects `cols` from the
+    * current state, the CTE it is handed. The round whose state equals its
+    * predecessor's (as a set) is tagged `done` and ends the recursion. A
+    * step that yields no rows ends it too, with no row tagged `done`. So a
+    * caller reads the fixpoint from `done` rows, or a profile from every
+    * round, and never the last round by `k = max(k)`.
+    *
+    * The recursion sits in a subquery because DuckDB 1.0 evaluates a
+    * sibling `A UNION B` CTE of a top-level `WITH RECURSIVE` as
+    * `UNION ALL`; the statement's own WITH stays plain. Its CTEs are named
+    * after `name`: DuckDB 1.0 binds an inlined CTE's names in the scope it
+    * is inlined into, so a recursion that reads another (truss_comm) or
+    * nests one (msf) needs names of its own.
+    */
+  private def fixpoint(name: String, cols: String, init: String)(
+      step: String => String): String =
+    s"""(WITH RECURSIVE $name AS (
+       |  SELECT 0 AS k, false AS done, $cols FROM ($init)
+       |  UNION ALL
+       |  SELECT * FROM (
+       |   WITH ${name}_cur AS MATERIALIZED (SELECT $cols FROM $name WHERE NOT done),
+       |    ${name}_nx AS MATERIALIZED (${step(s"${name}_cur")}),
+       |    ${name}_k AS (SELECT DISTINCT CASE WHEN k < $MaxRounds THEN k + 1
+       |      ELSE error('$name did not converge in $MaxRounds rounds') END AS k
+       |      FROM $name WHERE NOT done)
+       |   SELECT ${name}_k.k,
+       |     NOT EXISTS (SELECT $cols FROM ${name}_nx EXCEPT SELECT $cols FROM ${name}_cur)
+       |       AND NOT EXISTS (SELECT $cols FROM ${name}_cur EXCEPT SELECT $cols FROM ${name}_nx)
+       |       AS done,
+       |     $cols FROM ${name}_k, ${name}_nx))
+       | SELECT * FROM $name)""".stripMargin
+
+  /** ε=1 densest peel over a symmetric weighted edge relation `ew` (src,
+    * dst, w): each round keeps the edges whose endpoints both have
+    * wdeg·n > 2·w2 (exact-integer spelling of wdeg > 2(1+ε)·W/n, with n
+    * vertices and w2 = Σ wdeg), until the subgraph is empty. Unit weights
+    * give the unweighted peel.
+    */
+  private def densestRounds(ew: String): String = fixpoint("densest", "src, dst, w", ew) { cur =>
+    s"""WITH d AS (SELECT src AS id, sum(w) AS wdeg FROM $cur GROUP BY 1),
+       | kk AS (SELECT id FROM d
+       |   WHERE wdeg * (SELECT count(*) FROM d) > 2 * (SELECT sum(wdeg) FROM d))
+       |SELECT e.src, e.dst, e.w FROM $cur e
+       |  JOIN kk a ON a.id = e.src JOIN kk b ON b.id = e.dst""".stripMargin
   }
 
-  /** Unrolled WEIGHTED ε=1 densest-peel rounds over the symmetric
-    * weighted CTE `ew` (src, dst, w): drop wdeg·n ≤ 2·w2. Emits `wprof`.
+  /** One profile row (round, n, w2) per non-empty round of
+    * [[densestRounds]]: its vertex count and Σ wdeg, as measured before
+    * that round's peel.
     */
-  private def densestWRounds(k: Int): String = {
-    val rounds = (1 to k).map { i =>
-      s"""wd$i AS MATERIALIZED (
-         |  SELECT src AS id, sum(w) AS wdeg FROM we${i - 1} GROUP BY 1),
-         | ws$i AS MATERIALIZED (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(coalesce(sum(wdeg), 0) AS BIGINT) AS w2 FROM wd$i),
-         | wk$i AS MATERIALIZED (
-         |  SELECT id FROM wd$i, ws$i WHERE wdeg * n > 2 * w2),
-         | we$i AS MATERIALIZED (
-         |  SELECT e.src, e.dst, e.w FROM we${i - 1} e
-         |  JOIN wk$i a ON a.id = e.src JOIN wk$i b ON b.id = e.dst)""".stripMargin
-    }
-    val prof = (1 to k)
-      .map(i => s"SELECT $i AS round, n, w2 FROM ws$i WHERE n > 0")
-      .mkString(" UNION ALL ")
-    (("we0 AS MATERIALIZED (SELECT src, dst, w FROM ew)" +: rounds) :+
-      s"wprof AS MATERIALIZED ($prof)").mkString(",\n ")
-  }
+  private def densestProfile(ew: String): String =
+    s"""SELECT k + 1 AS round, CAST(count(DISTINCT src) AS BIGINT) AS n,
+       |  CAST(sum(w) AS BIGINT) AS w2
+       |FROM ${densestRounds(ew)} WHERE NOT done GROUP BY k""".stripMargin
+
+  /** md5-prefix priority (`digits` hex digits, 60 bits by default) of the
+    * x:y endpoint string — the engine's
+    * `GraphOps.md5Prio(concat_ws(":", x, y))`.
+    */
+  private def md5Pair(x: String, y: String, digits: Int = 15): String =
+    s"('0x' || substr(md5(CAST($x AS VARCHAR) || ':' || CAST($y AS VARCHAR)), 1, $digits))::BIGINT"
+
+  /** 60-bit md5-prefix priority of one id — the engine's `GraphOps.md5Prio`. */
+  private def md5Prio(x: String): String =
+    s"('0x' || substr(md5(CAST($x AS VARCHAR)), 1, 15))::BIGINT"
 
   /** md5-prio of the canonical x:y endpoint string mod m — the same value
     * as the engine's `GraphOps.md5Prio(concat_ws(":", x, y)) % m`.
     */
   private def md5ModSql(x: String, y: String, m: Int): String =
-    s"(('0x' || substr(md5(CAST($x AS VARCHAR) || ':' || CAST($y AS VARCHAR)), 1, 15))::BIGINT % $m)"
+    s"(${md5Pair(x, y)} % $m)"
 
   /** md5-parity edge sign (0/1). */
   private def sgnSql(x: String, y: String): String = md5ModSql(x, y, 2)
@@ -217,37 +245,38 @@ object OracleSql {
       .mkString(",\n ")
   }
 
-  /** Jones–Plassmann coloring rounds with md5Prio(id) priorities (needs
-    * e — symmetric, self-loop-free — and v in scope): per round the
-    * uncolored priority-local-maxima take the mex of their colored
-    * neighbors' palette. Strict `>` on the 60-bit prefix alone (the
-    * mis/matching collision-freeness argument; were two priorities equal,
-    * neither vertex would win — identically in both engines). The mex
-    * search range generate_series(0, #distinct used) mirrors Spark's
+  /** Ids of the priority relation `un` (id, p) whose p beats every
+    * neighbour's in `un` (needs e in scope). Strict `>` on the 60-bit
+    * prefix alone: were two priorities equal, neither vertex would win —
+    * identically in both engines.
+    */
+  private def localMaxima(un: String): String =
+    s"""SELECT u.id FROM $un u LEFT JOIN (
+       |    SELECT e.dst AS id, max(x.p) AS mp FROM e JOIN $un x ON e.src = x.id GROUP BY e.dst) m
+       |  ON u.id = m.id WHERE m.mp IS NULL OR u.p > m.mp""".stripMargin
+
+  /** Jones–Plassmann coloring with md5Prio(id) priorities (needs e —
+    * symmetric, self-loop-free — and v in scope): per round the uncolored
+    * priority-local-maxima take the mex of their colored neighbors'
+    * palette, until every vertex is colored. The mex search range
+    * generate_series(0, #distinct used) mirrors Spark's
     * sequence(0, size(used)) bound exactly.
     */
-  private def jpRounds(k: Int): String = {
-    val init =
-      """u0 AS MATERIALIZED (SELECT id, ('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 15))::BIGINT AS p FROM v),
-        | c0 AS (SELECT CAST(NULL AS BIGINT) AS id, CAST(NULL AS BIGINT) AS color WHERE 1 = 0)""".stripMargin
-    val rounds = (1 to k).map { i =>
-      s"""w$i AS MATERIALIZED (
-         |  SELECT u.id, u.p FROM u${i - 1} u LEFT JOIN (
-         |    SELECT e.dst AS id, max(un.p) AS mp FROM e JOIN u${i - 1} un ON e.src = un.id GROUP BY e.dst) m
-         |  ON u.id = m.id WHERE m.mp IS NULL OR u.p > m.mp),
-         | used$i AS MATERIALIZED (
-         |  SELECT e.src AS id, c.color FROM e JOIN c${i - 1} c ON c.id = e.dst
-         |  WHERE e.src IN (SELECT id FROM w$i)),
-         | mex$i AS MATERIALIZED (
-         |  SELECT cd.id, min(cd.g) AS color FROM (
-         |    SELECT w.id, unnest(generate_series(0, coalesce(n.nc, 0))) AS g
-         |    FROM w$i w LEFT JOIN (SELECT id, count(DISTINCT color) AS nc FROM used$i GROUP BY 1) n ON w.id = n.id) cd
-         |  WHERE NOT EXISTS (SELECT 1 FROM used$i u WHERE u.id = cd.id AND u.color = cd.g)
-         |  GROUP BY cd.id),
-         | c$i AS MATERIALIZED (SELECT id, color FROM c${i - 1} UNION ALL SELECT id, color FROM mex$i),
-         | u$i AS MATERIALIZED (SELECT u.id, u.p FROM u${i - 1} u WHERE u.id NOT IN (SELECT id FROM w$i))""".stripMargin
-    }
-    (init +: rounds).mkString(",\n ")
+  private val jpRounds: String = fixpoint("coloring", "id, p, color",
+    s"SELECT id, ${md5Prio("id")} AS p, CAST(NULL AS BIGINT) AS color FROM v") { cur =>
+    s"""WITH un AS (SELECT id, p FROM $cur WHERE color IS NULL),
+       | w AS (${localMaxima("un")}),
+       | used AS (
+       |  SELECT e.src AS id, c.color FROM e JOIN $cur c ON c.id = e.dst
+       |  WHERE c.color IS NOT NULL AND e.src IN (SELECT id FROM w)),
+       | mex AS (
+       |  SELECT cd.id, min(cd.g) AS color FROM (
+       |    SELECT w.id, unnest(generate_series(0, coalesce(n.nc, 0))) AS g
+       |    FROM w LEFT JOIN (SELECT id, count(DISTINCT color) AS nc FROM used GROUP BY 1) n ON w.id = n.id) cd
+       |  WHERE NOT EXISTS (SELECT 1 FROM used u WHERE u.id = cd.id AND u.color = cd.g)
+       |  GROUP BY cd.id)
+       |SELECT c.id, c.p, coalesce(c.color, x.color) AS color
+       |FROM $cur c LEFT JOIN mex x ON x.id = c.id""".stripMargin
   }
 
   /** Discrete-quantile tail over hist(v, cnt): prefix sum over the
@@ -453,35 +482,38 @@ object OracleSql {
          |    ON b.id = s.id AND s.g = b.bg GROUP BY 1)""".stripMargin
     }.mkString(",\n ")
 
-  private def relaxRounds(k: Int, weighted: Boolean): String = {
-    val w = if (weighted) "e.w" else "1.0"
-    val d0 = "d0 AS MATERIALIZED (SELECT v.id, CASE WHEN v.id = (SELECT min(src) FROM e) " +
-      "THEN 0.0 ELSE CAST(NULL AS DOUBLE) END AS dist FROM v)"
-    val rounds = (1 to k).map { i =>
-      s"""d$i AS MATERIALIZED (
-         |  SELECT p.id, CASE WHEN m.nd IS NULL THEN p.dist WHEN p.dist IS NULL OR m.nd < p.dist THEN m.nd ELSE p.dist END AS dist
-         |  FROM d${i - 1} p LEFT JOIN (
-         |    SELECT e.dst AS id, min(dd.dist + $w) AS nd
-         |    FROM e JOIN d${i - 1} dd ON e.src = dd.id WHERE dd.dist IS NOT NULL GROUP BY e.dst) m ON p.id = m.id)""".stripMargin
-    }
-    (d0 +: rounds).mkString(",\n ")
-  }
+  /** One min-plus relaxation of the distance relation `d` (id, dist) over
+    * e; `w` is the edge weight expression.
+    */
+  private def relax(d: String, w: String): String =
+    s"""SELECT p.id, CASE WHEN m.nd IS NULL THEN p.dist WHEN p.dist IS NULL OR m.nd < p.dist THEN m.nd ELSE p.dist END AS dist
+       |  FROM $d p LEFT JOIN (
+       |    SELECT e.dst AS id, min(dd.dist + $w) AS nd
+       |    FROM e JOIN $d dd ON e.src = dd.id WHERE dd.dist IS NOT NULL GROUP BY e.dst) m ON p.id = m.id""".stripMargin
 
-  /** Unrolled BFS chain named `p0..pk` from a scalar-subquery source
-    * (needs e, v in scope); unit steps in double — integer-valued, exact.
+  /** Distances before any relaxation from the source `srcSel`, a scalar
+    * subquery (needs v in scope).
+    */
+  private def sourceDist(srcSel: String): String =
+    s"SELECT v.id, CASE WHEN v.id = ($srcSel) THEN 0.0 ELSE CAST(NULL AS DOUBLE) END AS dist FROM v"
+
+  /** The min-id source. */
+  private val minSrc = "SELECT min(src) FROM e"
+
+  /** Weighted min-plus relaxation from the min-id source (needs
+    * e(src, dst, w), v) to its fixpoint: the converged SSSP distances.
+    */
+  private val ssspRounds: String =
+    fixpoint("sssp", "id, dist", sourceDist(minSrc))(relax(_, "e.w"))
+
+  /** Unrolled relaxation chain named `p0..pk` from a scalar-subquery
+    * source (needs e, v in scope); unit steps in double — integer-valued,
+    * exact.
     */
   private def bfsChain(p: String, k: Int, srcSel: String,
                        wExpr: String = "1.0"): String = {
-    val d0 = s"${p}0 AS MATERIALIZED (SELECT v.id, CASE WHEN v.id = ($srcSel) " +
-      "THEN 0.0 ELSE CAST(NULL AS DOUBLE) END AS dist FROM v)"
-    val rounds = (1 to k).map { i =>
-      s"""$p$i AS MATERIALIZED (
-         |  SELECT q.id, CASE WHEN m.nd IS NULL THEN q.dist WHEN q.dist IS NULL OR m.nd < q.dist THEN m.nd ELSE q.dist END AS dist
-         |  FROM $p${i - 1} q LEFT JOIN (
-         |    SELECT e.dst AS id, min(dd.dist + $wExpr) AS nd
-         |    FROM e JOIN $p${i - 1} dd ON e.src = dd.id WHERE dd.dist IS NOT NULL GROUP BY e.dst) m ON q.id = m.id)""".stripMargin
-    }
-    (d0 +: rounds).mkString(",\n ")
+    val rounds = (1 to k).map(i => s"$p$i AS MATERIALIZED (${relax(s"$p${i - 1}", wExpr)})")
+    (s"${p}0 AS MATERIALIZED (${sourceDist(srcSel)})" +: rounds).mkString(",\n ")
   }
 
   /** Multi-root BFS levels over dense (root, id) state (needs e, v, roots). */
@@ -516,164 +548,120 @@ object OracleSql {
     (h0 +: rounds).mkString(",\n ")
   }
 
-  /** Unrolled Luby MIS rounds with md5 priorities (needs e, v in scope):
-    * per round — strict priority local-max among undecided neighbors wins,
-    * winners' neighbors drop out. Fixpoint (everyone decided) is stable
-    * under extra rounds.
+  /** Luby MIS with md5Prio(id) priorities (needs e, v in scope): per
+    * round the undecided priority-local-maxima join the set (`st` true)
+    * and their undecided neighbours leave it (`st` false), until every
+    * vertex is decided.
     */
-  private def misRounds(k: Int): String = {
-    // 60-bit md5-prefix BIGINT priority — same value as the engine's
-    // GraphOps.md5Prio (Spark conv(substr(md5,1,15),16,10))
-    val a0 = "a0 AS MATERIALIZED (SELECT id, " +
-      "('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 15))::BIGINT AS p FROM v)"
-    val rounds = (1 to k).map { i =>
-      s"""w$i AS MATERIALIZED (
-         |  SELECT a.id FROM a${i - 1} a LEFT JOIN (
-         |    SELECT e.dst AS id, max(x.p) AS mp FROM e JOIN a${i - 1} x ON e.src = x.id GROUP BY e.dst) m
-         |  ON a.id = m.id WHERE m.mp IS NULL OR a.p > m.mp),
-         | o$i AS MATERIALIZED (SELECT DISTINCT e.dst AS id FROM e JOIN w$i w ON e.src = w.id),
-         | a$i AS MATERIALIZED (SELECT a.id, a.p FROM a${i - 1} a
-         |  WHERE a.id NOT IN (SELECT id FROM w$i) AND a.id NOT IN (SELECT id FROM o$i))""".stripMargin
-    }
-    val wins = (1 to k).map(i => s"SELECT id FROM w$i").mkString(" UNION ")
-    ((a0 +: rounds) :+ s"wins AS MATERIALIZED ($wins)").mkString(",\n ")
+  private val misRounds: String = fixpoint("mis", "id, p, st",
+    s"SELECT id, ${md5Prio("id")} AS p, CAST(NULL AS BOOLEAN) AS st FROM v") { cur =>
+    s"""WITH un AS (SELECT id, p FROM $cur WHERE st IS NULL),
+       | w AS (${localMaxima("un")}),
+       | o AS (SELECT DISTINCT e.dst AS id FROM e JOIN w ON e.src = w.id)
+       |SELECT c.id, c.p, CASE WHEN c.st IS NOT NULL THEN c.st
+       |  WHEN c.id IN (SELECT id FROM w) THEN true
+       |  WHEN c.id IN (SELECT id FROM o) THEN false END AS st
+       |FROM $cur c""".stripMargin
   }
 
-  /** Unrolled greedy-matching rounds over a canonical (src<dst) simple
-    * edge CTE named `cpf`: an edge wins when its md5 priority is the max
-    * at BOTH endpoints; winners' endpoints leave. Fixpoint (no active
-    * edges) stable under extra rounds.
+  /** Greedy maximal matching over a canonical (src<dst) simple edge
+    * relation `edges` (src, dst, weight, p): per round an active edge wins
+    * when its priority p is the max at BOTH endpoints; winners' endpoints
+    * drop their other edges, until no edge is active. Unweighted matching
+    * uses the 60-bit md5 edge priority; max-weight matching packs the
+    * weight above a 40-bit md5 prefix (Matching.weightedPrio).
     */
-  private def matchRounds(k: Int): String = {
-    val m0 = "m0 AS MATERIALIZED (SELECT src, dst, " +
-      "('0x' || substr(md5(CAST(src AS VARCHAR) || ':' || " +
-      "CAST(dst AS VARCHAR)), 1, 15))::BIGINT AS p FROM cpf)"
-    val rounds = (1 to k).map { i =>
-      s"""bv$i AS MATERIALIZED (
-         |  SELECT v, max(p) AS mp FROM (
-         |    SELECT src AS v, p FROM m${i - 1} UNION ALL SELECT dst, p FROM m${i - 1}) GROUP BY v),
-         | w$i AS MATERIALIZED (
-         |  SELECT m.src, m.dst FROM m${i - 1} m JOIN bv$i a ON m.src = a.v JOIN bv$i b ON m.dst = b.v
-         |  WHERE m.p = a.mp AND m.p = b.mp),
-         | u$i AS MATERIALIZED (SELECT src AS v FROM w$i UNION SELECT dst FROM w$i),
-         | m$i AS MATERIALIZED (SELECT src, dst, p FROM m${i - 1}
-         |  WHERE src NOT IN (SELECT v FROM u$i) AND dst NOT IN (SELECT v FROM u$i))""".stripMargin
-    }
-    val wins = (1 to k).map(i => s"SELECT src, dst FROM w$i").mkString(" UNION ALL ")
-    ((m0 +: rounds) :+ s"allw AS MATERIALIZED ($wins)").mkString(",\n ")
+  private def matchRounds(edges: String): String = fixpoint("matching",
+    "src, dst, weight, p, won",
+    s"SELECT src, dst, weight, p, false AS won FROM ($edges)") { cur =>
+    s"""WITH act AS (SELECT src, dst, p FROM $cur WHERE NOT won),
+       | bv AS (SELECT v, max(p) AS mp FROM (
+       |   SELECT src AS v, p FROM act UNION ALL SELECT dst, p FROM act) GROUP BY v),
+       | w AS (SELECT m.src, m.dst FROM act m JOIN bv a ON m.src = a.v JOIN bv b ON m.dst = b.v
+       |   WHERE m.p = a.mp AND m.p = b.mp),
+       | u AS (SELECT src AS v FROM w UNION SELECT dst FROM w)
+       |SELECT c.src, c.dst, c.weight, c.p, c.won OR w.src IS NOT NULL AS won
+       |FROM $cur c LEFT JOIN w ON w.src = c.src AND w.dst = c.dst
+       |WHERE c.won OR w.src IS NOT NULL
+       |  OR (c.src NOT IN (SELECT v FROM u) AND c.dst NOT IN (SELECT v FROM u))""".stripMargin
   }
 
-  /** Unrolled greedy MAX-WEIGHT matching rounds over a canonical weighted
-    * edge CTE named `cpfw`: priority = weight in the high bits (×2^40),
-    * 40-bit md5 prefix tie-break below — the engine's packed LONG priority
-    * (Matching.weightedPrio) value-for-value.
+  /** Unweighted matching edges (needs cpf). */
+  private val matchEdges =
+    s"SELECT src, dst, CAST(NULL AS BIGINT) AS weight, ${md5Pair("src", "dst")} AS p FROM cpf"
+
+  /** Packed weight<<40 | 40-bit md5 priority of a weighted edge. */
+  private val weightedPrio = s"weight * 1099511627776 + ${md5Pair("src", "dst", 10)}"
+
+  /** Each component of msf's chosen edges `ch` (c, t) mapped to its root:
+    * the per-component pointer t, or c itself on the smaller side of a
+    * 2-cycle, jumped to its fixpoint.
     */
-  private def matchWRounds(k: Int): String = {
-    val m0 = "m0 AS MATERIALIZED (SELECT src, dst, weight, " +
-      "weight * 1099511627776 + ('0x' || substr(md5(CAST(src AS VARCHAR) " +
-      "|| ':' || CAST(dst AS VARCHAR)), 1, 10))::BIGINT AS p FROM cpfw)"
-    val rounds = (1 to k).map { i =>
-      s"""bv$i AS MATERIALIZED (
-         |  SELECT v, max(p) AS mp FROM (
-         |    SELECT src AS v, p FROM m${i - 1} UNION ALL SELECT dst, p FROM m${i - 1}) GROUP BY v),
-         | w$i AS MATERIALIZED (
-         |  SELECT m.src, m.dst, m.weight FROM m${i - 1} m JOIN bv$i a ON m.src = a.v JOIN bv$i b ON m.dst = b.v
-         |  WHERE m.p = a.mp AND m.p = b.mp),
-         | u$i AS MATERIALIZED (SELECT src AS v FROM w$i UNION SELECT dst FROM w$i),
-         | m$i AS MATERIALIZED (SELECT src, dst, weight, p FROM m${i - 1}
-         |  WHERE src NOT IN (SELECT v FROM u$i) AND dst NOT IN (SELECT v FROM u$i))""".stripMargin
-    }
-    val wins = (1 to k).map(i => s"SELECT src, dst, weight FROM w$i")
-      .mkString(" UNION ALL ")
-    ((m0 +: rounds) :+ s"allw AS MATERIALIZED ($wins)").mkString(",\n ")
+  private val msfJumps: String = fixpoint("msf_jumps", "c, p",
+    "SELECT a.c, CASE WHEN b.t = a.c AND a.c < a.t THEN a.c ELSE a.t END AS p " +
+      "FROM ch a JOIN ch b ON a.t = b.c") { cur =>
+    s"SELECT a.c, b.p FROM $cur a JOIN $cur b ON a.p = b.c"
   }
 
-  /** Unrolled Borůvka MSF rounds over the canonical weighted edge CTE
-    * `cpfw` ([[graft.algos.Msf]] value-for-value: packed weight<<40 | md5
+  /** Borůvka MSF over the canonical weighted edge CTE `cpfw`
+    * ([[graft.algos.Msf]] value-for-value: packed weight<<40 | md5
     * priorities, per-component argmin under the (pri, src, dst) total
-    * order, 2-cycle roots, `jumps` unrolled pointer jumps per round —
-    * depth 2^jumps ≥ the measured parent-tree depth with margin — then
-    * contraction deduped to the min-priority edge per component pair).
-    * Rounds and jumps past the fixpoint are empty CTEs (over-unroll-safe).
-    * Measured by MsfRoundsProbe: 4 rounds / maxJump 4 at sf0.01, 3/3 at
-    * sf0.1 — rounds=8, jumps=8 is ≥2× margin on both axes. The jump CTEs
-    * are MATERIALIZED: each references its predecessor twice, and DuckDB
-    * 1.0 inlines an unmaterialized CTE, so the 8-jump chain would expand
-    * to 2^8 copies of the round's argmin (out of memory at sf0.01).
+    * order, 2-cycle roots, pointer jumping to the roots, then contraction
+    * deduped to the min-priority edge per component pair). The state holds
+    * the contracted edges (cu, cv set) and the forest so far (cu, cv NULL);
+    * it is the fixpoint once no contracted edge is left.
     */
-  private def msfRounds(rounds: Int, jumps: Int): String = {
-    val ce0 = "ce0 AS MATERIALIZED (SELECT src AS cu, dst AS cv, " +
-      "weight * 1099511627776 + ('0x' || substr(md5(CAST(src AS VARCHAR) " +
-      "|| ':' || CAST(dst AS VARCHAR)), 1, 10))::BIGINT AS pri, " +
-      "src, dst, weight FROM cpfw)"
-    val rs = (1 to rounds).map { r =>
-      val jumpCtes = (1 to jumps).map { j =>
-        s"""p${r}j$j AS MATERIALIZED (SELECT a.c, b.p FROM p${r}j${j - 1} a
-           |  JOIN p${r}j${j - 1} b ON a.p = b.c)""".stripMargin
-      }.mkString(",\n ")
-      s"""ch$r AS MATERIALIZED (
-         |  SELECT c, t, src, dst, weight FROM (
-         |    SELECT c, t, src, dst, weight,
-         |      row_number() OVER (PARTITION BY c ORDER BY pri, src, dst) AS rn
-         |    FROM (SELECT cu AS c, cv AS t, pri, src, dst, weight FROM ce${r - 1}
-         |          UNION ALL
-         |          SELECT cv, cu, pri, src, dst, weight FROM ce${r - 1}))
-         |  WHERE rn = 1),
-         | p${r}j0 AS MATERIALIZED (
-         |  SELECT a.c, CASE WHEN b.t = a.c AND a.c < a.t THEN a.c ELSE a.t END AS p
-         |  FROM ch$r a JOIN ch$r b ON a.t = b.c),
-         | $jumpCtes,
-         | ce$r AS MATERIALIZED (
-         |  SELECT cu, cv, pri, src, dst, weight FROM (
-         |    SELECT least(pu.p, pv.p) AS cu, greatest(pu.p, pv.p) AS cv,
-         |      e.pri, e.src, e.dst, e.weight,
-         |      row_number() OVER (PARTITION BY least(pu.p, pv.p), greatest(pu.p, pv.p)
-         |        ORDER BY e.pri, e.src, e.dst) AS rn
-         |    FROM ce${r - 1} e JOIN p${r}j$jumps pu ON pu.c = e.cu
-         |      JOIN p${r}j$jumps pv ON pv.c = e.cv
-         |    WHERE pu.p <> pv.p)
-         |  WHERE rn = 1)""".stripMargin
-    }
-    val forest = (1 to rounds).map(r => s"SELECT src, dst, weight FROM ch$r")
-      .mkString(" UNION ALL ")
-    ((ce0 +: rs) :+
-      s"forest AS (SELECT DISTINCT src, dst, weight FROM ($forest))")
-      .mkString(",\n ")
+  private val msfRounds: String = fixpoint("msf", "cu, cv, pri, src, dst, weight",
+    s"SELECT src AS cu, dst AS cv, $weightedPrio AS pri, src, dst, weight FROM cpfw") { cur =>
+    s"""WITH ce AS (SELECT * FROM $cur WHERE cu IS NOT NULL),
+       | ch AS (
+       |  SELECT c, t, src, dst, weight FROM (
+       |    SELECT c, t, src, dst, weight,
+       |      row_number() OVER (PARTITION BY c ORDER BY pri, src, dst) AS rn
+       |    FROM (SELECT cu AS c, cv AS t, pri, src, dst, weight FROM ce
+       |          UNION ALL
+       |          SELECT cv, cu, pri, src, dst, weight FROM ce))
+       |  WHERE rn = 1),
+       | root AS (SELECT c, p FROM $msfJumps WHERE done)
+       |SELECT DISTINCT CAST(NULL AS BIGINT) AS cu, CAST(NULL AS BIGINT) AS cv,
+       |  CAST(NULL AS BIGINT) AS pri, src, dst, weight
+       |FROM (SELECT src, dst, weight FROM $cur WHERE cu IS NULL
+       |      UNION ALL SELECT src, dst, weight FROM ch)
+       |UNION ALL
+       |SELECT cu, cv, pri, src, dst, weight FROM (
+       |  SELECT least(pu.p, pv.p) AS cu, greatest(pu.p, pv.p) AS cv,
+       |    e.pri, e.src, e.dst, e.weight,
+       |    row_number() OVER (PARTITION BY least(pu.p, pv.p), greatest(pu.p, pv.p)
+       |      ORDER BY e.pri, e.src, e.dst) AS rn
+       |  FROM ce e JOIN root pu ON pu.c = e.cu JOIN root pv ON pv.c = e.cv
+       |  WHERE pu.p <> pv.p)
+       |WHERE rn = 1""".stripMargin
   }
 
-  /** Unrolled greedy b-MATCHING rounds over the canonical `cpf` edge CTE
+  /** Greedy b-MATCHING over the canonical `cpf` edge CTE
     * ([[graft.algos.Matching.runB]]'s b-suitor-style rule, value-for-value
-    * 60-bit md5-prefix priorities): an edge is accepted when its priority
-    * RANK among the still-active edges is within the remaining capacity
-    * at BOTH endpoints; accepted edges decrement capacity, saturated
-    * vertices drop their edges. Fixpoint stable under extra rounds.
+    * 60-bit md5-prefix priorities): an active edge is accepted when its
+    * priority RANK among the active edges is within the remaining capacity
+    * (b minus accepted edges) at BOTH endpoints; saturated vertices drop
+    * their active edges, until no edge is active.
     */
-  private def matchBRounds(k: Int, b: Int): String = {
-    val m0 = "m0 AS MATERIALIZED (SELECT src, dst, " +
-      "('0x' || substr(md5(CAST(src AS VARCHAR) || ':' || " +
-      "CAST(dst AS VARCHAR)), 1, 15))::BIGINT AS p FROM cpf)"
-    val c0 = s"c0 AS MATERIALIZED (SELECT v, $b AS cap FROM " +
-      "(SELECT src AS v FROM m0 UNION SELECT dst FROM m0))"
-    val rounds = (1 to k).map { i =>
-      s"""rk$i AS (
-         |  SELECT v, src, dst, row_number() OVER (PARTITION BY v ORDER BY p DESC) AS rk FROM (
-         |    SELECT src AS v, src, dst, p FROM m${i - 1} UNION ALL SELECT dst, src, dst, p FROM m${i - 1})),
-         | w$i AS MATERIALIZED (
-         |  SELECT r.src, r.dst FROM rk$i r JOIN c${i - 1} c ON r.v = c.v
-         |  WHERE r.rk <= c.cap GROUP BY r.src, r.dst HAVING count(*) = 2),
-         | u$i AS (SELECT v, count(*) AS used FROM (
-         |    SELECT src AS v FROM w$i UNION ALL SELECT dst FROM w$i) GROUP BY v),
-         | c$i AS MATERIALIZED (
-         |  SELECT c.v, c.cap - coalesce(u.used, 0) AS cap FROM c${i - 1} c
-         |  LEFT JOIN u$i u ON c.v = u.v WHERE c.cap - coalesce(u.used, 0) > 0),
-         | m$i AS MATERIALIZED (
-         |  SELECT m.src, m.dst, m.p FROM m${i - 1} m
-         |  WHERE NOT EXISTS (SELECT 1 FROM w$i w WHERE w.src = m.src AND w.dst = m.dst)
-         |    AND m.src IN (SELECT v FROM c$i) AND m.dst IN (SELECT v FROM c$i))""".stripMargin
-    }
-    val wins = (1 to k).map(i => s"SELECT src, dst FROM w$i")
-      .mkString(" UNION ALL ")
-    ((m0 +: c0 +: rounds) :+ s"allw AS MATERIALIZED ($wins)").mkString(",\n ")
+  private def matchBRounds(b: Int): String = fixpoint("b_matching", "src, dst, p, won",
+    s"SELECT src, dst, ${md5Pair("src", "dst")} AS p, false AS won FROM cpf") { cur =>
+    s"""WITH ends AS (
+       |  SELECT src AS v, src, dst, p, won FROM $cur
+       |  UNION ALL SELECT dst, src, dst, p, won FROM $cur),
+       | cap AS (SELECT v, $b - count(*) FILTER (WHERE won) AS cap FROM ends GROUP BY v),
+       | rk AS (SELECT v, src, dst,
+       |   row_number() OVER (PARTITION BY v ORDER BY p DESC) AS rk FROM ends WHERE NOT won),
+       | w AS (SELECT r.src, r.dst FROM rk r JOIN cap c ON r.v = c.v
+       |   WHERE r.rk <= c.cap GROUP BY r.src, r.dst HAVING count(*) = 2),
+       | nw AS (SELECT c.src, c.dst, c.p, c.won OR w.src IS NOT NULL AS won
+       |   FROM $cur c LEFT JOIN w ON w.src = c.src AND w.dst = c.dst),
+       | sat AS (SELECT v FROM (
+       |   SELECT src AS v FROM nw WHERE won UNION ALL SELECT dst FROM nw WHERE won)
+       |   GROUP BY v HAVING count(*) >= $b)
+       |SELECT src, dst, p, won FROM nw
+       |WHERE won OR (src NOT IN (SELECT v FROM sat) AND dst NOT IN (SELECT v FROM sat))""".stripMargin
   }
 
   /** Personalized-PR rounds: teleport only to S (predicate on id). */
@@ -690,20 +678,36 @@ object OracleSql {
       .mkString(",\n ")
   }
 
+  /** Connected components of the symmetric edge CTE `e` by HashMin: every
+    * vertex takes the least label among itself and its neighbours until
+    * no label changes. The `done` rows' (id, lbl) give each vertex its
+    * component's min id.
+    */
+  private def components(e: String): String = fixpoint("components", "id, lbl",
+    s"SELECT DISTINCT src AS id, src AS lbl FROM $e") { cur =>
+    s"""SELECT c.id, least(c.lbl, coalesce(m.ml, c.lbl)) AS lbl FROM $cur c LEFT JOIN (
+       |  SELECT e.dst AS id, min(x.lbl) AS ml FROM $e e JOIN $cur x ON e.src = x.id GROUP BY 1) m
+       |ON m.id = c.id""".stripMargin
+  }
+
+  /** Directed reachability over e (needs e, v in scope): the `done` rows'
+    * (u, v) pairs are every v reachable from u, u itself included.
+    */
+  private val reachRounds: String = fixpoint("reachability", "u, v",
+    "SELECT id AS u, id AS v FROM v") { cur =>
+    s"SELECT u, v FROM $cur UNION SELECT r.u, e.dst FROM $cur r JOIN e ON r.v = e.src"
+  }
+
   /** One bond-percolation threshold over the canonical edge CTE `cpf`:
-    * md5-hash edge survival under p%, symmetrize, recursive closure,
-    * one summary row (needs WITH RECURSIVE in the enclosing query).
+    * md5-hash edge survival under p%, symmetrize, components, one summary
+    * row.
     */
   private def percRound(p: Int): String =
     s"""pk$p AS MATERIALIZED (
        |  SELECT src, dst FROM cpf
        |  WHERE ${md5ModSql("src", "dst", 100)} < $p),
        | pse$p AS (SELECT src, dst FROM pk$p UNION SELECT dst, src FROM pk$p),
-       | preach$p AS (
-       |  SELECT src AS id, src AS lbl FROM pse$p
-       |  UNION
-       |  SELECT e.dst AS id, r.lbl FROM preach$p r JOIN pse$p e ON r.id = e.src),
-       | pcomp$p AS (SELECT id, min(lbl) AS c FROM preach$p GROUP BY id),
+       | pcomp$p AS (SELECT id, lbl AS c FROM ${components(s"pse$p")} WHERE done),
        | psz$p AS (SELECT c, count(*) AS sz FROM pcomp$p GROUP BY 1),
        | prow$p AS (SELECT CAST($p AS BIGINT) AS p_pct,
        |  CAST(count(*) AS BIGINT) AS n_components,
@@ -748,38 +752,46 @@ object OracleSql {
     (init +: rounds).mkString(",\n ")
   }
 
-  /** Unrolled k-truss peeling over an oriented (src<dst) simple edge CTE
-    * named `cpf`: per round enumerate triangles (a<b<c triple join),
-    * credit each triangle's three edges, drop edges with support < k−2.
-    * Monotone ⇒ fixpoint stable under extra rounds (the kcore recipe).
+  /** k-truss peeling over an oriented (src<dst) simple edge CTE named
+    * `cpf`: per round enumerate triangles (a<b<c triple join), credit each
+    * triangle's three edges, drop edges with support < k−2, until no edge
+    * drops. The `done` rows carry each surviving edge's support within
+    * the truss.
     */
-  private def trussRounds(k: Int, rounds: Int): String = {
-    val head = "e0 AS MATERIALIZED (SELECT src, dst FROM cpf)"
-    val rs = (1 to rounds).map { i =>
-      s"""t$i AS MATERIALIZED (
-         |  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-         |  FROM e${i - 1} e1 JOIN e${i - 1} e2 ON e1.dst = e2.src
-         |  JOIN e${i - 1} e3 ON e3.src = e1.src AND e3.dst = e2.dst),
-         | s$i AS MATERIALIZED (
-         |  SELECT src, dst, count(*) AS support FROM (
-         |    SELECT a AS src, b AS dst FROM t$i
-         |    UNION ALL SELECT b, c FROM t$i
-         |    UNION ALL SELECT a, c FROM t$i)
-         |  GROUP BY 1, 2),
-         | e$i AS MATERIALIZED (SELECT src, dst FROM s$i WHERE support >= ${k - 2})""".stripMargin
-    }
-    (head +: rs).mkString(",\n ")
+  private def trussRounds(k: Int): String = fixpoint("truss", "src, dst, support",
+    "SELECT src, dst, CAST(0 AS BIGINT) AS support FROM cpf") { cur =>
+    s"""WITH t AS (
+       |  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
+       |  FROM $cur e1 JOIN $cur e2 ON e1.dst = e2.src
+       |  JOIN $cur e3 ON e3.src = e1.src AND e3.dst = e2.dst)
+       |SELECT src, dst, count(*) AS support FROM (
+       |  SELECT a AS src, b AS dst FROM t
+       |  UNION ALL SELECT b, c FROM t
+       |  UNION ALL SELECT a, c FROM t)
+       |GROUP BY 1, 2 HAVING count(*) >= ${k - 2}""".stripMargin
   }
 
-  /** Unrolled k-core peeling over a symmetrized edge CTE named `cpf`. */
+  /** One k-core peel of the symmetric edge relation `e`: its rows whose
+    * endpoints both have degree ≥ `k` (a SQL expression over `e`'s rows).
+    */
+  private def kcorePeel(k: String, e: String): String =
+    s"""WITH kk AS (SELECT src AS id FROM $e GROUP BY 1 HAVING count(*) >= $k)
+       |SELECT e.* FROM $e e JOIN kk a ON e.src = a.id JOIN kk b ON e.dst = b.id""".stripMargin
+
+  /** The weight≥2 co-purchase edges of `cpf`, both directions. */
+  private val cpfSym = "SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf"
+
+  /** `rounds` unrolled k-core peels `e0..e<rounds>` over the symmetrized
+    * `cpf`.
+    */
   private def kcoreRounds(k: Int, rounds: Int): String = {
-    val head = "e0 AS MATERIALIZED (SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf)"
-    val rs = (1 to rounds).map { i =>
-      s"""k$i AS MATERIALIZED (SELECT src AS id FROM e${i - 1} GROUP BY 1 HAVING count(*) >= $k),
-         | e$i AS MATERIALIZED (SELECT e.src, e.dst FROM e${i - 1} e JOIN k$i a ON e.src = a.id JOIN k$i b ON e.dst = b.id)""".stripMargin
-    }
-    (head +: rs).mkString(",\n ")
+    val rs = (1 to rounds).map(i => s"e$i AS MATERIALIZED (${kcorePeel(s"$k", s"e${i - 1}")})")
+    (s"e0 AS MATERIALIZED ($cpfSym)" +: rs).mkString(",\n ")
   }
+
+  /** The k-core of the symmetrized `cpf`, peeled until no edge drops. */
+  private def kcoreFixpoint(k: Int): String =
+    fixpoint("kcore", "src, dst", cpfSym)(kcorePeel(s"$k", _))
 
   /** Unrolled WEIGHTED k-core (s-core) peeling over the weighted directed
     * CTE `cp` (src < dst, integral weight): symmetrize with UNION ALL
@@ -795,32 +807,18 @@ object OracleSql {
     (head +: rs).mkString(",\n ")
   }
 
-  /** Unrolled FULL core decomposition over a symmetrized edge CTE named
-    * `cpf` ([[graft.algos.KCore.coreness]] twin): `levels` unrolled k
-    * levels, each peeling the PREVIOUS level's fixpoint edge set with
-    * `rounds` unrolled rounds. Per-level survivors record coreness = k;
-    * final coreness = max level survived. Safe to over-unroll BOTH axes
-    * provided `rounds` ≥ every level's true peel length (measured max 13 at
-    * sf0.001, 9 at sf0.01, 7 at sf0.1 — CorenessProbe): then each level
-    * starts from a true fixpoint and levels past the max core are empty.
+  /** FULL core decomposition of the symmetrized `cpf`
+    * ([[graft.algos.KCore.coreness]] twin): the state is one level's edge
+    * set, tagged with the level. Each round peels at degree ≥ level; a
+    * round that drops nothing has reached that level's core and moves on
+    * to the next level. The recursion ends when the edge set is empty, so
+    * a vertex's last level is one past its coreness.
     */
-  private def corenessRounds(levels: Int, rounds: Int): String = {
-    val head =
-      "c0f AS MATERIALIZED (SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf)"
-    val lvls = (1 to levels).map { k =>
-      val rs = (1 to rounds).map { j =>
-        val prev = if (j == 1) s"c${k - 1}f" else s"c${k}r${j - 1}"
-        s"""ck${k}r$j AS MATERIALIZED (SELECT src AS id FROM $prev GROUP BY 1 HAVING count(*) >= $k),
-           | c${k}r$j AS MATERIALIZED (SELECT e.src, e.dst FROM $prev e
-           |   JOIN ck${k}r$j a ON e.src = a.id JOIN ck${k}r$j b ON e.dst = b.id)""".stripMargin
-      }.mkString(",\n ")
-      s"""$rs,
-         | c${k}f AS MATERIALIZED (SELECT src, dst FROM c${k}r$rounds),
-         | sv$k AS (SELECT DISTINCT src AS id, $k AS coreness FROM c${k}f)""".stripMargin
-    }
-    val union = (1 to levels).map(k => s"SELECT id, coreness FROM sv$k")
-      .mkString(" UNION ALL ")
-    ((head +: lvls) :+ s"allcore AS ($union)").mkString(",\n ")
+  private val corenessRounds: String = fixpoint("coreness", "lvl, src, dst",
+    s"SELECT 1 AS lvl, src, dst FROM ($cpfSym)") { cur =>
+    s"""WITH ps AS (${kcorePeel("any_value(lvl)", cur)})
+       |SELECT CASE WHEN (SELECT count(*) FROM ps) = (SELECT count(*) FROM $cur)
+       |  THEN lvl + 1 ELSE lvl END AS lvl, src, dst FROM ps""".stripMargin
   }
 
   /** 16-bit md5 simhash: vote and bit-assembly expressions, fully
@@ -892,6 +890,26 @@ object OracleSql {
       |  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS cents
       |FROM s GROUP BY user_id, sid
       |ORDER BY user_id, session_start_us""".stripMargin
+
+  /** Components of the weight≥2 co-purchase graph, labelled by min id:
+    * cc's oracle, shared by every CC kernel (they reach the same fixpoint).
+    */
+  private val ccSql =
+    s"""WITH cp AS ($CP),
+       | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
+       | e AS ($cpfSym)
+       |SELECT id, lbl AS component FROM ${components("e")}
+       |WHERE done ORDER BY id""".stripMargin
+
+  /** Converged weighted SSSP from the min-id source of the co-purchase
+    * graph.
+    */
+  private val ssspSql =
+    s"""WITH cp AS ($CP),
+       | ew AS (SELECT src, dst, CAST(weight AS DOUBLE) AS w FROM cp UNION ALL SELECT dst, src, CAST(weight AS DOUBLE) FROM cp),
+       | e AS (SELECT src, dst, w FROM ew),
+       | v AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e)
+       |SELECT id, dist FROM $ssspRounds WHERE done AND dist IS NOT NULL ORDER BY id""".stripMargin
 
   val all: Map[String, String] = Map(
     "g_copurchase" ->
@@ -1075,14 +1093,10 @@ object OracleSql {
 
     // component size distribution over the cc closure
     "comp_sizes" ->
-      s"""WITH RECURSIVE cp AS ($CP),
+      s"""WITH cp AS ($CP),
          | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
          | e AS (SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf),
-         | reach AS (
-         |  SELECT src AS id, src AS lbl FROM e
-         |  UNION
-         |  SELECT e.dst AS id, r.lbl FROM reach r JOIN e ON r.id = e.src),
-         | comp AS (SELECT id, min(lbl) AS component FROM reach GROUP BY id),
+         | comp AS (SELECT id, lbl AS component FROM ${components("e")} WHERE done),
          | sizes AS (SELECT component, CAST(count(*) AS BIGINT) AS csize FROM comp GROUP BY 1)
          |SELECT csize, CAST(count(*) AS BIGINT) AS n_comps
          |FROM sizes GROUP BY 1 ORDER BY csize""".stripMargin,
@@ -1108,40 +1122,22 @@ object OracleSql {
         |WHERE sa.src IS NULL OR sb.src IS NULL
         |ORDER BY src, dst""".stripMargin,
 
-    // full core decomposition: 18 unrolled levels (max core measured at 16
-    // at sf0.001, 3 at sf0.01, 2 at sf0.1) × 26 unrolled peel rounds each
-    // (max 13 measured at sf0.001, 9 at sf0.01 — CorenessProbe: 2×
-    // margin); coreness = max level survived, exact integers. Levels ×
-    // rounds is bounded by DuckDB's binder: 20 × 26 exceeds its default
-    // max_expression_depth of 1000 (DuckDB 1.0), 18 × 26 plans
+    // full core decomposition, every level peeled to its own fixpoint;
+    // coreness = the last level a vertex reaches, minus one
     "coreness" ->
       s"""WITH cp AS ($CP),
          | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | ${corenessRounds(18, 26)}
-         |SELECT id, CAST(max(coreness) AS BIGINT) AS coreness
-         |FROM allcore GROUP BY id ORDER BY id""".stripMargin,
+         | core AS $corenessRounds
+         |SELECT src AS id, CAST(max(lvl) - 1 AS BIGINT) AS coreness
+         |FROM core GROUP BY 1 ORDER BY id""".stripMargin,
 
     "cc" ->
-      s"""WITH RECURSIVE cp AS ($CP),
-         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | e AS (SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf),
-         | reach AS (
-         |  SELECT src AS id, src AS lbl FROM e
-         |  UNION
-         |  SELECT e.dst AS id, r.lbl FROM reach r JOIN e ON r.id = e.src)
-         |SELECT id, min(lbl) AS component FROM reach GROUP BY id ORDER BY id""".stripMargin,
+      ccSql,
 
     // streaming CC maintenance is a confluent per-batch incremental fold,
     // so its oracle is cc's closure verbatim
     "stream_cc" ->
-      s"""WITH RECURSIVE cp AS ($CP),
-         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | e AS (SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf),
-         | reach AS (
-         |  SELECT src AS id, src AS lbl FROM e
-         |  UNION
-         |  SELECT e.dst AS id, r.lbl FROM reach r JOIN e ON r.id = e.src)
-         |SELECT id, min(lbl) AS component FROM reach GROUP BY id ORDER BY id""".stripMargin,
+      ccSql,
 
     // truncated odd-cycle profile: 8 unrolled HashMin-with-distance rounds
     // over the packed root*2^20+dist state, then same-parity edge counts
@@ -1181,31 +1177,21 @@ object OracleSql {
     // base run and the delta fold — base ∪ delta = all edges, so the
     // oracle is the plain closure over the unfiltered co-purchase graph
     "cc_incr" ->
-      s"""WITH RECURSIVE cp AS ($CP),
-         | e AS (SELECT src, dst FROM cp UNION SELECT dst, src FROM cp),
-         | reach AS (
-         |  SELECT src AS id, src AS lbl FROM e
-         |  UNION
-         |  SELECT e.dst AS id, r.lbl FROM reach r JOIN e ON r.id = e.src)
-         |SELECT id, min(lbl) AS component FROM reach GROUP BY id ORDER BY id""".stripMargin,
+      s"""WITH cp AS ($CP),
+         | e AS (SELECT src, dst FROM cp UNION SELECT dst, src FROM cp)
+         |SELECT id, lbl AS component FROM ${components("e")}
+         |WHERE done ORDER BY id""".stripMargin,
 
     // star-contraction CC reaches the same fixpoint as HashMin — shared
     // closure oracle (cc's SQL verbatim)
     "cc_stars" ->
-      s"""WITH RECURSIVE cp AS ($CP),
-         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | e AS (SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf),
-         | reach AS (
-         |  SELECT src AS id, src AS lbl FROM e
-         |  UNION
-         |  SELECT e.dst AS id, r.lbl FROM reach r JOIN e ON r.id = e.src)
-         |SELECT id, min(lbl) AS component FROM reach GROUP BY id ORDER BY id""".stripMargin,
+      ccSql,
 
     // double-sweep diameter lower bound: two 8-round unrolled BFS chains,
     // far = argmax(dist, min-id tiebreak) of sweep 1
     "diameter2sweep" ->
       s"""WITH $UND,
-         | ${bfsChain("p", 8, "SELECT min(src) FROM e")},
+         | ${bfsChain("p", 8, minSrc)},
          | far AS MATERIALIZED (
          |  SELECT id FROM p8 WHERE dist IS NOT NULL
          |  ORDER BY dist DESC, id LIMIT 1),
@@ -1221,7 +1207,7 @@ object OracleSql {
       s"""WITH cp AS ($CP),
          | e AS (SELECT src, dst, CAST(weight AS DOUBLE) AS w FROM cp UNION ALL SELECT dst, src, CAST(weight AS DOUBLE) FROM cp),
          | v AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         | ${bfsChain("p", 8, "SELECT min(src) FROM e", "e.w")},
+         | ${bfsChain("p", 8, minSrc, "e.w")},
          | far AS MATERIALIZED (
          |  SELECT id FROM p8 WHERE dist IS NOT NULL
          |  ORDER BY dist DESC, id LIMIT 1),
@@ -1296,47 +1282,31 @@ object OracleSql {
          |FROM d LEFT JOIN t ON d.id = t.id ORDER BY d.id""".stripMargin,
 
     "bfs5" ->
-      s"WITH $UND,\n ${relaxRounds(5, weighted = false)}\nSELECT id, dist FROM d5 WHERE dist IS NOT NULL ORDER BY id",
+      s"WITH $UND,\n ${bfsChain("d", 5, minSrc)}\nSELECT id, dist FROM d5 WHERE dist IS NOT NULL ORDER BY id",
 
     "sssp5" ->
       s"""WITH cp AS ($CP),
          | ew AS (SELECT src, dst, CAST(weight AS DOUBLE) AS w FROM cp UNION ALL SELECT dst, src, CAST(weight AS DOUBLE) FROM cp),
          | e AS (SELECT src, dst, w FROM ew),
          | v AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         | ${relaxRounds(5, weighted = true)}
+         | ${bfsChain("d", 5, minSrc, "e.w")}
          |SELECT id, dist FROM d5 WHERE dist IS NOT NULL ORDER BY id""".stripMargin,
 
     // Delta-stepping reaches the identical min-plus fixpoint as the
     // converged run (the bucket schedule changes WORK, never distances),
-    // so its oracle is the same over-unrolled relaxation
-    "sssp_delta" ->
-      s"""WITH cp AS ($CP),
-         | ew AS (SELECT src, dst, CAST(weight AS DOUBLE) AS w FROM cp UNION ALL SELECT dst, src, CAST(weight AS DOUBLE) FROM cp),
-         | e AS (SELECT src, dst, w FROM ew),
-         | v AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         | ${relaxRounds(8, weighted = true)}
-         |SELECT id, dist FROM d8 WHERE dist IS NOT NULL ORDER BY id""".stripMargin,
+    // so its oracle is the same relaxation to its fixpoint
+    "sssp_delta" -> ssspSql,
 
-    // Converged engine run vs an OVER-unrolled relaxation: min-plus reaches
-    // its fixpoint and is stable under extra rounds, so any unroll ≥ the
-    // measured convergence (ConvergenceProbe: 3 supersteps at sf0.01,
-    // 4 at sf0.1) reproduces the converged distances. 8 rounds = 2× margin.
-    "sssp_converged" ->
-      s"""WITH cp AS ($CP),
-         | ew AS (SELECT src, dst, CAST(weight AS DOUBLE) AS w FROM cp UNION ALL SELECT dst, src, CAST(weight AS DOUBLE) FROM cp),
-         | e AS (SELECT src, dst, w FROM ew),
-         | v AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         | ${relaxRounds(8, weighted = true)}
-         |SELECT id, dist FROM d8 WHERE dist IS NOT NULL ORDER BY id""".stripMargin,
+    // the converged engine run vs the min-plus relaxation run to its own
+    // fixpoint
+    "sssp_converged" -> ssspSql,
 
-    // Same over-unroll argument for the k-core fixpoint (peeling is
-    // monotone and stable once no vertex is removed; ConvergenceProbe:
-    // 9 rounds at sf0.01, 3 at sf0.1 — 15 rounds = comfortable margin).
+    // the 3-core peeled until no vertex drops
     "kcore3_converged" ->
       s"""WITH cp AS ($CP),
-         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | ${kcoreRounds(3, 15)}
-         |SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM e15 GROUP BY 1 ORDER BY id""".stripMargin,
+         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2)
+         |SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM ${kcoreFixpoint(3)}
+         |WHERE done GROUP BY 1 ORDER BY id""".stripMargin,
 
     "dedup_exact" ->
       "SELECT min(doc_id) AS keep_id, count(*) AS dup_cnt FROM documents GROUP BY text ORDER BY keep_id",
@@ -1359,14 +1329,11 @@ object OracleSql {
     // algorithm-independent DEFINITION — scc(v) = min u with mutual
     // reachability — via a recursive closure (the cc recipe, directed).
     "scc" ->
-      s"""WITH RECURSIVE cp AS ($CP),
+      s"""WITH cp AS ($CP),
          | e AS (SELECT src, dst FROM cp WHERE weight >= 2
          |       UNION SELECT dst, src FROM cp WHERE weight >= 3),
          | v AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         | reach AS (
-         |  SELECT id AS u, id AS v FROM v
-         |  UNION
-         |  SELECT r.u, e.dst AS v FROM reach r JOIN e ON r.v = e.src)
+         | reach AS (SELECT u, v FROM $reachRounds WHERE done)
          |SELECT r1.u AS id, CAST(min(r1.v) AS BIGINT) AS scc
          |FROM reach r1 JOIN reach r2 ON r1.u = r2.v AND r1.v = r2.u
          |GROUP BY r1.u ORDER BY id""".stripMargin,
@@ -1390,14 +1357,11 @@ object OracleSql {
     // condensation DAG over the SCC labels (same mutual-reachability
     // closure as the scc oracle): crossing-edge counts per component pair
     "scc_condense" ->
-      s"""WITH RECURSIVE cp AS ($CP),
+      s"""WITH cp AS ($CP),
          | e AS (SELECT src, dst FROM cp WHERE weight >= 2
          |       UNION SELECT dst, src FROM cp WHERE weight >= 3),
          | v AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         | reach AS (
-         |  SELECT id AS u, id AS v FROM v
-         |  UNION
-         |  SELECT r.u, e.dst AS v FROM reach r JOIN e ON r.v = e.src),
+         | reach AS (SELECT u, v FROM $reachRounds WHERE done),
          | lab AS (
          |  SELECT r1.u AS id, CAST(min(r1.v) AS BIGINT) AS scc
          |  FROM reach r1 JOIN reach r2 ON r1.u = r2.v AND r1.v = r2.u
@@ -1496,14 +1460,13 @@ object OracleSql {
          |ORDER BY v.id""".stripMargin
     },
 
-    // k-truss (k=3) on the weight≥2 oriented simple graph, over-unrolled
-    // peel (ConvergenceProbe: 2 rounds at sf0.01 and sf0.1; 5 = margin)
+    // k-truss (k=3) on the weight≥2 oriented simple graph, peeled until no
+    // edge drops
     "ktruss3" ->
       s"""WITH cp AS ($CP),
-         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | ${trussRounds(3, 5)}
-         |SELECT src, dst, CAST(support AS BIGINT) AS support
-         |FROM s5 WHERE support >= 1 ORDER BY src, dst""".stripMargin,
+         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2)
+         |SELECT src, dst, support FROM ${trussRounds(3)}
+         |WHERE done ORDER BY src, dst""".stripMargin,
 
     // the drained keyed-state degree counters ≡ the batch out-degrees
     "stream_degrees" ->
@@ -1796,62 +1759,54 @@ object OracleSql {
          |  SELECT id, CAST(count(*) AS BIGINT) AS reached, CAST(sum(dist) AS BIGINT) AS sum_dist
          |  FROM h4 WHERE dist > 0 GROUP BY id) s ON v.id = s.id ORDER BY v.id""".stripMargin,
 
-    // Luby MIS with md5 priorities, over-unrolled (ConvergenceProbe:
-    // 4 rounds at sf0.01, 3 at sf0.1 — 8 = 2x margin)
-    // Jones–Plassmann coloring with md5 priorities, over-unrolled
-    // (ColoringRoundsProbe: 44 rounds at sf0.001, 14 at sf0.01, 6 at
-    // sf0.1 — 88 = 2x margin; extra rounds are no-ops once everyone is
-    // colored)
+    // Jones–Plassmann coloring with md5 priorities, run until every
+    // vertex is colored
     "coloring_md5" ->
       s"""WITH cp AS MATERIALIZED ($CP),
          | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | e AS MATERIALIZED (SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf),
-         | v AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         | ${jpRounds(88)}
-         |SELECT id, CAST(color AS BIGINT) AS color FROM c88 ORDER BY id""".stripMargin,
+         | e AS MATERIALIZED ($cpfSym),
+         | v AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e)
+         |SELECT id, color FROM $jpRounds WHERE done ORDER BY id""".stripMargin,
 
+    // Luby MIS with md5 priorities, run until every vertex is decided
     "mis" ->
       s"""WITH cp AS MATERIALIZED ($CP),
          | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | e AS MATERIALIZED (SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf),
-         | v AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         | ${misRounds(8)}
-         |SELECT v.id, CAST(CASE WHEN v.id IN (SELECT id FROM wins) THEN 1 ELSE 0 END AS BIGINT) AS in_mis
-         |FROM v ORDER BY v.id""".stripMargin,
+         | e AS MATERIALIZED ($cpfSym),
+         | v AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e)
+         |SELECT id, CAST(CASE WHEN st THEN 1 ELSE 0 END AS BIGINT) AS in_mis
+         |FROM $misRounds WHERE done ORDER BY id""".stripMargin,
 
-    // greedy maximal matching, over-unrolled (ConvergenceProbe: 6 rounds
-    // at sf0.01, 3 at sf0.1 — 12 = 2x margin)
+    // greedy maximal matching, run until no edge is active
     "matching" ->
       s"""WITH cp AS MATERIALIZED ($CP),
-         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | ${matchRounds(12)}
-         |SELECT src, dst FROM allw ORDER BY src, dst""".stripMargin,
+         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2)
+         |SELECT src, dst FROM ${matchRounds(matchEdges)}
+         |WHERE done AND won ORDER BY src, dst""".stripMargin,
 
-    // greedy b-matching, capacity 2 per vertex, over-unrolled
-    // (ConvergenceProbe: 5 rounds at sf0.01, 2 at sf0.1 — 10 = 2x margin)
+    // greedy b-matching, capacity 2 per vertex, run until no edge is active
     "matching_b2" ->
       s"""WITH cp AS MATERIALIZED ($CP),
-         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | ${matchBRounds(10, 2)}
-         |SELECT src, dst FROM allw ORDER BY src, dst""".stripMargin,
+         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2)
+         |SELECT src, dst FROM ${matchBRounds(2)}
+         |WHERE done AND won ORDER BY src, dst""".stripMargin,
 
     // greedy MAX-WEIGHT maximal matching (locally-dominant edges, weight
-    // then md5-prefix priority), over-unrolled (ConvergenceProbe-measured
-    // rounds × 2 margin — fixpoint stable under extra rounds)
+    // then md5-prefix priority), run until no edge is active
     "matching_w" ->
       s"""WITH cp AS MATERIALIZED ($CP),
-         | cpfw AS (SELECT src, dst, CAST(weight AS BIGINT) AS weight FROM cp WHERE weight >= 2),
-         | ${matchWRounds(14)}
-         |SELECT src, dst, weight FROM allw ORDER BY src, dst""".stripMargin,
+         | cpfw AS (SELECT src, dst, CAST(weight AS BIGINT) AS weight FROM cp WHERE weight >= 2)
+         |SELECT src, dst, weight FROM ${matchRounds(s"SELECT src, dst, weight, $weightedPrio AS p FROM cpfw")}
+         |WHERE done AND won ORDER BY src, dst""".stripMargin,
 
     // Borůvka minimum spanning forest on the weight≥2 graph: unique MSF
-    // under the packed distinct priorities, over-unrolled 8 rounds × 8
-    // jumps (measured 4/4 at sf0.01, 3/3 at sf0.1 — MsfRoundsProbe)
+    // under the packed distinct priorities, contracted until no edge is
+    // left
     "msf" ->
       s"""WITH cp AS MATERIALIZED ($CP),
-         | cpfw AS (SELECT src, dst, CAST(weight AS BIGINT) AS weight FROM cp WHERE weight >= 2),
-         | ${msfRounds(8, 8)}
-         |SELECT src, dst, weight FROM forest ORDER BY src, dst""".stripMargin,
+         | cpfw AS (SELECT src, dst, CAST(weight AS BIGINT) AS weight FROM cp WHERE weight >= 2)
+         |SELECT src, dst, weight FROM $msfRounds
+         |WHERE done AND cu IS NULL ORDER BY src, dst""".stripMargin,
 
     // weighted truncated harmonic centrality (min-plus, integral weights
     // keep the micro-unit scores exact)
@@ -1908,7 +1863,7 @@ object OracleSql {
     // closed transitively (recursive min-label reachability — cc's oracle
     // shape), every document mapped to its cluster min (or itself)
     "dedup_clusters" ->
-      s"""WITH RECURSIVE $TOKS,
+      s"""WITH $TOKS,
          | ${shCte(3)},
          | mh AS (
          |  SELECT doc_id, t.i AS i, min(md5(CAST(t.i AS VARCHAR) || ':' || shingle)) AS h
@@ -1922,14 +1877,10 @@ object OracleSql {
          |  JOIN cand c ON i.doc1 = c.doc1 AND i.doc2 = c.doc2
          |  JOIN sizes s1 ON i.doc1 = s1.doc_id JOIN sizes s2 ON i.doc2 = s2.doc_id
          |  WHERE round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6) >= 0.5),
-         | pe AS MATERIALIZED (SELECT doc1 AS src, doc2 AS dst FROM pairs UNION SELECT doc2, doc1 FROM pairs),
-         | reach AS (
-         |  SELECT src AS id, src AS lbl FROM pe
-         |  UNION
-         |  SELECT pe.dst AS id, r.lbl FROM reach r JOIN pe ON r.id = pe.src)
+         | pe AS MATERIALIZED (SELECT doc1 AS src, doc2 AS dst FROM pairs UNION SELECT doc2, doc1 FROM pairs)
          |SELECT d.doc_id, coalesce(m.keep_id, d.doc_id) AS keep_id
          |FROM documents d LEFT JOIN (
-         |  SELECT id, min(lbl) AS keep_id FROM reach GROUP BY id) m ON d.doc_id = m.id
+         |  SELECT id, lbl AS keep_id FROM ${components("pe")} WHERE done) m ON d.doc_id = m.id
          |ORDER BY d.doc_id""".stripMargin,
 
     // the drained per-row streaming minhash ≡ the batch md5 signatures
@@ -2657,14 +2608,7 @@ object OracleSql {
     // grid-layout HashMin CC reaches the same fixpoint — cc's closure
     // oracle verbatim
     "cc_grid" ->
-      s"""WITH RECURSIVE cp AS ($CP),
-         | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | e AS (SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf),
-         | reach AS (
-         |  SELECT src AS id, src AS lbl FROM e
-         |  UNION
-         |  SELECT e.dst AS id, r.lbl FROM reach r JOIN e ON r.id = e.src)
-         |SELECT id, min(lbl) AS component FROM reach GROUP BY id ORDER BY id""".stripMargin,
+      ccSql,
 
     // ANF neighbourhood-function curve: per-round sum of first-zero-bit
     // indices over the same unrolled FM rounds as anf4
@@ -2692,18 +2636,14 @@ object OracleSql {
     // robustness after removing the top-50 degree hubs ((deg desc, id)
     // tie-break): component census of the remaining closure
     "hub_attack" ->
-      s"""WITH RECURSIVE cp AS ($CP),
+      s"""WITH cp AS ($CP),
          | e0 AS (SELECT src, dst FROM cp UNION SELECT dst, src FROM cp),
          | d AS (SELECT src AS id, count(*) AS deg FROM e0 GROUP BY 1),
          | hubs AS (SELECT id FROM d ORDER BY deg DESC, id LIMIT 50),
          | e AS (SELECT src, dst FROM e0
          |   WHERE src NOT IN (SELECT id FROM hubs)
          |     AND dst NOT IN (SELECT id FROM hubs)),
-         | reach AS (
-         |  SELECT src AS id, src AS lbl FROM e
-         |  UNION
-         |  SELECT e.dst AS id, r.lbl FROM reach r JOIN e ON r.id = e.src),
-         | comp AS (SELECT id, min(lbl) AS component FROM reach GROUP BY id),
+         | comp AS (SELECT id, lbl AS component FROM ${components("e")} WHERE done),
          | szs AS (SELECT component, count(*) AS sz FROM comp GROUP BY 1)
          |SELECT CAST(count(*) AS BIGINT) AS n_components,
          |  CAST(max(sz) AS BIGINT) AS max_comp,
@@ -2812,15 +2752,15 @@ object OracleSql {
          |    AS rank, tok, cnt
          |FROM top ORDER BY rank""".stripMargin,
 
-    // densest-subgraph greedy peel profile: 16 unrolled ε=1 peel rounds
-    // (each strictly more than halves the vertex set, so 16 covers any
-    // n ≤ 65536); rows emitted only while the subgraph is non-empty, and
-    // the best-round flag is an exact cross-multiplied density compare
+    // densest-subgraph greedy peel profile: ε=1 peel rounds until the
+    // subgraph is empty, one row per non-empty round; the best-round flag
+    // is an exact cross-multiplied density compare
     "densest" ->
       s"""WITH cp AS ($CP),
          | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | e AS (SELECT src, dst FROM cpf UNION SELECT dst, src FROM cpf),
-         | ${densestRounds(16)}
+         | e AS ($cpfSym),
+         | prof AS (SELECT round, n, w2 AS m2
+         |   FROM (${densestProfile("SELECT src, dst, CAST(1 AS BIGINT) AS w FROM e")}))
          |SELECT CAST(p.round AS BIGINT) AS round, p.n AS n_vertices,
          |  p.m2 AS m2_edges,
          |  CAST(CASE WHEN (SELECT count(*) FROM prof q
@@ -2925,20 +2865,15 @@ object OracleSql {
          |SELECT seed, id, round(pr, 6) AS pr FROM q4
          |ORDER BY seed, id""".stripMargin,
 
-    // connected components of the 3-truss subgraph: unrolled truss peel,
-    // then the mutual-reachability closure over the survivors
+    // connected components of the 3-truss subgraph: the truss peeled until
+    // no edge drops, then the components of the survivors
     "truss_comm" ->
-      s"""WITH RECURSIVE cp AS ($CP),
+      s"""WITH cp AS ($CP),
          | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | ${trussRounds(3, 5)},
-         | te AS (SELECT src, dst FROM s5 WHERE support >= 1),
-         | tes AS (SELECT src, dst FROM te UNION SELECT dst, src FROM te),
-         | reach AS (
-         |  SELECT src AS id, src AS lbl FROM tes
-         |  UNION
-         |  SELECT t.dst AS id, r.lbl FROM reach r JOIN tes t ON r.id = t.src)
-         |SELECT id, min(lbl) AS component FROM reach
-         |GROUP BY id ORDER BY id""".stripMargin,
+         | te AS (SELECT src, dst FROM ${trussRounds(3)} WHERE done),
+         | tes AS (SELECT src, dst FROM te UNION SELECT dst, src FROM te)
+         |SELECT id, lbl AS component FROM ${components("tes")}
+         |WHERE done ORDER BY id""".stripMargin,
 
     // append-mode watermark late-drop simulation: batch k = event_id % 4,
     // replayed in batch order. Three Spark behaviors pinned empirically by
@@ -2973,9 +2908,9 @@ object OracleSql {
         |GROUP BY 1, 2 ORDER BY hour_bucket, event_type""".stripMargin,
 
     // bond-percolation profile: md5-thresholded edge survival at 25/50/75%
-    // + a mutual-reachability closure per threshold
+    // + the components per threshold
     "percolation3" ->
-      s"""WITH RECURSIVE cp AS ($CP),
+      s"""WITH cp AS ($CP),
          | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
          | ${Seq(25, 50, 75).map(percRound).mkString(",\n ")}
          |SELECT * FROM prow25 UNION ALL SELECT * FROM prow50
@@ -3344,15 +3279,15 @@ object OracleSql {
         |  AND c.us > b.us AND c.us <= b.us + 3600000000
         |GROUP BY 1, 2, 3 ORDER BY t1, t2, t3""".stripMargin,
 
-    // weighted densest peel: 16 unrolled rounds on weighted degree over
-    // the weight>=2 integral-weight co-purchase graph
+    // weighted densest peel on weighted degree over the weight>=2
+    // integral-weight co-purchase graph
     "densest_w" ->
       s"""WITH cp AS ($CP),
          | cpw AS (SELECT src, dst, CAST(weight AS BIGINT) AS w
          |   FROM cp WHERE weight >= 2),
          | ew AS (SELECT src, dst, w FROM cpw
          |   UNION ALL SELECT dst, src, w FROM cpw),
-         | ${densestWRounds(16)}
+         | wprof AS (${densestProfile("SELECT src, dst, w FROM ew")})
          |SELECT CAST(p.round AS BIGINT) AS round, p.n AS n_vertices,
          |  p.w2 AS w2_weight,
          |  CAST(CASE WHEN (SELECT count(*) FROM wprof q
@@ -3610,7 +3545,7 @@ object OracleSql {
     "vertex_cover" ->
       s"""WITH cp AS MATERIALIZED ($CP),
          | cpf AS (SELECT src, dst FROM cp WHERE weight >= 2),
-         | ${matchRounds(12)}
+         | allw AS (SELECT src, dst FROM ${matchRounds(matchEdges)} WHERE done AND won)
          |SELECT DISTINCT id FROM (
          |  SELECT src AS id FROM allw UNION ALL SELECT dst FROM allw)
          |ORDER BY id""".stripMargin,

@@ -890,7 +890,8 @@ object Queries {
 
     // --- Borůvka minimum spanning forest of the weight≥2 co-purchase
     // graph; md5-packed distinct priorities make the MSF unique, so the
-    // over-unrolled DuckDB Borůvka must reproduce the exact edge set ------
+    // DuckDB Borůvka, run to its own fixpoint, must reproduce the exact
+    // edge set ------------------------------------------------------------
     "msf" -> ((s, dir) =>
       Msf.run(s, TestGraphs.copurchase(s, dir).where(col("weight") >= 2),
         cfg(s).numPartitions)
@@ -913,9 +914,8 @@ object Queries {
     }),
 
     // --- k-truss (edge-support peeling to fixpoint, k=3: every surviving
-    // edge closes ≥1 triangle within the truss); oracle = over-unrolled
-    // peel (fixpoint stable under extra rounds; ConvergenceProbe measured
-    // 2 rounds at sf0.01 AND sf0.1 — 5 rounds = 2.5× margin)
+    // edge closes ≥1 triangle within the truss); oracle = the same peel
+    // as a DuckDB recursion that runs to its own fixpoint
     "ktruss3" -> ((s, dir) =>
       graft.algos.Truss.converged(TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst"), 3)
@@ -974,8 +974,7 @@ object Queries {
 
     // --- maximal independent set (Luby, md5 priorities — deterministic in
     // BOTH engines, unlike coloring's xxhash64): converged run; the oracle
-    // over-unrolls the rounds (fixpoint = everyone decided, stable under
-    // extra rounds; ConvergenceProbe measures the count)
+    // recursion runs to its own fixpoint (everyone decided)
     "mis" -> ((s, dir) =>
       graft.algos.Mis.run(s, TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst"),
@@ -984,7 +983,7 @@ object Queries {
 
     // --- maximal matching (greedy by md5 edge priority — the MIS recipe
     // on the line graph without materializing it): converged run, oracle
-    // over-unrolled (6/3 measured rounds → 12)
+    // recursion run to its own fixpoint
     "matching" -> ((s, dir) =>
       graft.algos.Matching.run(s, TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst"),
@@ -993,7 +992,7 @@ object Queries {
 
     // --- greedy b-matching (each vertex accepts up to b = 2 edges — the
     // b-suitor rank-within-capacity rule): converged run, oracle
-    // over-unrolled (ConvergenceProbe: 5 rounds at sf0.01, 2 at sf0.1)
+    // recursion run to its own fixpoint
     "matching_b2" -> ((s, dir) =>
       graft.algos.Matching.runB(s, TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst"), 2,
@@ -1002,7 +1001,7 @@ object Queries {
 
     // --- greedy max-weight maximal matching (locally-dominant edges —
     // Preis/Hoepman 1/2-approx): weight-first packed priority, md5-prefix
-    // tie-break; converged run, oracle over-unrolled
+    // tie-break; converged run, oracle recursion run to its own fixpoint
     "matching_w" -> ((s, dir) =>
       graft.algos.Matching.runWeighted(s, TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst", "weight"),
@@ -2048,9 +2047,8 @@ object Queries {
 
   /** Convergence-driven engine runs and xxhash64-based scale paths.
     * Most are rows-only (no SQL-expressible oracle); `sssp_converged` and
-    * `kcore3_converged` DO carry oracles — their fixpoints are stable under
-    * extra rounds, so an over-unrolled CTE chain reproduces them exactly
-    * (see [[OracleSql]]).
+    * `kcore3_converged` DO carry oracles — DuckDB recursions that run to
+    * the same fixpoints (see [[OracleSql]]).
     */
   val rowsOnly: Map[String, (SparkSession, String) => DataFrame] = Map(
     // full engine path: computation filtering + frontier; iteration-capped
@@ -2095,7 +2093,7 @@ object Queries {
         .orderBy("query_id", "rk")),
 
     // converged engine runs with no SQL-expressible fixpoint: LP mode-votes
-    // are not monotone (an over-unrolled oracle would diverge), and
+    // are not monotone (a fixpoint recursion may never converge), and
     // pr_converged's stopping step is data-dependent in a way float SQL
     // can't pin — both stay rows-only by design.
     "lp_converged" -> ((s, dir) => {
@@ -2109,7 +2107,7 @@ object Queries {
     // --- delta-stepping SSSP (Meyer–Sanders bucket schedule — settled
     // vertices never re-shuffle, inner rounds ship only the changed
     // frontier): schedule-independent distances, so the oracle is the
-    // same over-unrolled relaxation as sssp_converged
+    // same relaxation to its fixpoint as sssp_converged
     "sssp_delta" -> ((s, dir) => {
       val ew = copurchaseEdges(s, dir).weightedSymmetric.frame
         .withColumn("weight", col("weight").cast("double"))
@@ -2164,7 +2162,7 @@ object Queries {
     }),
 
     // k-core peeled to the true fixpoint (data-dependent round count);
-    // oracle = over-unrolled peel (fixpoint stable under extra rounds)
+    // oracle = the same peel run to its own fixpoint in DuckDB
     "kcore3_converged" -> ((s, dir) =>
       KCore.converged(TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst"), 3)

@@ -30,7 +30,7 @@ object Coloring {
           numPartitions: Int = 32, md5Pri: Boolean = false): DataFrame =
     runWithRounds(spark, edges, maxRounds, numPartitions, md5Pri)._1
 
-  /** As [[run]], also returning the round count (probe/oracle-unroll aid).
+  /** As [[run]], also returning the round count.
     * With `md5Pri` the priority order is the 60-bit md5 prefix of the id
     * ([[GraphOps.md5Prio]] — the Mis/Matching discipline), which HAS a
     * byte-exact DuckDB twin, so the md5 variant runs under the full

@@ -116,10 +116,9 @@ object KCore {
     * peel to the 1-core fixpoint, record survivors at level 1, peel the
     * SAME surviving subgraph to the 2-core, record, … until the k-core
     * empties. Coreness is then max level survived — one max-agg over the
-    * per-level survivor union. Exact integers throughout; the k levels
-    * and per-level rounds are both fixpoints, so the DuckDB twin
-    * over-unrolls BOTH axes safely (extra levels/rounds past the fixpoint
-    * are no-ops / empty).
+    * per-level survivor union. Exact integers throughout; the DuckDB twin
+    * runs the same levels, each peeled to its own fixpoint, as one
+    * recursion.
     *
     * Each level reuses the previous level's surviving edge set (never
     * restarts from the full graph), so total work is Σ_k |E_k| — the

@@ -30,13 +30,7 @@ object LabelPropagation {
     */
   private def round(edges: DataFrame, labels: DataFrame, withFlag: Boolean,
                     carry: Boolean, vote: Column = count(lit(1))): DataFrame = {
-    val msgs = edges.join(labels.withColumnRenamed("id", "src")
-        .hint("shuffle_hash"), "src")
-      .groupBy(col("dst"), col("label"))
-      .agg(vote.as("cnt"))
-    val best = msgs.groupBy(col("dst").as("id"))
-      .agg(max_by(col("label"),
-        struct(col("cnt"), (-col("label")).as("nl"))).as("newlabel"))
+    val best = mode(edges, labels, vote)
     if (carry) {
       val joined = labels.join(best, Seq("id"), "left_outer")
       if (withFlag)
@@ -54,6 +48,20 @@ object LabelPropagation {
     else
       best.select(col("id"), col("newlabel").as("label"))
   }
+
+  /** Each vertex's mode among its in-neighbours' labels, as (id,
+    * newlabel): the label with the largest `vote` total, ties toward the
+    * smallest label. Vertices with no voting in-neighbour get no row.
+    */
+  private def mode(edges: DataFrame, labels: DataFrame,
+                   vote: Column): DataFrame =
+    edges.join(labels.withColumnRenamed("id", "src")
+        .hint("shuffle_hash"), "src")
+      .groupBy(col("dst"), col("label"))
+      .agg(vote.as("cnt"))
+      .groupBy(col("dst").as("id"))
+      .agg(max_by(col("label"),
+        struct(col("cnt"), (-col("label")).as("nl"))).as("newlabel"))
 
   /** Lazily-composed fixed-k rounds (no actions) — oracle-checked path.
     *
@@ -99,13 +107,7 @@ object LabelPropagation {
       when(col("id") % seedMod === 0, col("id"))
         .otherwise(lit(null).cast("long")).as("label"))
     for (_ <- 1 to k) {
-      val msgs = e.join(labels.where(col("label").isNotNull)
-          .withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
-        .groupBy(col("dst"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      val best = msgs.groupBy(col("dst").as("id"))
-        .agg(max_by(col("label"),
-          struct(col("cnt"), (-col("label")).as("nl"))).as("newlabel"))
+      val best = mode(e, labels.where(col("label").isNotNull), count(lit(1)))
       labels = labels.join(best, Seq("id"), "left_outer")
         .select(col("id"),
           when(col("id") % seedMod === 0, col("id"))

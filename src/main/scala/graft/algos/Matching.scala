@@ -21,8 +21,8 @@ import graft.graph.GraphOps
   * locally-dominant-edge greedy for MAX-WEIGHT matching (Preis/Hoepman's
   * 1/2-approximation, public algorithm): priority = weight in the high
   * bits, md5 tie-break in the low 40 — still deterministic, still
-  * DuckDB-twinnable with integral weights. The all-matched fixpoint is
-  * stable under extra rounds → over-unrolled CTE oracles. Spec pins
+  * DuckDB-twinnable with integral weights. The oracles are DuckDB
+  * recursions run to the same fixpoint (no active edge). Spec pins
   * validity (no shared endpoints), maximality (every dropped edge touches
   * a matched vertex), and exact equality with sequential references using
   * the same priorities.

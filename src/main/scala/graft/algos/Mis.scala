@@ -19,8 +19,8 @@ import graft.graph.{EdgeSet, GraphOps}
   * strictly beats every undecided neighbor's joins the MIS; its neighbors
   * drop out; repeat until no vertex is undecided — expected O(log n)
   * rounds (each round is one join+agg over the shrinking active set, the
-  * coloring movement bound). The fixpoint (everyone decided) is stable
-  * under extra rounds, so the DuckDB twin is an over-unrolled CTE chain.
+  * coloring movement bound). The DuckDB twin runs the same rounds as a
+  * recursion to the same fixpoint (everyone decided).
   *
   * Output: (id, in_mis ∈ {0,1}) for every vertex — INDEPENDENT (no edge
   * inside the set) and MAXIMAL (every 0-vertex has a 1-neighbor), both

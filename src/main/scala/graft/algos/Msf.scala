@@ -17,8 +17,9 @@ import graft.graph.GraphOps
   * weight into the high bits and a 40-bit md5 prefix of "src:dst" below
   * ([[Matching.runWeighted]]'s packed-LONG recipe, weight < 2^23
   * enforced), tie-broken totally by (pri, src, dst). With distinct
-  * priorities the MSF is UNIQUE, so the over-unrolled DuckDB Borůvka twin
-  * must reproduce the exact edge set — a hard gate.
+  * priorities the MSF is UNIQUE, so the DuckDB Borůvka twin, a recursion
+  * run to its own fixpoint, must reproduce the exact edge set — a hard
+  * gate.
   *
   * Contraction without materializing a vertex relabel: chosen edges form a
   * functional graph on component ids whose only cycles are 2-cycles (the

@@ -214,7 +214,7 @@ object Paths {
     * lands strictly above (b+1)·delta, so it can never re-open b). The
     * result is exactly the Dijkstra/Bellman-Ford fixpoint — the schedule
     * changes WORK, never distances — which is what lets the DuckDB twin
-    * stay the plain over-unrolled relaxation.
+    * stay the plain relaxation to its fixpoint.
     *
     * The 100 TB case for the schedule: plain synchronous Bellman-Ford
     * re-scatters the entire reached set every round for

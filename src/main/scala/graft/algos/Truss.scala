@@ -17,9 +17,8 @@ import graft.graph.GraphOps
   * self-join for wedges, left-semi closing — credits each triangle's three
   * edges in canonical (min,max) form, and drops edges with support < k−2.
   * Rounds are materialized with the 1-job lazy-checkpoint+count pattern
-  * (KCore's); peeling is monotone, so the fixpoint is stable under extra
-  * rounds and the driver oracle is an over-unrolled CTE chain
-  * (the kcore3_converged recipe, [[graft.OracleSql]]).
+  * (KCore's); the DuckDB oracle runs the same peel as a recursion to its
+  * own fixpoint (the kcore3_converged recipe, [[graft.OracleSql]]).
   */
 object Truss {
 

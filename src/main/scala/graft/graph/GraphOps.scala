@@ -250,16 +250,6 @@ object GraphOps {
         expr("nds * 1000000 div samples").as("knn_micro"))
   }
 
-  /** G5 — co-partition an edge table by `src` so every superstep's
-    * frontier⋈edges join reuses one fixed hash partitioning and the (big)
-    * edge side never moves again (LA3's 2D placement analog, SURVEY.md
-    * §4.1). Call `.persist()`/`localCheckpoint` on the result before
-    * iterating.
-    */
-  def coPartition(edges: DataFrame, numPartitions: Int): DataFrame =
-    edges.repartition(numPartitions, col("src"))
-      .sortWithinPartitions("src", "dst")
-
   /** G6 — pack per-src adjacency into CSR-style array rows (EdgeBlock).
     * Arrays stay in Tungsten format; the blocked SpMV kernel explodes them
     * back per superstep. blockId = src hash bucket.
@@ -285,7 +275,7 @@ object GraphOps {
     * degree exceeds `tau` are salted into ⌈deg/tau⌉ sub-groups so no single
     * reducer owns a whole hub adjacency. Returns the salted edge table with
     * columns (src, dst, weight?, salt, nsalts). Frontier rows for hubs must
-    * be replicated to all salts — see [[replicateFrontier]].
+    * be replicated to all salts ([[graft.engine.Superstep]] does so).
     */
   def splitHubs(edges: DataFrame, tau: Long): DataFrame = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -507,14 +497,6 @@ object GraphOps {
       .where(col("in_a").isNull || col("in_b").isNull)
       .select(col("src"), col("dst"),
         when(col("in_a").isNull, lit(1L)).otherwise(lit(-1L)).as("change"))
-
-  /** Replicate frontier rows for hub vertices across their salts so the
-    * salted join covers every sub-group: explode(sequence(0, nsalts-1)).
-    */
-  def replicateFrontier(frontier: DataFrame, hubSalts: DataFrame): DataFrame =
-    frontier.join(hubSalts, frontier("id") === hubSalts("src"))
-      .withColumn("salt", explode(sequence(lit(0), col("nsalts") - 1)))
-      .drop("src", "nsalts")
 
   /** Rich-club profile φ(k) (Colizza et al., Nature Physics 2006): for each
     * degree threshold k, the density of the subgraph induced by vertices of

@@ -88,6 +88,14 @@ class Wave41Spec extends SparkSpec {
       collectD(PageRank.run(s, e, SuperstepConfig(numPartitions = 4,
           tol = 0.0, maxIter = 4, gridSide = Some(2), batchSize = batch))
         .state.select(col("id"), col("rank")), "id", "rank")
+    // Exact doubles on purpose: the order of each rank's sums is stable.
+    // PageRank.run runs inside Superstep.run, which enters
+    // Lineage.withLoopConf: AQE is off and the shuffle partition count is
+    // pinned to numPartitions. Both gather joins (broadcast at batch 1,
+    // the grid's shuffled hash at batch 3) stream the edge partitions in
+    // place, so each partial sum adds the same messages in the same order
+    // and the final aggregate merges the same partials in the same
+    // partitions.
     assert(pr(1) == pr(3)) // bit-identical trajectory at any batch size
   }
 }

@@ -18,6 +18,9 @@ multiset. Row order is not compared. Verdicts per query:
   no_oracle  the ledger has no oracle statement; the row count is shown
   failed     the engine wrote no output, or the oracle statement raised
 
+Each line also shows the seconds DuckDB spent on the oracle statement
+("-" when none ran), and the totals line their sum.
+
 Only queries present in the dump are reported, so a filtered Verify run
 gives a filtered diff; a query that threw in Verify leaves no output and
 is counted on the `note:` line, next to the queries a filter left out
@@ -30,6 +33,7 @@ import json
 import math
 import os
 import sys
+import time
 
 sys.dont_write_bytecode = True
 import duckdb  # noqa: E402
@@ -89,8 +93,10 @@ def main():
     queries = sorted(d for d in os.listdir(out_dir)
                      if os.path.isdir(os.path.join(out_dir, d)))
     totals = collections.Counter()
+    oracle_s = 0.0
     for q in queries:
         engine = parquet_glob(os.path.join(out_dir, q))
+        secs = None
         try:
             mine_cols, mine = rows(con, "SELECT * FROM read_parquet('%s')" % engine)
         except duckdb.Error as e:
@@ -100,22 +106,30 @@ def main():
             if sql is None:
                 verdict, detail = "no_oracle", "%d rows" % len(mine)
             else:
+                t0 = time.monotonic()
                 try:
-                    theirs_cols, theirs = rows(con, sql)
+                    theirs = rows(con, sql)
                 except duckdb.Error as e:
-                    verdict, detail = "failed", "oracle raised: %s" % e
+                    theirs = e
+                secs = time.monotonic() - t0
+                oracle_s += secs
+                if isinstance(theirs, duckdb.Error):
+                    verdict, detail = "failed", "oracle raised: %s" % theirs
                 else:
-                    diff = compare(mine_cols, mine, theirs_cols, theirs)
+                    diff = compare(mine_cols, mine, *theirs)
                     verdict = "match" if diff is None else "MISMATCH"
                     detail = "%d rows" % len(mine) if diff is None else diff
         totals[verdict] += 1
-        print("%-28s %-9s %s" % (q, verdict, detail), flush=True)
+        print("%-28s %-9s %7s %s" % (q, verdict,
+              "-" if secs is None else "%.2fs" % secs, detail), flush=True)
     missing = len(set(oracle) - set(queries))
     if missing:
         print("note: %d oracle queries have no engine output (the query failed "
               "in Verify, or Verify's filter left it out)" % missing)
-    print("total: %d match / %d MISMATCH / %d no_oracle / %d failed" % (
-        totals["match"], totals["MISMATCH"], totals["no_oracle"], totals["failed"]))
+    print("total: %d match / %d MISMATCH / %d no_oracle / %d failed; "
+          "oracle statements %.1fs in DuckDB" % (
+              totals["match"], totals["MISMATCH"], totals["no_oracle"],
+              totals["failed"], oracle_s))
     sys.exit(1 if totals["MISMATCH"] or totals["failed"] else 0)
 
 

@@ -25,7 +25,7 @@ object Demo {
     val spark = graft.util.Sessions.local(
       Runtime.getRuntime.availableProcessors.min(8), "graft-demo")
     spark.sparkContext.setLogLevel("ERROR")
-    val cfg = SuperstepConfig(numPartitions = 8)
+    val cfg = SuperstepConfig()
 
     val edges = GraphOps.readEdgeList(spark, path)
     println(s"edges: ${edges.count()}")

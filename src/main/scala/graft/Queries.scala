@@ -7,7 +7,7 @@ import graft.algos.{Betweenness, Community, ConnectedComponents, KCore, Katz, La
 import graft.ann.Similarity
 import graft.corpus.CorpusGen
 import graft.dedup.Dedup
-import graft.engine.{CheckpointStore, SuperstepConfig}
+import graft.engine.{CheckpointStore, Lineage, SuperstepConfig}
 import graft.graph.{EdgeDerivation, GraphOps, TestGraphs}
 import graft.graph.TestGraphs.copurchaseEdges
 import graft.multimodal.Multimodal
@@ -26,8 +26,7 @@ object Queries {
   private def emb(s: SparkSession, dir: String): DataFrame =
     TestGraphs.table(s, dir, "embeddings")
 
-  private def cfg(s: SparkSession): SuperstepConfig = SuperstepConfig(
-    numPartitions = s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+  private val cfg = SuperstepConfig()
 
   /** Blocked-kernel PR (CSR EdgeBlocks, SURVEY.md §2.2 G6): same trajectory
     * as [[PageRank.fixedIterations]] — outdeg is the packed adjacency
@@ -115,7 +114,7 @@ object Queries {
 
     "pr5_blocked" -> ((s, dir) =>
       prBlocked(copurchaseEdges(s, dir).symmetric.cut.frame, 5,
-        cfg(s).numPartitions)
+        Lineage.partitions(s))
         .select(col("id"), round(col("rank"), 6).as("pr"))
         .where(col("pr").isNotNull)
         .orderBy("id")),
@@ -144,7 +143,7 @@ object Queries {
     // to DuckDB, not just the dst-broadcast layout.
     "pr5_grid" -> ((s, dir) =>
       PageRank.run(s, copurchaseEdges(s, dir).symmetric.cut.frame,
-        cfg(s).copy(maxIter = 5, tol = 0.0, gridSide = Some(4),
+        cfg.copy(maxIter = 5, tol = 0.0, gridSide = Some(4),
           batchSize = 5))
         .state.select(col("id"), round(col("rank"), 6).as("pr"))
         .orderBy("id")),
@@ -157,7 +156,7 @@ object Queries {
     // with tol=0 the trajectory is identical at any batch size, r6).
     "pr5_hubsplit" -> ((s, dir) =>
       PageRank.run(s, copurchaseEdges(s, dir).symmetric.cut.frame,
-        cfg(s).copy(maxIter = 5, tol = 0.0, hubTau = Some(16L),
+        cfg.copy(maxIter = 5, tol = 0.0, hubTau = Some(16L),
           batchSize = 5))
         .state.select(col("id"), round(col("rank"), 6).as("pr"))
         .orderBy("id")),
@@ -197,9 +196,9 @@ object Queries {
       // snapshot dir can go; Bench runs each query twice
       TempDir.withTempDir("graft-resume") { base =>
         val ck = new CheckpointStore(base.toString, "pr", "driver")
-        PageRank.run(s, e, cfg(s).copy(tol = 0.0, maxIter = 3,
+        PageRank.run(s, e, cfg.copy(tol = 0.0, maxIter = 3,
           checkpoint = Some(ck), durableEvery = 2))
-        PageRank.run(s, e, cfg(s).copy(tol = 0.0, maxIter = 5,
+        PageRank.run(s, e, cfg.copy(tol = 0.0, maxIter = 5,
           checkpoint = Some(ck), durableEvery = 2), resume = true)
           .state.select(col("id"), round(col("rank"), 6).as("pr"))
           .orderBy("id")
@@ -293,8 +292,7 @@ object Queries {
     "stream_cc" -> ((s, dir) =>
       graft.streaming.EdgeStream.ccViaStream(
         TestGraphs.copurchase(s, dir)
-          .where(col("weight") >= 2).select("src", "dst"),
-        cfg(s).numPartitions)
+          .where(col("weight") >= 2).select("src", "dst"))
         .orderBy("id")),
 
     // --- connected components (A2): converged, exact ---------------------
@@ -302,7 +300,7 @@ object Queries {
       val cpf = copurchaseEdges(s, dir).where(col("weight") >= 2)
       // batchSize=4 (r6): convergence checked every 4 supersteps — extra
       // post-fixpoint supersteps are no-ops (empty frontier), state identical
-      ConnectedComponents.run(s, cpf, cfg(s).copy(batchSize = 4))
+      ConnectedComponents.run(s, cpf, cfg.copy(batchSize = 4))
         .state.orderBy("id")
     }),
 
@@ -312,7 +310,7 @@ object Queries {
     "cc_stars" -> ((s, dir) => {
       val cpf = TestGraphs.copurchase(s, dir)
         .where(col("weight") >= 2).select("src", "dst")
-      graft.algos.ConnectedComponents.stars(cpf, cfg(s).numPartitions)
+      graft.algos.ConnectedComponents.stars(cpf)
         ._1.orderBy("id")
     }),
 
@@ -329,8 +327,8 @@ object Queries {
         GraphOps.md5Prio(concat_ws(":", col("src"), col("dst"))) % 50 === 0
       // a filter of a canonical set: CC mirrors it with no dedup (r6)
       val base = ConnectedComponents.run(s, cp.where(!inDelta),
-        cfg(s).copy(batchSize = 4)).state
-      ConnectedComponents.incremental(base, cp.where(inDelta).frame, cfg(s))
+        cfg.copy(batchSize = 4)).state
+      ConnectedComponents.incremental(base, cp.where(inDelta).frame)
         .orderBy("id")
     }),
 
@@ -338,7 +336,7 @@ object Queries {
     // number): converged CC, then sizes, then size multiplicities --------
     "comp_sizes" -> ((s, dir) => {
       val cpf = copurchaseEdges(s, dir).where(col("weight") >= 2)
-      ConnectedComponents.run(s, cpf, cfg(s).copy(batchSize = 4)).state
+      ConnectedComponents.run(s, cpf, cfg.copy(batchSize = 4)).state
         .groupBy("component").agg(count(lit(1)).as("csize"))
         .groupBy("csize").agg(count(lit(1)).as("n_comps"))
         .orderBy("csize")
@@ -521,8 +519,7 @@ object Queries {
     // docs keep themselves) — "which row do I keep", not just pairs
     "dedup_clusters" -> ((s, dir) =>
       Dedup.clusters(s, docs(s, dir),
-        Dedup.minhashLsh(docs(s, dir), 3, 16, 0.5),
-        cfg(s).numPartitions)
+        Dedup.minhashLsh(docs(s, dir), 3, 16, 0.5))
         .orderBy("doc_id")),
 
     // --- batch sessionization of the event log: 4-hour gap rule (the
@@ -700,14 +697,14 @@ object Queries {
     // co-change / import edges, all under the hard oracle gate.
     "g_cochange_corpus" -> ((s, dir) => {
       val corpus = CorpusGen.generate(s, 20, 30, 8)
-      val ids = EdgeDerivation.idMap(corpus, cfg(s).numPartitions)
+      val ids = EdgeDerivation.idMap(corpus, Lineage.partitions(s))
         .localCheckpoint(true)
       EdgeDerivation.coChangeEdges(corpus, ids).orderBy("src", "dst")
     }),
 
     "g_import_corpus" -> ((s, dir) => {
       val corpus = CorpusGen.generate(s, 20, 30, 8)
-      val ids = EdgeDerivation.idMap(corpus, cfg(s).numPartitions)
+      val ids = EdgeDerivation.idMap(corpus, Lineage.partitions(s))
         .localCheckpoint(true)
       EdgeDerivation.importEdges(corpus, ids).orderBy("src", "dst")
     }),
@@ -893,8 +890,7 @@ object Queries {
     // DuckDB Borůvka, run to its own fixpoint, must reproduce the exact
     // edge set ------------------------------------------------------------
     "msf" -> ((s, dir) =>
-      Msf.run(s, TestGraphs.copurchase(s, dir).where(col("weight") >= 2),
-        cfg(s).numPartitions)
+      Msf.run(s, TestGraphs.copurchase(s, dir).where(col("weight") >= 2))
         .orderBy("src", "dst")),
 
     // --- strongly connected components (A: directed companion to cc) on
@@ -909,7 +905,7 @@ object Queries {
       val dg = cp.where(col("weight") >= 2).select("src", "dst")
         .unionByName(cp.where(col("weight") >= 3)
           .select(col("dst").as("src"), col("src").as("dst")))
-      graft.algos.Scc.run(s, dg, cfg(s).numPartitions)
+      graft.algos.Scc.run(s, dg)
         .orderBy("id")
     }),
 
@@ -935,7 +931,7 @@ object Queries {
       val dg = cp.where(col("weight") >= 2).select("src", "dst")
         .unionByName(cp.where(col("weight") >= 3)
           .select(col("dst").as("src"), col("src").as("dst")))
-      graft.algos.Scc.condensation(s, dg, cfg(s).numPartitions)
+      graft.algos.Scc.condensation(s, dg)
         .orderBy("src_scc", "dst_scc")
     }),
 
@@ -967,7 +963,6 @@ object Queries {
       graft.algos.Coloring.run(s,
         TestGraphs.copurchase(s, dir)
           .where(col("weight") >= 2).select("src", "dst"),
-        numPartitions = cfg(s).numPartitions,
         md5Pri = true)
         .select(col("id"), col("color").cast("long").as("color"))
         .orderBy("id")),
@@ -977,8 +972,7 @@ object Queries {
     // recursion runs to its own fixpoint (everyone decided)
     "mis" -> ((s, dir) =>
       graft.algos.Mis.run(s, TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"),
-        cfg(s).numPartitions)
+        .where(col("weight") >= 2).select("src", "dst"))
         ._1.orderBy("id")),
 
     // --- maximal matching (greedy by md5 edge priority — the MIS recipe
@@ -986,8 +980,7 @@ object Queries {
     // recursion run to its own fixpoint
     "matching" -> ((s, dir) =>
       graft.algos.Matching.run(s, TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"),
-        cfg(s).numPartitions)
+        .where(col("weight") >= 2).select("src", "dst"))
         ._1.orderBy("src", "dst")),
 
     // --- greedy b-matching (each vertex accepts up to b = 2 edges — the
@@ -995,8 +988,7 @@ object Queries {
     // recursion run to its own fixpoint
     "matching_b2" -> ((s, dir) =>
       graft.algos.Matching.runB(s, TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"), 2,
-        cfg(s).numPartitions)
+        .where(col("weight") >= 2).select("src", "dst"), 2)
         ._1.orderBy("src", "dst")),
 
     // --- greedy max-weight maximal matching (locally-dominant edges —
@@ -1004,8 +996,7 @@ object Queries {
     // tie-break; converged run, oracle recursion run to its own fixpoint
     "matching_w" -> ((s, dir) =>
       graft.algos.Matching.runWeighted(s, TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst", "weight"),
-        cfg(s).numPartitions)
+        .where(col("weight") >= 2).select("src", "dst", "weight"))
         ._1.orderBy("src", "dst")),
 
     // --- weighted truncated harmonic centrality: min-plus multi-root
@@ -1167,7 +1158,7 @@ object Queries {
     "cc_grid" -> ((s, dir) => {
       val cpf = copurchaseEdges(s, dir).where(col("weight") >= 2)
       ConnectedComponents.run(s, cpf,
-          cfg(s).copy(gridSide = Some(4), batchSize = 4))
+          cfg.copy(gridSide = Some(4), batchSize = 4))
         .state.orderBy("id")
     }),
 
@@ -1185,7 +1176,7 @@ object Queries {
     "hub_attack" -> ((s, dir) =>
       ConnectedComponents.hubAttackCensus(s,
         copurchaseEdges(s, dir).symmetric.cut, 50,
-        cfg(s).copy(batchSize = 4))),
+        cfg.copy(batchSize = 4))),
 
     // --- wedge-sampling triangle estimate, md5-deterministic 1/16 sample:
     // the sampled/closed counts are exact (the oracle gate), the estimator
@@ -1259,8 +1250,8 @@ object Queries {
     // rounds ≤ ⌈log₂ n⌉ ----------------------------------------------------
     "densest" -> ((s, dir) =>
       graft.algos.Densest.peelProfile(s, copurchaseEdges(s, dir)
-          .where(col("weight") >= 2).symmetric.frame,
-        cfg(s).numPartitions).orderBy("round")),
+          .where(col("weight") >= 2).symmetric.frame)
+        .orderBy("round")),
 
     // --- signed-triangle structural balance census: md5-parity edge
     // signs, balanced ⇔ even number of negative edges; one exact row ------
@@ -1307,7 +1298,7 @@ object Queries {
       val (te, _) = graft.algos.Truss.converged(
         TestGraphs.copurchase(s, dir)
           .where(col("weight") >= 2).select("src", "dst"), 3)
-      ConnectedComponents.run(s, te.select("src", "dst"), cfg(s))
+      ConnectedComponents.run(s, te.select("src", "dst"), cfg)
         .state.orderBy("id")
     }),
 
@@ -1329,7 +1320,7 @@ object Queries {
         .pairs.cut
       val h = GraphOps.md5Prio(concat_ws(":", col("src"), col("dst"))) % 100
       Seq(25, 50, 75).map { p =>
-        ConnectedComponents.run(s, cpf.where(h < p), cfg(s)).state
+        ConnectedComponents.run(s, cpf.where(h < p), cfg).state
           .groupBy("component").agg(count(lit(1)).as("sz"))
           .agg(lit(p.toLong).as("p_pct"),
             count(lit(1)).as("n_components"),
@@ -1706,8 +1697,8 @@ object Queries {
     "densest_w" -> ((s, dir) =>
       graft.algos.Densest.peelProfileWeighted(s,
         copurchaseEdges(s, dir).where(col("weight") >= 2)
-          .weightedSymmetric.frame,
-        cfg(s).numPartitions).orderBy("round")),
+          .weightedSymmetric.frame)
+        .orderBy("round")),
 
     // --- clustering-by-degree curve c(k): mean lcc_micro per log2 degree
     // bucket — the hierarchical-structure fingerprint (falling c(k) =
@@ -1941,8 +1932,7 @@ object Queries {
     "vertex_cover" -> ((s, dir) => {
       val (m, _) = graft.algos.Matching.run(s,
         TestGraphs.copurchase(s, dir).where(col("weight") >= 2)
-          .select("src", "dst"),
-        cfg(s).numPartitions)
+          .select("src", "dst"))
       m.select(explode(array(col("src"), col("dst"))).as("id"))
         .distinct().orderBy("id")
     }),
@@ -2061,7 +2051,7 @@ object Queries {
     // the fixpoint absorbs.
     "pr_converged" -> ((s, dir) =>
       PageRank.runFiltered(s, TestGraphs.copurchase(s, dir),
-        cfg(s).copy(tol = 1e-6, maxIter = 30, gridSide = Some(4),
+        cfg.copy(tol = 1e-6, maxIter = 30, gridSide = Some(4),
           batchSize = 5)).state.orderBy("id")),
 
     // LSH-bucketed ANN (recall<1 by design — rows-only)
@@ -2099,8 +2089,7 @@ object Queries {
     "lp_converged" -> ((s, dir) => {
       val und = copurchaseEdges(s, dir).where(col("weight") >= 2)
         .symmetric.cut
-      LabelPropagation.run(s, und, maxRounds = 30,
-        numPartitions = cfg(s).numPartitions)
+      LabelPropagation.run(s, und, maxRounds = 30)
         ._1.orderBy("id")
     }),
 
@@ -2113,8 +2102,7 @@ object Queries {
         .withColumn("weight", col("weight").cast("double"))
         .transform(graft.engine.Lineage.cut(_)) // lazy shared cut (bfs5 r6)
       Paths.deltaStepping(s, ew, ew.select(col("src")).agg(min(col("src"))),
-        delta = 2.0,
-        numPartitions = cfg(s).numPartitions)
+        delta = 2.0)
         ._1.where(col("dist").isNotNull).orderBy("id")
     }),
 
@@ -2125,7 +2113,7 @@ object Queries {
       // min-src source folded into the engine's init state (lazy one-row
       // agg, broadcast cross-join) — no eager .head() in the builder
       Paths.ssspFrom(s, ew, ew.agg(min(col("src"))),
-        cfg(s).copy(maxIter = 50, batchSize = 4))
+        cfg.copy(maxIter = 50, batchSize = 4))
         .state.where(col("dist").isNotNull).orderBy("id")
     }),
 
@@ -2144,8 +2132,7 @@ object Queries {
     "coloring" -> ((s, dir) =>
       graft.algos.Coloring.run(s,
         TestGraphs.copurchase(s, dir)
-          .where(col("weight") >= 2).select("src", "dst"),
-        numPartitions = cfg(s).numPartitions)
+          .where(col("weight") >= 2).select("src", "dst"))
         .orderBy("id")),
 
     // sampled-source Brandes betweenness (8 hash-sampled roots) on the
@@ -2156,8 +2143,7 @@ object Queries {
       val undE = copurchaseEdges(s, dir).where(col("weight") >= 2)
         .symmetric.frame.localCheckpoint(true)
       Betweenness.run(s, undE,
-        Betweenness.sampledSources(GraphOps.vertices(undE), 8),
-        numPartitions = cfg(s).numPartitions)
+        Betweenness.sampledSources(GraphOps.vertices(undE), 8))
         .orderBy("id")
     }),
 

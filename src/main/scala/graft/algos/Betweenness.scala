@@ -43,12 +43,21 @@ object Betweenness {
     * Directed semantics; pass a symmetrized edge table for undirected
     * graphs (each undirected pair-dependency is then counted from both
     * endpoints — divide by 2 for the textbook undirected score).
-    * Vertices on no shortest path get btw = 0.0.
+    * Vertices on no shortest path get btw = 0.0. `maxDepth` caps the
+    * forward BFS rounds, the last of which finds no new vertex; a deeper
+    * graph throws IllegalStateException.
     */
   def run(spark: SparkSession, edges: DataFrame, sources: DataFrame,
-          maxDepth: Int = 30, numPartitions: Int = 32): DataFrame = {
+          maxDepth: Int = 30): DataFrame =
+    runWithRounds(spark, edges, sources, maxDepth)._1
+
+  /** As [[run]], also returning the number of forward BFS rounds. */
+  private[graft] def runWithRounds(spark: SparkSession, edges: DataFrame,
+                                   sources: DataFrame,
+                                   maxDepth: Int = 30): (DataFrame, Int) = {
+    val n = Lineage.partitions(spark)
     val e = edges.select("src", "dst")
-      .repartition(numPartitions, col("src"))
+      .repartition(n, col("src"))
       .transform(Lineage.cut(_, eager = true))
     val verts = GraphOps.vertices(e)
 
@@ -57,20 +66,23 @@ object Betweenness {
       lit(1.0).as("sigma")).transform(Lineage.cut(_, eager = true))
     var visited = frontier.select("root", "id").transform(Lineage.cut(_, eager = true))
     var levels = Vector(frontier)
-    var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
+    // each round's new frontier decides whether another level follows:
+    // one emptiness check per level
+    var growing = true
+    val rounds = Lineage.rounds("betweenness forward BFS", maxDepth)(growing) {
+        _ =>
       val msgs = frontier.withColumnRenamed("id", "src")
         .join(e, "src")
         .select(col("root"), col("dst").as("id"), col("sigma"))
         .groupBy("root", "id").agg(sum(col("sigma")).as("sigma"))
       frontier = msgs.join(visited, Seq("root", "id"), "left_anti")
         .transform(Lineage.cut(_, eager = true))
-      if (!frontier.isEmpty) {
+      growing = !frontier.isEmpty
+      if (growing) {
         visited = visited.union(frontier.select("root", "id"))
-          .repartition(numPartitions, col("root"), col("id"))
+          .repartition(n, col("root"), col("id"))
           .transform(Lineage.cut(_, eager = true))
         levels :+= frontier
-        depth += 1
       }
     }
 
@@ -95,10 +107,10 @@ object Betweenness {
 
     val allDeltas = deltas.map(_.select("root", "id", "delta"))
       .reduce(_.unionByName(_))
-    verts.join(
+    (verts.join(
         allDeltas.where(col("id") =!= col("root"))
           .groupBy("id").agg(sum(col("delta")).as("btw")),
         Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("btw"), lit(0.0)).as("btw"))
+      .select(col("id"), coalesce(col("btw"), lit(0.0)).as("btw")), rounds)
   }
 }

@@ -27,8 +27,8 @@ import graft.graph.{EdgeSet, GraphOps}
 object Coloring {
 
   def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 60,
-          numPartitions: Int = 32, md5Pri: Boolean = false): DataFrame =
-    runWithRounds(spark, edges, maxRounds, numPartitions, md5Pri)._1
+          md5Pri: Boolean = false): DataFrame =
+    runWithRounds(spark, edges, maxRounds, md5Pri)._1
 
   /** As [[run]], also returning the round count.
     * With `md5Pri` the priority order is the 60-bit md5 prefix of the id
@@ -37,14 +37,14 @@ object Coloring {
     * oracle where the xxhash64 default is rows-only.
     */
   def runWithRounds(spark: SparkSession, edges: DataFrame,
-                    maxRounds: Int = 60, numPartitions: Int = 32,
+                    maxRounds: Int = 60,
                     md5Pri: Boolean = false): (DataFrame, Int) = {
     // symmetrized simple adjacency: coloring is an undirected notion
     val e = EdgeSet.symmetric(edges).frame
-      .repartition(numPartitions, col("src"))
+      .repartition(Lineage.partitions(spark), col("src"))
       .transform(Lineage.cut(_, eager = true))
     val nEdges = e.count()
-    Lineage.withAdaptiveLoopConf(spark, nEdges, numPartitions) { nEff =>
+    Lineage.withAdaptiveLoopConf(spark, nEdges) { nEff =>
     val priExpr =
       if (md5Pri)
         struct(GraphOps.md5Prio(col("id").cast("string")), col("id"))

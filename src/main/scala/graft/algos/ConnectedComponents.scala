@@ -85,8 +85,7 @@ object ConnectedComponents {
     * graph). Output ((id, component), rounds) — exact, same result as
     * [[run]], shared oracle.
     */
-  def stars(edges: DataFrame, numPartitions: Int = 32,
-            maxRounds: Int = 200): (DataFrame, Int) = {
+  def stars(edges: DataFrame, maxRounds: Int = 200): (DataFrame, Int) = {
     // LAZY cuts + one fused prep action (r6): verts is only read by the
     // caller's final action; the prep count materializes the edge cache
     // AND yields the row count the adaptive clamp needs, so the old
@@ -99,7 +98,7 @@ object ConnectedComponents {
       .distinct()
       .transform(Lineage.cut(_))
     val n = e.count() // ONE prep action: materializes e, counts it
-    val (forest, rounds) = contract(e, n, numPartitions, maxRounds)
+    val (forest, rounds) = contract(e, n, maxRounds)
     // the star forest maps each leaf to its root; isolated vertices are
     // their own component
     val comp = verts
@@ -113,7 +112,7 @@ object ConnectedComponents {
     * (src, dst) set of `n` rows: returns the star forest (leaf → root,
     * roots absent as srcs) and the number of rounds run.
     */
-  private def contract(edges: DataFrame, n: Long, numPartitions: Int,
+  private def contract(edges: DataFrame, n: Long,
                        maxRounds: Int): (DataFrame, Int) = {
     var e = edges
     val byU = Window.partitionBy("u")
@@ -146,10 +145,11 @@ object ConnectedComponents {
         .where(col("k") > 1)
         .count()
 
-    val nEff = Lineage.adaptiveParallelism(n, numPartitions)
     // the loop conf goes on the session that plans the rounds: inside a
     // streaming foreachBatch that is the query's cloned session
-    Lineage.withLoopConf(edges.sparkSession, nEff) {
+    val spark = edges.sparkSession
+    Lineage.withLoopConf(spark) {
+    Lineage.withAdaptiveLoopConf(spark, n) { nEff =>
     var done = n == 0L
     val rounds = Lineage.rounds("star contraction", maxRounds)(!done) { _ =>
       val next = smallStar(largeStar(e))
@@ -159,6 +159,7 @@ object ConnectedComponents {
       e = next
     }
     (e, rounds)
+    }
     }
   }
 
@@ -190,29 +191,24 @@ object ConnectedComponents {
     *
     * Every action (the count, the collect or the star rounds, and the
     * relabel) runs under [[Lineage.withLoopConf]] on the delta's own
-    * session, at the smaller of `cfg.numPartitions` and that session's
-    * shuffle-partition count: inside a stream replay that is the batch
-    * session, already clamped to the replay's size. The labels come back
-    * materialized and cut, so a fold over many batches keeps its lineage
-    * bounded.
+    * session, at that session's partition count: inside a stream replay
+    * that is the batch session, already clamped to the replay's size.
+    * The labels come back materialized and cut, so a fold over many
+    * batches keeps its lineage bounded.
     *
     * At 100 TB this touches the full vertex set only in the final
     * label-rewrite join; everything proportional to work actually runs on
     * |delta| + |touched components|.
     */
-  def incremental(labels: DataFrame, deltaEdges: DataFrame,
-                  cfg: SuperstepConfig): DataFrame =
-    incremental(labels, deltaEdges, cfg, Lineage.rowsPerPartition)
+  def incremental(labels: DataFrame, deltaEdges: DataFrame): DataFrame =
+    incremental(labels, deltaEdges, Lineage.rowsPerPartition)
 
   /** [[incremental]] finishing on the driver up to `driverRows` contracted
     * edges; a spec sets 0 to force the [[stars]] path. */
   private[graft] def incremental(labels: DataFrame, deltaEdges: DataFrame,
-                                 cfg: SuperstepConfig,
                                  driverRows: Long): DataFrame = {
     val spark = deltaEdges.sparkSession
-    val parts = math.min(cfg.numPartitions,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    Lineage.withLoopConf(spark, parts) {
+    Lineage.withLoopConf(spark) {
       val lab = labels.select(col("id"), col("component"))
         .transform(Lineage.cut(_))
       // snew/dnew: the endpoint is a new vertex (no prior label)
@@ -234,7 +230,7 @@ object ConnectedComponents {
         if (n <= driverRows) driverRoots(spark, compEdges.collect())
         else {
           val (forest, _) = // 200: stars' default round cap
-            contract(compEdges.select("src", "dst"), n, parts, 200)
+            contract(compEdges.select("src", "dst"), n, 200)
           compEdges.select(col("src").as("id"), col("snew").as("fresh"))
             .union(compEdges.select(col("dst").as("id"),
               col("dnew").as("fresh")))
@@ -254,7 +250,8 @@ object ConnectedComponents {
           coalesce(col("newcomp"), col("component")).as("component"))
         .unionByName(roots.where(col("fresh"))
           .select(col("id"), col("root").as("component")))
-        .coalesce(parts) // else every fold adds the new labels' partitions
+        // without it every fold adds the new labels' partitions
+        .coalesce(Lineage.partitions(spark))
         .transform(Lineage.cut(_, eager = true))
     }
   }

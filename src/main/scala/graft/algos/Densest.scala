@@ -39,12 +39,10 @@ object Densest {
     * @param edgesW symmetrized weighted edges (src, dst, weight), integral
     */
   def peelProfileWeighted(spark: SparkSession, edgesW: DataFrame,
-                          numPartitions: Int = 32,
                           maxRounds: Int = 64): DataFrame =
     peelLoop(spark, edgesW.select(col("src"), col("dst"),
         col("weight").cast("long").as("w")),
-      sum(col("w")), "w2_weight", "weighted densest peel", numPartitions,
-      maxRounds)
+      sum(col("w")), "w2_weight", "weighted densest peel", maxRounds)
 
   /** Peel profile: one row per executed round, measured BEFORE that
     * round's removal. Columns (all BIGINT): `round` (1-based),
@@ -55,10 +53,9 @@ object Densest {
     * @param edges symmetrized simple undirected edge list (src, dst)
     */
   def peelProfile(spark: SparkSession, edges: DataFrame,
-                  numPartitions: Int = 32,
                   maxRounds: Int = 64): DataFrame =
     peelLoop(spark, edges.select("src", "dst"), count(lit(1)), "m2_edges",
-      "densest peel", numPartitions, maxRounds)
+      "densest peel", maxRounds)
 
   /** The peel both profiles run: `deg` is the per-vertex degree aggregate
     * and `massCol` names its per-round total in the profile. Each loop
@@ -67,15 +64,14 @@ object Densest {
     * removes every vertex with deg·n ≤ 2·mass.
     */
   private def peelLoop(spark: SparkSession, edges: DataFrame, deg: Column,
-                       massCol: String, what: String, numPartitions: Int,
+                       massCol: String, what: String,
                        maxRounds: Int): DataFrame =
-    Lineage.withLoopConf(spark, numPartitions) {
+    Lineage.withLoopConf(spark) {
       var e = edges
-        .repartition(numPartitions, col("src"))
+        .repartition(Lineage.partitions(spark), col("src"))
         .transform(Lineage.cut(_, eager = true))
-      // scale-adaptive round parallelism (restored by withLoopConf's exit)
-      spark.conf.set("spark.sql.shuffle.partitions",
-        Lineage.adaptiveParallelism(e.count(), numPartitions).toString)
+      // scale-adaptive round parallelism
+      Lineage.withAdaptiveLoopConf(spark, e.count()) { _ =>
       val prof = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
       var degs: DataFrame = null
       var n = 0L
@@ -108,5 +104,6 @@ object Densest {
         val best = rows.forall { case (_, nj, mj) => m * nj >= mj * nv }
         (r, nv, m, if (best) 1L else 0L)
       }.toDF("round", "n_vertices", massCol, "is_best")
+      }
     }
 }

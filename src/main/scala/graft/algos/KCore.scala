@@ -40,8 +40,7 @@ object KCore {
                         name: String): DataFrame = {
     val spark = e0.sparkSession
     var e = e0.transform(Lineage.cut(_, eager = true))
-    val req = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    Lineage.withAdaptiveLoopConf(spark, e.count(), req) { _ =>
+    Lineage.withAdaptiveLoopConf(spark, e.count()) { _ =>
     for (_ <- 1 to rounds)
       e = peelRound(e, deg, min).transform(Lineage.cut(_, eager = true))
     e.groupBy(col("src").as("id")).agg(deg.as(name))
@@ -86,8 +85,7 @@ object KCore {
     val spark = edges.sparkSession
     val e = GraphOps.symmetrize(edges).transform(Lineage.cut(_, eager = true))
     val n = e.count()
-    val req = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    Lineage.withAdaptiveLoopConf(spark, n, req) { _ =>
+    Lineage.withAdaptiveLoopConf(spark, n) { _ =>
     val (core, _, r) = peelToFixpoint(e, n, k, "k-core", maxRounds)
     (core.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")), r)
     }
@@ -137,8 +135,7 @@ object KCore {
     val spark = edges.sparkSession
     var levels = spark.range(0)
       .select(col("id"), col("id").as("coreness"))
-    val req = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    Lineage.withAdaptiveLoopConf(spark, n, req) { _ =>
+    Lineage.withAdaptiveLoopConf(spark, n) { _ =>
     val perLevel = scala.collection.mutable.ArrayBuffer.empty[Int]
     val nLevels = Lineage.rounds("coreness levels", maxK)(n > 0) { k =>
       val (next, m, r) =

@@ -127,36 +127,40 @@ object LabelPropagation {
     lazyRounds(edges, edges.frame.select(col("src"), col("dst"),
       col("weight").cast("double").as("weight")), k, sum(col("weight")))
 
-  /** Materializing variant: runs up to maxRounds, stops early when no label
-    * changes; lineage truncated per batch. Output: (id, label), rounds run.
-    *
-    * `batch` composes k rounds lazily per materializing action (ONE job of
-    * pipelined stages per batch, amortizing the per-round serial term).
-    * Each round references the previous labels twice (vote join + carry),
-    * so a lazy batch grows ~2^k plan leaves — all pointing at the same
-    * cached frame, fine for small k (default 4 → ≤16 leaves), ruinous
-    * for large k (SURVEY.md §9 anti-lesson); on an [[EdgeSet.Symmetric]]
-    * the carry join goes and the batch is a linear chain (doubling the
-    * batch on top measured slightly slower, r6). The changed-flag
-    * is computed on the LAST round of the batch only: if that round
-    * changed nothing the labels are a fixpoint, so stopping is exact; a
-    * run may execute up to batch-1 extra no-op rounds past the fixpoint.
+  /** Rounds composed lazily per materializing action in [[run]] (ONE job
+    * of pipelined stages per batch, amortizing the per-round serial
+    * term). Each round references the previous labels twice (vote join +
+    * carry), so a lazy batch grows ~2^k plan leaves — all pointing at the
+    * same cached frame, fine for small k (4 → ≤16 leaves), ruinous for
+    * large k (SURVEY.md §9 anti-lesson); on an [[EdgeSet.Symmetric]] the
+    * carry join goes and the batch is a linear chain (doubling the batch
+    * on top measured slightly slower, r6).
     */
-  def run(spark: SparkSession, edges: EdgeSet, maxRounds: Int = 50,
-          numPartitions: Int = 32, batch: Int = 4): (DataFrame, Int) = {
+  private val Batch = 4
+
+  /** Materializing variant: runs up to maxRounds, stops early when no label
+    * changes; lineage truncated per batch of [[Batch]] rounds. Output:
+    * (id, label), rounds run. The changed-flag is computed on the LAST
+    * round of the batch only: if that round changed nothing the labels are
+    * a fixpoint, so stopping is exact; a run may execute up to Batch-1
+    * extra no-op rounds past the fixpoint.
+    */
+  def run(spark: SparkSession, edges: EdgeSet,
+          maxRounds: Int = 50): (DataFrame, Int) = {
     val carry = !edges.isInstanceOf[EdgeSet.Symmetric]
     val e = edges.frame.select("src", "dst")
-      .repartition(numPartitions, col("src")).transform(Lineage.cut(_, eager = true))
-    val nEff = Lineage.adaptiveParallelism(e.count(), numPartitions)
-    Lineage.withLoopConf(spark, nEff) {
+      .repartition(Lineage.partitions(spark), col("src"))
+      .transform(Lineage.cut(_, eager = true))
+    val rows = e.count()
+    Lineage.withLoopConf(spark) {
+    Lineage.withAdaptiveLoopConf(spark, rows) { nEff =>
     var labels = GraphOps.vertices(e)
       .select(col("id"), col("id").as("label"))
       .repartition(nEff, col("id")).transform(Lineage.cut(_, eager = true))
-    val effBatch = math.max(1, batch)
     var r = 0
     var done = false
     while (r < maxRounds && !done) {
-      val inner = math.min(effBatch, maxRounds - r)
+      val inner = math.min(Batch, maxRounds - r)
       var next = labels
       for (i <- 1 to inner)
         next = round(e, next, withFlag = i == inner, carry = carry)
@@ -170,6 +174,7 @@ object LabelPropagation {
       done = changed == 0
     }
     (labels, r)
+    }
     }
   }
 }

@@ -42,12 +42,12 @@ object Matching {
   /** Unweighted maximal matching; returns the canonical (src < dst)
     * matching edges plus the round count.
     */
-  def run(spark: SparkSession, edges: DataFrame, numPartitions: Int = 32,
+  def run(spark: SparkSession, edges: DataFrame,
           maxRounds: Int = 100): (DataFrame, Int) = {
     val init = GraphOps.orient(edges) // canonical src<dst simple edges
       .select(col("src"), col("dst"),
         GraphOps.md5Prio(concat_ws(":", col("src"), col("dst"))).as("p"))
-    val (m, r) = greedyLoop(spark, init, numPartitions, maxRounds)
+    val (m, r) = greedyLoop(spark, init, maxRounds)
     (m.select("src", "dst"), r)
   }
 
@@ -57,7 +57,6 @@ object Matching {
     * pair keep the max weight. Returns (src, dst, weight) + rounds.
     */
   def runWeighted(spark: SparkSession, edges: DataFrame,
-                  numPartitions: Int = 32,
                   maxRounds: Int = 100): (DataFrame, Int) = {
     val canon = edges
       .select(least(col("src"), col("dst")).as("src"),
@@ -74,7 +73,7 @@ object Matching {
         s"weighted matching requires weight < 2^23, got max $wMax")
     val init = canon.select(col("src"), col("dst"), col("weight"),
       weightedPrio(col("weight"), col("src"), col("dst")).as("p"))
-    greedyLoop(spark, init, numPartitions, maxRounds)
+    greedyLoop(spark, init, maxRounds)
   }
 
   /** Greedy maximal b-MATCHING (each vertex matches up to `b` edges; b = 1
@@ -95,17 +94,16 @@ object Matching {
     * canonical (src < dst) accepted edges plus the round count.
     */
   def runB(spark: SparkSession, edges: DataFrame, b: Int,
-           numPartitions: Int = 32,
            maxRounds: Int = 100): (DataFrame, Int) = {
     require(b >= 1, s"b-matching needs b >= 1, got $b")
     import org.apache.spark.sql.expressions.Window
     var active = GraphOps.orient(edges)
       .select(col("src"), col("dst"),
         GraphOps.md5Prio(concat_ws(":", col("src"), col("dst"))).as("p"))
-      .repartition(numPartitions, col("src"))
+      .repartition(Lineage.partitions(spark), col("src"))
       .transform(Lineage.cut(_, eager = true))
     var nActive = active.count()
-    Lineage.withAdaptiveLoopConf(spark, nActive, numPartitions) { _ =>
+    Lineage.withAdaptiveLoopConf(spark, nActive) { _ =>
     var caps = GraphOps.vertices(active)
       .select(col("id").as("v"), lit(b.toLong).as("cap"))
       .transform(Lineage.cut(_, eager = true))
@@ -155,14 +153,13 @@ object Matching {
     * with distinct priorities p; keeps all non-p columns on the winners.
     */
   private def greedyLoop(spark: SparkSession, init: DataFrame,
-                         numPartitions: Int,
                          maxRounds: Int): (DataFrame, Int) = {
     val outCols = init.columns.filter(_ != "p").toSeq
     var active = init
-      .repartition(numPartitions, col("src"))
+      .repartition(Lineage.partitions(spark), col("src"))
       .transform(Lineage.cut(_, eager = true))
     var nActive = active.count()
-    Lineage.withAdaptiveLoopConf(spark, nActive, numPartitions) { _ =>
+    Lineage.withAdaptiveLoopConf(spark, nActive) { _ =>
     var matched = spark.range(0)
       .select(outCols.map(c => col("id").as(c)): _*)
     val r = Lineage.rounds("matching", maxRounds)(nActive > 0) { _ =>

@@ -29,13 +29,13 @@ import graft.graph.{EdgeSet, GraphOps}
   */
 object Mis {
 
-  def run(spark: SparkSession, edges: DataFrame, numPartitions: Int = 32,
+  def run(spark: SparkSession, edges: DataFrame,
           maxRounds: Int = 100): (DataFrame, Int) = {
     val e = EdgeSet.symmetric(edges).frame
-      .repartition(numPartitions, col("src"))
+      .repartition(Lineage.partitions(spark), col("src"))
       .transform(Lineage.cut(_, eager = true))
     val verts = GraphOps.vertices(e).transform(Lineage.cut(_, eager = true))
-    Lineage.withAdaptiveLoopConf(spark, e.count(), numPartitions) { _ =>
+    Lineage.withAdaptiveLoopConf(spark, e.count()) { _ =>
     var active = verts
       .select(col("id"), GraphOps.md5Prio(col("id").cast("string")).as("p"))
       .transform(Lineage.cut(_))

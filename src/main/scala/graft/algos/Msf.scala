@@ -38,9 +38,9 @@ import graft.graph.GraphOps
   */
 object Msf {
 
-  def run(spark: SparkSession, edges: DataFrame, numPartitions: Int = 32,
-          maxRounds: Int = 48, maxJumpRounds: Int = 32): DataFrame =
-    runWithStats(spark, edges, numPartitions, maxRounds, maxJumpRounds)._1
+  def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 48,
+          maxJumpRounds: Int = 32): DataFrame =
+    runWithStats(spark, edges, maxRounds, maxJumpRounds)._1
 
   /** `edges`: (src, dst, weight) in any orientation; canonicalized to
     * src < dst keeping the min weight per pair, self-loops dropped,
@@ -48,14 +48,13 @@ object Msf {
     * (src, dst, weight) plus stats (rounds, jumpRounds, maxJump).
     */
   def runWithStats(spark: SparkSession, edges: DataFrame,
-                   numPartitions: Int = 32, maxRounds: Int = 48,
+                   maxRounds: Int = 48,
                    maxJumpRounds: Int = 32): (DataFrame, Map[String, Int]) =
-    Lineage.withLoopConf(spark, numPartitions) {
-      runLoop(spark, edges, numPartitions, maxRounds, maxJumpRounds)
+    Lineage.withLoopConf(spark) {
+      runLoop(spark, edges, maxRounds, maxJumpRounds)
     }
 
-  private def runLoop(spark: SparkSession, edges: DataFrame,
-                      numPartitions: Int, maxRounds: Int,
+  private def runLoop(spark: SparkSession, edges: DataFrame, maxRounds: Int,
                       maxJumpRounds: Int): (DataFrame, Map[String, Int]) = {
     val canon = edges
       .select(least(col("src"), col("dst")).as("src"),
@@ -79,13 +78,11 @@ object Msf {
           conv(substring(md5(concat_ws(":", col("src"), col("dst"))), 1, 10),
             16, 10).cast("long")).as("pri"),
         col("src"), col("dst"), col("weight"))
-      .repartition(numPartitions, col("cu"))
+      .repartition(Lineage.partitions(spark), col("cu"))
       .transform(Lineage.cut(_, eager = true))
     var nActive = ce.count()
-    // scale-adaptive round parallelism (restored by withLoopConf's exit)
-    val nP = Lineage.adaptiveParallelism(nActive, numPartitions)
-    if (nP != numPartitions)
-      spark.conf.set("spark.sql.shuffle.partitions", nP.toString)
+    // scale-adaptive round parallelism
+    Lineage.withAdaptiveLoopConf(spark, nActive) { nP =>
     var forest = spark.range(0).select(col("id").as("src"),
       col("id").as("dst"), col("id").as("weight"))
     var jumpTotal = 0
@@ -166,5 +163,6 @@ object Msf {
     }
     (forest, Map("rounds" -> rounds, "jumpRounds" -> jumpTotal,
       "maxJump" -> maxJump))
+    }
   }
 }

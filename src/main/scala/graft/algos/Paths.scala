@@ -232,13 +232,12 @@ object Paths {
     * IllegalStateException when `maxBuckets` / `maxInner` exhaust.
     */
   def deltaStepping(spark: SparkSession, edges: DataFrame, source: DataFrame,
-                    delta: Double, numPartitions: Int = 32,
-                    maxBuckets: Int = 10000,
+                    delta: Double, maxBuckets: Int = 10000,
                     maxInner: Int = 200): (DataFrame, Int, Int) = {
     require(delta > 0, s"delta-stepping needs delta > 0, got $delta")
     val e = edges.select(col("src"), col("dst"),
         col("weight").cast("double").as("w"))
-      .repartition(numPartitions, col("src"))
+      .repartition(Lineage.partitions(spark), col("src"))
       .transform(Lineage.cut(_, eager = true))
     val light = e.where(col("w") <= delta)
     val heavy = e.where(col("w") > delta)

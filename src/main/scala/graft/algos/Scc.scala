@@ -67,36 +67,34 @@ object Scc {
     */
   private val TrimRounds = 4
 
-  def run(spark: SparkSession, edges: DataFrame, numPartitions: Int = 32,
-          maxOuter: Int = 100, verbose: Boolean = false,
+  def run(spark: SparkSession, edges: DataFrame, maxOuter: Int = 100,
           maxSweepRounds: Int = 48): DataFrame =
-    runWithStats(spark, edges, numPartitions, maxOuter, verbose,
-      maxSweepRounds)._1
+    runWithStats(spark, edges, maxOuter, maxSweepRounds)._1
 
   /** As [[run]], plus round stats: outer / trim / sweep round counts —
     * the spec pins sweepRounds ≪ diameter on a deep chain of SCCs.
     */
   def runWithStats(spark: SparkSession, edges: DataFrame,
-                   numPartitions: Int = 32, maxOuter: Int = 100,
-                   verbose: Boolean = false,
+                   maxOuter: Int = 100,
                    maxSweepRounds: Int = 48): (DataFrame, Map[String, Int]) =
-    Lineage.withLoopConf(spark, numPartitions) {
-      runLoop(spark, edges, numPartitions, maxOuter, verbose, maxSweepRounds)
+    Lineage.withLoopConf(spark) {
+      val e = edges.select("src", "dst").where(col("src") =!= col("dst"))
+        .distinct()
+        .repartition(Lineage.partitions(spark), col("src"))
+        .transform(Lineage.cut(_, eager = true))
+      // scale-adaptive round parallelism (guide §2): the loop's shuffles
+      // track the measured edge count, not the session's ceiling
+      Lineage.withAdaptiveLoopConf(spark, e.count()) { n =>
+        runLoop(spark, e, n, maxOuter, maxSweepRounds)
+      }
     }
 
-  private def runLoop(spark: SparkSession, edges: DataFrame,
-                      numPartitions: Int, maxOuter: Int, verbose: Boolean,
+  /** The rounds over the distinct, self-loop-free edges `e0`, shuffled at
+    * `n` partitions. */
+  private def runLoop(spark: SparkSession, e0: DataFrame, n: Int,
+                      maxOuter: Int,
                       maxSweepRounds: Int): (DataFrame, Map[String, Int]) = {
-    var e = edges.select("src", "dst").where(col("src") =!= col("dst"))
-      .distinct()
-      .repartition(numPartitions, col("src"))
-      .transform(Lineage.cut(_, eager = true))
-    // scale-adaptive round parallelism (guide §2): the loop's shuffles
-    // track the measured edge count, not the configured ceiling — restored
-    // by withLoopConf on exit
-    val n = Lineage.adaptiveParallelism(e.count(), numPartitions)
-    if (n != numPartitions)
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    var e = e0
     var active = GraphOps.vertices(e).transform(Lineage.cut(_, eager = true))
     var nActive = active.count()
     var done = spark.range(0).select(col("id"), col("id").as("scc"))
@@ -125,7 +123,7 @@ object Scc {
         .transform(Lineage.cut(_))
       var changed = true
       val r = Lineage.rounds(s"SCC sweep (outer round $outer)",
-          maxSweepRounds)(changed) { round =>
+          maxSweepRounds)(changed) { _ =>
         val msgs = e2
           .join(cur.select(col("id").as("src"), col("dir"),
             struct(col("bp").as("p"), col("bi").as("i")).as("mb")),
@@ -152,7 +150,6 @@ object Scc {
         changed = Option(next.agg(sum(when(col("ch"), 1L).otherwise(0L)))
           .head().get(0)).exists(_.asInstanceOf[Long] > 0)
         cur = next.select("id", "dir", "bp", "bi")
-        if (verbose) println(s"[scc]   sweep round $round changed=$changed")
       }
       val out = cur.where(col("dir") === 0).select(col("id"),
           col("bi").as("fi"))
@@ -225,9 +222,6 @@ object Scc {
         active = rest.select("id")
         nActive = nRest
       }
-      if (verbose)
-        println(s"[scc] outer=$outer trimRounds=$tr " +
-          s"sweepRounds=$sweepTotal remaining=$nActive")
     }
     (done, Map("outer" -> nOuter, "trimRounds" -> trimTotal,
       "sweepRounds" -> sweepTotal, "maxSweep" -> maxSweep))
@@ -241,9 +235,8 @@ object Scc {
     * one pair-keyed count; the condensation is tiny relative to the input
     * (≤ one row per surviving edge, usually orders of magnitude fewer).
     */
-  def condensation(spark: SparkSession, edges: DataFrame,
-                   numPartitions: Int = 32): DataFrame = {
-    val labels = run(spark, edges, numPartitions)
+  def condensation(spark: SparkSession, edges: DataFrame): DataFrame = {
+    val labels = run(spark, edges)
     edges.select("src", "dst")
       .join(labels.toDF("src", "src_scc"), Seq("src"))
       .join(labels.toDF("dst", "dst_scc"), Seq("dst"))

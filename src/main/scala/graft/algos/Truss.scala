@@ -65,8 +65,7 @@ object Truss {
     val spark = edges.sparkSession
     var e = GraphOps.orient(edges).transform(Lineage.cut(_, eager = true))
     var n = e.count()
-    val req = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    Lineage.withAdaptiveLoopConf(spark, n, req) { _ =>
+    Lineage.withAdaptiveLoopConf(spark, n) { _ =>
     var lastSupp = spark.range(0)
       .select(col("id").as("src"), col("id").as("dst"),
         col("id").as("support"))

@@ -65,8 +65,8 @@ object ScalingBench {
       val nEdges = edges.count()
       val t0 = System.nanoTime()
       val r = PageRank.run(spark, edges,
-        SuperstepConfig(numPartitions = partitions, tol = tol,
-          maxIter = maxIter, gridSide = gridSide, batchSize = batch,
+        SuperstepConfig(tol = tol, maxIter = maxIter, gridSide = gridSide,
+          batchSize = batch,
           // force the grid's shuffle path when a grid is requested — the
           // whole point of the grid evidence run is no frontier broadcast
           broadcastFrontierBelow =

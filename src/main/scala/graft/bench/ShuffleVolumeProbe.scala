@@ -45,7 +45,7 @@ object ShuffleVolumeProbe {
     spark.sparkContext.addSparkListener(acc)
     try {
       PageRank.run(spark, edges, SuperstepConfig(
-        numPartitions = 32, tol = 0.0, maxIter = steps,
+        tol = 0.0, maxIter = steps,
         gridSide = Some(g), broadcastFrontierBelow = 1L))
       // listener events are async; give the bus a moment to drain
       Thread.sleep(2000)

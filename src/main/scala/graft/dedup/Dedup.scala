@@ -327,12 +327,11 @@ object Dedup {
     * document text never enters any shuffle.
     */
   def clusters(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-               pairs: DataFrame, numPartitions: Int = 32,
-               idCol: String = "doc_id"): DataFrame = {
+               pairs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val e = pairs.select(col("doc1").as("src"), col("doc2").as("dst"))
       .localCheckpoint(true)
     val comp = graft.algos.ConnectedComponents.run(spark, e,
-      graft.engine.SuperstepConfig(numPartitions = numPartitions)).state
+      graft.engine.SuperstepConfig()).state
     docs.select(col(idCol))
       .join(comp, col(idCol) === col("id"), "left_outer")
       .select(col(idCol), coalesce(col("component"), col(idCol)).as("keep_id"))

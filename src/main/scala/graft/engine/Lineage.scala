@@ -3,32 +3,48 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.StatsBridge
 
-/** Per-round lineage truncation for iterative kernels. */
+/** The loop scaffolding of the iterative kernels: the session scopes their
+  * rounds run under, the capped round loop, and per-round lineage
+  * truncation. A loop's partition count comes from the session
+  * ([[partitions]]), lowered to the input's size by
+  * [[withAdaptiveLoopConf]].
+  */
 object Lineage {
 
-  /** Loop-scoped session tuning shared by every iterative kernel (the
-    * Superstep discipline, extracted in r5 when AQE was measured splitting
-    * each one-action SCC round into ~8 stage-jobs — BASELINE.md r5 "SCC
-    * rewritten", "AQE job explosion"): AQE off
-    * (pure scheduling overhead for hundreds of small identical round
-    * jobs), sort-merge join off (round joins must be shuffled-hash — SMJ
-    * re-sorts the big side every round), shuffle partitions pinned to the
-    * loop's co-partitioning. Restores the previous values on exit.
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** The shuffle partition count of `spark`'s session: LA3's process-grid
+    * size, fixed when the job is launched (PAPER §4). Every loop kernel
+    * takes its requested partition count from here; none takes it as a
+    * parameter, and only [[withAdaptiveLoopConf]] lowers it.
     */
-  def withLoopConf[T](spark: SparkSession, numPartitions: Int)(body: => T): T = {
-    val restore = Seq(
-      "spark.sql.adaptive.enabled" -> spark.conf.get(
-        "spark.sql.adaptive.enabled", "true"),
-      "spark.sql.join.preferSortMergeJoin" -> spark.conf.get(
-        "spark.sql.join.preferSortMergeJoin", "true"),
-      "spark.sql.shuffle.partitions" -> spark.conf.get(
-        "spark.sql.shuffle.partitions", "200"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", numPartitions.toString)
+  def partitions(spark: SparkSession): Int =
+    spark.conf.get(ShufflePartitions).toInt
+
+  /** Runs `body` with the session keys `kv` set, then restores each key's
+    * previous value, after a normal exit or a throw.
+    */
+  private[engine] def withConf[T](spark: SparkSession,
+                                  kv: (String, String)*)(body: => T): T = {
+    val restore = kv.map { case (k, _) => k -> spark.conf.get(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally restore.foreach { case (k, v) => spark.conf.set(k, v) }
   }
+
+  /** Loop-scoped session tuning of the many-round loops (the Superstep
+    * discipline, extracted in r5 when AQE was measured splitting each
+    * one-action SCC round into ~8 stage-jobs — BASELINE.md r5 "SCC
+    * rewritten", "AQE job explosion"): AQE off (pure scheduling overhead
+    * for hundreds of small identical round jobs) and sort-merge join off
+    * (round joins must be shuffled-hash — SMJ re-sorts the big side every
+    * round). The partition count stays the session's ([[partitions]]); a
+    * loop lowers it for its rounds with a nested [[withAdaptiveLoopConf]].
+    * Restores both keys on exit.
+    */
+  def withLoopConf[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.join.preferSortMergeJoin" -> "false")(body)
 
   /** The row unit of [[adaptiveParallelism]]: one adaptive partition's
     * worth of rows. A relation this small is also small enough to collect
@@ -46,30 +62,26 @@ object Lineage {
     * (integer/min/max/count aggregates, joins) — float SUM trajectories
     * (PageRank) keep their pinned count so rounding stays bit-stable.
     */
-  def adaptiveParallelism(rows: Long, requested: Int): Int =
+  private def adaptiveParallelism(rows: Long, requested: Int): Int =
     math.max(1L, math.min(requested.toLong,
       (rows + rowsPerPartition - 1) / rowsPerPartition)).toInt
 
-  /** [[withLoopConf]] with the partition count adapted to the measured
-    * input size ([[adaptiveParallelism]]); the body receives nEff.
+  /** Runs `body` at the session's partition count lowered to
+    * [[adaptiveParallelism]] of the measured `rows`; the body receives
+    * that count. Only the partition count changes, and only when the clamp
+    * engages: alone, this is the scope of the few-round peels (A/B on
+    * their tiny loops measured AQE-off as a small regression — their
+    * per-round joins were getting runtime broadcasts — and large inputs
+    * ran un-wrapped before r6 and measured fine); nested in
+    * [[withLoopConf]], it lowers a many-round loop's count after its prep.
+    * Restores the count on exit.
     */
-  def withAdaptiveLoopConf[T](spark: SparkSession, rows: Long,
-                              requested: Int)(body: Int => T): T = {
+  def withAdaptiveLoopConf[T](spark: SparkSession, rows: Long)(
+      body: Int => T): T = {
+    val requested = partitions(spark)
     val nEff = adaptiveParallelism(rows, requested)
-    // clamp not engaged → leave the session exactly as it was (AQE etc.):
-    // callers here ran un-wrapped before r6 and large inputs measured fine.
-    // When it does engage, lower ONLY the shuffle partition count — AQE
-    // and join-strategy preferences stay whatever the session chose (the
-    // full withLoopConf is for kernels that always ran under it; A/B on
-    // the few-round tiny loops measured AQE-off as a small regression:
-    // their per-round joins were getting runtime broadcasts).
     if (nEff == requested) body(nEff)
-    else {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions", "200")
-      spark.conf.set("spark.sql.shuffle.partitions", nEff.toString)
-      try body(nEff)
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    else withConf(spark, ShufflePartitions -> nEff.toString)(body(nEff))
   }
 
   /** The capped round loop of every hand-written iterative kernel: runs

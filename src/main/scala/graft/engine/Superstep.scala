@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   *
   * @param maxIter      superstep cap
   * @param tol          stationary convergence: stop when max(residual) < tol
-  * @param numPartitions fixed partition count for the co-partitioning the
-  *                     whole loop reuses (= LA3's process-grid size)
+  * @param numPartitions not read: the loop co-partitions at the session's
+  *                     shuffle partition count ([[Lineage.partitions]],
+  *                     LA3's process-grid size, fixed at launch)
   * @param broadcastFrontierBelow broadcast the frontier side of the gather
   *                     join when its row count is below this (LA3's
   *                     column-broadcast of active x-segments). Also the
@@ -95,19 +96,17 @@ object Superstep {
           vp: VertexProgram, cfg: SuperstepConfig,
           resume: Boolean = false): SuperstepResult = {
 
-    // The shared loop conf (shuffle partitions = cfg.numPartitions, so
-    // every loop shuffle aligns with the edge co-partitioning at any core
-    // count) plus one key of its own, restored on exit: the grid gather
-    // join clusters on (srcBlk, dstBlk, src) while the tiles are
-    // partitioned by the (srcBlk, dstBlk) PREFIX — without subset-key
-    // co-partitioning EnsureRequirements re-shuffles the whole edge side
-    // every superstep.
-    Lineage.withLoopConf(spark, cfg.numPartitions) {
-      val key = "spark.sql.requireAllClusterKeysForCoPartition"
-      val prev = spark.conf.get(key, "true")
-      spark.conf.set(key, "false")
-      try runLoop(spark, edges, graphVertices, vp, cfg, resume)
-      finally spark.conf.set(key, prev)
+    // The shared loop conf (every loop shuffle aligns with the edge
+    // co-partitioning at the session's partition count) plus one key of
+    // its own, restored on exit: the grid gather join clusters on
+    // (srcBlk, dstBlk, src) while the tiles are partitioned by the
+    // (srcBlk, dstBlk) PREFIX — without subset-key co-partitioning
+    // EnsureRequirements re-shuffles the whole edge side every superstep.
+    Lineage.withLoopConf(spark) {
+      Lineage.withConf(spark,
+          "spark.sql.requireAllClusterKeysForCoPartition" -> "false") {
+        runLoop(spark, edges, graphVertices, vp, cfg, resume)
+      }
     }
   }
 
@@ -117,7 +116,7 @@ object Superstep {
   private def runLoop(spark: SparkSession, edges: DataFrame,
                       graphVertices: DataFrame, vp: VertexProgram,
                       cfg: SuperstepConfig, resume: Boolean): SuperstepResult = {
-    val n = cfg.numPartitions
+    val n = Lineage.partitions(spark)
 
     val withW =
       if (vp.usesEdgeWeight && edges.columns.contains("weight"))
@@ -127,7 +126,7 @@ object Superstep {
       else edges.select(col("src"), col("dst"))
 
     // --- init or resume (before edge prep: the layout choice needs |V|) ---
-    var (startStep, state) = cfg.checkpoint.flatMap { ck =>
+    val (startStep, state) = cfg.checkpoint.flatMap { ck =>
       if (resume) ck.latestComplete().map { s =>
         (s + 1, ck.read(spark, s).repartition(n, col("id"))
           .transform(Lineage.cut(_, eager = true)))
@@ -147,15 +146,23 @@ object Superstep {
     // count so their rounding trajectory stays bit-stable). The clamp
     // only ever LOWERS the count, so cluster-scale runs are unaffected;
     // a 4k-edge CC fixpoint loop stops paying 32 tasks/stage/round.
-    val (wPre, nL) =
-      if (vp.partitionCountInvariant) {
-        val pre = withW.transform(Lineage.cut(_, eager = true))
-        val a = Lineage.adaptiveParallelism(pre.count(), n)
-        if (a != n)
-          spark.conf.set("spark.sql.shuffle.partitions", a.toString)
-        (pre, a)
-      } else (withW, n)
+    if (vp.partitionCountInvariant) {
+      val pre = withW.transform(Lineage.cut(_, eager = true))
+      Lineage.withAdaptiveLoopConf(spark, pre.count()) { nL =>
+        loop(spark, pre, nL, n, state, startStep, numVertices, vp, cfg)
+      }
+    } else loop(spark, withW, n, n, state, startStep, numVertices, vp, cfg)
+  }
 
+  /** The edge layout and the superstep loop over the prepared edges `wPre`
+    * and initial `state0` (`numVertices` rows, resumed at `startStep`):
+    * the loop's shuffles run at `nL` partitions, the state and the durable
+    * snapshots at the requested `n`.
+    */
+  private def loop(spark: SparkSession, wPre: DataFrame, nL: Int, n: Int,
+                   state0: DataFrame, startStep: Int, numVertices: Long,
+                   vp: VertexProgram, cfg: SuperstepConfig): SuperstepResult = {
+    var state = state0
     // --- one-time edge prep: pick ONE layout for the whole run ---
     val saltMode = cfg.hubTau.isDefined
     val gridMode = !saltMode && (cfg.gridSide.isDefined ||

@@ -156,16 +156,13 @@ object EdgeStream {
     * `Lineage.rowsPerPartition` rows, so every merge finishes on the
     * driver.
     */
-  def ccViaStream(edges: DataFrame, numPartitions: Int = 32,
-                  splits: Int = 5): DataFrame = {
-    val spark = edges.sparkSession
-    val cfg = graft.engine.SuperstepConfig(numPartitions = numPartitions)
+  def ccViaStream(edges: DataFrame, splits: Int = 5): DataFrame =
     Replay.fold(Replay.Split(edges.select(col("src"), col("dst")), splits),
-        spark.range(0).select(col("id"), col("id").as("component"))) {
+        edges.sparkSession.range(0)
+          .select(col("id"), col("id").as("component"))) {
       (labels, batch) =>
-        graft.algos.ConnectedComponents.incremental(labels, batch, cfg)
+        graft.algos.ConnectedComponents.incremental(labels, batch)
     }
-  }
 
   /** Streaming heavy hitters — the trending-items shape: top-k
     * destination vertices by edge count over the whole stream so far,

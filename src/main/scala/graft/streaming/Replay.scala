@@ -33,10 +33,10 @@ import graft.util.TempDir
   * AvailableNow replay commits one state-store instance PER shuffle
   * partition, so a 100k-row replay at the configured 32 partitions pays
   * splits × 32 near-empty state commits of pure overhead. The replay
-  * derives the stream's shuffle-partition count from the staged row count
-  * (parquet metadata count — no data scan; the same read gives the
-  * schema), with the configured count as the ceiling, and restores the
-  * session conf afterwards. Results are unchanged: every gated streaming
+  * runs under [[graft.engine.Lineage.withAdaptiveLoopConf]] of the staged
+  * row count (parquet metadata count — no data scan; the same read gives
+  * the schema): the session's count is the ceiling, and the scope
+  * restores it afterwards. Results are unchanged: every gated streaming
   * shape is a count/sum/min/dedup/session merge, all
   * partition-count-invariant; production-scale replays exceed the clamp
   * threshold and keep full parallelism.
@@ -131,14 +131,8 @@ private[streaming] object Replay {
       val staged = spark.read.parquet(dir.toString)
       val open = () => spark.readStream.schema(staged.schema)
         .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-      val req = spark.conf.get("spark.sql.shuffle.partitions", "200")
-      val n = graft.engine.Lineage.adaptiveParallelism(staged.count(),
-        req.toInt)
-      if (n == req.toInt) body(open)
-      else {
-        spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-        try body(open)
-        finally spark.conf.set("spark.sql.shuffle.partitions", req)
+      graft.engine.Lineage.withAdaptiveLoopConf(spark, staged.count()) { _ =>
+        body(open)
       }
     }
 }

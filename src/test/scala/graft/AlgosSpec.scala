@@ -97,7 +97,7 @@ class AlgosSpec extends SparkSpec {
       import s.implicits._
       val sources = (0L until n.toLong).toDF("id")
       val got = collectD(
-        Betweenness.run(spark, edgesDf(g), sources, numPartitions = 4),
+        Betweenness.run(spark, edgesDf(g), sources),
         "id", "btw")
       val exp = Oracles.bruteBetweenness(n, g, 0L until n.toLong)
       assert(got.size === n)
@@ -202,8 +202,7 @@ class AlgosSpec extends SparkSpec {
 
   test("LP.run converges and is a fixed point of one more round") {
     val und = GraphOps.symmetrize(edgesDf(twoTri))
-    val (labels, _) = LabelPropagation.run(spark, und, maxRounds = 20,
-      numPartitions = 4)
+    val (labels, _) = LabelPropagation.run(spark, und, maxRounds = 20)
     val again = LabelPropagation.fixedRounds(und, 1)
     // run's fixpoint: applying rounds from scratch must stabilize to the
     // same labels; compare via one more synchronous round over `labels`
@@ -321,7 +320,7 @@ class AlgosSpec extends SparkSpec {
         .filter(!_._2.isInfinity)
       val e = edgesWDf(und)
       val (df, buckets, _) = Paths.deltaStepping(spark, e,
-        e.select(col("src")).agg(min(col("src"))), delta, numPartitions = 4)
+        e.select(col("src")).agg(min(col("src"))), delta)
       val got = collectD(df.where(col("dist").isNotNull), "id", "dist")
       assert(got === exp, s"seed=$seed delta=$delta")
       // every processed bucket holds ≥1 settled distance ⇒ ≤ range/delta+1
@@ -335,7 +334,7 @@ class AlgosSpec extends SparkSpec {
     val e = edgesWDf(Seq((0L, 1L, 2.0), (1L, 2L, 2.0), (0L, 2L, 10.0),
       (2L, 3L, 1.0)))
     val (df, _, _) = Paths.deltaStepping(spark, e,
-      e.select(col("src")).agg(min(col("src"))), 2.0, numPartitions = 4)
+      e.select(col("src")).agg(min(col("src"))), 2.0)
     assert(collectD(df.where(col("dist").isNotNull), "id", "dist") ===
       Map(0L -> 0.0, 1L -> 2.0, 2L -> 4.0, 3L -> 5.0))
   }

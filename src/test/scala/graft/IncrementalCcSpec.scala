@@ -7,7 +7,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.algos.ConnectedComponents
-import graft.engine.SuperstepConfig
 import graft.streaming.EdgeStream
 
 /** [[ConnectedComponents.incremental]]: the driver finish and the
@@ -17,8 +16,6 @@ import graft.streaming.EdgeStream
   * conf and within a pinned job count.
   */
 class IncrementalCcSpec extends SparkSpec {
-
-  private val cfg = SuperstepConfig(numPartitions = 4)
 
   private def verts(pairs: Seq[(Long, Long)]): Seq[Long] =
     pairs.flatMap(p => Seq(p._1, p._2)).distinct
@@ -42,7 +39,7 @@ class IncrementalCcSpec extends SparkSpec {
   private def bothPaths(base: Seq[(Long, Long)], delta: Seq[(Long, Long)])
       : (Map[Long, Long], Map[Long, Long]) = {
     def labels(driverRows: Long) = collectL(
-      ConnectedComponents.incremental(baseLabels(base), edgesDf(delta), cfg,
+      ConnectedComponents.incremental(baseLabels(base), edgesDf(delta),
         driverRows), "id", "component")
     (labels(Long.MaxValue), labels(0L))
   }
@@ -109,7 +106,7 @@ class IncrementalCcSpec extends SparkSpec {
   test("ccViaStream folds run every job AQE-off, at most 5 jobs a fold") {
     val pairs = Oracles.randomGraph(seed = 67, n = 40, m = 55)
     val (got, jobs) = foldJobsDuring(EdgeStream.ccViaStream(edgesDf(pairs),
-      numPartitions = 4, splits = 3).collect())
+      splits = 3).collect())
     assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap ===
       Oracles.unionFind(verts(pairs), pairs))
     // 3 batches: a fold is a count, a collect and the relabel's jobs

@@ -15,8 +15,7 @@ import graft.text.TextOps
 class MsfKatzSpec extends SparkSpec {
 
   private def msfSet(triples: Seq[(Long, Long, Long)]): Set[(Long, Long, Long)] =
-    Msf.run(spark, edgesWDf(triples.map(t => (t._1, t._2, t._3.toDouble))),
-        numPartitions = 4)
+    Msf.run(spark, edgesWDf(triples.map(t => (t._1, t._2, t._3.toDouble))))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("Msf ≡ sequential Kruskal on golden weighted graph") {
@@ -55,7 +54,7 @@ class MsfKatzSpec extends SparkSpec {
     val path = (0L until 256L).sliding(2).map(p =>
       (p(0), p(1), (10 + p(0)).toLong)).toSeq
     val (forest, stats) = Msf.runWithStats(spark,
-      edgesWDf(path.map(t => (t._1, t._2, t._3.toDouble))), numPartitions = 4)
+      edgesWDf(path.map(t => (t._1, t._2, t._3.toDouble))))
     assert(forest.count() === 255L) // MSF of a tree is the tree
     assert(stats("rounds") <= 3,
       s"expected ≤3 Borůvka rounds on a path, got ${stats("rounds")}")

@@ -61,7 +61,7 @@ class PipelineOpsSpec extends SparkSpec {
     val chain = Seq((1L, base), (2L, nearDup), (3L, distinct1),
       (4L, base), (5L, "tiny doc"), (6L, nearDup2))
     val pairs = Dedup.minhashLsh(docsDf(chain), 3, 16, 0.5)
-    val got = Dedup.clusters(spark, docsDf(chain), pairs, numPartitions = 4)
+    val got = Dedup.clusters(spark, docsDf(chain), pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // expected: union-find closure over the ACTUAL emitted pairs
     val ps = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))

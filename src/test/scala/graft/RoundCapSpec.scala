@@ -60,65 +60,67 @@ class RoundCapSpec extends SparkSpec {
     val (a, b) = (2L * i, 2L * i + 1)
     Seq((a, b), (b, a)) ++ (if (i < 7) Seq((b, 2L * (i + 1))) else Nil)
   })
+  private def zero: DataFrame = spark.range(1).toDF("id")
   private def sssp(delta: Double, maxBuckets: Int = 10000,
                    maxInner: Int = 200): (Int, Int) = {
     val e = edgesWDf((0L until 6L).flatMap(i =>
       Seq((i, i + 1, 1.0), (i + 1, i, 1.0))))
     val (_, buckets, light) = Paths.deltaStepping(spark, e,
-      e.agg(min(col("src"))), delta, 4, maxBuckets, maxInner)
+      e.agg(min(col("src"))), delta, maxBuckets, maxInner)
     (buckets, light)
   }
 
   /** (loop, rounds at the default cap, the same run with the cap at 1) */
   private val table: Seq[(String, () => Int, () => Any)] = Seq(
-    ("Mis", () => Mis.run(spark, random, 4)._2,
-      () => Mis.run(spark, random, 4, maxRounds = 1)),
-    ("Coloring", () => Coloring.runWithRounds(spark, random,
-        numPartitions = 4)._2,
-      () => Coloring.runWithRounds(spark, random, maxRounds = 1,
-        numPartitions = 4)),
+    ("Mis", () => Mis.run(spark, random)._2,
+      () => Mis.run(spark, random, maxRounds = 1)),
+    ("Coloring", () => Coloring.runWithRounds(spark, random)._2,
+      () => Coloring.runWithRounds(spark, random, maxRounds = 1)),
     ("KCore.converged", () => KCore.converged(tail, 2)._2,
       () => KCore.converged(tail, 2, maxRounds = 1)),
     ("KCore.coreness levels", () => KCore.coreness(tail)._3.size,
       () => KCore.coreness(tail, maxK = 1)),
-    ("Matching.run", () => Matching.run(spark, random, 4)._2,
-      () => Matching.run(spark, random, 4, maxRounds = 1)),
-    ("Matching.runWeighted", () => Matching.runWeighted(spark, weighted,
-        4)._2,
-      () => Matching.runWeighted(spark, weighted, 4, maxRounds = 1)),
-    ("Matching.runB", () => Matching.runB(spark, random, 2, 4)._2,
-      () => Matching.runB(spark, random, 2, 4, maxRounds = 1)),
+    ("Matching.run", () => Matching.run(spark, random)._2,
+      () => Matching.run(spark, random, maxRounds = 1)),
+    ("Matching.runWeighted", () => Matching.runWeighted(spark, weighted)._2,
+      () => Matching.runWeighted(spark, weighted, maxRounds = 1)),
+    ("Matching.runB", () => Matching.runB(spark, random, 2)._2,
+      () => Matching.runB(spark, random, 2, maxRounds = 1)),
     ("Msf Borůvka rounds",
-      () => Msf.runWithStats(spark, msfGraph, 4)._2("rounds"),
-      () => Msf.runWithStats(spark, msfGraph, 4, maxRounds = 1)),
+      () => Msf.runWithStats(spark, msfGraph)._2("rounds"),
+      () => Msf.runWithStats(spark, msfGraph, maxRounds = 1)),
     ("Msf pointer jumping",
-      () => Msf.runWithStats(spark, msfGraph, 4)._2("maxJump"),
-      () => Msf.runWithStats(spark, msfGraph, 4, maxJumpRounds = 1)),
+      () => Msf.runWithStats(spark, msfGraph)._2("maxJump"),
+      () => Msf.runWithStats(spark, msfGraph, maxJumpRounds = 1)),
     ("Densest.peelProfile",
-      () => Densest.peelProfile(spark, edgesDf(densest), 4).count().toInt,
-      () => Densest.peelProfile(spark, edgesDf(densest), 4, maxRounds = 1)),
+      () => Densest.peelProfile(spark, edgesDf(densest)).count().toInt,
+      () => Densest.peelProfile(spark, edgesDf(densest), maxRounds = 1)),
     ("Densest.peelProfileWeighted",
       () => Densest.peelProfileWeighted(spark,
-        edgesWDf(densest.map(t => (t._1, t._2, 1.0))), 4).count().toInt,
+        edgesWDf(densest.map(t => (t._1, t._2, 1.0)))).count().toInt,
       () => Densest.peelProfileWeighted(spark,
-        edgesWDf(densest.map(t => (t._1, t._2, 1.0))), 4, maxRounds = 1)),
+        edgesWDf(densest.map(t => (t._1, t._2, 1.0))), maxRounds = 1)),
     ("Truss.converged", () => Truss.converged(truss, 3)._2,
       () => Truss.converged(truss, 3, maxRounds = 1)),
     ("Scc outer rounds",
-      () => Scc.runWithStats(spark, sccChain, 4)._2("outer"),
-      () => Scc.runWithStats(spark, sccChain, 4, maxOuter = 1)),
+      () => Scc.runWithStats(spark, sccChain)._2("outer"),
+      () => Scc.runWithStats(spark, sccChain, maxOuter = 1)),
     ("Scc sweep rounds",
-      () => Scc.runWithStats(spark, sccChain, 4)._2("maxSweep"),
-      () => Scc.runWithStats(spark, sccChain, 4, maxSweepRounds = 1)),
+      () => Scc.runWithStats(spark, sccChain)._2("maxSweep"),
+      () => Scc.runWithStats(spark, sccChain, maxSweepRounds = 1)),
     ("ConnectedComponents.stars",
-      () => ConnectedComponents.stars(path, 4)._2,
-      () => ConnectedComponents.stars(path, 4, maxRounds = 1)),
+      () => ConnectedComponents.stars(path)._2,
+      () => ConnectedComponents.stars(path, maxRounds = 1)),
     // unit weights: delta 1 opens one bucket per hop; delta 100 puts the
     // whole path in bucket 0, closed by one light round per hop
     ("Paths.deltaStepping buckets", () => sssp(1.0)._1,
       () => sssp(1.0, maxBuckets = 1)),
     ("Paths.deltaStepping light rounds", () => sssp(100.0)._2,
-      () => sssp(100.0, maxInner = 1)))
+      () => sssp(100.0, maxInner = 1)),
+    // from vertex 0 of the path: one round per level, then the empty one
+    ("Betweenness forward BFS",
+      () => Betweenness.runWithRounds(spark, path, zero)._2,
+      () => Betweenness.runWithRounds(spark, path, zero, 1)))
 
   for ((name, atDefault, atCap1) <- table)
     test(s"round cap: $name — ≥ 2 rounds at the default cap, throws at 1") {

@@ -9,7 +9,7 @@ import graft.algos.{Scc, Truss}
 class SccTrussSpec extends SparkSpec {
 
   private def sccMap(pairs: Seq[(Long, Long)]): Map[Long, Long] =
-    Scc.run(spark, edgesDf(pairs), numPartitions = 4)
+    Scc.run(spark, edgesDf(pairs))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("scc golden: two 3-cycles joined by a one-way bridge") {
@@ -59,7 +59,7 @@ class SccTrussSpec extends SparkSpec {
         (if (i < k - 1) Seq((b, 2L * (i + 1))) else Nil)
     }
     val verts = (0L until 2L * k)
-    val (df, stats) = Scc.runWithStats(spark, edgesDf(g), numPartitions = 4)
+    val (df, stats) = Scc.runWithStats(spark, edgesDf(g))
     val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === verts.map(v => v -> (v - v % 2)).toMap)
     val diameter = 2 * k - 1 // 255; log2 = 8
@@ -108,7 +108,7 @@ class SccTrussSpec extends SparkSpec {
 
   private def starsMap(pairs: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
     val (df, r) = graft.algos.ConnectedComponents
-      .stars(edgesDf(pairs), numPartitions = 4)
+      .stars(edgesDf(pairs))
     (df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap, r)
   }
 
@@ -141,8 +141,7 @@ class SccTrussSpec extends SparkSpec {
       val g = Oracles.randomGraph(seed, 25, 55)
       val verts = g.flatMap(p => Seq(p._1, p._2)).distinct
       val want = Oracles.bruteMis(verts, g)
-      val (df, _) = graft.algos.Mis.run(spark, edgesDf(g),
-        numPartitions = 4)
+      val (df, _) = graft.algos.Mis.run(spark, edgesDf(g))
       val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === want, s"seed=$seed")
       // independence: no edge with both endpoints in the set
@@ -181,8 +180,7 @@ class SccTrussSpec extends SparkSpec {
     for (seed <- Seq(3, 17)) {
       val g = Oracles.randomGraph(seed, 25, 60)
       val want = Oracles.bruteMatching(g)
-      val (df, _) = graft.algos.Matching.run(spark, edgesDf(g),
-        numPartitions = 4)
+      val (df, _) = graft.algos.Matching.run(spark, edgesDf(g))
       val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === want, s"seed=$seed")
       // validity: no two matching edges share an endpoint
@@ -200,8 +198,7 @@ class SccTrussSpec extends SparkSpec {
     for (seed <- Seq(5, 19); b <- 1 to 3) {
       val g = Oracles.randomGraph(seed, 22, 70)
       val want = Oracles.bruteBMatching(g, b)
-      val (df, _) = graft.algos.Matching.runB(spark, edgesDf(g), b,
-        numPartitions = 4)
+      val (df, _) = graft.algos.Matching.runB(spark, edgesDf(g), b)
       val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === want, s"seed=$seed b=$b")
       // validity: no vertex exceeds capacity b
@@ -217,8 +214,7 @@ class SccTrussSpec extends SparkSpec {
     }
     // b = 1 degenerates to the unweighted matching
     val g1 = Oracles.randomGraph(3, 25, 60)
-    val (b1, _) = graft.algos.Matching.runB(spark, edgesDf(g1), 1,
-      numPartitions = 4)
+    val (b1, _) = graft.algos.Matching.runB(spark, edgesDf(g1), 1)
     assert(b1.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
       Oracles.bruteMatching(g1))
   }
@@ -232,7 +228,7 @@ class SccTrussSpec extends SparkSpec {
       val s = spark
       import s.implicits._
       val (df, _) = graft.algos.Matching.runWeighted(spark,
-        g.toDF("src", "dst", "weight"), numPartitions = 4)
+        g.toDF("src", "dst", "weight"))
       val got = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got === want, s"seed=$seed")
@@ -250,14 +246,13 @@ class SccTrussSpec extends SparkSpec {
     import s.implicits._
     val path = Seq((0L, 1L, 1L), (1L, 2L, 9L), (2L, 3L, 1L))
       .toDF("src", "dst", "weight")
-    val (dom, _) = graft.algos.Matching.runWeighted(spark, path,
-      numPartitions = 4)
+    val (dom, _) = graft.algos.Matching.runWeighted(spark, path)
     assert(dom.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
       Set((1L, 2L)))
     // oversized weights fail loudly (the priority packing bound)
     val big = Seq((0L, 1L, 1L << 24)).toDF("src", "dst", "weight")
     intercept[IllegalArgumentException] {
-      graft.algos.Matching.runWeighted(spark, big, numPartitions = 4)
+      graft.algos.Matching.runWeighted(spark, big)
     }
   }
 
@@ -303,7 +298,7 @@ class SccTrussSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     val r = try {
-      val rows = graft.engine.Lineage.withLoopConf(spark, 4) {
+      val rows = graft.engine.Lineage.withLoopConf(spark) {
         graft.algos.Paths.doubleSweepDiameter(und, 10).collect()
       }
       Bus.drain(spark.sparkContext)

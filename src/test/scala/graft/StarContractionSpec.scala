@@ -15,7 +15,7 @@ import graft.algos.ConnectedComponents
 class StarContractionSpec extends SparkSpec {
 
   private def starsMap(pairs: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
-    val (df, r) = ConnectedComponents.stars(edgesDf(pairs), 4)
+    val (df, r) = ConnectedComponents.stars(edgesDf(pairs))
     (df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap, r)
   }
 
@@ -88,7 +88,7 @@ class StarContractionSpec extends SparkSpec {
     import other.implicits._
     val path = (0L until 11L).map(i => (i, i + 1)).toDF("src", "dst")
     val ((_, rounds), jobs) =
-      jobsDuring(ConnectedComponents.stars(path, 4))
+      jobsDuring(ConnectedComponents.stars(path))
     val roundJobs = jobs.filter(_._1.contains("Lineage$.rounds"))
     assert(roundJobs.size === rounds)
     assert(roundJobs.forall(_._2.contains("false")),

@@ -44,7 +44,7 @@ class Wave10Spec extends SparkSpec {
     val want = e.map { case (s, d) => (lab(s), lab(d)) }
       .filter { case (a, b) => a != b }
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val got = Scc.condensation(spark, edgesDf(e), 4).collect()
+    val got = Scc.condensation(spark, edgesDf(e)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == want)
     assert(got.contains((0L, 3L)) && got((0L, 3L)) == 2L)

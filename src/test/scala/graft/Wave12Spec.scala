@@ -92,7 +92,7 @@ class Wave12Spec extends SparkSpec {
   test("ccViaStream drained labels ≡ batch CC on the full edge set") {
     val pairs = Oracles.randomGraph(seed = 67, n = 40, m = 55)
       .filter(e => e._1 != e._2).distinct
-    val got = EdgeStream.ccViaStream(edgesDf(pairs), numPartitions = 4,
+    val got = EdgeStream.ccViaStream(edgesDf(pairs),
         splits = 5).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = ConnectedComponents

@@ -45,7 +45,7 @@ class Wave24Spec extends SparkSpec {
       .filter(t => t._1 != t._2).distinct
     val sym = canon.flatMap { case (a, b) => Seq((a, b), (b, a)) }
     val want = brutePeel(sym)
-    val got = Densest.peelProfile(spark, edgesDf(sym), 4)
+    val got = Densest.peelProfile(spark, edgesDf(sym))
       .orderBy("round").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toVector

@@ -71,7 +71,7 @@ class Wave33Spec extends SparkSpec {
       (ri, n, w2, if (best) 1L else 0L)
     }
     val got = Densest.peelProfileWeighted(spark,
-        edgesWDf(sym.map(t => (t._1, t._2, t._3.toDouble))), 4)
+        edgesWDf(sym.map(t => (t._1, t._2, t._3.toDouble))))
       .orderBy("round").collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3)))
       .toVector

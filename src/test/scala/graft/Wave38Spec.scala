@@ -35,7 +35,7 @@ class Wave38Spec extends SparkSpec {
     val canon = Oracles.randomGraph(5303, 40, 140)
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
       .filter(t => t._1 != t._2).distinct
-    val (m, _) = graft.algos.Matching.run(spark, edgesDf(canon), 4)
+    val (m, _) = graft.algos.Matching.run(spark, edgesDf(canon))
     val cover = m.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct().collect().map(_.getLong(0)).toSet
     canon.foreach { case (a, b) =>

@@ -91,7 +91,7 @@ class Wave41Spec extends SparkSpec {
     // Exact doubles on purpose: the order of each rank's sums is stable.
     // PageRank.run runs inside Superstep.run, which enters
     // Lineage.withLoopConf: AQE is off and the shuffle partition count is
-    // pinned to numPartitions. Both gather joins (broadcast at batch 1,
+    // pinned to the session's. Both gather joins (broadcast at batch 1,
     // the grid's shuffled hash at batch 3) stream the edge partitions in
     // place, so each partial sum adds the same messages in the same order
     // and the final aggregate merges the same partials in the same

@@ -126,7 +126,7 @@ class Wave6Spec extends SparkSpec {
     assume(base.nonEmpty && delta.nonEmpty)
     val baseLabels = ConnectedComponents.run(spark, edgesDf(base), cfg).state
     val got = collectL(
-      ConnectedComponents.incremental(baseLabels, edgesDf(delta), cfg),
+      ConnectedComponents.incremental(baseLabels, edgesDf(delta)),
       "id", "component")
     val vs = all.flatMap(p => Seq(p._1, p._2)).distinct
     assert(got == Oracles.unionFind(vs, all))
@@ -139,7 +139,7 @@ class Wave6Spec extends SparkSpec {
     val delta = Seq((1L, 100L), (100L, 5L), (200L, 201L))
     val baseLabels = ConnectedComponents.run(spark, edgesDf(base), cfg).state
     val got = collectL(
-      ConnectedComponents.incremental(baseLabels, edgesDf(delta), cfg),
+      ConnectedComponents.incremental(baseLabels, edgesDf(delta)),
       "id", "component")
     assert(Seq(0L, 1L, 5L, 6L, 100L).forall(got(_) == 0L))
     assert(got(200L) == 200L && got(201L) == 200L)

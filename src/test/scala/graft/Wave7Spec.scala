@@ -49,7 +49,7 @@ class Wave7Spec extends SparkSpec {
       val und = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
         .filter { case (a, b) => a != b }.toSet
       val vertices = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-      val got = Coloring.run(spark, edgesDf(edges), numPartitions = 4,
+      val got = Coloring.run(spark, edgesDf(edges),
         md5Pri = true).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(got === seqJpMd5(vertices, und))

@@ -1086,7 +1086,7 @@ object Queries {
     // key, the running sum a window over the tiny bucket table only -------
     "vocab_growth" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val first = TextOps.shingleRows(docs(s, dir), "doc_id", "text", 3)
+      val first = TextOps.shingleRows(docs(s, dir), 3)
         .groupBy("shingle").agg(min("doc_id").as("fd"))
       val perB = first.groupBy(expr("fd div 5").as("bucket"))
         .agg(count(lit(1)).as("new_types"))
@@ -2137,13 +2137,15 @@ object Queries {
 
     // sampled-source Brandes betweenness (8 hash-sampled roots) on the
     // filtered symmetrized graph — float dependency sums are partition-
-    // order-dependent, so rows-only; exactness vs sequential Brandes is
-    // pinned in AlgosSpec's golden-graph spec instead.
+    // order-dependent, so rows-only, with btw rounded to 6 dp (as the other
+    // float queries are) so two runs give the same rows; exactness vs
+    // sequential Brandes is pinned in AlgosSpec's golden-graph spec instead.
     "betweenness8" -> ((s, dir) => {
       val undE = copurchaseEdges(s, dir).where(col("weight") >= 2)
         .symmetric.frame.localCheckpoint(true)
       Betweenness.run(s, undE,
         Betweenness.sampledSources(GraphOps.vertices(undE), 8))
+        .select(col("id"), round(col("btw"), 6).as("btw"))
         .orderBy("id")
     }),
 

@@ -8,7 +8,7 @@ import graft.engine.Lineage
 /** Truncated Katz centrality (Katz, Psychometrika 18(1), 1953) in its
   * EXACT-INTEGER form: with walk counts n_l(v) = #directed walks of length
   * exactly l ending at v (n_0 ≡ 1 everywhere), the truncated Katz score
-  * with attenuation α = 1/beta is
+  * with attenuation α = 1/beta, beta = 4, is
   *
   *   katz(v) = Σ_{l=1..k} α^l · n_l(v)
   *           = ( Σ_{l=1..k} beta^(k−l) · n_l(v) ) / beta^k.
@@ -36,7 +36,7 @@ object Katz {
     * katz_num = Σ beta^(k−l)·walks_l. Vertices with no incoming walks of
     * any length report zeros (left join against the vertex universe).
     */
-  def truncated(edges: DataFrame, k: Int, beta: Long = 4L): DataFrame = {
+  def truncated(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val e = edges.select("src", "dst").transform(Lineage.cut(_, eager = true))
     val v = graft.graph.GraphOps.vertices(e)
@@ -53,7 +53,7 @@ object Katz {
     val filled = (1 to k).foldLeft(joined)((acc, l) =>
       acc.withColumn(s"walks$l", coalesce(col(s"walks$l"), lit(0L))))
     val katz = (1 to k).map(l =>
-      col(s"walks$l") * lit(math.pow(beta.toDouble, (k - l).toDouble).toLong))
+      col(s"walks$l") * lit(math.pow(4.0, (k - l).toDouble).toLong))
       .reduce(_ + _)
     filled.withColumn("katz_num", katz)
   }

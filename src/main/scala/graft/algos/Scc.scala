@@ -58,7 +58,7 @@ import graft.graph.GraphOps
   */
 object Scc {
 
-  private def prio(idCol: Column): Column = xxhash64(idCol)
+  private def prio(id: Column): Column = xxhash64(id)
 
   /** Trim rounds per outer round. A/B at sf0.01 (BASELINE.md r5 "SCC
     * adaptive trim continuation"): trimming past 4 rounds removes <5% of

@@ -35,15 +35,11 @@ object Sketches {
   def lowestZeroBitIdx(c: Column): Column =
     length(bin(bitwise_not(c).bitwiseAND(c + lit(1L)))) - lit(1)
 
-  /** FM sketch propagation over directed edges, truncated at `rounds`.
-    *
-    * @return (id, r0..r{registers-1}, lsb_sum) — the raw register words
-    *         (exact integers, oracle-comparable) plus the summed
-    *         first-zero-bit index (the integer core of the FM estimate
-    *         2^(lsb_sum/registers)/0.77351).
+  /** Round-0 sketches: register j of vertex v holds one bit, at position
+    * = trailing zeros of the 60-bit md5 prefix of `"j:v"` (capped at 30).
+    * Returns the materialized (id, r0..r{registers-1}) state.
     */
-  def anf(edges: DataFrame, rounds: Int, registers: Int): DataFrame = {
-    val e = Lineage.cut(edges.select("src", "dst"))
+  private def seed(e: DataFrame, registers: Int): DataFrame = {
     val v = e.select(col("src").as("id")).distinct()
     val hs = v.select(col("id") +: (0 until registers).map { j =>
       conv(substring(md5(concat(lit(s"$j:"), col("id").cast("string"))),
@@ -53,22 +49,39 @@ object Sketches {
     val init = hs.select(col("id") +: (0 until registers).map(j =>
       expr(s"shiftleft(CAST(1 AS BIGINT), " +
         s"least(length(bin(h$j & -h$j)) - 1, 30))").as(s"r$j")): _*)
-    var s = Lineage.cut(init)
-    for (_ <- 1 to rounds) {
-      val aggs = (0 until registers).map(j => expr(s"bit_or(r$j)").as(s"u$j"))
-      val upd = e.join(s.hint("shuffle_hash"), e("src") === s("id"))
-        .groupBy(e("dst").as("uid"))
-        .agg(aggs.head, aggs.tail: _*)
-      val merged = s.join(upd.hint("shuffle_hash"), s("id") === upd("uid"), "left")
-        .select(col("id") +: (0 until registers).map(j =>
-          (col(s"r$j").bitwiseOR(coalesce(col(s"u$j"), lit(0L))))
-            .as(s"r$j")): _*)
-      s = Lineage.cut(merged)
-    }
-    val lsbSum = (0 until registers)
-      .map(j => lowestZeroBitIdx(col(s"r$j")))
-      .reduce(_ + _)
-    s.withColumn("lsb_sum", lsbSum.cast("long"))
+    Lineage.cut(init)
+  }
+
+  /** One propagation round: `s(v) |= OR over in-neighbours u of s(u)`. */
+  private def propagate(e: DataFrame, s: DataFrame,
+                        registers: Int): DataFrame = {
+    val aggs = (0 until registers).map(j => expr(s"bit_or(r$j)").as(s"u$j"))
+    val upd = e.join(s.hint("shuffle_hash"), e("src") === s("id"))
+      .groupBy(e("dst").as("uid"))
+      .agg(aggs.head, aggs.tail: _*)
+    val merged = s.join(upd.hint("shuffle_hash"), s("id") === upd("uid"), "left")
+      .select(col("id") +: (0 until registers).map(j =>
+        (col(s"r$j").bitwiseOR(coalesce(col(s"u$j"), lit(0L))))
+          .as(s"r$j")): _*)
+    Lineage.cut(merged)
+  }
+
+  /** Per-vertex sum of the registers' first-zero-bit indices. */
+  private def lsbSum(registers: Int): Column = (0 until registers)
+    .map(j => lowestZeroBitIdx(col(s"r$j"))).reduce(_ + _).cast("long")
+
+  /** FM sketch propagation over directed edges, truncated at `rounds`.
+    *
+    * @return (id, r0..r{registers-1}, lsb_sum) — the raw register words
+    *         (exact integers, oracle-comparable) plus the summed
+    *         first-zero-bit index (the integer core of the FM estimate
+    *         2^(lsb_sum/registers)/0.77351).
+    */
+  def anf(edges: DataFrame, rounds: Int, registers: Int): DataFrame = {
+    val e = Lineage.cut(edges.select("src", "dst"))
+    var s = seed(e, registers)
+    for (_ <- 1 to rounds) s = propagate(e, s, registers)
+    s.withColumn("lsb_sum", lsbSum(registers))
   }
 
   /** Per-round neighbourhood-function profile — the data behind an
@@ -84,31 +97,13 @@ object Sketches {
     */
   def anfProfile(edges: DataFrame, rounds: Int, registers: Int): DataFrame = {
     val e = Lineage.cut(edges.select("src", "dst"))
-    val v = e.select(col("src").as("id")).distinct()
-    val hs = v.select(col("id") +: (0 until registers).map { j =>
-      conv(substring(md5(concat(lit(s"$j:"), col("id").cast("string"))),
-        1, 15), 16, 10).cast("long").as(s"h$j")
-    }: _*)
-    val init = hs.select(col("id") +: (0 until registers).map(j =>
-      expr(s"shiftleft(CAST(1 AS BIGINT), " +
-        s"least(length(bin(h$j & -h$j)) - 1, 30))").as(s"r$j")): _*)
-    def lsbSum(df: DataFrame): Column = (0 until registers)
-      .map(j => lowestZeroBitIdx(col(s"r$j"))).reduce(_ + _).cast("long")
     def roundRow(df: DataFrame, t: Int): DataFrame =
-      df.agg(sum(lsbSum(df)).cast("long").as("total_lsb"))
+      df.agg(sum(lsbSum(registers)).cast("long").as("total_lsb"))
         .select(lit(t.toLong).as("round"), col("total_lsb"))
-    var s = Lineage.cut(init)
+    var s = seed(e, registers)
     var prof = roundRow(s, 0)
     for (t <- 1 to rounds) {
-      val aggs = (0 until registers).map(j => expr(s"bit_or(r$j)").as(s"u$j"))
-      val upd = e.join(s.hint("shuffle_hash"), e("src") === s("id"))
-        .groupBy(e("dst").as("uid"))
-        .agg(aggs.head, aggs.tail: _*)
-      val merged = s.join(upd.hint("shuffle_hash"), s("id") === upd("uid"), "left")
-        .select(col("id") +: (0 until registers).map(j =>
-          (col(s"r$j").bitwiseOR(coalesce(col(s"u$j"), lit(0L))))
-            .as(s"r$j")): _*)
-      s = Lineage.cut(merged)
+      s = propagate(e, s, registers)
       prof = prof.unionByName(roundRow(s, t))
     }
     prof

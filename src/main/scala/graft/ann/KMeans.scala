@@ -79,12 +79,12 @@ object KMeans {
         coalesce(col("mNew"), col("m")).as("m"))
   }
 
-  /** Runs `iters` assignment rounds (with `iters − 1` centroid updates in
-    * between) and returns the final (vec_id, cluster, dist2) assignment.
-    * dist2 is the exact squared distance in quantized micro-units.
+  /** The state both Lloyd chains start from: the quantized coordinates,
+    * each vector's |q|², and the round-0 centroids (cluster, dim, m) — the
+    * k vectors with the smallest md5 priority, all materialized.
     */
-  def run(spark: SparkSession, vecs: DataFrame, k: Int, iters: Int,
-          scale: Long = 10000L, offset: Long = 10000L): DataFrame = {
+  private def prep(vecs: DataFrame, k: Int, iters: Int, scale: Long,
+                   offset: Long): (DataFrame, DataFrame, DataFrame) = {
     require(k >= 1 && k <= 16, s"packed priority holds k <= 16, got $k")
     require(iters >= 1, s"need at least one assignment round, got $iters")
     val quant = quantize(vecs, scale, offset).localCheckpoint(true)
@@ -102,10 +102,20 @@ object KMeans {
       .select(col("vec_id"),
         (row_number().over(Window.orderBy("prio", "vec_id")) - 1)
           .cast("long").as("cluster"))
-    var cent = quant.join(seeds, Seq("vec_id"))
+    val cent = quant.join(seeds, Seq("vec_id"))
       .select(col("cluster"), col("dim"), col("q").as("m"))
       .localCheckpoint(true)
+    (quant, qq, cent)
+  }
 
+  /** Runs `iters` assignment rounds (with `iters − 1` centroid updates in
+    * between) and returns the final (vec_id, cluster, dist2) assignment.
+    * dist2 is the exact squared distance in quantized micro-units.
+    */
+  def run(spark: SparkSession, vecs: DataFrame, k: Int, iters: Int,
+          scale: Long = 10000L, offset: Long = 10000L): DataFrame = {
+    val (quant, qq, cent0) = prep(vecs, k, iters, scale, offset)
+    var cent = cent0
     var asg: DataFrame = null
     for (i <- 1 to iters) {
       asg = assign(quant, qq, cent).localCheckpoint(true)
@@ -124,22 +134,8 @@ object KMeans {
     */
   def runProfile(spark: SparkSession, vecs: DataFrame, k: Int, iters: Int,
                  scale: Long = 10000L, offset: Long = 10000L): DataFrame = {
-    require(k >= 1 && k <= 16, s"packed priority holds k <= 16, got $k")
-    require(iters >= 1, s"need at least one assignment round, got $iters")
-    val quant = quantize(vecs, scale, offset).localCheckpoint(true)
-    val qq = quant.groupBy("vec_id").agg(sum(col("q") * col("q")).as("qq"))
-      .localCheckpoint(true)
-    import org.apache.spark.sql.expressions.Window
-    val seeds = vecs
-      .select(col("vec_id"),
-        GraphOps.md5Prio(col("vec_id").cast("string")).as("prio"))
-      .orderBy("prio", "vec_id").limit(k)
-      .select(col("vec_id"),
-        (row_number().over(Window.orderBy("prio", "vec_id")) - 1)
-          .cast("long").as("cluster"))
-    var cent = quant.join(seeds, Seq("vec_id"))
-      .select(col("cluster"), col("dim"), col("q").as("m"))
-      .localCheckpoint(true)
+    val (quant, qq, cent0) = prep(vecs, k, iters, scale, offset)
+    var cent = cent0
     var prof: DataFrame = null
     for (i <- 1 to iters) {
       val asg = assign(quant, qq, cent).localCheckpoint(true)

@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * cosine top-k as the correctness baseline, plus an LSH-bucketed variant
   * (random-hyperplane signs) as the scale path. All arithmetic is done in
   * double via codegen'd higher-order functions (zip_with / aggregate) — no
-  * UDFs (SURVEY.md-style functions-first discipline).
+  * UDFs (SURVEY.md-style functions-first discipline). Every operator
+  * reads an `embeddings` frame by its column names, `vec_id` and
+  * `embedding`.
   */
 object Similarity {
 
@@ -28,11 +30,10 @@ object Similarity {
     * cosine from the raw float arrays per pair (same summation order), but
     * the casts and norms are O(n) instead of O(n²).
     */
-  private def prepped(emb: DataFrame, idCol: String,
-                      vecCol: String): DataFrame =
-    emb.select(col(idCol),
-        transform(col(vecCol), x => x.cast("double")).as("__vd"))
-      .select(col(idCol), col("__vd"),
+  private def prepped(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("__vd"))
+      .select(col("vec_id"), col("__vd"),
         sqrt(dotD(col("__vd"), col("__vd"))).as("__nrm"))
 
   /** Codegen'd dot product (see [[graft.functions.DotProduct]]) — the
@@ -45,10 +46,8 @@ object Similarity {
     * embedding near-dup detection. Brute force: O(n²) pairs; callers at
     * scale should bucket first (see [[lshBuckets]]).
     */
-  def nearDupPairs(emb: DataFrame, threshold: Double,
-                   idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    val p = prepped(emb, idCol, vecCol)
+  def nearDupPairs(emb: DataFrame, threshold: Double): DataFrame = {
+    val p = prepped(emb)
     val a = p.toDF("v1", "va", "na")
     val b = p.toDF("v2", "vb", "nb")
     a.join(b, col("v1") < col("v2"))
@@ -62,10 +61,9 @@ object Similarity {
     * (query_id, neighbor_id, rk, cos); ranking on the rounded cosine with
     * id tie-break (deterministic across engines).
     */
-  def topK(queries: DataFrame, corpus: DataFrame, k: Int,
-           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = prepped(queries, idCol, vecCol).toDF("query_id", "qv", "qn")
-    val c = prepped(corpus, idCol, vecCol).toDF("neighbor_id", "cv", "cn")
+  def topK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val q = prepped(queries).toDF("query_id", "qv", "qn")
+    val c = prepped(corpus).toDF("neighbor_id", "cv", "cn")
     val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(dotD(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
@@ -83,21 +81,20 @@ object Similarity {
     * gives the recall knob. This is the 100 TB path: candidate generation
     * is bucket-local, never corpus-quadratic.
     */
-  def lshBuckets(emb: DataFrame, bits: Int, idCol: String = "vec_id",
-                 vecCol: String = "embedding"): DataFrame = {
+  def lshBuckets(emb: DataFrame, bits: Int): DataFrame = {
     val sig = (0 until bits).map { b =>
       // pseudo-random ±weights per (plane b, dim i) from a hash; the
       // projection is Σ_i w(b,i)·v_i with w ∈ {-1, +1}
       val proj = aggregate(
-        zip_with(col(vecCol),
-          transform(sequence(lit(0), size(col(vecCol)) - 1),
+        zip_with(col("embedding"),
+          transform(sequence(lit(0), size(col("embedding")) - 1),
             i => when(pmod(xxhash64(lit(b), i), lit(2)) === 0, lit(1.0))
               .otherwise(lit(-1.0))),
           (x, w) => x.cast("double") * w),
         lit(0.0), (acc, v) => acc + v)
       when(proj > 0, lit(1L << b)).otherwise(lit(0L))
     }.reduce(_ + _)
-    emb.select(col(idCol), sig.as("bucket"))
+    emb.select(col("vec_id"), sig.as("bucket"))
   }
 
   /** Multi-table random-hyperplane LSH bucket rows (id, tbl, bucket):
@@ -116,9 +113,8 @@ object Similarity {
     * literals; BASELINE.md "lshBucketsMulti plan size"). Bucket
     * values are unchanged (same w(t,b,i) weights, same summation order).
     */
-  def lshBucketsMulti(emb: DataFrame, bits: Int, tables: Int, dim: Int,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
+  def lshBucketsMulti(emb: DataFrame, bits: Int, tables: Int,
+                      dim: Int): DataFrame = {
     def w(t: Int, b: Int, i: Int): Double =
       if ((scala.util.hashing.MurmurHash3.productHash((t, b, i)) & 1) == 0)
         1.0 else -1.0
@@ -137,11 +133,11 @@ object Similarity {
       }.reduce(_ + _).as(s"bkt$t")
     }
     val stackArgs = (0 until tables).map(t => s"$t, bkt$t").mkString(", ")
-    emb.select(col(idCol),
-        transform(col(vecCol), x => x.cast("double")).as("__vd"))
+    emb.select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("__vd"))
       .crossJoin(broadcast(planesDf))
-      .select(col(idCol) +: tableCols: _*)
-      .selectExpr(idCol, s"stack($tables, $stackArgs) AS (tbl, bucket)")
+      .select(col("vec_id") +: tableCols: _*)
+      .selectExpr("vec_id", s"stack($tables, $stackArgs) AS (tbl, bucket)")
   }
 
   /** ANN top-k with band-OR over multiple independent LSH tables plus a
@@ -151,13 +147,11 @@ object Similarity {
     * quadratic). More tables → higher recall at linear candidate cost.
     */
   def annTopKMulti(emb: DataFrame, bits: Int, tables: Int, k: Int,
-                   maxBucket: Long = 10000,
-                   idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    val dimRow = emb.select(size(col(vecCol)).as("d")).limit(1).collect()
-    if (dimRow.isEmpty) return topK(emb, emb, k, idCol, vecCol)
+                   maxBucket: Long = 10000): DataFrame = {
+    val dimRow = emb.select(size(col("embedding")).as("d")).limit(1).collect()
+    if (dimRow.isEmpty) return topK(emb, emb, k)
     val dim = dimRow.head.getInt(0)
-    val bk = lshBucketsMulti(emb, bits, tables, dim, idCol, vecCol)
+    val bk = lshBucketsMulti(emb, bits, tables, dim)
       .localCheckpoint(true)
     val small = bk.groupBy("tbl", "bucket")
       .agg(count(lit(1)).as("__bsz"))
@@ -167,11 +161,12 @@ object Similarity {
     // order is an implementation detail; a positional rename could silently
     // rebind the id to a bucket column if the projection ever changes.
     val capped = bk.join(small, Seq("tbl", "bucket"))
-    val cand = capped.withColumnRenamed(idCol, "query_id")
-      .join(capped.withColumnRenamed(idCol, "neighbor_id"), Seq("tbl", "bucket"))
+    val cand = capped.withColumnRenamed("vec_id", "query_id")
+      .join(capped.withColumnRenamed("vec_id", "neighbor_id"),
+        Seq("tbl", "bucket"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
-    val p = prepped(emb, idCol, vecCol)
+    val p = prepped(emb)
     val scored = cand
       .join(p.toDF("query_id", "qv", "qn"), "query_id")
       .join(p.toDF("neighbor_id", "cv", "cn"), "neighbor_id")
@@ -206,28 +201,26 @@ object Similarity {
     * AnnRecallSpec.
     */
   def ivfTopK(emb: DataFrame, nCentroids: Int, nProbe: Int, k: Int,
-              maxList: Long = 100000,
-              idCol: String = "vec_id",
-              vecCol: String = "embedding"): DataFrame = {
-    val p = prepped(emb, idCol, vecCol).localCheckpoint(true)
+              maxList: Long = 100000): DataFrame = {
+    val p = prepped(emb).localCheckpoint(true)
     // Deterministic sample: the nCentroids smallest (xxhash64(id), id) —
     // orderBy+limit plans as TakeOrderedAndProject (distributed per-partition
     // top-k + driver merge), never a global sort; the empty-over window
     // assigning cid runs over the C-row result only.
-    val cw = Window.orderBy(col("__h"), col(idCol))
+    val cw = Window.orderBy(col("__h"), col("vec_id"))
     val centroids = p
-      .withColumn("__h", xxhash64(col(idCol)))
-      .orderBy(col("__h"), col(idCol)).limit(nCentroids)
+      .withColumn("__h", xxhash64(col("vec_id")))
+      .orderBy(col("__h"), col("vec_id")).limit(nCentroids)
       .withColumn("cid", row_number().over(cw))
       .select(col("cid"), col("__vd").as("cv"), col("__nrm").as("cn"))
-    val assigned = ivfAssignment(p, centroids, idCol).localCheckpoint(true)
+    val assigned = ivfAssignment(p, centroids).localCheckpoint(true)
     val lists = assigned.where(col("__crk") === 1)
-      .select(col(idCol).as("neighbor_id"), col("cid"),
+      .select(col("vec_id").as("neighbor_id"), col("cid"),
         col("__vd").as("cv2"), col("__nrm").as("cn2"))
     val smallLists = lists.groupBy("cid").agg(count(lit(1)).as("__lsz"))
       .where(col("__lsz") <= maxList).select("cid")
     val probes = assigned.where(col("__crk") <= nProbe)
-      .select(col(idCol).as("query_id"), col("cid"),
+      .select(col("vec_id").as("query_id"), col("cid"),
         col("__vd").as("qv"), col("__nrm").as("qn"))
     val scored = probes
       .join(smallLists, Seq("cid"))
@@ -248,30 +241,27 @@ object Similarity {
     * BROADCAST centroid table, ranked per vector. The aw window partitions
     * by the vector id — distributed, never a global sort.
     */
-  private[graft] def ivfAssignment(p: DataFrame, centroids: DataFrame,
-                                   idCol: String): DataFrame = {
-    val aw = Window.partitionBy(idCol)
+  private[graft] def ivfAssignment(p: DataFrame,
+                                   centroids: DataFrame): DataFrame = {
+    val aw = Window.partitionBy("vec_id")
       .orderBy(col("__csim").desc, col("cid").asc)
     p.join(broadcast(centroids))
-      .select(col(idCol), col("__vd"), col("__nrm"), col("cid"),
+      .select(col("vec_id"), col("__vd"), col("__nrm"), col("cid"),
         (dotD(col("__vd"), col("cv")) / (col("__nrm") * col("cn")))
           .as("__csim"))
       .withColumn("__crk", row_number().over(aw))
   }
 
   /** Package-visible prepped view for plan audits. */
-  private[graft] def preppedView(emb: DataFrame, idCol: String,
-                                 vecCol: String): DataFrame =
-    prepped(emb, idCol, vecCol)
+  private[graft] def preppedView(emb: DataFrame): DataFrame = prepped(emb)
 
   /** ANN top-k via LSH buckets: candidates share a bucket; exact cosine +
     * rank inside the bucket. Recall < 1 by construction — this is the
     * throughput-oriented variant; [[topK]] is the exact baseline.
     */
-  def annTopK(emb: DataFrame, bits: Int, k: Int, idCol: String = "vec_id",
-              vecCol: String = "embedding"): DataFrame = {
-    val withBucket = prepped(emb, idCol, vecCol)
-      .join(lshBuckets(emb, bits, idCol, vecCol), idCol)
+  def annTopK(emb: DataFrame, bits: Int, k: Int): DataFrame = {
+    val withBucket = prepped(emb)
+      .join(lshBuckets(emb, bits), "vec_id")
     val a = withBucket.toDF("query_id", "qv", "qn", "bucket")
     val b = withBucket.toDF("neighbor_id", "cv", "cn", "bucket")
     val scored = a.join(b, Seq("bucket"))

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.text.TextOps
@@ -24,8 +24,11 @@ import graft.text.TextOps
   *     semi-join is applied BELOW the intersection aggregate, so no
   *     all-pairs aggregate is ever materialized;
   *   - the only all-pairs path left is [[jaccardPairs]], the labeled brute
-  *     baseline, which supports a frequent-shingle cap (`maxDf`) so a
-  *     stop-shingle posting list cannot go quadratic.
+  *     baseline: it is uncapped, so a stop-shingle posting list goes
+  *     quadratic there — [[minhashLsh]] is the scale path.
+  *
+  * Every operator reads a `documents` frame by its column names, `doc_id`
+  * and `text`.
   */
 object Dedup {
 
@@ -34,12 +37,11 @@ object Dedup {
     * (xxhash64, md5) — 192 bits of digest, collision-free in practice —
     * keeps the shuffle to (digest, id) rows instead of full document bytes.
     */
-  def exact(docs: DataFrame, idCol: String = "doc_id",
-            textCol: String = "text"): DataFrame =
-    docs.select(col(idCol),
-        xxhash64(col(textCol)).as("__hx"), md5(col(textCol)).as("__hm"))
+  def exact(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        xxhash64(col("text")).as("__hx"), md5(col("text")).as("__hm"))
       .groupBy(col("__hx"), col("__hm"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_cnt"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_cnt"))
       .select("keep_id", "dup_cnt")
 
   /** Exact Jaccard over CANDIDATE pairs only, via the inverted-index join
@@ -51,8 +53,7 @@ object Dedup {
     * posting lists of the candidates' shingles, never corpus-quadratic.
     */
   private def verifyJaccard(cand: DataFrame, sh: DataFrame,
-                            threshold: Double,
-                            idCol: String): DataFrame = {
+                            threshold: Double): DataFrame = {
     val a = sh.toDF("doc1", "shingle")
     val b = sh.toDF("doc2", "shingle")
     val inter = a.join(b, Seq("shingle"))
@@ -60,7 +61,7 @@ object Dedup {
       .join(cand, Seq("doc1", "doc2"), "left_semi") // AQE broadcasts when small
       .groupBy("doc1", "doc2")
       .agg(count(lit(1)).as("inter"))
-    val sz = sh.groupBy(idCol).agg(count(lit(1)).as("n"))
+    val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     inter
       .join(sz.toDF("doc1", "n1"), "doc1")
       .join(sz.toDF("doc2", "n2"), "doc2")
@@ -73,20 +74,11 @@ object Dedup {
 
   /** Pairwise intersection counts over a shingle-rows table (equi-join on
     * shingle — the inverted-index join; quadratic only within a posting
-    * list). `maxDf` drops shingles appearing in more than maxDf docs (the
-    * standard stop-shingle cap — one frequent shingle otherwise goes
-    * quadratic at scale); None = exact, for the oracle gate.
+    * list, so one frequent shingle goes quadratic at scale).
     */
-  private def intersections(sh: DataFrame,
-                            maxDf: Option[Long]): DataFrame = {
-    val capped = maxDf match {
-      case Some(cap) =>
-        val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
-        sh.join(dfreq.where(col("__df") <= cap).select("shingle"), "shingle")
-      case None => sh
-    }
-    val a = capped.toDF("doc1", "shingle")
-    val b = capped.toDF("doc2", "shingle")
+  private def intersections(sh: DataFrame): DataFrame = {
+    val a = sh.toDF("doc1", "shingle")
+    val b = sh.toDF("doc2", "shingle")
     a.join(b, Seq("shingle"))
       .where(col("doc1") < col("doc2"))
       .groupBy("doc1", "doc2")
@@ -95,18 +87,15 @@ object Dedup {
 
   /** Brute-force n-gram Jaccard near-dup pairs with jaccard ≥ threshold
     * (threshold applied to the 6-decimal-rounded value, matching the
-    * oracle). Output: (doc1, doc2, jaccard). Correctness baseline — at
-    * scale pass `maxDf` or use [[minhashLsh]].
+    * oracle). Output: (doc1, doc2, jaccard). Correctness baseline: no
+    * shingle is capped, so the pair work is quadratic in the longest
+    * posting list — at scale use [[minhashLsh]].
     */
-  def jaccardPairs(docs: DataFrame, n: Int, threshold: Double,
-                   idCol: String = "doc_id",
-                   textCol: String = "text",
-                   maxDf: Option[Long] = None): DataFrame = {
+  def jaccardPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame = {
     // materialized once — referenced by both join sides and the sizes agg
-    val sh = TextOps.shingleRows(docs, idCol, textCol, n)
-      .localCheckpoint(true)
-    val sz = sh.groupBy(idCol).agg(count(lit(1)).as("n"))
-    intersections(sh, maxDf)
+    val sh = TextOps.shingleRows(docs, n).localCheckpoint(true)
+    val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    intersections(sh)
       .join(sz.toDF("doc1", "n1"), "doc1")
       .join(sz.toDF("doc2", "n2"), "doc2")
       .withColumn("jaccard",
@@ -128,28 +117,17 @@ object Dedup {
     * Scale shape: the same inverted-index shingle join as [[jaccardPairs]]
     * (quadratic only within a posting list); both directions of a pair
     * come from ONE undirected intersection count, so the join work is not
-    * doubled. When `maxDf` is set, numerator AND denominator use the
-    * df-capped shingle set (deterministic, mirror it in any oracle).
+    * doubled. Like [[jaccardPairs]] it caps no shingle: an uncapped
+    * baseline, with [[minhashLsh]] as the scale path.
     */
-  def containmentPairs(docs: DataFrame, n: Int, thresholdMicro: Long,
-                       idCol: String = "doc_id",
-                       textCol: String = "text",
-                       maxDf: Option[Long] = None): DataFrame = {
-    val shAll = TextOps.shingleRows(docs, idCol, textCol, n)
-      .localCheckpoint(true)
-    val sh = maxDf match {
-      case Some(cap) =>
-        shAll.join(
-          shAll.groupBy("shingle").agg(count(lit(1)).as("__df"))
-            .where(col("__df") <= cap).select("shingle"),
-          Seq("shingle"), "left_semi")
-      case None => shAll
-    }
-    val und = intersections(sh, None)
+  def containmentPairs(docs: DataFrame, n: Int,
+                       thresholdMicro: Long): DataFrame = {
+    val sh = TextOps.shingleRows(docs, n).localCheckpoint(true)
+    val und = intersections(sh)
     val both = und.unionByName(
       und.select(col("doc2").as("doc1"), col("doc1").as("doc2"),
         col("inter")))
-    val sz = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
+    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     both
       .join(sz.toDF("doc1", "n1"), "doc1")
       .withColumn("containment_micro",
@@ -166,13 +144,12 @@ object Dedup {
     * array expression: HOFs evaluate interpreted in Spark and measured 40×
     * slower than the codegen agg on the same workload.
     */
-  def minhashSignatures(sh: DataFrame, numHashes: Int,
-                        idCol: String = "doc_id"): DataFrame = {
+  def minhashSignatures(sh: DataFrame, numHashes: Int): DataFrame = {
     val aggs = (0 until numHashes).map(i =>
       min(md5(concat(lit(s"$i:"), col("shingle")))).as(s"h$i"))
     val stackArgs = (0 until numHashes).map(i => s"$i, h$i").mkString(", ")
-    sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-      .selectExpr(idCol, s"stack($numHashes, $stackArgs) AS (i, h)")
+    sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+      .selectExpr("doc_id", s"stack($numHashes, $stackArgs) AS (i, h)")
   }
 
   /** MinHash + LSH near-dup pairs: wide-agg signatures → band buckets (r=1:
@@ -185,14 +162,12 @@ object Dedup {
     * 100 TB path.
     */
   def minhashLsh(docs: DataFrame, n: Int, numHashes: Int, threshold: Double,
-                 idCol: String = "doc_id",
-                 textCol: String = "text",
                  maxBucket: Long = 100000L): DataFrame = {
-    val sh = TextOps.shingleRows(docs, idCol, textCol, n)
+    val sh = TextOps.shingleRows(docs, n)
       .localCheckpoint(true) // reused: signatures + verify join + sizes
     // Materialized once: referenced by the bucket-size agg and both sides
     // of the candidate self-join (3 plan references).
-    val sig = minhashSignatures(sh, numHashes, idCol).localCheckpoint(true)
+    val sig = minhashSignatures(sh, numHashes).localCheckpoint(true)
     // Hot-bucket cap (same guard as Similarity.annTopKMulti): a bucket with
     // more than maxBucket members — e.g. a corpus of byte-identical
     // documents that skipped exact() — would make the band self-join
@@ -204,21 +179,20 @@ object Dedup {
       .where(col("__bsz") <= maxBucket)
       .select("i", "h")
     val capped = sig.join(smallBuckets, Seq("i", "h"))
-    val cand = capped.withColumnRenamed(idCol, "doc1")
-      .join(capped.withColumnRenamed(idCol, "doc2"), Seq("i", "h"))
+    val cand = capped.withColumnRenamed("doc_id", "doc1")
+      .join(capped.withColumnRenamed("doc_id", "doc2"), Seq("i", "h"))
       .where(col("doc1") < col("doc2"))
       .select("doc1", "doc2").distinct()
-    verifyJaccard(cand, sh, threshold, idCol)
+    verifyJaccard(cand, sh, threshold)
   }
 
   /** Production minhash banding path: wide-agg xxhash64 signatures (single
     * shuffle of shingle rows, all codegen) banded into `bands` buckets of
     * `rowsPerBand` via a second-level hash. Returns (doc_id, band, bucket).
     */
-  def minhashBucketsXx(docs: DataFrame, n: Int, bands: Int, rowsPerBand: Int,
-                       idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
-    val sh = TextOps.shingleRows(docs, idCol, textCol, n)
+  def minhashBucketsXx(docs: DataFrame, n: Int, bands: Int,
+                       rowsPerBand: Int): DataFrame = {
+    val sh = TextOps.shingleRows(docs, n)
     val numHashes = bands * rowsPerBand
     val aggs = (0 until numHashes).map(i =>
       min(xxhash64(lit(i), col("shingle"))).as(s"h$i"))
@@ -227,9 +201,9 @@ object Dedup {
       xxhash64(rows: _*).as(s"b$b")
     }
     val stackArgs = (0 until bands).map(b => s"$b, b$b").mkString(", ")
-    sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-      .select(col(idCol) +: bandCols: _*)
-      .selectExpr(idCol, s"stack($bands, $stackArgs) AS (band, bucket)")
+    sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+      .select(col("doc_id") +: bandCols: _*)
+      .selectExpr("doc_id", s"stack($bands, $stackArgs) AS (band, bucket)")
   }
 
   /** 16-bit SimHash from md5 bits of tokens, weighted by token frequency.
@@ -237,11 +211,10 @@ object Dedup {
     * is the sign of the weighted ±1 vote. Fully reproducible in ANSI SQL.
     * Output: (doc_id, simhash).
     */
-  def simhash(docs: DataFrame, idCol: String = "doc_id",
-              textCol: String = "text"): DataFrame = {
-    val tokRows = docs.select(col(idCol),
-        explode(TextOps.tokens(col(textCol))).as("tok"))
-      .groupBy(col(idCol), col("tok"))
+  def simhash(docs: DataFrame): DataFrame = {
+    val tokRows = docs.select(col("doc_id"),
+        explode(TextOps.tokens(col("text"))).as("tok"))
+      .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("h", md5(col("tok")))
     val hexDigits = "0123456789abcdef"
@@ -251,8 +224,8 @@ object Dedup {
       val bit = shiftright(dval, 3 - b % 4).bitwiseAND(lit(1))
       sum(col("cnt") * (bit * 2 - 1)).as(s"v$b")
     }
-    tokRows.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
-      .select(col(idCol),
+    tokRows.groupBy(col("doc_id")).agg(votes.head, votes.tail: _*)
+      .select(col("doc_id"),
         (0 until 16).map(b =>
           when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
           .reduce(_ + _).as("simhash"))
@@ -266,9 +239,8 @@ object Dedup {
     * all-pairs filter, bucket-local cost.
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int, n: Int,
-                   threshold: Double, idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame = {
-    val s = simhash(docs, idCol, textCol)
+                   threshold: Double): DataFrame = {
+    val s = simhash(docs)
     // maxHamming ≥ 16 admits EVERY pair of 16-bit signatures (hamming is
     // at most 16), and banding cannot guarantee completeness there (a pair
     // differing in all 16 bits shares no band) — so skip banding and emit
@@ -280,10 +252,10 @@ object Dedup {
         s"simhashPairs: maxHamming=$maxHamming >= 16 disables pigeonhole " +
           "banding — falling back to ALL n(n-1)/2 candidate pairs " +
           "(quadratic in corpus size); use maxHamming < 16 at scale")
-      val allPairs = s.select(col(idCol).as("doc1"))
-        .join(s.select(col(idCol).as("doc2")), col("doc1") < col("doc2"))
-      val shAll = TextOps.shingleRows(docs, idCol, textCol, n)
-      return verifyJaccard(allPairs, shAll, threshold, idCol)
+      val allPairs = s.select(col("doc_id").as("doc1"))
+        .join(s.select(col("doc_id").as("doc2")), col("doc1") < col("doc2"))
+      val shAll = TextOps.shingleRows(docs, n)
+      return verifyJaccard(allPairs, shAll, threshold)
     }
     // Partition the 16 bits into numBands NON-EMPTY disjoint ranges — the
     // remainder bits are spread across the first bands (widths e.g. 4/3/3/3/3
@@ -296,7 +268,7 @@ object Dedup {
     val rem = 16 % numBands
     val widths = (0 until numBands).map(b => base + (if (b < rem) 1 else 0))
     val starts = widths.scanLeft(0)(_ + _)
-    val banded = s.select(col(idCol).as("doc"), col("simhash"),
+    val banded = s.select(col("doc_id").as("doc"), col("simhash"),
       explode(array((0 until numBands).map { b =>
         struct(lit(b).as("band"),
           shiftright(col("simhash"), starts(b))
@@ -309,8 +281,8 @@ object Dedup {
       .where(col("doc1") < col("doc2") &&
         bit_count(col("h1").bitwiseXOR(col("h2"))) <= maxHamming)
       .select("doc1", "doc2").distinct()
-    val sh = TextOps.shingleRows(docs, idCol, textCol, n)
-    verifyJaccard(cand, sh, threshold, idCol)
+    val sh = TextOps.shingleRows(docs, n)
+    verifyJaccard(cand, sh, threshold)
   }
 
   /** Near-dup cluster canonicalization — the production dedup shape
@@ -327,13 +299,14 @@ object Dedup {
     * document text never enters any shuffle.
     */
   def clusters(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-               pairs: DataFrame, idCol: String = "doc_id"): DataFrame = {
+               pairs: DataFrame): DataFrame = {
     val e = pairs.select(col("doc1").as("src"), col("doc2").as("dst"))
       .localCheckpoint(true)
     val comp = graft.algos.ConnectedComponents.run(spark, e,
       graft.engine.SuperstepConfig()).state
-    docs.select(col(idCol))
-      .join(comp, col(idCol) === col("id"), "left_outer")
-      .select(col(idCol), coalesce(col("component"), col(idCol)).as("keep_id"))
+    docs.select(col("doc_id"))
+      .join(comp, col("doc_id") === col("id"), "left_outer")
+      .select(col("doc_id"),
+        coalesce(col("component"), col("doc_id")).as("keep_id"))
   }
 }

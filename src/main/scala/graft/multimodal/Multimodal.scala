@@ -19,13 +19,12 @@ object Multimodal {
   final case class RawAsset(doc_id: Long, payload: Array[Byte])
 
   /** Attach an opaque binary payload column. In production this is the
-    * parquet/Iceberg binary column itself; here it is derived from text so
-    * the plumbing is testable end-to-end.
+    * parquet/Iceberg binary column itself; here it is the UTF-8 bytes of
+    * the first 64 characters of `text`, so the plumbing is testable
+    * end-to-end.
     */
-  def withPayload(docs: DataFrame, textCol: String = "text",
-                  bytesPrefix: Int = 64): DataFrame =
-    docs.withColumn("payload",
-      encode(substring(col(textCol), 1, bytesPrefix), "utf-8"))
+  def withPayload(docs: DataFrame): DataFrame =
+    docs.withColumn("payload", encode(substring(col("text"), 1, 64), "utf-8"))
 
   /** === STUB ===
     * Deterministic fake decode standing in for an image/audio codec: fake
@@ -42,11 +41,11 @@ object Multimodal {
     * (amortizes per-batch codec setup exactly like mapInPandas batches).
     * Output is a typed Dataset[AssetMeta] — schema checked at compile time.
     */
-  def decodeMeta(withPayloadDf: DataFrame,
-                 idCol: String = "doc_id"): Dataset[AssetMeta] = {
+  def decodeMeta(withPayloadDf: DataFrame): Dataset[AssetMeta] = {
     val spark = withPayloadDf.sparkSession
     import spark.implicits._
-    withPayloadDf.select(col(idCol).cast("long").as("doc_id"), col("payload"))
+    withPayloadDf
+      .select(col("doc_id").cast("long").as("doc_id"), col("payload"))
       .as[RawAsset]
       .mapPartitions { batch =>
         // per-partition decoder init would go here (real codec handle)
@@ -71,19 +70,18 @@ object Multimodal {
     * Shuffle-free: one explode per row, everything else per-row
     * expressions.
     */
-  def frameSample(docs: DataFrame, frameBytes: Int = 16, stride: Int = 4,
-                  idCol: String = "doc_id", textCol: String = "text",
-                  bytesPrefix: Int = 64): DataFrame = {
+  def frameSample(docs: DataFrame, frameBytes: Int = 16,
+                  stride: Int = 4): DataFrame = {
     require(frameBytes >= 1 && stride >= 1,
       s"frameBytes/stride must be >= 1, got $frameBytes/$stride")
-    withPayload(docs, textCol, bytesPrefix)
-      .select(col(idCol), col("payload"),
+    withPayload(docs)
+      .select(col("doc_id"), col("payload"),
         expr(s"(length(payload) + ${frameBytes - 1}) div $frameBytes")
           .cast("long").as("__nframes"))
-      .select(col(idCol), col("payload"),
+      .select(col("doc_id"), col("payload"),
         explode(sequence(lit(0L), col("__nframes") - 1L)).as("frame_idx"))
       .where(col("frame_idx") % stride === 0)
-      .select(col(idCol), col("frame_idx"),
+      .select(col("doc_id"), col("frame_idx"),
         length(expr(s"substring(payload, frame_idx * $frameBytes + 1, " +
           s"$frameBytes)")).cast("long").as("frame_bytes"),
         md5(expr(s"substring(payload, frame_idx * $frameBytes + 1, " +
@@ -93,10 +91,9 @@ object Multimodal {
   /** Pure-expression metadata (no stub): byte length, md5, deterministic
     * fake frame count — the oracle-checkable slice of the multimodal path.
     */
-  def payloadMeta(docs: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text", bytesPrefix: Int = 64): DataFrame =
-    withPayload(docs, textCol, bytesPrefix)
-      .select(col(idCol),
+  def payloadMeta(docs: DataFrame): DataFrame =
+    withPayload(docs)
+      .select(col("doc_id"),
         length(col("payload")).cast("long").as("payload_bytes"),
         md5(col("payload")).as("payload_md5"),
         (floor(length(col("payload")) / lit(16)) + 1).as("n_frames"))

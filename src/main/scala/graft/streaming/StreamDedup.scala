@@ -26,11 +26,9 @@ object StreamDedup {
     * streaming DataFrames (no aggregation, no watermark needed).
     */
   def minhashBucketsPerRow(docs: DataFrame, n: Int, bands: Int,
-                           rowsPerBand: Int,
-                           idCol: String = "doc_id",
-                           textCol: String = "text"): DataFrame = {
+                           rowsPerBand: Int): DataFrame = {
     val numHashes = bands * rowsPerBand
-    val sh: Column = TextOps.shingles(TextOps.tokens(col(textCol)), n)
+    val sh: Column = TextOps.shingles(TextOps.tokens(col("text")), n)
     val hCols = (0 until numHashes).map { i =>
       array_min(transform(col("__sh"), s => xxhash64(lit(i), s))).as(s"h$i")
     }
@@ -39,11 +37,11 @@ object StreamDedup {
       xxhash64(rows: _*).as(s"b$b")
     }
     val stackArgs = (0 until bands).map(b => s"$b, b$b").mkString(", ")
-    docs.select(col(idCol), sh.as("__sh"))
+    docs.select(col("doc_id"), sh.as("__sh"))
       .where(size(col("__sh")) > 0)
-      .select(col(idCol) +: hCols: _*)
-      .select(col(idCol) +: bandCols: _*)
-      .selectExpr(idCol, s"stack($bands, $stackArgs) AS (band, bucket)")
+      .select(col("doc_id") +: hCols: _*)
+      .select(col("doc_id") +: bandCols: _*)
+      .selectExpr("doc_id", s"stack($bands, $stackArgs) AS (band, bucket)")
   }
 
   /** Per-row md5 minhash signatures — value-identical to the batch
@@ -54,20 +52,19 @@ object StreamDedup {
     * this spelling on the batch hot path (measured 40×, BASELINE.md).
     * Output: (doc_id, i, h) with i cast to LONG for oracle parity.
     */
-  def signaturesPerRowMd5(docs: DataFrame, n: Int, numHashes: Int,
-                          idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
-    val sh: Column = TextOps.shingles(TextOps.tokens(col(textCol)), n)
+  def signaturesPerRowMd5(docs: DataFrame, n: Int,
+                          numHashes: Int): DataFrame = {
+    val sh: Column = TextOps.shingles(TextOps.tokens(col("text")), n)
     val hCols = (0 until numHashes).map { i =>
       array_min(transform(col("__sh"), s => md5(concat(lit(s"$i:"), s))))
         .as(s"h$i")
     }
     val stackArgs = (0 until numHashes).map(i => s"$i, h$i").mkString(", ")
-    docs.select(col(idCol), sh.as("__sh"))
+    docs.select(col("doc_id"), sh.as("__sh"))
       .where(size(col("__sh")) > 0)
-      .select(col(idCol) +: hCols: _*)
-      .selectExpr(idCol, s"stack($numHashes, $stackArgs) AS (i, h)")
-      .select(col(idCol), col("i").cast("long").as("i"), col("h"))
+      .select(col("doc_id") +: hCols: _*)
+      .selectExpr("doc_id", s"stack($numHashes, $stackArgs) AS (i, h)")
+      .select(col("doc_id"), col("i").cast("long").as("i"), col("h"))
   }
 
   /** Run minhash as a bounded Structured Streaming job and return the
@@ -94,7 +91,7 @@ object StreamDedup {
   def minhashViaStream(docs: DataFrame, n: Int, numHashes: Int,
                        splits: Int = 4): DataFrame = {
     def signatures(batch: DataFrame) = graft.dedup.Dedup.minhashSignatures(
-        TextOps.shingleRows(batch, "doc_id", "text", n), numHashes)
+        TextOps.shingleRows(batch, n), numHashes)
       .select(col("doc_id"), col("i").cast("long").as("i"), col("h"))
     val staged = docs.select(col("doc_id"), col("text"))
     Replay.fold(Replay.Split(staged, splits), signatures(staged.limit(0))) {
@@ -107,13 +104,12 @@ object StreamDedup {
     * document — the streaming analog of `Dedup.exact`. State is keyed by
     * (xxhash64, md5) digest, never by document text.
     */
-  def firstSeen(docs: DataFrame, idCol: String = "doc_id",
-                textCol: String = "text"): DataFrame = {
+  def firstSeen(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs
-      .select(col(idCol).as("doc_id"),
-        concat_ws(":", xxhash64(col(textCol)), md5(col(textCol)))
+      .select(col("doc_id"),
+        concat_ws(":", xxhash64(col("text")), md5(col("text")))
           .as("digest"))
       .as[(Long, String)]
       .groupByKey(_._2)

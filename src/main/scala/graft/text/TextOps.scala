@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * fingerprinting. Every op is a pure Catalyst expression (whole-stage
   * codegen, no UDFs) and has an exact ANSI-SQL twin in [[graft.OracleSql]]
   * — arithmetic is deliberately engine-agnostic (md5 for hashing, rational
-  * ratios rounded to 6 decimals).
+  * ratios rounded to 6 decimals). Every operator reads a `documents`
+  * frame by its column names, `doc_id` and `text`.
   */
 object TextOps {
 
@@ -32,10 +33,9 @@ object TextOps {
     * shingle expression would re-split the text once per gram position
     * (O(words²) work per document — measured 10×+ slowdowns at sf0.1).
     */
-  def shingleRows(docs: DataFrame, idCol: String, textCol: String,
-                  n: Int): DataFrame =
-    docs.select(col(idCol), tokens(col(textCol)).as("__ts"))
-      .select(col(idCol), explode(shingles(col("__ts"), n)).as("shingle"))
+  def shingleRows(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"), tokens(col("text")).as("__ts"))
+      .select(col("doc_id"), explode(shingles(col("__ts"), n)).as("shingle"))
 
   /** Corpus-wide word n-gram counts — the frequency profile a pretraining
     * pipeline runs for boilerplate/contamination detection. NON-distinct
@@ -48,11 +48,10 @@ object TextOps {
     * keeps whole-stage codegen and lets AQE handle gram skew (stopword
     * bigrams are the classic hot keys).
     */
-  def ngramCounts(docs: DataFrame, n: Int, idCol: String = "doc_id",
-                  textCol: String = "text"): DataFrame = {
+  def ngramCounts(docs: DataFrame, n: Int): DataFrame = {
     require(n >= 1, s"n-gram size must be >= 1, got $n")
     val pos = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__ts"))
+      .select(col("doc_id"), tokens(col("text")).as("__ts"))
       .select(col("doc_id"), posexplode(col("__ts")).as(Seq("i", "w")))
     var grams = pos.select(col("doc_id"), col("i"), col("w").as("gram"))
     for (d <- 1 until n) {
@@ -79,11 +78,10 @@ object TextOps {
     * join (a `BETWEEN` range condition would plan as a nested loop). The
     * position table is materialized once and reused by all `window` legs.
     */
-  def cooccurrence(docs: DataFrame, window: Int, idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame = {
+  def cooccurrence(docs: DataFrame, window: Int): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
     val pos = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__ts"))
+      .select(col("doc_id"), tokens(col("text")).as("__ts"))
       .select(col("doc_id"), posexplode(col("__ts")).as(Seq("i", "w")))
       .localCheckpoint(true)
     val legs = (1 to window).map { d =>
@@ -115,11 +113,9 @@ object TextOps {
     * one-row broadcast cross-joins. `minCount` prunes the long noise tail
     * before the unigram join. Output (gram, cnt, lift_micro).
     */
-  def bigramLift(docs: DataFrame, minCount: Long = 5,
-                 idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame = {
+  def bigramLift(docs: DataFrame, minCount: Long = 5): DataFrame = {
     val pos = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__ts"))
+      .select(col("doc_id"), tokens(col("text")).as("__ts"))
       .select(col("doc_id"), posexplode(col("__ts")).as(Seq("i", "w")))
     val uni = pos.groupBy("w").agg(count(lit(1)).as("ucnt"))
     val totTok = uni.agg(sum(col("ucnt")).as("t_tok"))
@@ -155,13 +151,11 @@ object TextOps {
     * `sequence(1, 0)` DESCENDS instead of returning empty. Output
     * (doc_id, chunk_idx, n_tok, chunk_md5), zero rows for empty docs.
     */
-  def chunkFingerprints(docs: DataFrame, chunkTokens: Int,
-                        idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame = {
+  def chunkFingerprints(docs: DataFrame, chunkTokens: Int): DataFrame = {
     require(chunkTokens >= 1, s"chunkTokens must be >= 1, got $chunkTokens")
     val k = chunkTokens
     docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__ts"))
+      .select(col("doc_id"), tokens(col("text")).as("__ts"))
       .withColumn("__n", size(col("__ts")).cast("long"))
       .withColumn("__nc", expr(s"(__n + ${k - 1}) div $k"))
       .select(col("doc_id"), col("__ts"), col("__n"),
@@ -185,21 +179,20 @@ object TextOps {
     * decimals (engine-agnostic). quality_score ∈ [0,1]: length-saturated
     * and punctuation-penalized.
     */
-  def textStats(docs: DataFrame, idCol: String = "doc_id",
-                textCol: String = "text"): DataFrame = {
+  def textStats(docs: DataFrame): DataFrame = {
     val toks = col("__ts")
     val nTok = size(toks).cast("long")
     val punct = size(expr(
-      s"regexp_extract_all($textCol, '[^a-zA-Z0-9\\\\s]', 0)")).cast("long")
+      "regexp_extract_all(text, '[^a-zA-Z0-9\\\\s]', 0)")).cast("long")
     val stops = size(filter(toks,
       t => t.isInCollection(Stopwords))).cast("long")
     val punctRatio = round(punct.cast("double") /
-      when(length(col(textCol)) === 0, lit(null)).otherwise(length(col(textCol))), 6)
+      when(length(col("text")) === 0, lit(null)).otherwise(length(col("text"))), 6)
     val stopRatio = round(stops.cast("double") /
       when(nTok === 0, lit(null)).otherwise(nTok), 6)
-    docs.select(col(idCol), col(textCol), tokens(col(textCol)).as("__ts"))
-      .select(col(idCol),
-        length(col(textCol)).cast("long").as("n_chars_m"),
+    docs.select(col("doc_id"), col("text"), tokens(col("text")).as("__ts"))
+      .select(col("doc_id"),
+        length(col("text")).cast("long").as("n_chars_m"),
         nTok.as("n_tokens"),
         punct.as("n_punct"),
         stops.as("n_stopwords"),
@@ -220,14 +213,13 @@ object TextOps {
 
   /** Marker-word language ID: score = marker-token count per language,
     * predict argmax, ties → alphabetically first scored language, all-zero
-    * → "und". Output: (id, s_de, s_en, s_es, s_fr, pred_lang).
+    * → "und". Output: (doc_id, s_de, s_en, s_es, s_fr, pred_lang).
     */
-  def langId(docs: DataFrame, idCol: String = "doc_id",
-             textCol: String = "text"): DataFrame = {
+  def langId(docs: DataFrame): DataFrame = {
     val toks = col("__ts")
     val scored = docs
-      .select(col(idCol), tokens(col(textCol)).as("__ts"))
-      .select(Seq(col(idCol)) ++ LangMarkers.map {
+      .select(col("doc_id"), tokens(col("text")).as("__ts"))
+      .select(Seq(col("doc_id")) ++ LangMarkers.map {
       case (lang, markers) =>
         size(filter(toks, t => t.isInCollection(markers)))
           .cast("long").as(s"s_$lang")
@@ -247,13 +239,12 @@ object TextOps {
   /** Whitespace token count + BPE-ish sub-token count (letter runs, digit
     * runs, single punctuation marks — the common pre-tokenizer regex).
     */
-  def tokenCounts(docs: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text"): DataFrame =
-    docs.select(col(idCol),
-      size(filter(split(col(textCol), "\\s+"), t => t =!= lit("")))
+  def tokenCounts(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      size(filter(split(col("text"), "\\s+"), t => t =!= lit("")))
         .cast("long").as("ws_tokens"),
       size(expr(
-        s"regexp_extract_all($textCol, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\\\s]', 0)"))
+        "regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\\\s]', 0)"))
         .cast("long").as("bpe_tokens"))
 
   // --- TF-IDF term ranking ---------------------------------------------------
@@ -275,11 +266,10 @@ object TextOps {
     * is a row_number window partitioned by doc_id — per-partition state
     * is one doc's term list, never the corpus.
     */
-  def tfIdfTop(docs: DataFrame, k: Int, idCol: String = "doc_id",
-               textCol: String = "text"): DataFrame = {
+  def tfIdfTop(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = docs
-      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("term"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
@@ -298,7 +288,7 @@ object TextOps {
 
   /** Deterministic hash split — the train/valid/test assignment a training
     * pipeline must make reproducibly across engines and re-runs: bucket =
-    * 60-bit md5 prefix of the STRINGIFIED id, mod `buckets`
+    * 60-bit md5 prefix of the STRINGIFIED doc_id, mod 10
     * ([[graft.graph.GraphOps.md5Prio]] twin discipline — DuckDB:
     * `('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 15))::BIGINT`). Purely
     * per-row (no shuffle at all — survives any scale), stable under
@@ -307,17 +297,15 @@ object TextOps {
     * md5 buckets are uniform.
     *
     * Returns the input plus (bucket, split) where split = "train" for
-    * bucket < trainUpto, "valid" for bucket < validUpto, else "test".
+    * buckets 0–7, "valid" for bucket 8 and "test" for bucket 9.
     */
-  def hashSplit(docs: DataFrame, idCol: String = "doc_id",
-                buckets: Int = 10, trainUpto: Int = 8,
-                validUpto: Int = 9): DataFrame =
+  def hashSplit(docs: DataFrame): DataFrame =
     docs.withColumn("bucket",
-        pmod(conv(substring(md5(col(idCol).cast("string")), 1, 15), 16, 10)
-          .cast("long"), lit(buckets.toLong)))
+        pmod(conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
+          .cast("long"), lit(10L)))
       .withColumn("split",
-        when(col("bucket") < trainUpto, "train")
-          .when(col("bucket") < validUpto, "valid")
+        when(col("bucket") < 8, "train")
+          .when(col("bucket") < 9, "valid")
           .otherwise("test"))
 
   // --- train/test contamination ----------------------------------------------
@@ -337,18 +325,15 @@ object TextOps {
     * docs are dropped DETERMINISTICALLY (both engines apply the same
     * filter), the LinkPrediction/g_jaccard_capped cap discipline.
     */
-  def contamination(docs: DataFrame, n: Int = 8, maxTrainDf: Long = 100L,
-                    idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
-    val split = hashSplit(docs, idCol)
+  def contamination(docs: DataFrame, n: Int = 8,
+                    maxTrainDf: Long = 100L): DataFrame = {
+    val split = hashSplit(docs)
     val trainSh = shingleRows(
-      split.where(col("split") === "train").select(col(idCol), col(textCol)),
-      idCol, textCol, n)
-      .select(col(idCol).as("train_doc"), col("shingle"))
+      split.where(col("split") === "train").select("doc_id", "text"), n)
+      .select(col("doc_id").as("train_doc"), col("shingle"))
     val testSh = shingleRows(
-      split.where(col("split") === "test").select(col(idCol), col(textCol)),
-      idCol, textCol, n)
-      .select(col(idCol).as("test_doc"), col("shingle"))
+      split.where(col("split") === "test").select("doc_id", "text"), n)
+      .select(col("doc_id").as("test_doc"), col("shingle"))
     val kept = trainSh.join(
       trainSh.groupBy("shingle").agg(count(lit(1)).as("df"))
         .where(col("df") <= maxTrainDf).select("shingle"),
@@ -368,14 +353,13 @@ object TextOps {
     * division never sees zero. Entirely per-row array expressions — zero
     * shuffles at any corpus size.
     */
-  def repetition(docs: DataFrame, n: Int = 5, idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame =
-    docs.select(col(idCol), tokens(col(textCol)).as("__ts"))
-      .select(col(idCol),
+  def repetition(docs: DataFrame, n: Int = 5): DataFrame =
+    docs.select(col("doc_id"), tokens(col("text")).as("__ts"))
+      .select(col("doc_id"),
         (size(col("__ts")) - (n - 1)).cast("long").as("total"),
         size(shingles(col("__ts"), n)).cast("long").as("distinct_grams"))
       .where(col("total") > 0L)
-      .select(col(idCol), col("total"), col("distinct_grams"),
+      .select(col("doc_id"), col("total"), col("distinct_grams"),
         expr("(total - distinct_grams) * 1000000 div total").as("rep_micro"))
 
   /** Per-document boilerplate fraction — the share of a document's
@@ -393,16 +377,15 @@ object TextOps {
     * [[contamination]]) hot boilerplate grams cost a count, not a
     * quadratic fan-out; AQE handles the stopword-gram skew.
     */
-  def boilerplateFrac(docs: DataFrame, n: Int = 5, minDf: Long = 3L,
-                      idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    val sh = shingleRows(docs, idCol, textCol, n)
+  def boilerplateFrac(docs: DataFrame, n: Int = 5,
+                      minDf: Long = 3L): DataFrame = {
+    val sh = shingleRows(docs, n)
     val df = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     sh.join(df, Seq("shingle"))
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("grams"),
         sum(when(col("df") >= minDf, 1L).otherwise(0L)).as("dup_grams"))
-      .select(col(idCol), col("grams"), col("dup_grams"),
+      .select(col("doc_id"), col("grams"), col("dup_grams"),
         expr("dup_grams * 1000000 div grams").as("frac_micro"))
   }
 
@@ -424,21 +407,20 @@ object TextOps {
     * packing job spreads across workers. Zero-token documents are dropped
     * (they occupy no window).
     */
-  def packBins(docs: DataFrame, capacity: Long, shards: Long = 8L,
-               idCol: String = "doc_id",
-               textCol: String = "text"): DataFrame = {
+  def packBins(docs: DataFrame, capacity: Long,
+               shards: Long = 8L): DataFrame = {
     require(capacity >= 1, s"window capacity must be >= 1, got $capacity")
     require(shards >= 1, s"need at least one shard, got $shards")
     import org.apache.spark.sql.expressions.Window
-    val toks = tokenCounts(docs, idCol, textCol)
-      .select(col(idCol), col("ws_tokens").as("tok"))
+    val toks = tokenCounts(docs)
+      .select(col("doc_id"), col("ws_tokens").as("tok"))
       .where(col("tok") > 0L)
       .withColumn("shard",
-        graft.graph.GraphOps.md5Prio(col(idCol).cast("string")) % shards)
-    val w = Window.partitionBy("shard").orderBy(idCol)
+        graft.graph.GraphOps.md5Prio(col("doc_id").cast("string")) % shards)
+    val w = Window.partitionBy("shard").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     toks.withColumn("cum", sum(col("tok")).over(w))
-      .select(col(idCol), col("shard"), col("tok"),
+      .select(col("doc_id"), col("shard"), col("tok"),
         expr(s"(cum - tok) div $capacity").as("bin_first"),
         expr(s"(cum - 1) div $capacity").as("bin_last"),
         ((col("cum") - col("tok")) % capacity).as("bin_off"))
@@ -451,11 +433,9 @@ object TextOps {
     * (md5 hex is identical everywhere); a compact identity for near-dup
     * bucketing and provenance.
     */
-  def fingerprint(docs: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text", n: Int = 4,
-                  k: Int = 4): DataFrame =
-    shingleRows(docs, idCol, textCol, n)
-      .groupBy(idCol)
+  def fingerprint(docs: DataFrame, n: Int = 4, k: Int = 4): DataFrame =
+    shingleRows(docs, n)
+      .groupBy("doc_id")
       .agg(concat_ws(",",
         slice(sort_array(collect_list(md5(col("shingle")))), 1, k))
         .as("fingerprint"))
@@ -467,9 +447,8 @@ object TextOps {
     * Window rows are O(total tokens) — the linear corpus pass every
     * substring-level pipeline stage shares.
     */
-  def windowHashRows(docs: DataFrame, n: Int, idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__ts"))
+  def windowHashRows(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"), tokens(col("text")).as("__ts"))
       .where(size(col("__ts")) >= n)
       .select(col("doc_id"), posexplode(transform(
         sequence(lit(1), size(col("__ts")) - lit(n - 1)),
@@ -486,9 +465,8 @@ object TextOps {
     * handles the boilerplate-hot hashes), then one per-doc agg — never a
     * doc×doc pair product, unlike shingle-Jaccard paths.
     */
-  def duplicatedWindows(docs: DataFrame, n: Int, idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame = {
-    val w = windowHashRows(docs, n, idCol, textCol).select("doc_id", "wh")
+  def duplicatedWindows(docs: DataFrame, n: Int): DataFrame = {
+    val w = windowHashRows(docs, n).select("doc_id", "wh")
     val cnt = w.groupBy("wh").agg(count(lit(1)).as("c"))
     w.join(cnt, "wh")
       .groupBy("doc_id")
@@ -515,10 +493,9 @@ object TextOps {
     * then one per-doc distinct+count. Returns (doc_id, n_grams,
     * n_fingerprints, density_ppm = fingerprints·10⁶ div grams).
     */
-  def winnow(docs: DataFrame, k: Int, w: Int, idCol: String = "doc_id",
-             textCol: String = "text"): DataFrame = {
+  def winnow(docs: DataFrame, k: Int, w: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val g = windowHashRows(docs, k, idCol, textCol)
+    val g = windowHashRows(docs, k)
       .select(col("doc_id"), col("i"),
         conv(substring(col("wh"), 1, 15), 16, 10).cast("long").as("h"))
     val ng = g.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))

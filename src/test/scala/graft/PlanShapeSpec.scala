@@ -82,12 +82,12 @@ class PlanShapeSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/embeddings.parquet").exists())
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val p = graft.ann.Similarity.preppedView(emb, "vec_id", "embedding")
+    val p = graft.ann.Similarity.preppedView(emb)
     val cents = p.limit(8)
       .withColumn("cid", lit(1))
       .select(col("cid"), col("__vd").as("cv"), col("__nrm").as("cn"))
     val plan = fmt(
-      graft.ann.Similarity.ivfAssignment(p, cents, "vec_id"))
+      graft.ann.Similarity.ivfAssignment(p, cents))
     // the n×C centroid scoring must broadcast the C-row side — anything
     // else (cartesian, shuffled product) is corpus-quadratic movement
     assert(plan.contains("BroadcastNestedLoopJoin"),

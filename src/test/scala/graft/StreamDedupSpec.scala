@@ -63,7 +63,7 @@ class StreamDedupSpec extends SparkSpec {
     def collect(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     val batch = Dedup.minhashSignatures(
-        graft.text.TextOps.shingleRows(df, "doc_id", "text", 3), 16)
+        graft.text.TextOps.shingleRows(df, 3), 16)
       .select($"doc_id", $"i".cast("long"), $"h")
     val perRow = collect(StreamDedup.signaturesPerRowMd5(df, 3, 16))
     assert(perRow === collect(batch))

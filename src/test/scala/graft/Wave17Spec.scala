@@ -145,7 +145,7 @@ class Wave17Spec extends SparkSpec {
       // the operator body applied to an in-memory docs frame
       import org.apache.spark.sql.expressions.Window
       val fs = graft.text.TextOps
-        .shingleRows(docs.toDF("doc_id", "text"), "doc_id", "text", 3)
+        .shingleRows(docs.toDF("doc_id", "text"), 3)
         .groupBy("shingle").agg(min("doc_id").as("fd"))
       fs.groupBy(expr("fd div 5").as("bucket"))
         .agg(count(lit(1)).as("new_types"))

@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.corpus.CorpusGen
 import graft.graph.{EdgeDerivation, GraphOps}
+import graft.util.TempDir
 
 /** Corpus determinism + the per-row sha256 invariant (BASELINE.json
   * input_hint) + edge-derivation ground truth.
@@ -35,15 +34,17 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("sha256 invariant survives a parquet round-trip") {
-    val dir = Files.createTempDirectory("graft-corpus").toString
-    val withSha = CorpusGen.withSha(corpus)
-    withSha.write.mode("overwrite").parquet(dir)
-    val back = spark.read.parquet(dir)
-    val mismatches = back
-      .where(sha2(col("content"), 256) =!= col("content_sha256"))
-      .count()
-    assert(mismatches === 0)
-    assert(back.count() === corpus.count())
+    TempDir.withTempDir("graft-corpus") { tmp =>
+      val dir = tmp.toString
+      val withSha = CorpusGen.withSha(corpus)
+      withSha.write.mode("overwrite").parquet(dir)
+      val back = spark.read.parquet(dir)
+      val mismatches = back
+        .where(sha2(col("content"), 256) =!= col("content_sha256"))
+        .count()
+      assert(mismatches === 0)
+      assert(back.count() === corpus.count())
+    }
   }
 
   test("import edges: every file links to its two generated targets") {

@@ -63,12 +63,13 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("readEdgeList parses src dst [w] text with comments and blanks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-el")
-    java.nio.file.Files.writeString(dir.resolve("g.txt"),
-      "# a comment\n0 1\n1 2 3.5\n\n2 0 1.25\n")
-    val got = GraphOps.readEdgeList(spark, dir.toString)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got === Set((0L, 1L, 1.0), (1L, 2L, 3.5), (2L, 0L, 1.25)))
+    graft.util.TempDir.withTempDir("graft-el") { dir =>
+      java.nio.file.Files.writeString(dir.resolve("g.txt"),
+        "# a comment\n0 1\n1 2 3.5\n\n2 0 1.25\n")
+      val got = GraphOps.readEdgeList(spark, dir.toString)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got === Set((0L, 1L, 1.0), (1L, 2L, 3.5), (2L, 0L, 1.25)))
+    }
   }
 
 

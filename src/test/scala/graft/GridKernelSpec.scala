@@ -72,19 +72,21 @@ class GridKernelSpec extends SparkSpec {
   }
 
   test("grid-mode resume from mid-run checkpoint equals straight-through") {
-    val base = java.nio.file.Files.createTempDirectory("graft-gridck").toString
-    val gcfg = cfg.copy(tol = 1e-8, gridSide = Some(2),
-      broadcastFrontierBelow = 1L, batchSize = 2)
-    val ref = collectD(PageRank.run(spark, edgesDf(g), gcfg).state,
-      "id", "rank")
-    val ck = new graft.engine.CheckpointStore(base, "pr", "grid")
-    PageRank.run(spark, edgesDf(g),
-      gcfg.copy(maxIter = 4, checkpoint = Some(ck), durableEvery = 2))
-    val r2 = PageRank.run(spark, edgesDf(g),
-      gcfg.copy(checkpoint = Some(ck)), resume = true)
-    assert(r2.converged)
-    collectD(r2.state, "id", "rank").foreach { case (k, v) =>
-      assert(math.abs(v - ref(k)) < 1e-9, s"vertex $k")
+    graft.util.TempDir.withTempDir("graft-gridck") { tmp =>
+      val base = tmp.toString
+      val gcfg = cfg.copy(tol = 1e-8, gridSide = Some(2),
+        broadcastFrontierBelow = 1L, batchSize = 2)
+      val ref = collectD(PageRank.run(spark, edgesDf(g), gcfg).state,
+        "id", "rank")
+      val ck = new graft.engine.CheckpointStore(base, "pr", "grid")
+      PageRank.run(spark, edgesDf(g),
+        gcfg.copy(maxIter = 4, checkpoint = Some(ck), durableEvery = 2))
+      val r2 = PageRank.run(spark, edgesDf(g),
+        gcfg.copy(checkpoint = Some(ck)), resume = true)
+      assert(r2.converged)
+      collectD(r2.state, "id", "rank").foreach { case (k, v) =>
+        assert(math.abs(v - ref(k)) < 1e-9, s"vertex $k")
+      }
     }
   }
 

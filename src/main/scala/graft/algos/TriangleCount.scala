@@ -26,19 +26,19 @@ import graft.graph.{EdgeSet, GraphOps}
   * vertex's forward-degree is then ≤ √(2m)-ish, so hub vertices (whose
   * id-ordered forward-degree can be Θ(deg)) no longer dominate the wedge
   * fan-out. The count is orientation-invariant, so the oracle is unchanged.
-  * The oriented edge set is materialized and counted once, in one job, and
-  * reused by every plan leg (two wedge sides + closing), instead of
-  * re-running the upstream derivation per leg. The closing join is
-  * left-semi (no payload moves).
+  * The oriented edge set is materialized once and reused by all three plan
+  * legs (two wedge sides + closing), instead of re-running the upstream
+  * derivation per leg. The closing join is left-semi (no payload moves).
   *
-  * Where the wedges go: every join whose build side is the edge set takes
-  * that side from [[edgeSide]], which picks the plan from the oriented
-  * set's measured row count. Up to [[graft.engine.Lineage.rowsPerPartition]]
-  * rows the edge side is broadcast, so the wedges are built and closed in
-  * the stage that reads the edges and never cross the network (LA3 ships
-  * neighbour lists, not wedges — PAPER §6). Above it, both sides are
-  * shuffled-hash. Each kernel has a package-private overload taking that
-  * bound, so a spec can run both paths on one small graph.
+  * Where the wedges go: every join whose build side is the edge set
+  * broadcasts it, so the wedges are built and closed in the stage that
+  * reads the edges and never cross the network (LA3 ships neighbour
+  * lists, not wedges — PAPER §6). Against shuffled-hash edge sides,
+  * broadcast cost less task CPU for tc, lcc, kclique4 and balance_tri on
+  * every co-purchase graph measured, 8.9 k to 1.2 M edges (sf0.001 to
+  * sf0.1), and less wall time from 30 k edges up (BASELINE.md, "Triangle
+  * family: broadcast edge sides"). The price is that the oriented edge
+  * set must fit in the driver's and each executor's memory.
   */
 object TriangleCount {
 
@@ -64,53 +64,31 @@ object TriangleCount {
       extra: _*)
   }
 
-  /** The edge side of a join against the wedge fan-out, planned from the
-    * row count `rows` of the edge set it is projected from: broadcast when
-    * `rows ≤ broadcastRows`, so the join runs in the stage that reads the
-    * other side and the wedges are never shuffled; shuffled-hash above it
-    * (sort-merge would re-sort the fan-out).
-    */
-  private[graft] def edgeSide(rows: Long, broadcastRows: Long)(
-      side: DataFrame): DataFrame =
-    if (rows <= broadcastRows) broadcast(side) else side.hint("shuffle_hash")
-
   /** One row (a, b, c) per triangle of an acyclically oriented edge set
     * (a→b, b→c, a→c): the wedge self-join on b, closed by a left-semi
-    * join on (a, c). Both joins take their edge side from `side`
-    * ([[edgeSide]] of the oriented set's row count): broadcast, the wedges
-    * are built and closed in the stage that reads `o`; shuffled-hash, they
-    * are shuffled once on (a, c).
+    * join on (a, c). Both joins broadcast their edge side, so the wedges
+    * are built and closed in the stage that reads `o`: they are never
+    * shuffled or sorted.
     */
-  private[graft] def closedWedges(o: DataFrame,
-                                  side: DataFrame => DataFrame): DataFrame = {
+  def closedWedges(o: DataFrame): DataFrame = {
     val e1 = o.select(col("src").as("a"), col("dst").as("b"))
     val e2 = o.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(side(e2), "b").select("a", "b", "c")
+    val wedges = e1.join(broadcast(e2), "b").select("a", "b", "c")
     val closing = o.select(col("src").as("a"), col("dst").as("c"))
-    wedges.join(side(closing), Seq("a", "c"), "left_semi")
-  }
-
-  /** `df` lazily materialized ([[graft.engine.Lineage.cut]]) and counted,
-    * in the one job an eager cut would run: the count is over the cut's
-    * rows (`rdd`), where `Dataset.count` would plan an aggregate and, with
-    * AQE on, a second job for its exchange.
-    */
-  private[algos] def counted(df: DataFrame): (DataFrame, Long) = {
-    val c = df.transform(Lineage.cut(_))
-    (c, c.rdd.count())
+    wedges.join(broadcast(closing), Seq("a", "c"), "left_semi")
   }
 
   /** Canonical simple edges, [[orientedByDegree]], with both the canonical
-    * and the oriented set materialized, and the oriented set's row count.
-    * A [[EdgeSet.Canonical]] input is already oriented and unique, so it
-    * skips the orient + dedup shuffle over the full edge set; any other
-    * input is oriented here.
+    * and the oriented set materialized. A [[EdgeSet.Canonical]] input is
+    * already oriented and unique, so it skips the orient + dedup shuffle
+    * over the full edge set; any other input is oriented here.
     */
-  private def oriented(edges: EdgeSet): (DataFrame, Long) =
-    counted(orientedByDegree((edges match {
+  private def oriented(edges: EdgeSet): DataFrame =
+    orientedByDegree((edges match {
         case c: EdgeSet.Canonical => c.frame.select("src", "dst")
         case other => GraphOps.orient(other.frame)
-      }).transform(Lineage.cut(_, eager = true))))
+      }).transform(Lineage.cut(_, eager = true)))
+      .transform(Lineage.cut(_, eager = true))
 
   /** Triangles per corner vertex (id, tri_cnt): each triangle credits all
     * three corners.
@@ -120,31 +98,14 @@ object TriangleCount {
       .groupBy("id")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("tri_cnt"))
 
-  /** The closed wedges of [[oriented]] `edges`, broadcast up to
-    * `broadcastRows` oriented edges.
-    */
-  private def triangles(edges: EdgeSet, broadcastRows: Long): DataFrame = {
-    val (o, n) = oriented(edges)
-    closedWedges(o, edgeSide(n, broadcastRows))
-  }
-
   /** Global triangle count; single row (triangles: long). */
   def count(edges: EdgeSet): DataFrame =
-    count(edges, Lineage.rowsPerPartition)
-
-  /** [[count]] with the broadcast bound `broadcastRows`. */
-  private[graft] def count(edges: EdgeSet, broadcastRows: Long): DataFrame =
-    triangles(edges, broadcastRows)
+    closedWedges(oriented(edges))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("triangles"))
 
   /** Per-vertex triangle participation counts (id, tri_cnt). */
   def perVertex(edges: EdgeSet): DataFrame =
-    perVertex(edges, Lineage.rowsPerPartition)
-
-  /** [[perVertex]] with the broadcast bound `broadcastRows`. */
-  private[graft] def perVertex(edges: EdgeSet,
-                               broadcastRows: Long): DataFrame =
-    cornerCounts(triangles(edges, broadcastRows))
+    cornerCounts(closedWedges(oriented(edges)))
 
   /** Per-vertex local clustering coefficient, scored in exact integer
     * micro-units so the oracle twin is byte-identical across engines:
@@ -158,19 +119,13 @@ object TriangleCount {
     * [[perVertex]] plan — degree and triangle aggregates both shuffle on
     * vertex id, and the final assembly is a same-key left join.
     */
-  def localClustering(edges: EdgeSet): DataFrame =
-    localClustering(edges, Lineage.rowsPerPartition)
-
-  /** [[localClustering]] with the broadcast bound `broadcastRows`. */
-  private[graft] def localClustering(edges: EdgeSet,
-                                     broadcastRows: Long): DataFrame = {
-    val (e, n) = oriented(edges)
+  def localClustering(edges: EdgeSet): DataFrame = {
+    val e = oriented(edges)
     val deg = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .groupBy("id")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-    deg.join(cornerCounts(closedWedges(e, edgeSide(n, broadcastRows))),
-        Seq("id"), "left")
+    deg.join(cornerCounts(closedWedges(e)), Seq("id"), "left")
       .select(col("id"),
         coalesce(col("tri_cnt"), lit(0L)).as("tri_cnt"),
         col("deg"),
@@ -224,26 +179,19 @@ object TriangleCount {
     * Scale: the candidate fan-out is Σ_tri fwd-deg(c) — the same
     * arboricity-bounded budget as the wedge step (degree orientation caps
     * forward-degree at ~√(2m)), and both clique checks are left-semi
-    * joins. The extension join and both checks take their edge side from
-    * [[edgeSide]], as the triangle joins do: on a broadcast-sized edge set
-    * the whole candidate chain runs in the stage that reads the edges, and
-    * only the count's partial aggregates move; above it, no payload beyond
-    * the 4 ids ever shuffles. One row (cliques4: long).
+    * joins. The extension join and both checks broadcast their edge side,
+    * as the triangle joins do, so the whole candidate chain runs in the
+    * stage that reads the edges and only the count's partial aggregates
+    * move. One row (cliques4: long).
     */
-  def fourCliques(edges: EdgeSet): DataFrame =
-    fourCliques(edges, Lineage.rowsPerPartition)
-
-  /** [[fourCliques]] with the broadcast bound `broadcastRows`. */
-  private[graft] def fourCliques(edges: EdgeSet,
-                                 broadcastRows: Long): DataFrame = {
-    val (e, n) = oriented(edges)
-    val side = edgeSide(n, broadcastRows) _
+  def fourCliques(edges: EdgeSet): DataFrame = {
+    val e = oriented(edges)
     val ext = e.select(col("src").as("c"), col("dst").as("d"))
-    val cand = closedWedges(e, side).join(side(ext), "c")
+    val cand = closedWedges(e).join(broadcast(ext), "c")
     cand
-      .join(side(e.select(col("src").as("a"), col("dst").as("d"))),
+      .join(broadcast(e.select(col("src").as("a"), col("dst").as("d"))),
         Seq("a", "d"), "left_semi")
-      .join(side(e.select(col("src").as("b"), col("dst").as("d"))),
+      .join(broadcast(e.select(col("src").as("b"), col("dst").as("d"))),
         Seq("b", "d"), "left_semi")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("cliques4"))
   }
@@ -277,23 +225,18 @@ object TriangleCount {
     * a = c because the input is self-loop-free. One row
     * (cyclic3, transitive3), exact BIGINTs.
     */
-  def directedCensus(edges: DataFrame): DataFrame =
-    directedCensus(edges, Lineage.rowsPerPartition)
-
-  /** [[directedCensus]] with the broadcast bound `broadcastRows`. */
-  private[graft] def directedCensus(edges: DataFrame,
-                                    broadcastRows: Long): DataFrame = {
-    val (e, n) = counted(GraphOps.simplify(edges.select("src", "dst")))
-    val side = edgeSide(n, broadcastRows) _
+  def directedCensus(edges: DataFrame): DataFrame = {
+    val e = GraphOps.simplify(edges.select("src", "dst"))
+      .transform(Lineage.cut(_, eager = true))
     val e1 = e.select(col("src").as("a"), col("dst").as("b"))
     val e2 = e.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(side(e2), "b").select("a", "c")
+    val wedges = e1.join(broadcast(e2), "b").select("a", "c")
     val cyc = wedges
-      .join(side(e.select(col("src").as("c"), col("dst").as("a"))),
+      .join(broadcast(e.select(col("src").as("c"), col("dst").as("a"))),
         Seq("a", "c"), "left_semi")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("c3"))
     val trans = wedges
-      .join(side(e.select(col("src").as("a"), col("dst").as("c"))),
+      .join(broadcast(e.select(col("src").as("a"), col("dst").as("c"))),
         Seq("a", "c"), "left_semi")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("t3"))
     cyc.crossJoin(trans)
@@ -310,29 +253,22 @@ object TriangleCount {
     *
     * Scale honesty: the hash filter sits on the wedge rows AFTER the wedge
     * join, so wedge enumeration is still the full √(2m)-bounded fan-out;
-    * the ×rate saving lands on everything downstream — on a shuffled-hash
-    * ([[edgeSide]]) edge set, the closing join's probe side ships 1/rate
-    * of the wedges.
+    * the ×rate saving lands on everything downstream — the closing
+    * join probes the broadcast edge set with 1/rate of the wedges.
     * Estimator error is the standard ~1/√sampled; the EXACT sampled/closed
     * counts are what the oracle gates.
     */
-  def sampledCount(edges: EdgeSet, rate: Int): DataFrame =
-    sampledCount(edges, rate, Lineage.rowsPerPartition)
-
-  /** [[sampledCount]] with the broadcast bound `broadcastRows`. */
-  private[graft] def sampledCount(edges: EdgeSet, rate: Int,
-                                  broadcastRows: Long): DataFrame = {
+  def sampledCount(edges: EdgeSet, rate: Int): DataFrame = {
     require(rate >= 1, s"rate must be >= 1, got $rate")
-    val (e, n) = oriented(edges)
-    val side = edgeSide(n, broadcastRows) _
+    val e = oriented(edges)
     val e1 = e.select(col("src").as("a"), col("dst").as("b"))
     val e2 = e.select(col("src").as("b"), col("dst").as("c"))
-    val wedges = e1.join(side(e2), "b").select("a", "b", "c")
+    val wedges = e1.join(broadcast(e2), "b").select("a", "b", "c")
       .where(GraphOps.md5Prio(concat_ws(":", col("a"), col("b"), col("c")))
         % rate === 0)
     val closing = e.select(col("src").as("a"), col("dst").as("c"),
       lit(1L).as("hit"))
-    wedges.join(side(closing), Seq("a", "c"), "left")
+    wedges.join(broadcast(closing), Seq("a", "c"), "left")
       .agg(org.apache.spark.sql.functions.count(lit(1)).cast("long")
         .as("n_sampled"),
         coalesce(sum("hit"), lit(0L)).cast("long").as("n_closed"))
@@ -347,23 +283,18 @@ object TriangleCount {
     * (n_triangles, strength_sum). Same enumeration plan as [[count]] with
     * the weight carried through the joins (the signedBalance discipline).
     */
-  def triangleStrength(edgesW: DataFrame): DataFrame =
-    triangleStrength(edgesW, Lineage.rowsPerPartition)
-
-  /** [[triangleStrength]] with the broadcast bound `broadcastRows`. */
-  private[graft] def triangleStrength(edgesW: DataFrame,
-                                      broadcastRows: Long): DataFrame = {
-    val (e, n) = counted(orientedByDegree(edgesW.select(col("src"),
-      col("dst"), col("weight").cast("long").as("w"))))
-    val side = edgeSide(n, broadcastRows) _
+  def triangleStrength(edgesW: DataFrame): DataFrame = {
+    val e = orientedByDegree(edgesW.select(col("src"), col("dst"),
+        col("weight").cast("long").as("w")))
+      .transform(Lineage.cut(_, eager = true))
     val e1 = e.select(col("src").as("a"), col("dst").as("b"),
       col("w").as("w1"))
     val e2 = e.select(col("src").as("b"), col("dst").as("c"),
       col("w").as("w2"))
-    val wedges = e1.join(side(e2), "b").select("a", "c", "w1", "w2")
+    val wedges = e1.join(broadcast(e2), "b").select("a", "c", "w1", "w2")
     val closing = e.select(col("src").as("a"), col("dst").as("c"),
       col("w").as("w3"))
-    wedges.join(side(closing), Seq("a", "c"))
+    wedges.join(broadcast(closing), Seq("a", "c"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_triangles"),
         coalesce(sum(least(col("w1"), col("w2"), col("w3"))), lit(0L))
           .as("strength_sum"))
@@ -381,20 +312,13 @@ object TriangleCount {
     * closing join) with three codegen'd sign expressions over the corner
     * ids — no extra shuffle beyond the triangle enumeration itself.
     */
-  def signedBalance(edges: EdgeSet): DataFrame =
-    signedBalance(edges, Lineage.rowsPerPartition)
-
-  /** [[signedBalance]] with the broadcast bound `broadcastRows`. */
-  private[graft] def signedBalance(edges: EdgeSet,
-                                   broadcastRows: Long): DataFrame = {
+  def signedBalance(edges: EdgeSet): DataFrame = {
     // sign each edge ONCE (|E| hashes) and carry the bit through the
     // enumeration joins, instead of recomputing 3 md5s per TRIANGLE. At
     // sf0.1 the wedge join dominates either way (A/B medians 24.5 vs 26,
     // inside noise — BASELINE.md wave 24); the per-edge spelling is kept
     // because triangles ≫ edges is exactly the skew that grows at 100×.
-    val (o, n) = oriented(edges)
-    val side = edgeSide(n, broadcastRows) _
-    val e = o
+    val e = oriented(edges)
       .withColumn("s", GraphOps.md5Prio(concat_ws(":",
         least(col("src"), col("dst")),
         greatest(col("src"), col("dst")))) % 2)
@@ -403,11 +327,11 @@ object TriangleCount {
       col("s").as("s1"))
     val e2 = e.select(col("src").as("b"), col("dst").as("c"),
       col("s").as("s2"))
-    val wedges = e1.join(side(e2), "b").select("a", "c", "s1", "s2")
+    val wedges = e1.join(broadcast(e2), "b").select("a", "c", "s1", "s2")
     val closing = e.select(col("src").as("a"), col("dst").as("c"),
       col("s").as("s3"))
     val par = (col("s1") + col("s2") + col("s3")) % 2
-    wedges.join(side(closing), Seq("a", "c")).agg(
+    wedges.join(broadcast(closing), Seq("a", "c")).agg(
       coalesce(sum(when(par === 0, 1L).otherwise(0L)), lit(0L))
         .as("balanced"),
       coalesce(sum(when(par === 1, 1L).otherwise(0L)), lit(0L))

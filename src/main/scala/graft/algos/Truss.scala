@@ -14,15 +14,12 @@ import graft.graph.GraphOps
   * Each synchronous round re-enumerates triangles over the surviving edge
   * set with [[TriangleCount]]'s wedge machinery — degree-ordered
   * orientation (√(2m) forward-degree bound on the wedge fan-out), one
-  * self-join for wedges, left-semi closing — credits each triangle's three
-  * edges in canonical (min,max) form, and drops edges with support < k−2.
-  * Rounds are materialized with the 1-job lazy-checkpoint+count pattern
-  * (KCore's), and each round's count of surviving edges picks the next
-  * round's wedge plan ([[TriangleCount.edgeSide]]): broadcast edge sides
-  * up to [[graft.engine.Lineage.rowsPerPartition]] edges, so a peel that
-  * has shrunk the set stops shuffling its wedges. The DuckDB oracle runs
-  * the same peel as a recursion to its own fixpoint (the kcore3_converged
-  * recipe, [[graft.OracleSql]]).
+  * self-join for wedges, left-semi closing, both against the broadcast
+  * edge set ([[TriangleCount.closedWedges]]) — credits each triangle's
+  * three edges in canonical (min,max) form, and drops edges with support
+  * < k−2. Rounds are materialized with the 1-job lazy-checkpoint+count
+  * pattern (KCore's); the DuckDB oracle runs the same peel as a recursion
+  * to its own fixpoint (the kcore3_converged recipe, [[graft.OracleSql]]).
   */
 object Truss {
 
@@ -32,28 +29,22 @@ object Truss {
     * bridges) that truss peeling consumes as its round-0 table and that a
     * pipeline reads directly for edge-strength features. One degree-
     * oriented wedge enumeration (√(2m)-bounded fan-out) plus a coalescing
-    * left join back onto the edge list. The edge list is materialized and
-    * counted once; both the join and the wedge plan read it.
+    * left join back onto the edge list.
     */
-  def edgeSupport(edges: DataFrame): DataFrame = {
-    val (e, n) = TriangleCount.counted(edges.select("src", "dst"))
-    e.join(supports(e, n, Lineage.rowsPerPartition), Seq("src", "dst"),
-        "left")
+  def edgeSupport(edges: DataFrame): DataFrame =
+    edges.select("src", "dst")
+      .join(supports(edges.select("src", "dst")), Seq("src", "dst"), "left")
       .select(col("src"), col("dst"),
         coalesce(col("support"), lit(0L)).as("support"))
-  }
 
   /** Per-edge triangle support over the current canonical (src<dst) edge
-    * set `e` of `n` rows, its edge sides broadcast up to `broadcastRows`.
-    * Edges in no triangle simply have no row (support 0).
+    * set. Edges in no triangle simply have no row (support 0).
     */
-  private def supports(e: DataFrame, n: Long,
-                       broadcastRows: Long): DataFrame = {
+  private def supports(e: DataFrame): DataFrame = {
     // materialized lazily: three plan legs below reference the oriented
     // set; the caller's count materializes everything in one job
     val tris = TriangleCount.closedWedges(
-      TriangleCount.orientedByDegree(e).transform(Lineage.cut(_)),
-      TriangleCount.edgeSide(n, broadcastRows))
+      TriangleCount.orientedByDegree(e).transform(Lineage.cut(_)))
     tris.select(explode(array(
         struct(least(col("a"), col("b")).as("src"),
           greatest(col("a"), col("b")).as("dst")),
@@ -70,12 +61,7 @@ object Truss {
     * dst), plus the number of peel rounds run.
     */
   def converged(edges: DataFrame, k: Int,
-                maxRounds: Int = 100): (DataFrame, Int) =
-    converged(edges, k, maxRounds, Lineage.rowsPerPartition)
-
-  /** [[converged]] with the broadcast bound `broadcastRows`. */
-  private[graft] def converged(edges: DataFrame, k: Int, maxRounds: Int,
-                               broadcastRows: Long): (DataFrame, Int) = {
+                maxRounds: Int = 100): (DataFrame, Int) = {
     require(k >= 3, s"k-truss needs k >= 3 (got $k)")
     val spark = edges.sparkSession
     var e = GraphOps.orient(edges).transform(Lineage.cut(_, eager = true))
@@ -89,7 +75,7 @@ object Truss {
       // supp is lazily checkpointed too: the count below caches it, so the
       // post-loop output read is served from cache instead of re-running
       // the final wedge join
-      val supp = supports(e, n, broadcastRows).transform(Lineage.cut(_))
+      val supp = supports(e).transform(Lineage.cut(_))
       val next = supp.where(col("support") >= k - 2).select("src", "dst")
         .transform(Lineage.cut(_))
       val m = next.count() // materializes supp's round in one job

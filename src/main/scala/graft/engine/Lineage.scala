@@ -48,10 +48,7 @@ object Lineage {
 
   /** The row unit of [[adaptiveParallelism]]: one adaptive partition's
     * worth of rows. A relation this small is also small enough to collect
-    * and finish on the driver, and it is the broadcast bound of the
-    * triangle family: an oriented edge set of at most this many rows is
-    * broadcast to every wedge join and closing join
-    * ([[graft.algos.TriangleCount.edgeSide]]), so the wedges never shuffle.
+    * and finish on the driver.
     */
   val rowsPerPartition: Long = 65536L
 

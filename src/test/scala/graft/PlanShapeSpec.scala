@@ -154,9 +154,7 @@ class PlanShapeSpec extends SparkSpec {
     // converged frame itself reads the cached support table, so assert on
     // a freshly-composed round of the same two functions Truss calls
     val plan = fmt(graft.algos.TriangleCount.closedWedges(
-      graft.algos.TriangleCount.orientedByDegree(e),
-      graft.algos.TriangleCount.edgeSide(3L,
-        graft.engine.Lineage.rowsPerPartition)))
+      graft.algos.TriangleCount.orientedByDegree(e)))
     assert(plan.contains("LeftSemi"), s"closing join not semi:\n$plan")
     assert(truss.columns.toSeq === Seq("src", "dst", "support"))
   }

@@ -1,22 +1,17 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.algos.{TriangleCount, Truss}
 import graft.engine.Lineage
 import graft.graph.EdgeSet
 
-/** The triangle family on both of its edge-side plans: every kernel whose
-  * joins take their edge side from [[TriangleCount.edgeSide]] gives the
-  * brute-force result with its edge sides broadcast (bound forced up) and
-  * shuffled-hash (bound forced below every row count), on seeded random
-  * graphs and on the edge cases of the enumeration; the plan case pins
-  * which joins each side of the bound plans.
+/** The triangle family with its edge sides broadcast: every kernel whose
+  * wedge and closing joins broadcast the edge set gives the brute-force
+  * result on seeded random graphs and on the edge cases of the
+  * enumeration; the plan case pins that the wedges are never shuffled.
   */
 class WedgeBroadcastSpec extends SparkSpec {
-
-  private val paths = Seq("broadcast" -> Long.MaxValue, "shuffled" -> -1L)
 
   private def canon(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] =
     pairs.collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }
@@ -96,47 +91,41 @@ class WedgeBroadcastSpec extends SparkSpec {
     df.collect().head.toSeq.map(_.asInstanceOf[Long])
 
   /** Every kernel of the family on `edges` (its [[EdgeSet]] view of
-    * `pairs`) against the brute-force results, on both paths. */
-  private def check(name: String, pairs: Seq[(Long, Long)],
+    * `pairs`) against the brute-force results. */
+  private def check(at: String, pairs: Seq[(Long, Long)],
                     edges: EdgeSet): Unit = {
     val s = spark
     import s.implicits._
     val want = new Brute(pairs)
     val wEdges = want.es.map { case (a, b) => (a, b, weight(a, b)) }
       .toDF("src", "dst", "weight")
-    for ((path, bound) <- paths) {
-      val at = s"$name, $path"
-      assert(row(TriangleCount.count(edges, bound)) ===
-        Seq(want.tris.size.toLong), at)
-      assert(collectL(TriangleCount.perVertex(edges, bound),
-        "id", "tri_cnt") === want.perVertex, at)
-      assert(TriangleCount.localClustering(edges, bound).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
-          r.getLong(3)))).toMap === want.lcc, at)
-      assert(row(TriangleCount.fourCliques(edges, bound)) ===
-        Seq(want.fourCliques), at)
-      val (ns, nc, est) = want.sampled(3)
-      assert(row(TriangleCount.sampledCount(edges, 3, bound)) ===
-        Seq(ns, nc, est), at)
-      val (nt, str) = want.strength
-      assert(row(TriangleCount.triangleStrength(wEdges, bound)) ===
-        Seq(nt, str), at)
-      val (bal, unbal) = want.balance
-      assert(row(TriangleCount.signedBalance(edges, bound)) ===
-        Seq(bal, unbal), at)
-      val (cyc, tr) = want.census
-      assert(row(TriangleCount.directedCensus(edgesDf(pairs), bound)) ===
-        Seq(cyc, tr), at)
-      for (k <- Seq(3, 4)) {
-        val (truss, _) = Truss.converged(edgesDf(pairs), k, 100, bound)
-        assert(truss.collect()
-          .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap ===
-          Oracles.bruteTruss(pairs, k), s"$at, $k-truss")
-      }
+    assert(row(TriangleCount.count(edges)) === Seq(want.tris.size.toLong), at)
+    assert(collectL(TriangleCount.perVertex(edges), "id", "tri_cnt") ===
+      want.perVertex, at)
+    assert(TriangleCount.localClustering(edges).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
+        r.getLong(3)))).toMap === want.lcc, at)
+    assert(row(TriangleCount.fourCliques(edges)) === Seq(want.fourCliques),
+      at)
+    val (ns, nc, est) = want.sampled(3)
+    assert(row(TriangleCount.sampledCount(edges, 3)) === Seq(ns, nc, est),
+      at)
+    val (nt, str) = want.strength
+    assert(row(TriangleCount.triangleStrength(wEdges)) === Seq(nt, str), at)
+    val (bal, unbal) = want.balance
+    assert(row(TriangleCount.signedBalance(edges)) === Seq(bal, unbal), at)
+    val (cyc, tr) = want.census
+    assert(row(TriangleCount.directedCensus(edgesDf(pairs))) === Seq(cyc, tr),
+      at)
+    for (k <- Seq(3, 4)) {
+      val (truss, _) = Truss.converged(edgesDf(pairs), k)
+      assert(truss.collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap ===
+        Oracles.bruteTruss(pairs, k), s"$at, $k-truss")
     }
   }
 
-  test("triangle family ≡ brute force on seeded random graphs, both paths") {
+  test("triangle family ≡ brute force on seeded random graphs") {
     for (seed <- Seq(11, 23)) {
       val pairs = Oracles.randomGraph(seed, n = 24, m = 110)
       assert(new Brute(pairs).fourCliques > 0, s"seed $seed has no K4")
@@ -168,24 +157,16 @@ class WedgeBroadcastSpec extends SparkSpec {
   private def count(plan: String, node: String): Int =
     s"\\(\\d+\\) $node".r.findAllIn(plan).size
 
-  test("closedWedges plan: broadcast up to the bound, shuffled-hash above") {
+  test("closedWedges plan: broadcast edge sides, no shuffled wedges") {
     val k5 = for (a <- 0L until 5L; b <- (a + 1) until 5L) yield (a, b)
     val o = TriangleCount.orientedByDegree(edgesDf(k5))
       .transform(Lineage.cut(_, eager = true))
-    val n = o.count()
-    // at the bound: the wedge join and the closing join are both built
-    // from broadcast edges, so no shuffle sits above the wedge join
-    val small = fmt(TriangleCount.closedWedges(o,
-      TriangleCount.edgeSide(n, n)))
-    assert(count(small, "BroadcastHashJoin") === 2, s"plan:\n$small")
-    assert(count(small, "ShuffledHashJoin") === 0, s"plan:\n$small")
-    assert(count(small, "Exchange") === 0, s"plan:\n$small")
-    // one row over it: both joins shuffled-hash, as before the bound
-    val large = fmt(TriangleCount.closedWedges(o,
-      TriangleCount.edgeSide(n, n - 1)))
-    assert(count(large, "ShuffledHashJoin") === 2, s"plan:\n$large")
-    assert(count(large, "BroadcastHashJoin") === 0, s"plan:\n$large")
-    // the production bound puts a 10-edge set on the broadcast path, and
+    // the wedge join and the closing join are both built from broadcast
+    // edges, so no shuffle sits above the wedge join
+    val plan = fmt(TriangleCount.closedWedges(o))
+    assert(count(plan, "BroadcastHashJoin") === 2, s"plan:\n$plan")
+    assert(count(plan, "ShuffledHashJoin") === 0, s"plan:\n$plan")
+    assert(count(plan, "Exchange") === 0, s"plan:\n$plan")
     // the triangle count then shuffles only its partial counts
     val tc = fmt(TriangleCount.count(edgesDf(k5)))
     assert(count(tc, "BroadcastHashJoin") === 2, s"plan:\n$tc")

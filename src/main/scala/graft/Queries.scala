@@ -199,7 +199,7 @@ object Queries {
         PageRank.run(s, e, cfg.copy(tol = 0.0, maxIter = 3,
           checkpoint = Some(ck), durableEvery = 2))
         PageRank.run(s, e, cfg.copy(tol = 0.0, maxIter = 5,
-          checkpoint = Some(ck), durableEvery = 2), resume = true)
+          checkpoint = Some(ck), durableEvery = 2))
           .state.select(col("id"), round(col("rank"), 6).as("pr"))
           .orderBy("id")
       }

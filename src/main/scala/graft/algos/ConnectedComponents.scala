@@ -17,7 +17,6 @@ import graft.graph.{EdgeSet, GraphOps}
 object ConnectedComponents {
 
   private object CcProgram extends VertexProgram {
-    val name = "cc"
     def initState(vertices: DataFrame): DataFrame =
       vertices.select(col("id"), col("id").as("label"))
     def gatherExpr: Column = col("label")
@@ -29,8 +28,7 @@ object ConnectedComponents {
         .select(col("id"),
           least(col("label"), col("agg")).as("label"),
           (col("agg").isNotNull && col("agg") < col("label")).as("changed"))
-    val isStationary = false
-    override val partitionCountInvariant = true // exact min combine
+    val residualExpr: Option[Column] = None // frontier: exact min combine
   }
 
   /** Exact components to fixpoint. Input edges may be directed — they are
@@ -41,16 +39,15 @@ object ConnectedComponents {
     * [[EdgeSet.Symmetric]] is used as it is, anything else is
     * symmetrized with a dedup. The HashMin fixpoint is the same on each.
     */
-  def run(spark: SparkSession, edges: EdgeSet, cfg: SuperstepConfig,
-          resume: Boolean = false): SuperstepResult = {
+  def run(spark: SparkSession, edges: EdgeSet,
+          cfg: SuperstepConfig): SuperstepResult = {
     val und = edges match {
       case c: EdgeSet.Canonical => c.symmetric.frame
       case s: EdgeSet.Symmetric => s.frame.select("src", "dst")
       case other => GraphOps.symmetrize(other.frame)
     }
     val verts = GraphOps.vertices(und)
-    val r = Superstep.run(spark, und, verts, CcProgram,
-      cfg.copy(tol = 0.0), resume)
+    val r = Superstep.run(spark, und, verts, CcProgram, cfg)
     r.copy(state = r.state.select(col("id"), col("label").as("component")))
   }
 

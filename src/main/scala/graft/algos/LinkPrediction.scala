@@ -80,7 +80,7 @@ object LinkPrediction {
     require(trials >= 1 && k >= 1, s"need trials/k >= 1, got $trials/$k")
     import org.apache.spark.sql.expressions.Window
     val v = edges.select(col("src").as("id")).distinct()
-    val ranks = GraphOps.denseIds(v)
+    val ranks = GraphOps.denseIds(v, Lineage.partitions(edges.sparkSession))
       .select(col("key").cast("long").as("neg"), col("id").as("ci"))
       .transform(Lineage.cut(_, eager = true))
     val n = ranks.count()

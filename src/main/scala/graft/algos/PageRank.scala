@@ -20,7 +20,6 @@ object PageRank {
     * folded constant source contribution (0 for the unfiltered variant).
     */
   private final class PrProgram(tol: Double) extends VertexProgram {
-    val name = "pagerank"
     def initState(vertices: DataFrame): DataFrame =
       vertices.select(col("id"), lit(1.0).as("rank"),
         coalesce(col("outdeg"), lit(0L)).as("outdeg"),
@@ -40,21 +39,20 @@ object PageRank {
         .withColumn("delta", abs(col("rank") - col("oldRank")))
         .withColumn("changed", col("delta") > lit(tol))
         .drop("oldRank")
-    val isStationary = true
-    override def residualExpr: Option[Column] = Some(col("delta"))
+    val residualExpr: Option[Column] = Some(col("delta")) // stationary
   }
 
   /** Converged PR over the full graph (no class split). Vertices = edge
     * endpoints unless an explicit universe is given.
     */
-  def run(spark: SparkSession, edges: DataFrame, cfg: SuperstepConfig,
-          resume: Boolean = false): SuperstepResult = {
+  def run(spark: SparkSession, edges: DataFrame,
+          cfg: SuperstepConfig): SuperstepResult = {
     val e = edges.select("src", "dst")
     val verts = GraphOps.vertices(e)
       .join(GraphOps.outDegrees(e), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"))
       .withColumn("cvec", lit(0.0))
-    val r = Superstep.run(spark, e, verts, new PrProgram(cfg.tol), cfg, resume)
+    val r = Superstep.run(spark, e, verts, new PrProgram(cfg.tol), cfg)
     r.copy(state = r.state.select("id", "rank"))
   }
 
@@ -66,8 +64,7 @@ object PageRank {
     * that fraction (PAPER §5.1's headline optimization).
     */
   def runFiltered(spark: SparkSession, edges: DataFrame,
-                  cfg: SuperstepConfig,
-                  resume: Boolean = false): SuperstepResult = {
+                  cfg: SuperstepConfig): SuperstepResult = {
     // Materialized ONCE: the raw edge table is referenced by the class
     // split, the constant vector, the RR subgraph AND the post-loop sink
     // pass — each an eagerly-materialized job that would otherwise re-run
@@ -99,8 +96,7 @@ object PageRank {
       .select(col("id"), col("outdeg"),
         coalesce(col("cvec"), lit(0.0)).as("cvec"))
 
-    val loop = Superstep.run(spark, eRR, verts, new PrProgram(cfg.tol), cfg,
-      resume)
+    val loop = Superstep.run(spark, eRR, verts, new PrProgram(cfg.tol), cfg)
 
     // Post-loop: sinks applied once; sources fixed at 0.15.
     val regRanks = loop.state.select("id", "rank", "outdeg")

@@ -19,7 +19,6 @@ object Paths {
     * `.head()` in the query builder (lazily-built contract, SURVEY §7.3).
     */
   private final class MinPlusProgram(source: DataFrame) extends VertexProgram {
-    val name = "sssp"
     def initState(vertices: DataFrame): DataFrame =
       vertices.crossJoin(broadcast(source.toDF("s0")))
         .select(col("id"),
@@ -33,27 +32,24 @@ object Paths {
         .select(col("id"), least(col("dist"), col("agg")).as("dist"),
           (col("agg").isNotNull &&
             (col("dist").isNull || col("agg") < col("dist"))).as("changed"))
-    val isStationary = false
-    override val partitionCountInvariant = true // exact min combine
+    val residualExpr: Option[Column] = None // frontier: exact min combine
   }
 
   /** Converged single-source shortest paths. `edges` needs (src, dst
     * [, weight]); missing weight = 1.0 (BFS). Unreached vertices keep null.
     */
   def sssp(spark: SparkSession, edges: DataFrame, sourceId: Long,
-           cfg: SuperstepConfig, resume: Boolean = false): SuperstepResult =
+           cfg: SuperstepConfig): SuperstepResult =
     ssspFrom(spark, edges,
-      spark.range(1).select(lit(sourceId).as("s0")), cfg, resume)
+      spark.range(1).select(lit(sourceId).as("s0")), cfg)
 
   /** Converged SSSP from a lazily-computed one-row source frame (e.g.
     * `edges.agg(min("src"))`) — no eager driver action in the builder.
     */
   def ssspFrom(spark: SparkSession, edges: DataFrame, source: DataFrame,
-               cfg: SuperstepConfig,
-               resume: Boolean = false): SuperstepResult = {
+               cfg: SuperstepConfig): SuperstepResult = {
     val verts = GraphOps.vertices(edges.select("src", "dst"))
-    Superstep.run(spark, edges, verts, new MinPlusProgram(source),
-      cfg.copy(tol = 0.0), resume)
+    Superstep.run(spark, edges, verts, new MinPlusProgram(source), cfg)
   }
 
   /** Truncated harmonic centrality from the `numRoots` smallest vertex ids:

@@ -84,11 +84,15 @@ object TriangleCount {
     * over the full edge set; any other input is oriented here.
     */
   private def oriented(edges: EdgeSet): DataFrame =
-    orientedByDegree((edges match {
-        case c: EdgeSet.Canonical => c.frame.select("src", "dst")
-        case other => GraphOps.orient(other.frame)
-      }).transform(Lineage.cut(_, eager = true)))
+    orientedByDegree(canonical(edges))
       .transform(Lineage.cut(_, eager = true))
+
+  /** `edges` canonical (src < dst), materialized for [[orientedByDegree]]. */
+  private def canonical(edges: EdgeSet): DataFrame =
+    (edges match {
+      case c: EdgeSet.Canonical => c.frame.select("src", "dst")
+      case other => GraphOps.orient(other.frame)
+    }).transform(Lineage.cut(_, eager = true))
 
   /** Triangles per corner vertex (id, tri_cnt): each triangle credits all
     * three corners.
@@ -318,10 +322,12 @@ object TriangleCount {
     // sf0.1 the wedge join dominates either way (A/B medians 24.5 vs 26,
     // inside noise — BASELINE.md wave 24); the per-edge spelling is kept
     // because triangles ≫ edges is exactly the skew that grows at 100×.
-    val e = oriented(edges)
-      .withColumn("s", GraphOps.md5Prio(concat_ws(":",
-        least(col("src"), col("dst")),
-        greatest(col("src"), col("dst")))) % 2)
+    // The sign reads the unordered pair, so it is signed before orienting
+    // and rides the oriented edge set's one cut.
+    val e = orientedByDegree(canonical(edges)
+        .withColumn("s", GraphOps.md5Prio(concat_ws(":",
+          least(col("src"), col("dst")),
+          greatest(col("src"), col("dst")))) % 2))
       .transform(Lineage.cut(_, eager = true))
     val e1 = e.select(col("src").as("a"), col("dst").as("b"),
       col("s").as("s1"))

@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   * The manifest carries per-partition lineage (row count per partition),
   * metrics, and the parent-snapshot pointer, per the north rule's
   * "checkpoints per-partition vertex state and lineage/metrics".
+  *
+  * One store holds one run: a [[Superstep]] run handed a store whose
+  * [[latestComplete]] is defined resumes from that snapshot, so a store
+  * is reused exactly to continue the run that wrote it.
   */
 final class CheckpointStore(base: String, algo: String, runId: String) {
   val root: Path = Paths.get(base, algo, runId)
@@ -41,18 +45,16 @@ final class CheckpointStore(base: String, algo: String, runId: String) {
     * caches the snapshot (lazy localCheckpoint materialized by the
     * per-partition stats job) and computes the manifest lineage. Total rows
     * = Σ partition rows — never a separate count action. Returns the cached
-    * read-back frame (hash-repartitioned by id when `repartitionTo` is set,
-    * restoring the loop's co-partitioning) and the total row count: exactly
-    * two actions per durable snapshot (the write + the stats/cache job).
+    * read-back frame (hash-repartitioned by id into `partitions`, restoring
+    * the loop's co-partitioning) and the total row count: exactly two
+    * actions per durable snapshot (the write + the stats/cache job).
     */
   def writeAndLoad(s: Int, state: DataFrame, metrics: Map[String, String],
-                   repartitionTo: Option[Int] = None): (DataFrame, Long) = {
+                   partitions: Int): (DataFrame, Long) = {
     val dir = snapDir(s)
     state.write.mode("overwrite").parquet(dir.toString)
-    val spark = state.sparkSession
-    val raw = spark.read.parquet(dir.toString)
-    val readBack = repartitionTo
-      .map(n => raw.repartition(n, col("id"))).getOrElse(raw)
+    val readBack = state.sparkSession.read.parquet(dir.toString)
+      .repartition(partitions, col("id"))
       .localCheckpoint(false)
     val total = commitManifest(s, readBack, state, metrics)
     (readBack, total)

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 /** Loop configuration (SURVEY.md §3.4, §4.3).
   *
   * @param maxIter      superstep cap
-  * @param tol          stationary convergence: stop when max(residual) < tol
+  * @param tol          stationary convergence: stop when max(residual) < tol;
+  *                     frontier programs do not read it
+  *                     ([[VertexProgram.residualExpr]])
   * @param numPartitions not read: the loop co-partitions at the session's
   *                     shuffle partition count ([[Lineage.partitions]],
   *                     LA3's process-grid size, fixed at launch)
@@ -17,7 +19,9 @@ import org.apache.spark.sql.functions._
   *                     use the 2D grid layout, where a too-large frontier
   *                     is shuffled ×√P instead of broadcast ×P.
   * @param checkpoint   durable snapshot store; None = in-memory only
-  *                     (localCheckpoint lineage truncation each round)
+  *                     (localCheckpoint lineage truncation each round).
+  *                     A store holding a committed snapshot resumes from
+  *                     its latest one (SURVEY.md §5.2.3); else superstep 0
   * @param durableEvery write a durable snapshot every k supersteps
   * @param hubTau       explicit skew handling: salt-split adjacency of
   *                     vertices with out-degree > tau (SURVEY.md §2.2 G7)
@@ -32,7 +36,7 @@ import org.apache.spark.sql.functions._
   *                     Convergence is checked at batch boundaries, so a run
   *                     may execute up to batchSize-1 extra supersteps past
   *                     convergence. Results are unchanged only when those
-  *                     are no-ops: non-stationary programs (empty frontier)
+  *                     are no-ops: frontier programs (empty frontier)
   *                     or tol = 0. A stationary program with tol > 0 keeps
   *                     moving its float state in the extra supersteps, so
   *                     its result depends on batchSize — pr_converged runs
@@ -93,8 +97,7 @@ final case class SuperstepResult(
 object Superstep {
 
   def run(spark: SparkSession, edges: DataFrame, graphVertices: DataFrame,
-          vp: VertexProgram, cfg: SuperstepConfig,
-          resume: Boolean = false): SuperstepResult = {
+          vp: VertexProgram, cfg: SuperstepConfig): SuperstepResult = {
 
     // The shared loop conf (every loop shuffle aligns with the edge
     // co-partitioning at the session's partition count) plus one key of
@@ -105,7 +108,7 @@ object Superstep {
     Lineage.withLoopConf(spark) {
       Lineage.withConf(spark,
           "spark.sql.requireAllClusterKeysForCoPartition" -> "false") {
-        runLoop(spark, edges, graphVertices, vp, cfg, resume)
+        runLoop(spark, edges, graphVertices, vp, cfg)
       }
     }
   }
@@ -115,7 +118,7 @@ object Superstep {
 
   private def runLoop(spark: SparkSession, edges: DataFrame,
                       graphVertices: DataFrame, vp: VertexProgram,
-                      cfg: SuperstepConfig, resume: Boolean): SuperstepResult = {
+                      cfg: SuperstepConfig): SuperstepResult = {
     val n = Lineage.partitions(spark)
 
     val withW =
@@ -125,12 +128,13 @@ object Superstep {
         edges.select(col("src"), col("dst"), lit(1.0).as("weight"))
       else edges.select(col("src"), col("dst"))
 
-    // --- init or resume (before edge prep: the layout choice needs |V|) ---
+    // --- resume from the store's latest committed snapshot, else init
+    // (before edge prep: the layout choice needs |V|) ---
     val (startStep, state) = cfg.checkpoint.flatMap { ck =>
-      if (resume) ck.latestComplete().map { s =>
+      ck.latestComplete().map { s =>
         (s + 1, ck.read(spark, s).repartition(n, col("id"))
           .transform(Lineage.cut(_, eager = true)))
-      } else None
+      }
     }.getOrElse {
       val s0 = vp.initState(graphVertices)
         .withColumn("changed", lit(true))
@@ -140,13 +144,13 @@ object Superstep {
     }
     val numVertices = state.count()
 
-    // Scale-adaptive loop parallelism for partition-count-invariant
-    // programs (exact min/max/count combines — identical results at any
-    // shuffle partition count; float-sum programs like PR keep the pinned
-    // count so their rounding trajectory stays bit-stable). The clamp
-    // only ever LOWERS the count, so cluster-scale runs are unaffected;
-    // a 4k-edge CC fixpoint loop stops paying 32 tasks/stage/round.
-    if (vp.partitionCountInvariant) {
+    // Scale-adaptive loop parallelism for frontier programs (exact
+    // min/max/count combines — identical results at any shuffle partition
+    // count; stationary float-sum programs like PR keep the pinned count
+    // so their rounding trajectory stays bit-stable). The clamp only ever
+    // LOWERS the count, so cluster-scale runs are unaffected; a 4k-edge CC
+    // fixpoint loop stops paying 32 tasks/stage/round.
+    if (vp.residualExpr.isEmpty) {
       val pre = withW.transform(Lineage.cut(_, eager = true))
       Lineage.withAdaptiveLoopConf(spark, pre.count()) { nL =>
         loop(spark, pre, nL, n, state, startStep, numVertices, vp, cfg)
@@ -230,7 +234,7 @@ object Superstep {
     // re-executing its subtree, so batching now saves the per-superstep
     // metrics action + convergence round-trip there too. Convergence is
     // checked at batch boundaries, so up to batchSize-1 supersteps run past
-    // it. They are no-ops for non-stationary programs (empty frontier) and
+    // it. They are no-ops for frontier programs (empty frontier) and
     // at tol = 0, where results are unchanged at any batch size; a
     // stationary program with tol > 0 keeps refining its state in them, so
     // its result depends on the batch size (see SuperstepConfig.batchSize).
@@ -239,7 +243,7 @@ object Superstep {
     // One lazily-composed superstep: current state → next state.
     def superstep(cur: DataFrame): DataFrame = {
       val frontierRaw =
-        if (vp.isStationary) cur else cur.where(col("changed"))
+        if (vp.residualExpr.isDefined) cur else cur.where(col("changed"))
       // LA3 communication filtering: only active vertices scatter. Project
       // to the columns the gather expression actually reads — state
       // bookkeeping columns don't belong on the wire.
@@ -337,8 +341,7 @@ object Superstep {
           val (loaded, _) = ck.writeAndLoad(stepAfter - 1, newState, Map(
             "superstep" -> (stepAfter - 1).toString,
             "frontier" -> frontierSize.toString,
-            "wallMs" -> ((System.nanoTime() - t0) / 1000000).toString),
-            repartitionTo = Some(n))
+            "wallMs" -> ((System.nanoTime() - t0) / 1000000).toString), n)
           lastDurable = stepAfter - 1
           loaded
         } else newState.transform(Lineage.cut(_)) // lazy: materialized by the
@@ -364,8 +367,7 @@ object Superstep {
       state = materialized
       frontierSize = nChanged
       converged =
-        if (vp.isStationary) vp.residualExpr.isDefined && residual < cfg.tol
-        else nChanged == 0L
+        if (vp.residualExpr.isDefined) residual < cfg.tol else nChanged == 0L
       step = stepAfter
     }
     // A run that converges between durable snapshots would otherwise leave

@@ -9,8 +9,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   * in [[Superstep]].
   */
 trait VertexProgram {
-  def name: String
-
   /** Initial vertex state: one row per vertex with `id` plus the state
     * columns this program maintains (must include everything `applyState`
     * reads). `graph.vertices` has columns (id, outdeg, indeg, class).
@@ -43,29 +41,25 @@ trait VertexProgram {
 
   /** New state from `state LEFT OUTER JOIN msgs ON id` (msgs column `agg`
     * is null for vertices that received nothing). Must return (id, state
-    * columns, changed: boolean). `changed` drives the frontier and
-    * convergence.
+    * columns, changed: boolean). `changed` drives a frontier program's
+    * frontier and convergence (see [[residualExpr]]).
     */
   def applyState(state: DataFrame, msgs: DataFrame): DataFrame
 
-  /** Stationary programs (PR) keep every vertex active each round; frontier
-    * filtering applies only to non-stationary programs (CC/BFS/SSSP) —
-    * LA3's activity bitvectors (PAPER §5.2).
+  /** The program's kind, and with it how the loop runs:
+    *
+    *  - `Some(r)`: '''stationary''' (PR). Every vertex scatters every
+    *    superstep, and the run converges when max(r) over the new state
+    *    drops below `SuperstepConfig.tol`. The loop keeps the session's
+    *    partition count: the combine is a float sum, whose summation order
+    *    (and hence 6-dp rounding) the pinned count keeps bit-stable.
+    *  - `None`: '''frontier''' (CC, BFS/SSSP). Only changed vertices
+    *    scatter — LA3's activity bitvectors (PAPER §5.2) — and the run
+    *    converges when no vertex changed; `tol` is not read. The combine
+    *    is an exact min/max/count, identical at any partition count, so
+    *    the loop may lower its count to the edge set's size
+    *    (`Lineage.withAdaptiveLoopConf`; guide §2: partitioning derives
+    *    from measured input size, not a constant tuned for one box).
     */
-  def isStationary: Boolean
-
-  /** Optional residual expression evaluated over the new state; the loop
-    * stops when max(residual) < tol (stationary) or no rows changed
-    * (non-stationary).
-    */
-  def residualExpr: Option[Column] = None
-
-  /** Whether the program's results are identical at ANY shuffle partition
-    * count — true for exact min/max/count combines (CC, BFS/SSSP), false
-    * for float sums (PR), whose summation order — and hence 6-dp rounding
-    * — the pinned count keeps bit-stable. Invariant programs opt in to the
-    * loop's scale-adaptive parallelism (guide §2: partitioning derives
-    * from measured input size, not a constant tuned for one box).
-    */
-  def partitionCountInvariant: Boolean = false
+  def residualExpr: Option[Column]
 }

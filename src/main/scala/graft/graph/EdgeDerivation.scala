@@ -19,8 +19,10 @@ object EdgeDerivation {
     repos.union(files).distinct()
   }
 
-  /** Dense id map for all nodes. */
-  def idMap(corpus: DataFrame, partitions: Int = 32): DataFrame =
+  /** Dense id map for all nodes ([[GraphOps.denseIds]] over `partitions`
+    * range partitions; the ids do not depend on the count).
+    */
+  def idMap(corpus: DataFrame, partitions: Int): DataFrame =
     GraphOps.denseIds(nodeKeys(corpus), partitions)
 
   /** (a) bipartite repo → file edges. */

@@ -199,9 +199,11 @@ object GraphOps {
     * once (tiny), then offset + local rank inside `mapPartitions`. The
     * assignment equals the global rank regardless of where the range
     * sampler placed partition bounds, so it is deterministic (SURVEY.md
-    * §2.2 G2). Input: one string column `key`; output: (key, id).
+    * §2.2 G2), at any range-partition count `partitions` (callers pass
+    * [[graft.engine.Lineage.partitions]]). Input: one string column
+    * `key`; output: (key, id).
     */
-  def denseIds(keys: DataFrame, partitions: Int = 32): DataFrame = {
+  def denseIds(keys: DataFrame, partitions: Int): DataFrame = {
     val spark = keys.sparkSession
     import spark.implicits._
     // Materialized ONCE before either job below: the range partitioner

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Lineage
+
 /** Graph derivations over the driver's read-only `/root/testdata` parquets
   * (FIXTURES.md §B). Structural analog of the corpus graphs: order ↔ commit,
   * part ↔ file, customer ↔ repo. Every derivation here has an ANSI-SQL
@@ -61,7 +63,8 @@ object TestGraphs {
     // Dense ids via the scale-safe G2 operator (range-partitioned rank) —
     // an unpartitioned dense_rank() window would move all rows to one
     // partition, the exact pattern SURVEY.md §2.2 G2 bans.
-    val dict = GraphOps.denseIds(ev.select("event_type").distinct())
+    val dict = GraphOps.denseIds(ev.select("event_type").distinct(),
+        Lineage.partitions(spark))
       .select(col("key").as("event_type"), (-(col("id") + 1)).as("type_id"))
     ev.join(broadcast(dict), "event_type")
       .select(col("user_id").as("src"), col("type_id").as("dst"))

@@ -202,16 +202,14 @@ class AlgosSpec extends SparkSpec {
 
   test("LP.run converges and is a fixed point of one more round") {
     val und = GraphOps.symmetrize(edgesDf(twoTri))
-    val (labels, _) = LabelPropagation.run(spark, und, maxRounds = 20)
-    val again = LabelPropagation.fixedRounds(und, 1)
-    // run's fixpoint: applying rounds from scratch must stabilize to the
-    // same labels; compare via one more synchronous round over `labels`
+    val (labels, rounds) = LabelPropagation.run(spark, und, maxRounds = 20)
     val got = collectL(labels, "id", "label")
     val verts = got.keySet.toSeq
-    val expNext = Oracles.bruteLp(verts,
-      und.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq, 1)
-    // sanity only: labels exist for every vertex
-    assert(got.keySet === expNext.keySet)
+    val edges = und.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // run's labels are `rounds` synchronous rounds from scratch ...
+    assert(got === Oracles.bruteLp(verts, edges, rounds))
+    // ... and one more round changes none of them
+    assert(Oracles.bruteLp(verts, edges, rounds + 1) === got)
   }
 
   test("TC exact vs brute force") {

@@ -31,7 +31,7 @@ class CheckpointSpec extends SparkSpec {
       // run 2: resume from snapshot, continue to convergence
       val r2 = PageRank.run(spark, edgesDf(g),
         SuperstepConfig(numPartitions = 4, tol = 1e-5, maxIter = 100,
-          checkpoint = Some(ck1)), resume = true)
+          checkpoint = Some(ck1)))
       assert(r2.converged)
       assert(r2.supersteps > 5)
       val gotRanks = collectD(r2.state, "id", "rank")
@@ -61,6 +61,26 @@ class CheckpointSpec extends SparkSpec {
       val snap = ck.read(spark, 2)
       assert(snap.columns.contains("rank") && snap.columns.contains("changed"))
       assert(snap.count() === 5)
+    }
+  }
+
+  test("a store with no committed snapshot starts at superstep 0") {
+    TempDir.withTempDir("graft-ckpt4") { tmp =>
+      val base = tmp.toString
+      val cfg = SuperstepConfig(tol = 1e-5, maxIter = 100)
+      val ref = PageRank.run(spark, edgesDf(g), cfg)
+      // the store's only snapshot dir has no manifest: nothing to resume
+      val ck = new CheckpointStore(base, "pr", "runU")
+      Files.createDirectories(java.nio.file.Paths.get(base, "pr", "runU",
+        "snap=7"))
+      val r = PageRank.run(spark, edgesDf(g), cfg.copy(checkpoint = Some(ck)))
+      assert(r.metrics.head("superstep") === "0")
+      assert(r.supersteps === ref.supersteps)
+      assert(r.converged && ref.converged)
+      val exp = collectD(ref.state, "id", "rank")
+      val got = collectD(r.state, "id", "rank")
+      assert(got.keySet === exp.keySet)
+      got.foreach { case (k, v) => assert(math.abs(v - exp(k)) < 1e-12) }
     }
   }
 

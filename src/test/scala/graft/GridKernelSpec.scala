@@ -82,7 +82,7 @@ class GridKernelSpec extends SparkSpec {
       PageRank.run(spark, edgesDf(g),
         gcfg.copy(maxIter = 4, checkpoint = Some(ck), durableEvery = 2))
       val r2 = PageRank.run(spark, edgesDf(g),
-        gcfg.copy(checkpoint = Some(ck)), resume = true)
+        gcfg.copy(checkpoint = Some(ck)))
       assert(r2.converged)
       collectD(r2.state, "id", "rank").foreach { case (k, v) =>
         assert(math.abs(v - ref(k)) < 1e-9, s"vertex $k")

@@ -224,8 +224,8 @@ object Queries {
 
     // --- k-core peeling (5 synchronous peels, k=3) ------------------------
     "kcore3" -> ((s, dir) =>
-      KCore.peel(TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"), 3, 5)
+      KCore.peel(copurchaseEdges(s, dir)
+        .where(col("weight") >= 2).pairs, 3, 5)
         .orderBy("id")),
 
     // --- weighted s-core (Eidsaa–Almaas): 2 synchronous peels at s=110 on
@@ -245,8 +245,8 @@ object Queries {
     // --- 2-hop reach |{u : dist ≤ 2}| per vertex (exact distinct over the
     // weight≥2 graph — friend-of-friend audience size) ---------------------
     "reach2" -> ((s, dir) =>
-      GraphOps.twoHopReach(TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"))
+      GraphOps.twoHopReach(copurchaseEdges(s, dir)
+        .where(col("weight") >= 2).pairs)
         .orderBy("id")),
 
     // --- reach2 with the documented hot-mid cap ENGAGED (maxMidDeg=8 —
@@ -254,8 +254,8 @@ object Queries {
     // driver-visible, not only a scaladoc promise; the cap predicate is a
     // pure degree threshold, so the oracle mirrors it exactly ------------
     "reach2_capped" -> ((s, dir) =>
-      GraphOps.twoHopReach(TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"), maxMidDeg = 8L)
+      GraphOps.twoHopReach(copurchaseEdges(s, dir)
+        .where(col("weight") >= 2).pairs, maxMidDeg = 8L)
         .orderBy("id")),
 
     // --- multi-source BFS / graph-Voronoi landmark assignment over the
@@ -271,15 +271,15 @@ object Queries {
     // reached vertices + same-parity (odd-cycle-witness) edge count — one
     // packed HashMin-with-distance sweep, 8 rounds -------------------------
     "oddcycle8" -> ((s, dir) =>
-      Paths.oddCycleProfile(TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"), 8)
+      Paths.oddCycleProfile(copurchaseEdges(s, dir)
+        .where(col("weight") >= 2).pairs, 8)
         .orderBy("comp")),
 
     // --- modularity of the BRAND partition (attribute homophily: do
     // same-brand parts co-purchase?) — the exact-rational modularity
     // machinery over a metadata labeling instead of a computed one ---------
     "modularity_brand" -> ((s, dir) => {
-      val e = copurchaseEdges(s, dir).symmetric.frame.localCheckpoint(true)
+      val e = copurchaseEdges(s, dir).symmetric.cut
       Community.modularity(e,
         TestGraphs.table(s, dir, "part")
           .select(col("p_partkey").as("id"), col("p_brand").as("label")))
@@ -713,16 +713,16 @@ object Queries {
     // the hub-subset detector Jaccard misses (graph-side containment) ----
     "g_overlap_sim" -> ((s, dir) =>
       GraphOps.neighborOverlap(
-        TestGraphs.copurchase(s, dir)
-          .where(col("weight") >= 2).select("src", "dst"), 500000L)
+        copurchaseEdges(s, dir)
+          .where(col("weight") >= 2).pairs, 500000L)
         .orderBy("v1", "v2")),
 
     // --- neighbor-set Jaccard similarity (link prediction): candidate
     // pairs from one wedge join, sim = inter/(d1+d2-inter) rounded ------
     "g_jaccard_sim" -> ((s, dir) =>
       GraphOps.neighborJaccard(
-        TestGraphs.copurchase(s, dir)
-          .where(col("weight") >= 2).select("src", "dst"), 0.3)
+        copurchaseEdges(s, dir)
+          .where(col("weight") >= 2).pairs, 0.3)
         .orderBy("v1", "v2")),
 
     // --- the SAME similarity with the hot-center cap ENGAGED (maxDeg=8 —
@@ -734,15 +734,15 @@ object Queries {
     // a full oracle gate, not a rows-only concession (VERDICT r4 item 7).
     "g_jaccard_capped" -> ((s, dir) =>
       GraphOps.neighborJaccard(
-        TestGraphs.copurchase(s, dir)
-          .where(col("weight") >= 2).select("src", "dst"), 0.3,
+        copurchaseEdges(s, dir)
+          .where(col("weight") >= 2).pairs, 0.3,
         maxDeg = 8)
         .orderBy("v1", "v2")),
 
     // --- one-row exact moment profile of the undirected graph: counts,
     // max degree, wedges, and degree assortativity as an exact rational --
     "graph_profile" -> ((s, dir) =>
-      GraphOps.profile(copurchaseEdges(s, dir).symmetric.cut.frame)
+      GraphOps.profile(copurchaseEdges(s, dir).symmetric.cut)
         .orderBy("n_vertices")),
 
     // --- bipartite butterfly (4-cycle) count on the customer→part graph
@@ -787,7 +787,7 @@ object Queries {
     "modularity_lp5" -> ((s, dir) => {
       val e = copurchaseEdges(s, dir).where(col("weight") >= 2)
         .symmetric.cut
-      Community.modularity(e.frame, LabelPropagation.fixedRounds(e, 5))
+      Community.modularity(e, LabelPropagation.fixedRounds(e, 5))
         .orderBy("n_comms")
     }),
 
@@ -796,16 +796,16 @@ object Queries {
     // non-adjacent pairs on the same weight≥2 graph as g_jaccard_sim ------
     "link_pred" -> ((s, dir) =>
       LinkPrediction.scores(
-          TestGraphs.copurchase(s, dir).where(col("weight") >= 2)
-            .select("src", "dst"))
+          copurchaseEdges(s, dir).where(col("weight") >= 2)
+            .pairs)
         .orderBy(col("ra_micro").desc, col("cn").desc, col("u"), col("v"))
         .limit(100)),
 
     // --- average-neighbor-degree curve knn(k): degree-degree correlation
     // as a function, integer micro-units --------------------------------------
     "knn_degree" -> ((s, dir) =>
-      GraphOps.knnDegree(TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"))
+      GraphOps.knnDegree(copurchaseEdges(s, dir)
+        .where(col("weight") >= 2).pairs)
         .orderBy("deg")),
 
     // --- item-to-item co-visitation recommendations ("customers also
@@ -837,7 +837,7 @@ object Queries {
     // half of a link-prediction / embedding training set ---------------------
     "neg_sample2" -> ((s, dir) =>
       LinkPrediction.negativeSample(
-          copurchaseEdges(s, dir).symmetric.cut.frame, trials = 8, k = 2)
+          copurchaseEdges(s, dir).symmetric.cut, trials = 8, k = 2)
         .orderBy("id", "trial")),
 
     // --- directed dyad census: reciprocity + transitivity as exact
@@ -855,8 +855,8 @@ object Queries {
     // butterflies' analog off the bipartite projection; exact BIGINTs ----
     "rectangles" -> ((s, dir) =>
       TriangleCount.rectangles(
-        TestGraphs.copurchase(s, dir).where(col("weight") >= 2)
-          .select("src", "dst"))
+        copurchaseEdges(s, dir).where(col("weight") >= 2)
+          .pairs)
         .orderBy("rectangles")),
 
     // --- directed triangle census on the same digraph: cyclic vs
@@ -881,8 +881,8 @@ object Queries {
     // level-synchronous peeling, each level reusing the previous level's
     // fixpoint edge set -----------------------------------------------------
     "coreness" -> ((s, dir) =>
-      KCore.coreness(TestGraphs.copurchase(s, dir).where(col("weight") >= 2)
-        .select("src", "dst"))._1
+      KCore.coreness(copurchaseEdges(s, dir).where(col("weight") >= 2)
+        .pairs)._1
         .orderBy("id")),
 
     // --- Borůvka minimum spanning forest of the weight≥2 co-purchase
@@ -890,7 +890,8 @@ object Queries {
     // DuckDB Borůvka, run to its own fixpoint, must reproduce the exact
     // edge set ------------------------------------------------------------
     "msf" -> ((s, dir) =>
-      Msf.run(s, TestGraphs.copurchase(s, dir).where(col("weight") >= 2))
+      Msf.runWithStats(s, TestGraphs.copurchase(s, dir)
+          .where(col("weight") >= 2))._1
         .orderBy("src", "dst")),
 
     // --- strongly connected components (A: directed companion to cc) on
@@ -905,7 +906,7 @@ object Queries {
       val dg = cp.where(col("weight") >= 2).select("src", "dst")
         .unionByName(cp.where(col("weight") >= 3)
           .select(col("dst").as("src"), col("src").as("dst")))
-      graft.algos.Scc.run(s, dg)
+      graft.algos.Scc.runWithStats(s, dg)._1
         .orderBy("id")
     }),
 
@@ -913,15 +914,15 @@ object Queries {
     // edge closes ≥1 triangle within the truss); oracle = the same peel
     // as a DuckDB recursion that runs to its own fixpoint
     "ktruss3" -> ((s, dir) =>
-      graft.algos.Truss.converged(TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"), 3)
+      graft.algos.Truss.converged(copurchaseEdges(s, dir)
+        .where(col("weight") >= 2).pairs, 3)
         ._1.orderBy("src", "dst")),
 
     // --- per-edge triangle support incl. zero-support bridges (truss's
     // round-0 table as a driver-visible edge-strength profile) -------------
     "tri_support" -> ((s, dir) =>
-      graft.algos.Truss.edgeSupport(TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"))
+      graft.algos.Truss.edgeSupport(copurchaseEdges(s, dir)
+        .where(col("weight") >= 2).pairs)
         .orderBy("src", "dst")),
 
     // --- condensation DAG over the SCC labels: component-pair crossing
@@ -960,10 +961,10 @@ object Queries {
     // priorities (the mis/matching discipline) have a byte-exact DuckDB
     // twin where the xxhash64 default (`coloring`) is rows-only ----------
     "coloring_md5" -> ((s, dir) =>
-      graft.algos.Coloring.run(s,
-        TestGraphs.copurchase(s, dir)
-          .where(col("weight") >= 2).select("src", "dst"),
-        md5Pri = true)
+      graft.algos.Coloring.runWithRounds(s,
+        copurchaseEdges(s, dir)
+          .where(col("weight") >= 2).pairs,
+        md5Pri = true)._1
         .select(col("id"), col("color").cast("long").as("color"))
         .orderBy("id")),
 
@@ -971,24 +972,24 @@ object Queries {
     // BOTH engines, unlike coloring's xxhash64): converged run; the oracle
     // recursion runs to its own fixpoint (everyone decided)
     "mis" -> ((s, dir) =>
-      graft.algos.Mis.run(s, TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"))
+      graft.algos.Mis.run(s, copurchaseEdges(s, dir)
+        .where(col("weight") >= 2).pairs)
         ._1.orderBy("id")),
 
     // --- maximal matching (greedy by md5 edge priority — the MIS recipe
     // on the line graph without materializing it): converged run, oracle
     // recursion run to its own fixpoint
     "matching" -> ((s, dir) =>
-      graft.algos.Matching.run(s, TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"))
+      graft.algos.Matching.run(s, copurchaseEdges(s, dir)
+        .where(col("weight") >= 2).pairs)
         ._1.orderBy("src", "dst")),
 
     // --- greedy b-matching (each vertex accepts up to b = 2 edges — the
     // b-suitor rank-within-capacity rule): converged run, oracle
     // recursion run to its own fixpoint
     "matching_b2" -> ((s, dir) =>
-      graft.algos.Matching.runB(s, TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"), 2)
+      graft.algos.Matching.runB(s, copurchaseEdges(s, dir)
+        .where(col("weight") >= 2).pairs, 2)
         ._1.orderBy("src", "dst")),
 
     // --- greedy max-weight maximal matching (locally-dominant edges —
@@ -1115,7 +1116,7 @@ object Queries {
     // one deg-tag of the edges + ONE conditional-sum pass per the broadcast
     // threshold table --------------------------------------------------
     "richclub" -> ((s, dir) =>
-      GraphOps.richClub(copurchaseEdges(s, dir).symmetric.cut.frame,
+      GraphOps.richClub(copurchaseEdges(s, dir).symmetric.cut,
         Seq(2, 4, 8, 16)).orderBy("k")),
 
     // --- Lee et al. duplicated-window profile: 20-token windows occurring
@@ -1250,7 +1251,7 @@ object Queries {
     // rounds ≤ ⌈log₂ n⌉ ----------------------------------------------------
     "densest" -> ((s, dir) =>
       graft.algos.Densest.peelProfile(s, copurchaseEdges(s, dir)
-          .where(col("weight") >= 2).symmetric.frame)
+          .where(col("weight") >= 2).symmetric)
         .orderBy("round")),
 
     // --- signed-triangle structural balance census: md5-parity edge
@@ -1296,8 +1297,8 @@ object Queries {
     // "triangle-reinforced community cores" pipeline) ---------------------
     "truss_comm" -> ((s, dir) => {
       val (te, _) = graft.algos.Truss.converged(
-        TestGraphs.copurchase(s, dir)
-          .where(col("weight") >= 2).select("src", "dst"), 3)
+        copurchaseEdges(s, dir)
+          .where(col("weight") >= 2).pairs, 3)
       ConnectedComponents.run(s, te.select("src", "dst"), cfg)
         .state.orderBy("id")
     }),
@@ -1874,11 +1875,12 @@ object Queries {
       // sf0.1 (measured) for the same ranking-quality story
       val cpw = copurchaseEdges(s, dir).where(col("weight") >= 2)
       val cp = cpw.pairs.frame
-      val und2 = cpw.symmetric.frame.localCheckpoint(true)
+      val und = cpw.symmetric.cut
+      val und2 = und.frame
       val deg = und2.groupBy(col("src").as("w"))
         .agg(count(lit(1)).as("degw"))
       val pos = cp.toDF("u", "v")
-      val neg = LinkPrediction.negativeSample(und2, 8, 2)
+      val neg = LinkPrediction.negativeSample(und, 8, 2)
         .select(least(col("id"), col("neg_id")).as("u"),
           greatest(col("id"), col("neg_id")).as("v"))
         .distinct()
@@ -1931,8 +1933,8 @@ object Queries {
     // matching (König-style classic composition; maximality ⇒ coverage) --
     "vertex_cover" -> ((s, dir) => {
       val (m, _) = graft.algos.Matching.run(s,
-        TestGraphs.copurchase(s, dir).where(col("weight") >= 2)
-          .select("src", "dst"))
+        copurchaseEdges(s, dir).where(col("weight") >= 2)
+          .pairs)
       m.select(explode(array(col("src"), col("dst"))).as("id"))
         .distinct().orderBy("id")
     }),
@@ -2130,9 +2132,9 @@ object Queries {
     // twin, so rows-only; exact equality with sequential JP is pinned in
     // ColoringSpec
     "coloring" -> ((s, dir) =>
-      graft.algos.Coloring.run(s,
-        TestGraphs.copurchase(s, dir)
-          .where(col("weight") >= 2).select("src", "dst"))
+      graft.algos.Coloring.runWithRounds(s,
+        copurchaseEdges(s, dir)
+          .where(col("weight") >= 2).pairs)._1
         .orderBy("id")),
 
     // sampled-source Brandes betweenness (8 hash-sampled roots) on the
@@ -2152,8 +2154,8 @@ object Queries {
     // k-core peeled to the true fixpoint (data-dependent round count);
     // oracle = the same peel run to its own fixpoint in DuckDB
     "kcore3_converged" -> ((s, dir) =>
-      KCore.converged(TestGraphs.copurchase(s, dir)
-        .where(col("weight") >= 2).select("src", "dst"), 3)
+      KCore.converged(copurchaseEdges(s, dir)
+        .where(col("weight") >= 2).pairs, 3)
         ._1.orderBy("id"))
   )
 

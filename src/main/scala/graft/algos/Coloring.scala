@@ -26,21 +26,17 @@ import graft.graph.{EdgeSet, GraphOps}
   */
 object Coloring {
 
-  def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 60,
-          md5Pri: Boolean = false): DataFrame =
-    runWithRounds(spark, edges, maxRounds, md5Pri)._1
-
-  /** As [[run]], also returning the round count.
+  /** Colors the [[EdgeSet.symmetric]] view of `edges` (coloring is an
+    * undirected notion); returns (id, color) and the round count.
     * With `md5Pri` the priority order is the 60-bit md5 prefix of the id
     * ([[GraphOps.md5Prio]] — the Mis/Matching discipline), which HAS a
     * byte-exact DuckDB twin, so the md5 variant runs under the full
     * oracle where the xxhash64 default is rows-only.
     */
-  def runWithRounds(spark: SparkSession, edges: DataFrame,
+  def runWithRounds(spark: SparkSession, edges: EdgeSet,
                     maxRounds: Int = 60,
                     md5Pri: Boolean = false): (DataFrame, Int) = {
-    // symmetrized simple adjacency: coloring is an undirected notion
-    val e = EdgeSet.symmetric(edges).frame
+    val e = edges.symmetric.frame
       .repartition(Lineage.partitions(spark), col("src"))
       .transform(Lineage.cut(_, eager = true))
     val nEdges = e.count()

@@ -3,12 +3,14 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.graph.EdgeSet
+
 /** Community quality metrics over a partition produced by any community
   * detector (here typically [[LabelPropagation]]).
   *
   * Newman modularity (Newman & Girvan, Phys. Rev. E 69, 026113, 2004) is
-  * reported as an EXACT RATIONAL, not a float: over the symmetrized edge
-  * set (|e| = m2 = 2m, no self-loops),
+  * reported as an EXACT RATIONAL, not a float: over the
+  * [[EdgeSet.symmetric]] view of the edges (|e| = m2 = 2m, no self-loops),
   *
   *   Q = Σ_c [ in_c/m2 − (d_c/m2)² ] = (m2·Σ_c in_c − Σ_c d_c²) / m2²
   *
@@ -27,12 +29,12 @@ import org.apache.spark.sql.functions._
   */
 object Community {
 
-  /** `edges`: symmetrized (src, dst), self-loops removed; `labels`:
+  /** `edges`: read as its [[EdgeSet.symmetric]] view; `labels`:
     * (id, label) covering every vertex incident to `edges`. One row:
     * (n_comms, q_num, q_den) — all BIGINT, q_num/q_den = modularity.
     */
-  def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val e = edges.select("src", "dst")
+  def modularity(edges: EdgeSet, labels: DataFrame): DataFrame = {
+    val e = edges.symmetric.frame
     val lab = labels.select("id", "label")
     val tagged = e
       .join(lab.toDF("src", "slabel"), "src")

@@ -31,21 +31,13 @@ object ConnectedComponents {
     val residualExpr: Option[Column] = None // frontier: exact min combine
   }
 
-  /** Exact components to fixpoint. Input edges may be directed — they are
-    * symmetrized here. Output: (id, component).
-    *
-    * The undirected view comes from the input's shape: a
-    * [[EdgeSet.Canonical]] is mirrored with no dedup shuffle, a
-    * [[EdgeSet.Symmetric]] is used as it is, anything else is
-    * symmetrized with a dedup. The HashMin fixpoint is the same on each.
+  /** Exact components to fixpoint of the [[EdgeSet.symmetric]] view of
+    * `edges` (a directed input is read as undirected). Output:
+    * (id, component).
     */
   def run(spark: SparkSession, edges: EdgeSet,
           cfg: SuperstepConfig): SuperstepResult = {
-    val und = edges match {
-      case c: EdgeSet.Canonical => c.symmetric.frame
-      case s: EdgeSet.Symmetric => s.frame.select("src", "dst")
-      case other => GraphOps.symmetrize(other.frame)
-    }
+    val und = edges.symmetric.frame
     val verts = GraphOps.vertices(und)
     val r = Superstep.run(spark, und, verts, CcProgram, cfg)
     r.copy(state = r.state.select(col("id"), col("label").as("component")))
@@ -289,18 +281,14 @@ object ConnectedComponents {
     * (n_components, max_comp, n_left). Vertices whose every edge touched a
     * hub vanish with their edges — the census counts vertices that still
     * have ≥1 edge, the same reading the oracle closure takes. Degrees are
-    * undirected: an input not known to be [[EdgeSet.Symmetric]] is
-    * symmetrized (deduped, self-loops dropped) first.
+    * those of the [[EdgeSet.symmetric]] view.
     *
     * The hub list is a top-k (driver-size) sort+limit; the removal is two
     * broadcast anti-joins; the rest is [[run]]'s cost.
     */
   def hubAttackCensus(spark: SparkSession, edges: EdgeSet, k: Int,
                       cfg: SuperstepConfig): DataFrame = {
-    val und = edges match {
-      case s: EdgeSet.Symmetric => s
-      case other => EdgeSet.symmetric(other.frame)
-    }
+    val und = edges.symmetric
     val deg = und.frame.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("deg"))
     val hubs = deg.orderBy(col("deg").desc, col("id")).limit(k).select("id")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
+import graft.graph.EdgeSet
 
 /** Densest-subgraph greedy peel (Charikar's 2-approximation, in the
   * parallel ε-batched form of Bahmani, Kumar & Vassilvitskii, VLDB 2012 —
@@ -50,12 +51,12 @@ object Densest {
     * `m2_edges` (directed half-edge count = 2× undirected edges),
     * `is_best` (1 on max-density rounds by exact rational compare).
     *
-    * @param edges symmetrized simple undirected edge list (src, dst)
+    * @param edges read as its [[EdgeSet.symmetric]] view
     */
-  def peelProfile(spark: SparkSession, edges: DataFrame,
+  def peelProfile(spark: SparkSession, edges: EdgeSet,
                   maxRounds: Int = 64): DataFrame =
-    peelLoop(spark, edges.select("src", "dst"), count(lit(1)), "m2_edges",
-      "densest peel", maxRounds)
+    peelLoop(spark, edges.symmetric.frame,
+      count(lit(1)), "m2_edges", "densest peel", maxRounds)
 
   /** The peel both profiles run: `deg` is the per-vertex degree aggregate
     * and `massCol` names its per-round total in the profile. Each loop

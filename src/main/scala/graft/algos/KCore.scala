@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
-import graft.graph.GraphOps
+import graft.graph.EdgeSet
 
 /** k-core peeling (coverage extension beyond LA3's four apps; the standard
   * companion analysis on link graphs). Each synchronous round removes every
@@ -70,20 +70,21 @@ object KCore {
     (e, n, r)
   }
 
-  /** `rounds` synchronous peels on the symmetrized simple graph.
-    * Output: surviving vertices with their in-subgraph degree (id, deg).
+  /** `rounds` synchronous peels on the [[EdgeSet.symmetric]] view of
+    * `edges`. Output: surviving vertices with their in-subgraph degree
+    * (id, deg).
     */
-  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    fixedPeel(GraphOps.symmetrize(edges), count(lit(1)), k, rounds, "deg")
+  def peel(edges: EdgeSet, k: Int, rounds: Int): DataFrame =
+    fixedPeel(edges.symmetric.frame, count(lit(1)), k, rounds, "deg")
 
   /** Peel to the true k-core ([[peelToFixpoint]]). Returns
     * ((id, deg), roundsRun); throws IllegalStateException if `maxRounds`
     * rounds do not reach the fixpoint.
     */
-  def converged(edges: DataFrame, k: Int,
+  def converged(edges: EdgeSet, k: Int,
                 maxRounds: Int = 100): (DataFrame, Int) = {
-    val spark = edges.sparkSession
-    val e = GraphOps.symmetrize(edges).transform(Lineage.cut(_, eager = true))
+    val e = edges.symmetric.cut.frame
+    val spark = e.sparkSession
     val n = e.count()
     Lineage.withAdaptiveLoopConf(spark, n) { _ =>
     val (core, _, r) = peelToFixpoint(e, n, k, "k-core", maxRounds)
@@ -129,10 +130,11 @@ object KCore {
     * per-level peel round counts — the last level is the empty-k-core
     * check).
     */
-  def coreness(edges: DataFrame, maxK: Int = 64): (DataFrame, Int, Seq[Int]) = {
-    var e = GraphOps.symmetrize(edges).transform(Lineage.cut(_, eager = true))
+  def coreness(edges: EdgeSet,
+               maxK: Int = 64): (DataFrame, Int, Seq[Int]) = {
+    var e = edges.symmetric.cut.frame
     var n = e.count()
-    val spark = edges.sparkSession
+    val spark = e.sparkSession
     var levels = spark.range(0)
       .select(col("id"), col("id").as("coreness"))
     Lineage.withAdaptiveLoopConf(spark, n) { _ =>

@@ -27,20 +27,19 @@ import graft.graph.{EdgeSet, GraphOps}
   * center of degree d contributes d² pairs, so celebrity vertices above
   * the cap are skipped (deterministically — capped runs stay oracle-able,
   * the g_jaccard_capped discipline). The final adjacency check is a
-  * left-anti join against the symmetrized edge list, shuffled on the same
-  * (u, v) key the aggregate just produced.
+  * left-anti join against the [[EdgeSet.symmetric]] view, shuffled on the
+  * same (u, v) key the aggregate just produced.
   */
 object LinkPrediction {
 
-  /** `edges`: (src, dst) in any orientation; symmetrized and de-self-looped
-    * here. Returns (u, v, cn, ra_micro) with u < v for every non-adjacent
+  /** Scores pairs of the [[EdgeSet.symmetric]] view of `edges`. Returns
+    * (u, v, cn, ra_micro) with u < v for every non-adjacent
     * pair sharing ≥1 common neighbor of degree ≤ maxDeg. Callers
     * order/limit (scores are exact longs, so top-k is deterministic with
     * an (ra_micro, cn, u, v) sort).
     */
-  def scores(edges: DataFrame, maxDeg: Long = 10000L): DataFrame = {
-    val und = EdgeSet.symmetric(edges).frame
-      .transform(Lineage.cut(_, eager = true))
+  def scores(edges: EdgeSet, maxDeg: Long = 10000L): DataFrame = {
+    val und = edges.symmetric.cut.frame
     val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     // wedge legs from capped centers only; deg rides leg 1 so the RA term
     // needs no third join
@@ -69,18 +68,19 @@ object LinkPrediction {
     * Scale shape: ranks come from [[GraphOps.denseIds]] (two-phase,
     * sort-pinned — no global window); candidates are |V|·trials rows
     * joined on the rank key; the rejection is one left-anti join against
-    * the symmetrized edges on the SAME (id, neg) key the next aggregate
-    * uses; the keep-first-k window partitions by vertex (per-partition
-    * state, one vertex's ≤ trials rows).
+    * the [[EdgeSet.symmetric]] view of `edges` on the SAME (id, neg) key
+    * the next aggregate uses; the keep-first-k window partitions by vertex
+    * (per-partition state, one vertex's ≤ trials rows).
     *
-    * `edges` must be symmetrized; output (id, neg_id, trial).
+    * Output (id, neg_id, trial).
     */
-  def negativeSample(edges: DataFrame, trials: Int = 8,
+  def negativeSample(edges: EdgeSet, trials: Int = 8,
                      k: Int = 2): DataFrame = {
     require(trials >= 1 && k >= 1, s"need trials/k >= 1, got $trials/$k")
     import org.apache.spark.sql.expressions.Window
-    val v = edges.select(col("src").as("id")).distinct()
-    val ranks = GraphOps.denseIds(v, Lineage.partitions(edges.sparkSession))
+    val und = edges.symmetric.frame
+    val v = und.select(col("src").as("id")).distinct()
+    val ranks = GraphOps.denseIds(v, Lineage.partitions(und.sparkSession))
       .select(col("key").cast("long").as("neg"), col("id").as("ci"))
       .transform(Lineage.cut(_, eager = true))
     val n = ranks.count()
@@ -91,7 +91,7 @@ object LinkPrediction {
           .as("ci"))
     val ok = cand.join(ranks, Seq("ci"))
       .where(col("neg") =!= col("id"))
-      .join(edges.select(col("src").as("id"), col("dst").as("neg")),
+      .join(und.select(col("src").as("id"), col("dst").as("neg")),
         Seq("id", "neg"), "left_anti")
     ok.withColumn("rn",
         row_number().over(Window.partitionBy("id").orderBy("t")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** Maximal matching — the [[Mis]] recipe on the line graph, without
   * materializing it: an edge joins the matching when its priority
@@ -39,12 +39,13 @@ object Matching {
       conv(substring(md5(concat_ws(":", src, dst)), 1, 10), 16, 10)
         .cast("long")
 
-  /** Unweighted maximal matching; returns the canonical (src < dst)
-    * matching edges plus the round count.
+  /** Unweighted maximal matching of the [[EdgeSet.canonical]] view of
+    * `edges`; returns the canonical (src < dst) matching edges plus the
+    * round count.
     */
-  def run(spark: SparkSession, edges: DataFrame,
+  def run(spark: SparkSession, edges: EdgeSet,
           maxRounds: Int = 100): (DataFrame, Int) = {
-    val init = GraphOps.orient(edges) // canonical src<dst simple edges
+    val init = edges.canonical.frame
       .select(col("src"), col("dst"),
         GraphOps.md5Prio(concat_ws(":", col("src"), col("dst"))).as("p"))
     val (m, r) = greedyLoop(spark, init, maxRounds)
@@ -90,14 +91,15 @@ object Matching {
     * Per round: one key-partitioned window rank over the doubled
     * per-endpoint view (a vertex's incident edges sit in both the src and
     * dst columns — no global window), a capacity join, a both-endpoints
-    * pass count, and a capacity decrement aggregate. Returns the
-    * canonical (src < dst) accepted edges plus the round count.
+    * pass count, and a capacity decrement aggregate. Reads the
+    * [[EdgeSet.canonical]] view of `edges`; returns the canonical
+    * (src < dst) accepted edges plus the round count.
     */
-  def runB(spark: SparkSession, edges: DataFrame, b: Int,
+  def runB(spark: SparkSession, edges: EdgeSet, b: Int,
            maxRounds: Int = 100): (DataFrame, Int) = {
     require(b >= 1, s"b-matching needs b >= 1, got $b")
     import org.apache.spark.sql.expressions.Window
-    var active = GraphOps.orient(edges)
+    var active = edges.canonical.frame
       .select(col("src"), col("dst"),
         GraphOps.md5Prio(concat_ws(":", col("src"), col("dst"))).as("p"))
       .repartition(Lineage.partitions(spark), col("src"))

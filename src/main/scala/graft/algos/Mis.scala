@@ -29,9 +29,11 @@ import graft.graph.{EdgeSet, GraphOps}
   */
 object Mis {
 
-  def run(spark: SparkSession, edges: DataFrame,
+  /** The MIS of the [[EdgeSet.symmetric]] view of `edges`, and the
+    * round count. */
+  def run(spark: SparkSession, edges: EdgeSet,
           maxRounds: Int = 100): (DataFrame, Int) = {
-    val e = EdgeSet.symmetric(edges).frame
+    val e = edges.symmetric.frame
       .repartition(Lineage.partitions(spark), col("src"))
       .transform(Lineage.cut(_, eager = true))
     val verts = GraphOps.vertices(e).transform(Lineage.cut(_, eager = true))

@@ -38,10 +38,6 @@ import graft.graph.GraphOps
   */
 object Msf {
 
-  def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 48,
-          maxJumpRounds: Int = 32): DataFrame =
-    runWithStats(spark, edges, maxRounds, maxJumpRounds)._1
-
   /** `edges`: (src, dst, weight) in any orientation; canonicalized to
     * src < dst keeping the min weight per pair, self-loops dropped,
     * integral weights < 2^23 required. Returns the MSF edge set

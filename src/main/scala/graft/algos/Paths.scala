@@ -456,15 +456,14 @@ object Paths {
     * never false positives on a genuinely bipartite ball. Precondition:
     * ids ∈ [0, 2⁴³) and k < 2²⁰.
     *
-    * `canonEdges`: simple canonical (src<dst) edges; output
+    * Reads the [[EdgeSet.canonical]] view of `edges`; output
     * (comp, reached, odd_edges) with each undirected edge counted once.
     */
-  def oddCycleProfile(canonEdges: DataFrame, k: Int): DataFrame = {
+  def oddCycleProfile(edges: EdgeSet, k: Int): DataFrame = {
     val Shift = 1048576L // 2^20
-    val ce = canonEdges.select("src", "dst")
-      .transform(Lineage.cut(_, eager = true))
-    val e = EdgeSet.symmetric(ce).frame
-      .transform(Lineage.cut(_, eager = true))
+    val canon = edges.canonical.cut
+    val ce = canon.frame
+    val e = canon.symmetric.cut.frame
     val init = GraphOps.vertices(e)
       .select(col("id"), (col("id") * Shift).as("v"), lit(true).as("chg"))
     val fin = relax(e, init, Nil, k, Least)(col("v") + 1L)

@@ -67,11 +67,7 @@ object Scc {
     */
   private val TrimRounds = 4
 
-  def run(spark: SparkSession, edges: DataFrame, maxOuter: Int = 100,
-          maxSweepRounds: Int = 48): DataFrame =
-    runWithStats(spark, edges, maxOuter, maxSweepRounds)._1
-
-  /** As [[run]], plus round stats: outer / trim / sweep round counts —
+  /** (id, scc) plus round stats: outer / trim / sweep round counts —
     * the spec pins sweepRounds ≪ diameter on a deep chain of SCCs.
     */
   def runWithStats(spark: SparkSession, edges: DataFrame,
@@ -236,7 +232,7 @@ object Scc {
     * (≤ one row per surviving edge, usually orders of magnitude fewer).
     */
   def condensation(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val labels = run(spark, edges)
+    val labels = runWithStats(spark, edges)._1
     edges.select("src", "dst")
       .join(labels.toDF("src", "src_scc"), Seq("src"))
       .join(labels.toDF("dst", "dst_scc"), Seq("dst"))

@@ -78,21 +78,19 @@ object TriangleCount {
     wedges.join(broadcast(closing), Seq("a", "c"), "left_semi")
   }
 
-  /** Canonical simple edges, [[orientedByDegree]], with both the canonical
-    * and the oriented set materialized. A [[EdgeSet.Canonical]] input is
-    * already oriented and unique, so it skips the orient + dedup shuffle
-    * over the full edge set; any other input is oriented here.
+  /** The [[EdgeSet.canonical]] view, [[orientedByDegree]], with both the
+    * canonical and the oriented set materialized. The view of a
+    * [[EdgeSet.Canonical]] input is the set itself, so it skips the
+    * orient + dedup shuffle over the full edge set.
     */
   private def oriented(edges: EdgeSet): DataFrame =
     orientedByDegree(canonical(edges))
       .transform(Lineage.cut(_, eager = true))
 
-  /** `edges` canonical (src < dst), materialized for [[orientedByDegree]]. */
+  /** The [[EdgeSet.canonical]] pairs, materialized for
+    * [[orientedByDegree]]. */
   private def canonical(edges: EdgeSet): DataFrame =
-    (edges match {
-      case c: EdgeSet.Canonical => c.frame.select("src", "dst")
-      case other => GraphOps.orient(other.frame)
-    }).transform(Lineage.cut(_, eager = true))
+    edges.canonical.cut.frame
 
   /** Triangles per corner vertex (id, tri_cnt): each triangle credits all
     * three corners.
@@ -206,12 +204,12 @@ object TriangleCount {
     * exactly two diagonals, so Σ C(cn, 2) div 2 counts each once. Wedge
     * pairs come from one center-keyed self-join with the deterministic
     * maxDeg hot-center cap (wedge fan-out is Σ C(deg, 2) — hub-dominated
-    * on power-law graphs; the cap is mirrored in the oracle). One row
-    * (wedge_pairs, rectangles), exact BIGINTs.
+    * on power-law graphs; the cap is mirrored in the oracle). Reads the
+    * [[EdgeSet.symmetric]] view of `edges`. One row (wedge_pairs,
+    * rectangles), exact BIGINTs.
     */
-  def rectangles(edges: DataFrame, maxDeg: Long = 10000L): DataFrame = {
-    val und = EdgeSet.symmetric(edges).frame
-      .transform(Lineage.cut(_, eager = true))
+  def rectangles(edges: EdgeSet, maxDeg: Long = 10000L): DataFrame = {
+    val und = edges.symmetric.cut.frame
     GraphOps.codegreePairs(und, maxDeg).agg(
         org.apache.spark.sql.functions.count(lit(1)).as("wedge_pairs"),
         coalesce(sum(expr("(cn * (cn - 1)) div 2")), lit(0L)).as("dd"))

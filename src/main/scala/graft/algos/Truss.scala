@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.Lineage
-import graft.graph.GraphOps
+import graft.graph.EdgeSet
 
 /** k-truss peeling (SURVEY.md §10 round-4 queue item 3): the maximal
   * subgraph in which every edge closes ≥ k−2 triangles WITHIN the
@@ -23,19 +23,21 @@ import graft.graph.GraphOps
   */
 object Truss {
 
-  /** Per-edge triangle support (common-neighbor count) over a canonical
-    * (src<dst) simple edge set, INCLUDING zero-support edges — the
-    * cohesion profile (which edges are embedded in dense neighborhoods vs
-    * bridges) that truss peeling consumes as its round-0 table and that a
-    * pipeline reads directly for edge-strength features. One degree-
+  /** Per-edge triangle support (common-neighbor count) over the
+    * [[EdgeSet.canonical]] view of `edges` (each undirected edge once, as
+    * src < dst), INCLUDING zero-support edges — the cohesion profile
+    * (which edges are embedded in dense neighborhoods vs bridges) that
+    * truss peeling consumes as its round-0 table and that a pipeline
+    * reads directly for edge-strength features. One degree-
     * oriented wedge enumeration (√(2m)-bounded fan-out) plus a coalescing
     * left join back onto the edge list.
     */
-  def edgeSupport(edges: DataFrame): DataFrame =
-    edges.select("src", "dst")
-      .join(supports(edges.select("src", "dst")), Seq("src", "dst"), "left")
+  def edgeSupport(edges: EdgeSet): DataFrame = {
+    val e = edges.canonical.frame
+    e.join(supports(e), Seq("src", "dst"), "left")
       .select(col("src"), col("dst"),
         coalesce(col("support"), lit(0L)).as("support"))
+  }
 
   /** Per-edge triangle support over the current canonical (src<dst) edge
     * set. Edges in no triangle simply have no row (support 0).
@@ -56,15 +58,16 @@ object Truss {
       .groupBy("src", "dst").agg(count(lit(1)).as("support"))
   }
 
-  /** Peel to the k-truss fixpoint (k ≥ 3). Output: surviving canonical
-    * edges with their final in-truss support ((src, dst, support), src <
-    * dst), plus the number of peel rounds run.
+  /** Peel the [[EdgeSet.canonical]] view of `edges` to the k-truss
+    * fixpoint (k ≥ 3). Output: surviving canonical edges with their final
+    * in-truss support ((src, dst, support), src < dst), plus the number
+    * of peel rounds run.
     */
-  def converged(edges: DataFrame, k: Int,
+  def converged(edges: EdgeSet, k: Int,
                 maxRounds: Int = 100): (DataFrame, Int) = {
     require(k >= 3, s"k-truss needs k >= 3 (got $k)")
-    val spark = edges.sparkSession
-    var e = GraphOps.orient(edges).transform(Lineage.cut(_, eager = true))
+    var e = edges.canonical.cut.frame
+    val spark = e.sparkSession
     var n = e.count()
     Lineage.withAdaptiveLoopConf(spark, n) { _ =>
     var lastSupp = spark.range(0)

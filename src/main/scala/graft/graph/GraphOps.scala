@@ -55,17 +55,20 @@ object GraphOps {
   def simplify(edges: DataFrame): DataFrame =
     edges.select("src", "dst").distinct().where(col("src") =!= col("dst"))
 
-  /** §2.8 — undirected view: both directions present, deduped. */
-  def symmetrize(edges: DataFrame): DataFrame = {
+  /** §2.8 — both directions present, deduped; keeps self-loops. Read
+    * through [[EdgeSet.symmetric]], which drops them.
+    */
+  private[graph] def symmetrize(edges: DataFrame): DataFrame = {
     val e = edges.select("src", "dst")
     e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
   }
 
   /** Orient each undirected edge as (min, max); drops self loops. Input may
     * be directed or undirected; output is the canonical simple oriented
-    * edge set used by triangle counting (SURVEY.md §2.4 A4).
+    * edge set used by triangle counting (SURVEY.md §2.4 A4). Read
+    * through [[EdgeSet.canonical]].
     */
-  def orient(edges: DataFrame): DataFrame =
+  private[graph] def orient(edges: DataFrame): DataFrame =
     edges.select(least(col("src"), col("dst")).as("src"),
                  greatest(col("src"), col("dst")).as("dst"))
       .where(col("src") < col("dst"))
@@ -105,11 +108,12 @@ object GraphOps {
     edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
 
-  /** One-row exact moment profile of an undirected graph (input: the
-    * SYMMETRIZED edge set) — the degree-correlation summary a planner or
-    * analyst reads before choosing layouts: vertex/edge counts, max
-    * degree, wedge count Σ C(d,2), and the degree-assortativity Pearson
-    * coefficient as an EXACT RATIONAL (Newman, Phys. Rev. Lett. 89,
+  /** One-row exact moment profile of the undirected graph of `edges`
+    * (read as its [[EdgeSet.symmetric]] view) — the degree-correlation
+    * summary a planner or analyst reads before choosing layouts:
+    * vertex/edge counts, max degree, wedge count Σ C(d,2), and the
+    * degree-assortativity Pearson coefficient as an EXACT RATIONAL
+    * (Newman, Phys. Rev. Lett. 89,
     * 208701, 2002): over directed edge copies with x=deg(src), y=deg(dst),
     * r = (m2·Σxy − Σx·Σy) / (m2·Σx² − (Σx)²) — symmetrization makes the
     * x and y marginals identical, so the usual sqrt denominator collapses
@@ -120,8 +124,8 @@ object GraphOps {
     * degree map per endpoint (shuffle on vertex id), then a single
     * global one-row aggregate — map-side partial sums all the way.
     */
-  def profile(edges: DataFrame): DataFrame = {
-    val e = edges.select("src", "dst")
+  def profile(edges: EdgeSet): DataFrame = {
+    val e = edges.symmetric.frame
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val tagged = e
       .join(deg.toDF("src", "ds"), "src")
@@ -239,10 +243,10 @@ object GraphOps {
     * micro-units `Σ nbr_deg · 10⁶ div samples` where samples = k ·
     * |{v : deg v = k}| (every endpoint contributes its neighbor once).
     * Two co-partitioned degree joins + one agg on the (≤64-ish) degree
-    * key; exact at any scale.
+    * key over the [[EdgeSet.symmetric]] view; exact at any scale.
     */
-  def knnDegree(edges: DataFrame): DataFrame = {
-    val e = EdgeSet.symmetric(edges).frame
+  def knnDegree(edges: EdgeSet): DataFrame = {
+    val e = edges.symmetric.frame
     val d = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     e.join(d.toDF("src", "dsrc"), Seq("src"))
       .join(d.toDF("dst", "ddst"), Seq("dst"))
@@ -289,7 +293,7 @@ object GraphOps {
   }
 
   /** Neighbor-set Jaccard similarity (link prediction / co-citation): for
-    * vertex pairs sharing ≥1 neighbor in the symmetrized simple graph,
+    * vertex pairs sharing ≥1 neighbor in the [[EdgeSet.symmetric]] view,
     * sim(u,v) = |N(u)∩N(v)| / |N(u)∪N(v)|, 6-dp rounded, thresholded.
     * One wedge join on the shared neighbor (the TC shape — candidate pairs
     * only, never all-pairs) + a degree join; |N(u)∪N(v)| = d(u)+d(v)−inter
@@ -303,7 +307,7 @@ object GraphOps {
     * an explicit approximation (their pairs undercount `inter`); union
     * sizes keep the TRUE degrees. Default = no cap (exact).
     */
-  def neighborJaccard(edges: DataFrame, threshold: Double,
+  def neighborJaccard(edges: EdgeSet, threshold: Double,
                       maxDeg: Long = Long.MaxValue): DataFrame =
     codegreeWithDegrees(edges, maxDeg)
       .select(col("u").as("v1"), col("w").as("v2"),
@@ -320,7 +324,7 @@ object GraphOps {
     * is `(inter·10⁶) div min(d1,d2)` so no float crosses the oracle.
     * Output (v1, v2, overlap_micro) at ≥ `thresholdMicro`.
     */
-  def neighborOverlap(edges: DataFrame, thresholdMicro: Long,
+  def neighborOverlap(edges: EdgeSet, thresholdMicro: Long,
                       maxDeg: Long = Long.MaxValue): DataFrame =
     codegreeWithDegrees(edges, maxDeg)
       .select(col("u").as("v1"), col("w").as("v2"),
@@ -345,12 +349,12 @@ object GraphOps {
       .groupBy("u", "w").agg(count(lit(1)).as("cn"))
   }
 
-  /** [[codegreePairs]] of the symmetrized simple graph with both endpoint
-    * degrees attached: (u, w, cn, d1, d2). Degrees are the TRUE ones even
-    * when `maxDeg` drops centers.
+  /** [[codegreePairs]] of the [[EdgeSet.symmetric]] view with both
+    * endpoint degrees attached: (u, w, cn, d1, d2). Degrees are the TRUE
+    * ones even when `maxDeg` drops centers.
     */
-  private def codegreeWithDegrees(edges: DataFrame, maxDeg: Long): DataFrame = {
-    val und = EdgeSet.symmetric(edges).frame.localCheckpoint(true)
+  private def codegreeWithDegrees(edges: EdgeSet, maxDeg: Long): DataFrame = {
+    val und = edges.symmetric.frame.localCheckpoint(true)
     val deg = outDegrees(und)
     codegreePairs(und, maxDeg)
       .join(deg.toDF("u", "d1"), "u")
@@ -451,7 +455,7 @@ object GraphOps {
 
   /** 2-hop neighborhood size — |{u : 1 ≤ dist(v,u) ≤ 2}| per vertex (the
     * friend-of-friend reach every influence/audience estimate starts
-    * from). Exact distinct count over the symmetrized simple graph: one
+    * from). Exact distinct count over the [[EdgeSet.symmetric]] view: one
     * self-join on the mid vertex, one union with the 1-hop edges, one
     * distinct. Integer-exact.
     *
@@ -463,9 +467,9 @@ object GraphOps {
     * ([[graft.functions.Cardinality]]) — exact distinct is the oracle
     * baseline here.
     */
-  def twoHopReach(edges: DataFrame,
+  def twoHopReach(edges: EdgeSet,
                   maxMidDeg: Long = Long.MaxValue): DataFrame = {
-    val e = EdgeSet.symmetric(edges).frame
+    val e = edges.symmetric.frame
     // deterministic hot-mid cap: wedges through a mid vertex of degree >
     // maxMidDeg are skipped (its Σ deg² term dominates the fan-out on
     // power-law graphs); direct 1-hop edges always count, so the result
@@ -502,8 +506,8 @@ object GraphOps {
 
   /** Rich-club profile φ(k) (Colizza et al., Nature Physics 2006): for each
     * degree threshold k, the density of the subgraph induced by vertices of
-    * degree ≥ k. Input is the SYMMETRIZED edge list (both directions), so
-    * the directed row count over the club IS 2·E_k and
+    * degree ≥ k. Read over the [[EdgeSet.symmetric]] view (both
+    * directions), so the directed row count over the club IS 2·E_k and
     * φ(k) = 2·E_k / (N_k·(N_k−1)) = e2_k / (N_k·(N_k−1)) — reported in ppm
     * via exact floor division (engine-identical on BIGINTs).
     *
@@ -513,10 +517,10 @@ object GraphOps {
     * N_k ≤ 1 are dropped (φ undefined). Everything after the tag is a
     * |ks|-row aggregate.
     */
-  def richClub(undirected: DataFrame, ks: Seq[Int]): DataFrame = {
-    val spark = undirected.sparkSession
+  def richClub(edges: EdgeSet, ks: Seq[Int]): DataFrame = {
+    val e = edges.symmetric.frame
+    val spark = e.sparkSession
     import spark.implicits._
-    val e = undirected.select("src", "dst")
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val kdf = broadcast(ks.map(_.toLong).toDF("k"))
     val nk = deg.crossJoin(kdf).where(col("deg") >= col("k"))

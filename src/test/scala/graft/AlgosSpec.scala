@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.algos._
 import graft.engine.SuperstepConfig
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** Golden micro-graph + independent-oracle tests for the four mandated
   * algorithms (SURVEY.md §5.2-§5.3). PR compares against the dense-matrix
@@ -201,7 +201,7 @@ class AlgosSpec extends SparkSpec {
   }
 
   test("LP.run converges and is a fixed point of one more round") {
-    val und = GraphOps.symmetrize(edgesDf(twoTri))
+    val und = EdgeSet.symmetric(edgesDf(twoTri)).frame
     val (labels, rounds) = LabelPropagation.run(spark, und, maxRounds = 20)
     val got = collectL(labels, "id", "label")
     val verts = got.keySet.toSeq

@@ -46,7 +46,8 @@ class ColoringSpec extends SparkSpec {
       .select(col("id"), xxhash64(col("id")).as("h")).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(0)))).toMap
     val exp = seqJp(vertices, und, pri)
-    val got = Coloring.run(spark, edges.toDF("src", "dst")).collect()
+    val got = Coloring.runWithRounds(spark, edges.toDF("src", "dst"))._1
+      .collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got === exp)
     und.foreach { case (a, b) =>

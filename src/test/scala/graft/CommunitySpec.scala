@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.algos.{Community, LinkPrediction}
-import graft.graph.GraphOps
+import graft.graph.EdgeSet
 
 /** Modularity (exact rational) and link prediction (common neighbors +
   * Resource Allocation micro-units): golden values on hand-checkable
@@ -12,7 +10,7 @@ import graft.graph.GraphOps
 class CommunitySpec extends SparkSpec {
 
   private def sym(pairs: Seq[(Long, Long)]) =
-    GraphOps.symmetrize(edgesDf(pairs)).where(col("src") =!= col("dst"))
+    EdgeSet.symmetric(edgesDf(pairs)).frame
 
   test("modularity: two triangles joined by a bridge (golden rational)") {
     // triangles {0,1,2} and {3,4,5} bridged by 2-3; labels = triangle.

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 class GraphOpsSpec extends SparkSpec {
 
@@ -30,12 +30,12 @@ class GraphOpsSpec extends SparkSpec {
 
   test("symmetrize doubles directed edges and dedups") {
     val e = edgesDf(Seq((0L, 1L), (1L, 0L), (1L, 2L)))
-    assert(GraphOps.symmetrize(e).count() === 4) // (0,1),(1,0),(1,2),(2,1)
+    assert(EdgeSet.symmetric(e).frame.count() === 4) // (0,1),(1,0),(1,2),(2,1)
   }
 
   test("orient produces simple a<b edge set") {
     val e = edgesDf(Seq((2L, 1L), (1L, 2L), (3L, 3L), (1L, 4L)))
-    val o = GraphOps.orient(e).collect()
+    val o = EdgeSet.canonical(e).frame.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(o === Set((1L, 2L), (1L, 4L)))
   }

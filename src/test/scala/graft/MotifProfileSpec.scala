@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.algos.TriangleCount
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** Graph moment profile (exact assortativity rational) and bipartite
   * butterfly counting: hand-checked goldens plus brute equality.
@@ -11,7 +11,7 @@ import graft.graph.GraphOps
 class MotifProfileSpec extends SparkSpec {
 
   test("profile: path graph golden (perfectly disassortative, r = -1)") {
-    val e = GraphOps.symmetrize(edgesDf(Seq((0L, 1L), (1L, 2L))))
+    val e = EdgeSet.symmetric(edgesDf(Seq((0L, 1L), (1L, 2L))))
     val r = GraphOps.profile(e).collect()(0)
     assert(r.getLong(0) == 3L)  // n_vertices
     assert(r.getLong(1) == 4L)  // m2
@@ -22,7 +22,7 @@ class MotifProfileSpec extends SparkSpec {
 
   test("profile: regular graph has zero assortativity numerator") {
     // 4-cycle: every vertex degree 2 -> x and y constant -> num = 0
-    val e = GraphOps.symmetrize(
+    val e = EdgeSet.symmetric(
       edgesDf(Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L))))
     val r = GraphOps.profile(e).collect()(0)
     assert(r.getLong(4) == 0L)

@@ -15,7 +15,8 @@ import graft.text.TextOps
 class MsfKatzSpec extends SparkSpec {
 
   private def msfSet(triples: Seq[(Long, Long, Long)]): Set[(Long, Long, Long)] =
-    Msf.run(spark, edgesWDf(triples.map(t => (t._1, t._2, t._3.toDouble))))
+    Msf.runWithStats(spark,
+      edgesWDf(triples.map(t => (t._1, t._2, t._3.toDouble))))._1
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("Msf ≡ sequential Kruskal on golden weighted graph") {

@@ -164,7 +164,7 @@ class PlanShapeSpec extends SparkSpec {
     import s.implicits._
     val e = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("src", "dst")
     val plan = fmt(graft.algos.Paths.nearestSeeds(
-      graft.graph.GraphOps.symmetrize(e), 2, 3L))
+      graft.graph.EdgeSet.symmetric(e).frame, 2, 3L))
     // the whole point of the dist·2^44+seed packing: the per-round
     // lexicographic (dist, seed) minimum must plan as min(LONG) on the
     // hash-agg path — a struct min would SortAggregate over every

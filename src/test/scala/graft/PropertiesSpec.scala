@@ -5,7 +5,7 @@ import org.scalacheck.Gen
 import graft.algos.{ConnectedComponents, PageRank, TriangleCount}
 import graft.dedup.Dedup
 import graft.engine.SuperstepConfig
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** Property-based tests (ScalaCheck generators, sampled deterministically
   * via fixed seeds): structural invariants that must hold on ARBITRARY
@@ -31,7 +31,7 @@ class PropertiesSpec extends SparkSpec {
 
   test("property: orient yields src<dst, deduped, self-loop-free") {
     for (g <- samples(graphGen, 12)) {
-      val rows = GraphOps.orient(edgesDf(g)).collect()
+      val rows = EdgeSet.canonical(edgesDf(g)).frame.collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       assert(rows.forall { case (a, b) => a < b }, s"sample $g")
       assert(rows.length == rows.distinct.length, s"sample $g")

@@ -9,7 +9,7 @@ import graft.algos.{Scc, Truss}
 class SccTrussSpec extends SparkSpec {
 
   private def sccMap(pairs: Seq[(Long, Long)]): Map[Long, Long] =
-    Scc.run(spark, edgesDf(pairs))
+    Scc.runWithStats(spark, edgesDf(pairs))._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("scc golden: two 3-cycles joined by a one-way bridge") {

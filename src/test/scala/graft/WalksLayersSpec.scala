@@ -2,10 +2,8 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.functions._
-
 import graft.algos.{Paths, Walks}
-import graft.graph.GraphOps
+import graft.graph.{EdgeSet, GraphOps}
 
 /** DAG layering (truncated longest path) and deterministic md5 walks:
   * goldens on hand-checkable graphs plus brute-force equality on seeded
@@ -81,8 +79,7 @@ class WalksLayersSpec extends SparkSpec {
 
   test("walks: seeded random graph replays the brute trajectory exactly") {
     val pairs = Oracles.randomGraph(seed = 7, n = 25, m = 60)
-    val e = GraphOps.symmetrize(edgesDf(pairs))
-      .where(col("src") =!= col("dst"))
+    val e = EdgeSet.symmetric(edgesDf(pairs)).frame
     val starts = GraphOps.vertices(e)
     val got = Walks.walks(e, starts, 4).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap

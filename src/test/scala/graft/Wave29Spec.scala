@@ -68,7 +68,7 @@ class Wave29Spec extends SparkSpec {
       (h, d, d + among, 2L * (d + among) * 1000000L / ((d + 1) * d))
     }.sortBy(t => (-t._2, t._1)).toVector
     val cpf = edgesDf(canon).localCheckpoint(true)
-    val und2 = graft.graph.GraphOps.symmetrize(cpf)
+    val und2 = graft.graph.EdgeSet.symmetric(cpf).frame
     val deg = und2.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val hubsDf = deg.orderBy(col("deg").desc, col("id")).limit(8)
       .toDF("hub", "hdeg")

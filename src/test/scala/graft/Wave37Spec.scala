@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.graph.GraphOps
+import graft.graph.EdgeSet
 
 /** Round-5 wave-37: link-prediction AUC counts (RA of explicit pair
   * sets + histogram concordance). The end-to-end query is gated by the
@@ -39,8 +39,7 @@ class Wave37Spec extends SparkSpec {
     val wantConc = (for (p <- posScores; n <- negScores if p > n) yield 1).size.toLong
     val wantTied = (for (p <- posScores; n <- negScores if p == n) yield 1).size.toLong
     // the query's machinery
-    val und2 = GraphOps.symmetrize(edgesDf(canon))
-      .where(col("src") =!= col("dst")).localCheckpoint(true)
+    val und2 = EdgeSet.symmetric(edgesDf(canon)).frame.localCheckpoint(true)
     val deg = und2.groupBy(col("src").as("w")).agg(count(lit(1)).as("degw"))
     def ra(p: org.apache.spark.sql.DataFrame) = {
       val cnw = p.join(und2.toDF("u", "w"), "u")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.algos.{ConnectedComponents, PageRank, TriangleCount}
 import graft.engine.SuperstepConfig
-import graft.graph.{EdgeSet, GraphOps}
+import graft.graph.EdgeSet
 
 /** Round-6 optimization equivalences: every fast path added in the
   * optimization round must be RESULT-identical to the generic path it
@@ -25,7 +25,7 @@ class Wave41Spec extends SparkSpec {
 
   test("Canonical.symmetric ≡ symmetrize on a unique oriented input") {
     val e = edgesDf(orientedSet(101, 40, 160))
-    val want = GraphOps.symmetrize(e).collect()
+    val want = EdgeSet.symmetric(e).frame.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val got = EdgeSet.canonical(e).symmetric.frame.collect()
       .map(r => (r.getLong(0), r.getLong(1)))

@@ -76,7 +76,7 @@ class Wave4Spec extends SparkSpec {
     val pairs = Oracles.randomGraph(seed = 47, n = 60, m = 90)
       .filter { case (a, b) => a != b }
     val got = Paths.nearestSeeds(
-      graft.graph.GraphOps.symmetrize(edgesDf(pairs)), 8, 3L)
+      graft.graph.EdgeSet.symmetric(edgesDf(pairs)).frame, 8, 3L)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     assert(got == bruteNearest(pairs, 8, 3L))
@@ -89,7 +89,7 @@ class Wave4Spec extends SparkSpec {
     val chain = (0L until 19L).map(i => (i, i + 1))
     val k = 2
     val got = Paths.nearestSeeds(
-      graft.graph.GraphOps.symmetrize(edgesDf(chain)), k, 4L)
+      graft.graph.EdgeSet.symmetric(edgesDf(chain)).frame, k, 4L)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     assert(got == bruteNearest(chain, k, 4L))

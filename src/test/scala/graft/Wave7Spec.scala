@@ -49,8 +49,8 @@ class Wave7Spec extends SparkSpec {
       val und = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
         .filter { case (a, b) => a != b }.toSet
       val vertices = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-      val got = Coloring.run(spark, edgesDf(edges),
-        md5Pri = true).collect()
+      val got = Coloring.runWithRounds(spark, edgesDf(edges),
+        md5Pri = true)._1.collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(got === seqJpMd5(vertices, und))
       und.foreach { case (a, b) =>
